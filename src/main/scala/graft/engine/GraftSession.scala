@@ -16,6 +16,39 @@ import org.apache.spark.sql.SparkSession
   * `spark.sql.shuffle.partitions` sized to ~2-3× total cores and AQE
   * coalescing down; nothing in the library hard-codes local paths or
   * partition counts.
+  *
+  * Generated-class reuse: each class codegen emits is compiled by
+  * Janino once per JVM, not once per query run. Three fixed settings
+  * make that hold (counts measured on 4 cores):
+  *  - Spark's `CodeGenerator` cache is one JVM-wide LRU keyed by
+  *    (context classloader, code text) and capped by the static
+  *    `spark.sql.codegen.cache.maxEntries`, default 100. That is
+  *    smaller than one pass: a warm perfbench batch-mix pass (11
+  *    queries at sf0.1) cycles through about 170 classes, so every
+  *    entry was evicted before its reuse and every pass recompiled all
+  *    of them.
+  *    The cap, 5000, is sized from the whole registry instead: one
+  *    `graft.Bench` walk at sf0.1 compiles 1876 distinct classes, one
+  *    `sbt test` JVM (every suite) 4273; each holds about 23 KB of
+  *    heap and 8 KB of metaspace while cached.
+  *  - Every `FileDrip.drive` starts a StreamingQuery, and a
+  *    StreamingQuery runs on a clone of the session. With
+  *    `spark.sql.artifact.isolation.enabled` at its default (true)
+  *    each clone gets a fresh session UUID and the executor gives
+  *    that UUID its own classloader, so the task-side classes compiled
+  *    in a trigger are cached under a loader no later run sees: with
+  *    only this setting at its default, a warm rerun of the
+  *    maintainers q208 and q212 at sf0.001 compiled 31 of its 112
+  *    classes again. The engine adds no artifacts (no
+  *    `addArtifact`/`addJar`), so isolation buys it nothing.
+  *  - `spark.sql.codegen.useIdInClassName` (default true) names each
+  *    whole-stage class after its codegen stage id, and the id depends
+  *    on how many stages were planned before it in the same query.
+  *    AQE re-planning inside the maintainers' triggers gives the same
+  *    stage different ids from run to run, so identical code compiled
+  *    again under a new class name (0-6 classes per warm maintainer
+  *    pass at sf0.1). Without the id, a stage's code text is the same
+  *    in every run.
   */
 object GraftSession {
 
@@ -76,5 +109,9 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      // compile each generated class once per JVM (see the object doc)
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
 }

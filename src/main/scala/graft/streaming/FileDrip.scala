@@ -27,38 +27,16 @@ object FileDrip {
     require(batches.nonEmpty, "FileDrip needs at least one batch")
     val spark = batches.head.sparkSession
     val dir = java.nio.file.Files.createTempDirectory("graft_filedrip")
-    val trace = sys.env.get("GRAFT_DRIP_TRACE").contains("true")
-    var t0 = System.nanoTime()
-    def mark(what: String): Unit = if (trace) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[drip-trace] $what ${(t1 - t0) / 1e9}%.3f s")
-      t0 = t1
-    }
-    // with trace on, also surface Spark's own per-trigger duration
-    // split (planning vs WAL commits vs addBatch) — the drain wall
-    // time above minus addBatch is the micro-batch machinery floor
-    def progress(q: StreamingQuery): Unit = if (trace)
-      Option(q.lastProgress).foreach { p =>
-        System.err.println(s"[drip-trace]   batch ${p.batchId} " +
-          s"durationMs=${p.durationMs}")
-      }
     try {
       batches.head.coalesce(1).write.mode("append").parquet(dir.toString)
-      mark("write batch 0")
       val stream = spark.readStream
         .schema(batches.head.schema).parquet(dir.toString)
       val q = start(stream)
-      mark("stream start")
       try {
         q.processAllAvailable()
-        mark("drain 0")
-        progress(q)
-        batches.tail.zipWithIndex.foreach { case (b, i) =>
+        batches.tail.foreach { b =>
           b.coalesce(1).write.mode("append").parquet(dir.toString)
-          mark(s"write batch ${i + 1}")
           q.processAllAvailable()
-          mark(s"drain ${i + 1}")
-          progress(q)
         }
       } finally {
         // stop() can throw TimeoutException under the session-wide
@@ -69,7 +47,6 @@ object FileDrip {
         try q.stop()
         catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[filedrip] stop() did not settle: $e") }
-        mark("stop")
       }
     } finally {
       import scala.jdk.CollectionConverters._
