@@ -85,14 +85,12 @@ object Graph {
     // partial-aggregated contributions shuffle. (For node counts past
     // broadcast range, drop the hint — the src-partitioned edge cache
     // still pins the big side in place.)
-    // checkpointEvery=1 (r18): with a truncation EVERY step the plan
-    // shape of step N+1 is identical to step N (LogicalRDD → join →
-    // agg), so its whole-stage codegen hits the compile cache instead
-    // of recompiling a deeper nested plan on the odd steps — the cold
-    // first-run cost the driver's single-run walk pays. The extra
-    // materialization is one node-cardinality job per formerly
-    // uncheckpointed step.
-    graft.engine.Iterate.loopDF(init, iters, checkpointEvery = 1) { (rs, _) =>
+    // loopDF truncates EVERY step, so the plan shape of step N+1 is
+    // identical to step N (LogicalRDD → join → agg) and its
+    // whole-stage codegen hits the compile cache instead of
+    // recompiling a deeper nested plan — the cold first-run cost the
+    // driver's single-run walk pays.
+    graft.engine.Iterate.loopDF(init, iters) { (rs, _) =>
       ed.join(broadcast(rs), ed("src") === rs("node"))
         .groupBy(col("dst").as("node2"))
         .agg(round(lit(0.15) + lit(0.85) * sum(col("r") / col("d")), 6).as("r2"))
@@ -161,7 +159,7 @@ object Graph {
     val n = nodes.count().toDouble
     val init = nodes
       .select(col("node"), lit(1.0 / n).as("r"), col("has_out"))
-    graft.engine.Iterate.loopDF(init, iters, checkpointEvery = 1) { (rs, _) =>
+    graft.engine.Iterate.loopDF(init, iters) { (rs, _) =>
       val dm = rs.filter(!col("has_out"))
         .agg(coalesce(sum(col("r")), lit(0.0)).as("dm"))
       val contrib = ed.join(broadcast(rs.select(col("node"), col("r"))),
@@ -226,16 +224,13 @@ object Graph {
   def connectedComponentsFromEdges(ed: DataFrame, iters: Int): DataFrame = {
     val init = ed.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-    // checkpointEvery=1: this step references `ls` TWICE (join leg +
-    // union leg), so an uncheckpointed superstep DOUBLES the label
-    // lineage per step — re-evaluating the whole history 2^k times.
-    // Materializing the (node-cardinality, tiny) label relation each
-    // step keeps every superstep one join + one hash-agg over the
-    // persisted edges, at any iteration count. (Since r18 every
-    // superstep loop truncates per step — the codegen-cache note at
-    // q41.)
-    graft.engine.Iterate.loopDF(init.localCheckpoint(true), iters,
-        checkpointEvery = 1) { (ls, _) =>
+    // this step references `ls` TWICE (join leg + union leg), so an
+    // uncheckpointed superstep would DOUBLE the label lineage per step
+    // — re-evaluating the whole history 2^k times. loopDF's per-step
+    // truncation of the (node-cardinality, tiny) label relation keeps
+    // every superstep one join + one hash-agg over the persisted
+    // edges, at any iteration count.
+    graft.engine.Iterate.loopDF(init.localCheckpoint(true), iters) { (ls, _) =>
       // label' = min(own ∪ neighbors): folding the self-label into the
       // aggregation replaces the join-back-then-least shape with ONE
       // join + ONE hash-agg per superstep (map-side partial min keeps
@@ -275,22 +270,23 @@ object Graph {
     * fixed-superstep q42 on converged components.
     */
   def connectedComponentsConverged(spark: SparkSession, dir: String,
-      maxIter: Int = 20): DataFrame = {
-    val ed = edgesWithDeg(spark, dir).select("src", "dst")
+      maxIter: Int = 20): DataFrame =
+    connectedComponentsDelta(edgesWithDeg(spark, dir).select("src", "dst"), maxIter)
+
+  /** Library form: delta-iteration min-label components over any
+    * both-arcs edge frame (`src`, `dst`); returns (node, label) once no
+    * label changes, or after `maxIter` supersteps. */
+  def connectedComponentsDelta(ed: DataFrame, maxIter: Int): DataFrame = {
     val init = ed.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-    graft.engine.Iterate.delta(init, init, maxIter) { (sol, ws) =>
-      // candidate updates propagate only from vertices that changed
-      val nbrMin = ed.join(broadcast(ws), ed("src") === ws("node"))
+    graft.engine.Iterate.delta(init, init, maxIter, "node") { (sol, ws) =>
+      // candidate labels propagate only from vertices that changed; the
+      // delta is the vertices whose label drops
+      val nbrMin = ed.join(ws, ed("src") === ws("node"))
         .groupBy(col("dst")).agg(min(col("label")).as("nl"))
-      val joined = sol.join(nbrMin, sol("node") === nbrMin("dst"), "left_outer")
-        .select(sol("node"),
-          sol("label"),
-          least(sol("label"), coalesce(col("nl"), sol("label"))).as("label2"))
-      val sol2 = joined.select(col("node"), col("label2").as("label"))
-      val ws2 = joined.filter(col("label2") < col("label"))
-        .select(col("node"), col("label2").as("label"))
-      (sol2, ws2)
+      sol.join(nbrMin, sol("node") === nbrMin("dst"))
+        .filter(col("nl") < sol("label"))
+        .select(sol("node"), col("nl").as("label"))
     }
   }
 
@@ -378,8 +374,10 @@ object Graph {
     * (Correctness: a pair at distance d ∈ (2^(k-1), 2^k] splits at
     * the midpoint of a shortest path into a prefix of distance
     * exactly 2^(k-1) — fresh in the previous superstep — and a
-    * suffix already in the solution.) `except` against the solution
-    * keeps the genuinely new pairs and the loop stops when a
+    * suffix already in the solution.) The superstep's delta is the
+    * extension minus the solution (`except`): the genuinely new
+    * pairs. Keyed on the whole row, it is both the next workset and
+    * the rows unioned into the solution, and the loop stops when a
     * superstep finds none — the reference's closeWith(nextPaths,
     * newPaths) termination. The workload graph is the 32-residue
     * customer-key DAG with stride edges (+1, +4, +16).
@@ -395,15 +393,20 @@ object Graph {
           col("b.v") === col("a.v") + 4 ||
           col("b.v") === col("a.v") + 16)
       .select(col("a.v").as("src"), col("b.v").as("dst"))
-    val closure = graft.engine.Iterate.delta(edges, edges, TcMaxIter) { (sol, ws) =>
-      // doubling join: fresh prefixes × full solution suffixes
-      val ext = ws.as("p").join(sol.as("q"), col("p.dst") === col("q.src"))
-        .select(col("p.src").as("src"), col("q.dst").as("dst"))
-      val fresh = ext.except(sol)
-      (sol.union(fresh), fresh)
-    }
-    closure.orderBy(col("src"), col("dst"))
+    transitiveClosure(edges, TcMaxIter).orderBy(col("src"), col("dst"))
   }
+
+  /** Library form: the path-doubling closure of any directed edge
+    * set (`src`, `dst`, no duplicate rows); superstep k adds the pairs
+    * at distance (2^(k-1), 2^k], so `maxIter` caps reach at distance
+    * 2^maxIter. */
+  def transitiveClosure(edges: DataFrame, maxIter: Int): DataFrame =
+    graft.engine.Iterate.delta(edges, edges, maxIter, "src", "dst") { (sol, ws) =>
+      // doubling join: fresh prefixes × full solution suffixes
+      ws.as("p").join(sol.as("q"), col("p.dst") === col("q.src"))
+        .select(col("p.src").as("src"), col("q.dst").as("dst"))
+        .except(sol)
+    }
 
   val q57Sql: String =
     s"""WITH RECURSIVE nodes AS (SELECT DISTINCT c_custkey % $TcMod AS v FROM customer),
@@ -437,9 +440,7 @@ object Graph {
   def ssspFromEdges(spark: SparkSession, ed: DataFrame, source: Long,
       iters: Int): DataFrame = {
     val init = spark.range(1).select(lit(source).as("node"), lit(0L).as("dist"))
-    // checkpointEvery=1: identical per-step plan shape → codegen cache
-    // hits on steps 2..n (the q41 note)
-    graft.engine.Iterate.loopDF(init, iters, checkpointEvery = 1) { (ds, _) =>
+    graft.engine.Iterate.loopDF(init, iters) { (ds, _) =>
       val cand = ed.join(broadcast(ds), ed("src") === ds("node"))
         .groupBy(col("dst").as("cnode"))
         .agg(min(col("dist") + col("w")).as("cdist"))
@@ -492,9 +493,7 @@ object Graph {
   def labelPropagationFromEdges(ed: DataFrame, iters: Int): DataFrame = {
     val init = ed.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-    // checkpointEvery=1: identical per-step plan shape → codegen cache
-    // hits on steps 2..n (the q41 note)
-    graft.engine.Iterate.loopDF(init, iters, checkpointEvery = 1) { (ls, _) =>
+    graft.engine.Iterate.loopDF(init, iters) { (ls, _) =>
       ed.join(broadcast(ls), ed("src") === ls("node"))
         .groupBy(col("dst"), col("label"))
         .agg(count(lit(1)).as("n"))
@@ -559,7 +558,7 @@ object Graph {
       st.crossJoin(broadcast(mx))
         .select(col("node"), round(col(c) / col("mx"), 6).as(c))
     }
-    val hubs = graft.engine.Iterate.loopDF(init, HitsIters, checkpointEvery = 1) { (hs, _) =>
+    val hubs = graft.engine.Iterate.loopDF(init, HitsIters) { (hs, _) =>
       val auth = normalize(
         e0.join(broadcast(hs), e0("p") === hs("node"))
           .groupBy(col("s").as("node")).agg(round(sum(col("h")), 6).as("a")), "a")
@@ -665,7 +664,7 @@ object Graph {
     val init = ed.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .withColumn("score", lit(1.0))
-    val fin = graft.engine.Iterate.loopDF(init, CdIters, checkpointEvery = 1) { (vs, t) =>
+    val fin = graft.engine.Iterate.loopDF(init, CdIters) { (vs, t) =>
       val sums = ed.join(broadcast(vs), ed("src") === vs("node"))
         .groupBy(ed("dst"), col("label"))
         .agg(round(sum(col("score")), 6).as("ssum"), max(col("score")).as("smax"))

@@ -117,8 +117,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   def scatterGatherIteration(states0: DataFrame, iters: Int)(
       scatter: (DataFrame, DataFrame) => DataFrame,
       gather: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    graft.engine.Iterate.loopDF(states0.localCheckpoint(true), iters,
-      checkpointEvery = 1) { (st, _) => gather(st, scatter(edges, st)) }
+    graft.engine.Iterate.loopDF(states0.localCheckpoint(true), iters) { (st, _) =>
+      gather(st, scatter(edges, st))
+    }
 
   /** Gelly `runGatherSumApplyIteration` (reference flink-gelly
     * gsa/GatherSumApplyIteration.java; Graph.java:1778): per

@@ -42,6 +42,10 @@ object Cpu {
     *    ignore the size estimate entirely and gate on the RDD's
     *    actual partition count (free to read — the RDD already
     *    exists in the plan node; no second physical plan is built).
+    *    The states [[Iterate.delta]] materializes do carry measured
+    *    sizes (row count × row width), but this gate and
+    *    [[sizedParts]] still size EVERY LogicalRDD leaf by its
+    *    partition count: nothing marks which leaves are measured.
     *  - A handful of huge NON-splittable files (gzip) pass the size
     *    gate while arriving as few splits — accepted; none of this
     *    engine's sources are gzip text.
@@ -83,9 +87,11 @@ object Cpu {
     * collapses to a few real partitions, a deployment-scale relation
     * keeps the configured session width (the estimate only coalesces
     * downward, exactly what AQE would do if it could see through the
-    * cache). LogicalRDD-leaf plans carry no real statistics — keep
-    * the session width (the same blind-spot rule as [[spread]],
-    * pointed the safe way: never under-parallelize unknown data). */
+    * cache). LogicalRDD-leaf plans mostly carry no real statistics
+    * (only the [[Iterate.delta]] states are measured, and nothing
+    * marks them) — keep the session width for every one (the same
+    * blind-spot rule as [[spread]], pointed the safe way: never
+    * under-parallelize unknown data). */
   def sizedParts(df: DataFrame, targetBytes: Long = 16L << 20): Int = {
     val sess = df.sparkSession
     val width = sess.sessionState.conf.numShufflePartitions

@@ -547,15 +547,14 @@ object Dedup {
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     val init = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-    // checkpointEvery=1 (r18): this step references `ls` TWICE (join
-    // leg + union leg) — the q42 lesson — so an uncheckpointed step's
-    // whole evaluation runs twice inside the next step's
-    // materialization; with =2 that is 3 step-evaluations per 2
-    // supersteps. Truncating every step also keeps the per-step plan
-    // shape identical (LogicalRDD → join → union → agg), so the deep
-    // unrolls (q203's 10, q211's 15 supersteps) hit the codegen cache
-    // from step 2 on instead of recompiling nested plans.
-    val labels = graft.engine.Iterate.loopDF(init, steps, checkpointEvery = 1) { (ls, _) =>
+    // this step references `ls` TWICE (join leg + union leg) — the
+    // q42 lesson — so it relies on loopDF truncating every step: an
+    // uncheckpointed step's whole evaluation would run twice inside
+    // the next step's materialization. The per-step plan shape stays
+    // identical (LogicalRDD → join → union → agg), so the deep unrolls
+    // (q203's 10, q211's 15 supersteps) hit the codegen cache from
+    // step 2 on instead of recompiling nested plans.
+    val labels = graft.engine.Iterate.loopDF(init, steps) { (ls, _) =>
       edges.join(ls, edges("src") === ls("node"))
         .select(col("dst").as("node2"), col("label"))
         .union(ls.select(col("node").as("node2"), col("label")))

@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionSet}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Dataset => CDataset, SparkSession => CSparkSession}
-import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.execution.{LogicalRDD, SparkStrategy}
 
 /** Minimal access bridge into Spark's `private[sql]` planner surface
   * (Column→Expression, LogicalPlan→DataFrame, extra strategies) for
@@ -29,6 +30,23 @@ object Bridge {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
+
+  /** A checkpointed frame (one LogicalRDD leaf) rebuilt to report a
+    * measured row count as its statistics: `rows` and rows × the
+    * estimated row width. The leaf otherwise inherits its origin
+    * plan's estimate. Partitioning and ordering are kept, and so are
+    * the constraints over the leaf's own output: the origin's rewrite
+    * can leave a constraint naming an attribute of the origin plan,
+    * which fails the constraint rewrite of a Union above the leaf. */
+  def withRowCount(checkpointed: DataFrame, rows: Long): DataFrame = {
+    val r = checkpointed.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val stats = Statistics(
+      sizeInBytes = EstimationUtils.getSizePerRow(r.output) * rows,
+      rowCount = Some(BigInt(rows)))
+    val s = checkpointed.sparkSession.asInstanceOf[CSparkSession]
+    val constraints = r.constraints.filter(_.references.subsetOf(r.outputSet))
+    ofRows(s, r.copy()(s, Some(stats), Some(ExpressionSet(constraints))))
+  }
 
   def addStrategy(spark: SparkSession, s: SparkStrategy): Unit = {
     val exp = spark.asInstanceOf[CSparkSession].experimental

@@ -28,7 +28,8 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
 
   // r18 note on the superstep rows (q41/q42/q62/q124/q125/q133-q137/
   // q151/q154/q211 ...): every iteration loop now truncates per step
-  // (checkpointEvery=1 — codegen-cache reuse across steps), so the
+  // (Iterate.loopDF checkpoints after every step — codegen-cache
+  // reuse across steps; Iterate.delta materializes each delta), so the
   // graded plan the census sees is the SERVE plan over the final
   // checkpointed RDD; the per-superstep shape is pinned by GraphSpec's
   // semantic equalities and evidenced by JobProbe job/task counts
@@ -293,8 +294,8 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
     // signatures AND the collapsed pair graph are each checkpointed
     // once (zero file scans — decode runs once, the q207 posture);
     // the visible plan is the final min-label superstep segment
-    // (label agg + output sort past the loop's checkpointEvery=2
-    // cut) with its broadcast of the small label frontier
+    // (label agg + output sort past the loop's last per-step cut)
+    // with its broadcast of the small label frontier
     "q211_media_cluster_star" -> PlanCounts(0, 0, 1, 0),
     // the maintained SCD2 table is served via Localize (the durable
     // log is deleted after the graded read), so the census sees the
