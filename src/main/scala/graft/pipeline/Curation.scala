@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.Portable._
 import graft.sources.Tables
@@ -801,21 +802,29 @@ object Curation {
     * Maintenance runs per trigger on the [[graft.streaming
     * .DurableIndex]] log, keyed by doc_id with replace-by-key
     * masking doing the UPDATE: each trigger rewrites ONLY the
-    * touched documents' histories (close the open row at the batch's
-    * first event ts, fold intra-batch event runs with one
-    * lead-window, re-emit the untouched closed rows) and appends
-    * them as one idempotent entry. The prior-history lookup is the
-    * per-trigger cost, and it is DIRECTORY-PRUNED: rows are
-    * hive-partitioned by key bucket (`kb = doc_id % `[[ScdKeyBuckets]])
-    * and the lookup filters to the batch's buckets before the
-    * masking join — the q199 serving-read posture applied to a
-    * dimension table, so at 100 TB a trigger reads the touched
-    * buckets, not the dimension. (The bucket list is a bounded
-    * ≤ ScdKeyBuckets driver-side collect.) Batches arrive in event-
-    * time order (a CDC log's arrival contract); CurationSpec
-    * re-drives the identical feed at 1/2/3 time-contiguous splits
-    * and pins identical history — per-doc results depend only on the
-    * doc's own event sequence, so boundary placement cannot matter.
+    * touched documents' histories and appends them as one idempotent
+    * entry. The rewrite is ONE window pass: the touched docs' prior
+    * rows, recast as upserts at `valid_from` that carry their own
+    * `valid_to`, are unioned with the batch's events, and one
+    * `lead(ts)` per doc (ordered by ts, prior before batch) gives
+    * `valid_to = coalesce(own valid_to, lead)`. A closed row keeps
+    * its own `valid_to`, the open row closes at the doc's first batch
+    * event, and each batch upsert closes at the next batch event.
+    * That relies on the arrival contract: batches arrive in
+    * event-time order (a CDC log's), so no batch event precedes a
+    * prior row; q216 is the maintainer for feeds that break it. The
+    * prior-history lookup is the per-trigger cost, and it is
+    * DIRECTORY-PRUNED: rows are hive-partitioned by key bucket
+    * (`kb = doc_id % `[[ScdKeyBuckets]]) and the lookup filters to the
+    * batch's buckets before the masking join — the q199 serving-read
+    * posture applied to a dimension table, so at 100 TB a trigger
+    * reads the touched buckets, not the dimension. (The bucket list
+    * is a bounded ≤ ScdKeyBuckets list observed on the keys write.)
+    * CurationSpec re-drives the identical feed at 1/2/3
+    * time-contiguous splits and pins identical history — per-doc
+    * results depend only on the doc's own event sequence, so
+    * boundary placement cannot matter — and checks random feeds at
+    * random splits against a driver-side lead fold.
     *
     * Oracle: the from-scratch window form over the full feed — each
     * upsert's `valid_to` is the `lead(ts)` of the doc's next event,
@@ -849,48 +858,73 @@ object Curation {
     * explicit-schema empty frame on the first trigger (a
     * hive-partitioned layout cannot represent a seeded empty), else
     * the durable log filtered to the batch's key buckets — a bounded
-    * ≤ [[ScdKeyBuckets]]-value driver-side collect is the pruning
-    * predicate — and semi-joined to the batch's doc ids. One
-    * implementation so the read posture cannot drift between the
-    * maintainers. */
+    * ≤ [[ScdKeyBuckets]]-value driver-side list is the pruning
+    * predicate — and semi-joined to the batch's doc ids (duplicates
+    * allowed: a semi-join only tests existence). One log listing
+    * decides both branches. One implementation so the read posture
+    * cannot drift between the maintainers. */
   private def prunedPrior(state: graft.streaming.DurableIndex,
       kbs: Seq[Int], ids: DataFrame,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val spark = ids.sparkSession
-    if (!state.hasState)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    else {
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    state.currentOption() match {
       // no broadcast hint on ids (r16 advice/stretch #7): the batch id
       // set is unbounded — a deployment backfill of millions of ids
-      // would pin an oversized broadcast on every executor. The join
-      // runs on the root session where AQE is on, so a small batch
-      // still converts to a broadcast join at runtime from its REAL
-      // shuffle stats (the DurableIndex broadcast-guard posture,
-      // delegated to AQE instead of a driver-side size proxy).
-      state.current().filter(col("kb").isin(kbs: _*))
-        .join(ids, Seq("doc_id"), "left_semi")
+      // would pin an oversized broadcast on every executor. `ids`
+      // carries the batch's measured row count instead
+      // (appendBatchKeys), so the planner broadcasts a micro-batch's
+      // ids statically and shuffles a backfill's.
+      case Some(cur) =>
+        cur.filter(col("kb").isin(kbs: _*)).join(ids, Seq("doc_id"), "left_semi")
+      case None =>
+        ids.sparkSession.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     }
+
+  /** Key-bucket the trigger's batch (`kb = doc_id % `[[ScdKeyBuckets]]),
+    * write its masking keys, and return the bucketed events with the
+    * batch's distinct key buckets. The bounded ≤ [[ScdKeyBuckets]]
+    * pruning list and the batch's row count ride the keys write
+    * itself as an Observation, so the write's own `doc_id` distinct
+    * is the trigger's only key aggregation (one action, one shuffle).
+    * The returned events carry the measured row count as their plan
+    * statistics ([[org.apache.spark.sql.graftbridge.Bridge
+    * .withRowCount]]), so the planner sizes the prior read's
+    * semi-join on them statically. The keys-before-rows commit order
+    * of [[graft.streaming.DurableIndex.append]] is preserved
+    * (appendKeys is its first half; the prior-state read between the
+    * halves only sees rows-committed entries). */
+  private def appendBatchKeys(state: graft.streaming.DurableIndex,
+      batchId: Long, batch: DataFrame): (DataFrame, Seq[Int]) = {
+    def bucketed(df: DataFrame) =
+      df.withColumn("kb", pmod(col("doc_id"), lit(ScdKeyBuckets)).cast("int"))
+    val obs = org.apache.spark.sql.Observation()
+    state.appendKeys(batchId, bucketed(batch)
+      .observe(obs, collect_set(col("kb")).as("kbs"), count(lit(1)).as("n")))
+    val seen = obs.get
+    (bucketed(Bridge.withRowCount(batch, seen("n").asInstanceOf[Long])),
+      seen("kbs").asInstanceOf[Seq[Int]])
   }
 
-  /** Write the trigger's masking keys and return the batch's distinct
-    * key buckets (r18 action fusion): the bounded ≤ [[ScdKeyBuckets]]
-    * pruning list rides the keys write itself as an Observation — one
-    * action instead of r17's separate `kb`-distinct collect plus keys
-    * write. The keys-before-rows commit order of
-    * [[graft.streaming.DurableIndex.append]] is preserved (appendKeys
-    * is its first half; the prior-state read between the halves only
-    * sees rows-committed entries). The written key set is unchanged:
-    * `kb` is a function of `doc_id`, so the (doc_id, kb)-distinct
-    * frame projects to exactly the distinct doc_id set. */
-  private def appendKeysWithKbs(state: graft.streaming.DurableIndex,
-      batchId: Long, ev: DataFrame): Seq[Int] = {
-    val obs = org.apache.spark.sql.Observation()
-    state.appendKeys(batchId,
-      ev.select(col("doc_id"), col("kb")).distinct()
-        .observe(obs, collect_set(col("kb")).as("kbs"))
-        .select(col("doc_id")))
-    obs.get("kbs").asInstanceOf[Seq[Int]]
+  /** One trigger's history rewrite: the touched docs' `prior` history
+    * rows, recast as upserts at `valid_from` that carry their own
+    * `valid_to`, plus the batch's events `ev`, through ONE lead window
+    * per doc: `valid_to = coalesce(own valid_to, lead(ts))`, upserts
+    * only. Ties on ts order closed prior rows, then the open prior
+    * row, then the batch, so the open row closes at the doc's first
+    * batch event even when a version opened and closed at that ts —
+    * whatever order the prior rows are read in. */
+  private[graft] def scd2Rewrite(prior: DataFrame, ev: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("ts"), col("__ord"))
+    prior
+      .select(col("doc_id"), col("valid_from").as("ts"), lit("u").as("op"),
+        col("h"), col("kb"), col("valid_to").as("__to"),
+        when(col("valid_to").isNull, 1).otherwise(0).as("__ord"))
+      .unionByName(ev.select(col("doc_id"), col("ts"), col("op"), col("h"),
+        col("kb"), lit(null).cast("long").as("__to"), lit(2).as("__ord")))
+      .withColumn("valid_to", coalesce(col("__to"), lead(col("ts"), 1).over(w)))
+      .filter(col("op") === "u")
+      .select(col("doc_id"), col("h"), col("ts").as("valid_from"),
+        col("valid_to"), col("kb"))
   }
 
   /** Drive the q212 SCD2 maintenance over `batches` and return the
@@ -900,7 +934,6 @@ object Curation {
   private[graft] def maintainScd2(spark: SparkSession,
       batches: Seq[DataFrame], tag: String)
       : graft.streaming.DurableIndex = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val state = graft.streaming.DurableIndex.temp(spark, tag, "doc_id",
       partitionCols = Seq("kb"))
@@ -908,29 +941,12 @@ object Curation {
       StructField("h", StringType), StructField("valid_from", LongType),
       StructField("valid_to", LongType),
       StructField("kb", IntegerType)))
-    val outCols = Seq("doc_id", "h", "valid_from", "valid_to", "kb").map(col)
     graft.streaming.FileDrip.drive(batches) { stream =>
       graft.streaming.Streams.toForeachBatch(stream,
           "q212_scd2_history") { (batch, batchId) =>
-        val ev = batch.withColumn("kb",
-          pmod(col("doc_id"), lit(ScdKeyBuckets)).cast("int"))
-        val ids = ev.select(col("doc_id")).distinct()
-        val kbs = appendKeysWithKbs(state, batchId, ev)
-        val prior = prunedPrior(state, kbs, ids, histSchema)
-        val firstTs = ev.groupBy(col("doc_id")).agg(min(col("ts")).as("__t0"))
-        val openClosed = prior.filter(col("valid_to").isNull)
-          .drop("valid_to")
-          .join(broadcast(firstTs), Seq("doc_id"))
-          .withColumn("valid_to", col("__t0")).drop("__t0")
-        val w = Window.partitionBy(col("doc_id")).orderBy(col("ts"))
-        val intra = ev.withColumn("valid_to", lead(col("ts"), 1).over(w))
-          .filter(col("op") === "u")
-          .withColumn("valid_from", col("ts"))
-        val newRows = prior.filter(col("valid_to").isNotNull)
-          .select(outCols: _*)
-          .unionByName(openClosed.select(outCols: _*))
-          .unionByName(intra.select(outCols: _*))
-        state.appendRows(batchId, newRows)
+        val (ev, kbs) = appendBatchKeys(state, batchId, batch)
+        val prior = prunedPrior(state, kbs, ev.select(col("doc_id")), histSchema)
+        state.appendRows(batchId, scd2Rewrite(prior, ev))
       }
     }
     state
@@ -1083,11 +1099,9 @@ object Curation {
     graft.streaming.FileDrip.drive(batches) { stream =>
       graft.streaming.Streams.toForeachBatch(stream,
           "q216_scd2_outoforder") { (batch, batchId) =>
-        val ev = batch.withColumn("kb",
-          pmod(col("doc_id"), lit(ScdKeyBuckets)).cast("int"))
-        val ids = ev.select(col("doc_id")).distinct()
-        val kbs = appendKeysWithKbs(state, batchId, ev)
-        val merged = prunedPrior(state, kbs, ids, evSchema).select(evCols: _*)
+        val (ev, kbs) = appendBatchKeys(state, batchId, batch)
+        val merged = prunedPrior(state, kbs, ev.select(col("doc_id")), evSchema)
+          .select(evCols: _*)
           .unionByName(ev.select(evCols: _*))
           .distinct()
         state.appendRows(batchId, merged)

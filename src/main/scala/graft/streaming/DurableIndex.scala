@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Durable maintained-index state — the production posture for the
   * incremental indexers (q197 lexical postings, q199 IVF cell
@@ -92,17 +94,31 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
 
   /** Per-dir schema memo (r17 optimization): every `spark.read
     * .parquet(dir)` without a schema pays a fresh FileIndex listing +
-    * footer inference on the driver, and the maintainers re-read the
+    * a footer-inference Spark job, and the maintainers re-read the
     * SAME committed dirs once per trigger (prunedPrior) plus once at
-    * serve time — measured as a visible slice of the 2-3 s driver gap
-    * per maintainer row (guide §6: avoid repeated listings/inference).
+    * serve time (guide §6: avoid repeated listings/inference). The
+    * memo is filled at WRITE time for every dir this instance commits
+    * (keys, rows, empty marker, base), so a dir the instance wrote
+    * itself is never inferred; only dirs committed by an earlier
+    * writer (a restarted maintainer) pay one inference on first read.
     * Entry dirs are immutable once committed (a checkpoint replay
     * overwrites with the identical schema by the idempotence
-    * contract), so the first inferred schema stays valid; inference —
-    * not a caller-declared schema — keeps partition-column type
-    * derivation bit-identical to the uncached behavior. */
+    * contract), so a recorded schema stays valid.
+    *
+    * The written schema is what inference would return: parquet
+    * footers carry the writer's Spark schema, which a file read
+    * returns with every field nullable; a hive-partitioned dir adds
+    * its partition columns after the data columns, in `partitionBy`
+    * order, typed by partition discovery. That last step is the one
+    * place the two could differ, so a partitioned dir is recorded only
+    * when every partition column is an INT (discovery types integral
+    * values that fit an int as IntegerType) and type inference is on;
+    * any other partitioned layout keeps first-read inference. An empty
+    * marker is an unpartitioned file holding the columns in the
+    * writer's order, and is recorded in that order. DurableIndexSpec
+    * pins written ≡ inferred for each layout. */
   private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+    scala.collection.concurrent.TrieMap.empty[String, StructType]
 
   private def readParquet(dir: String): DataFrame =
     schemaCache.get(dir) match {
@@ -112,6 +128,22 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
         schemaCache.put(dir, df.schema)
         df
     }
+
+  /** Record the schema a read of the unpartitioned `dir` returns. */
+  private def remember(dir: String, written: StructType): Unit =
+    schemaCache.put(dir, Bridge.asNullable(written))
+
+  /** Record the schema a read of the hive-partitioned `dir` returns,
+    * when partition discovery is sure to type it the same way. */
+  private def rememberPartitioned(dir: String, written: StructType): Unit = {
+    val parts = partitionCols.flatMap(c => written.fields.find(_.name == c))
+    if (parts.size == partitionCols.size &&
+        parts.forall(_.dataType == IntegerType) &&
+        spark.conf.get("spark.sql.sources.partitionColumnTypeInference.enabled",
+          "true").toBoolean)
+      remember(dir, StructType(
+        written.fields.filterNot(parts.contains) ++ parts))
+  }
 
   // ------------------------------------------------------- writer fence
   /** Single-writer FENCE (r15 stretch): two writers against one log
@@ -202,11 +234,12 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
     * rows, readable footer — what an empty hive-partitioned write
     * (which emits `_SUCCESS` but no data file, so no inferable
     * schema) is replaced with. */
-  private def writeEmptyMarker(dir: String,
-      schema: org.apache.spark.sql.types.StructType): Unit =
+  private def writeEmptyMarker(dir: String, schema: StructType): Unit = {
     spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
       .repartition(1).write.mode("overwrite").parquet(dir)
+    remember(dir, schema)
+  }
 
   private def writeRows(dir: String, rows: DataFrame,
       healByReplay: Boolean = false): Unit = {
@@ -241,8 +274,10 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
     //    committed write — the r16/r17 persist posture, kept: one
     //    materialization pins the probe's snapshot and the write
     //    drains the same cache.
-    if (partitionCols.isEmpty) rows.write.mode("overwrite").parquet(dir)
-    else if (healByReplay) {
+    if (partitionCols.isEmpty) {
+      rows.write.mode("overwrite").parquet(dir)
+      remember(dir, rows.schema)
+    } else if (healByReplay) {
       val obs = org.apache.spark.sql.Observation()
       rows.observe(obs, count(lit(1)).as("n"))
         .hint("rebalance", partitionCols.map(col): _*)
@@ -250,14 +285,17 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
         .parquet(dir)
       if (obs.get("n").asInstanceOf[Long] == 0L)
         writeEmptyMarker(dir, rows.schema)
+      else rememberPartitioned(dir, rows.schema)
     } else {
       val mat = rows.persist()
       try {
         if (mat.isEmpty) writeEmptyMarker(dir, rows.schema)
-        else
+        else {
           mat.hint("rebalance", partitionCols.map(col): _*)
             .write.mode("overwrite").partitionBy(partitionCols: _*)
             .parquet(dir)
+          rememberPartitioned(dir, rows.schema)
+        }
       } finally mat.unpersist(blocking = false)
     }
   }
@@ -281,17 +319,18 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
   /** First half of [[append]] (r18 action fusion): the masking-key
     * write alone. Exposed so a maintainer whose prior-state read
     * needs a driver-side fact about the batch (the SCD2 key-bucket
-    * pruning list) can ride it as an Observation on THIS action
-    * instead of paying a separate collect — the keys-before-rows
-    * commit order is unchanged (a keys dir whose rows never commit
+    * pruning list and the batch size) can ride it as an Observation
+    * on THIS action instead of paying a separate collect — the
+    * keys-before-rows commit order is unchanged (a keys dir whose rows never commit
     * is ignored by every reader, and the prior-state read only sees
     * rows-committed entries, so reading state between the two halves
     * observes exactly what it observed before the split). */
   def appendKeys(batchId: Long, batchKeys: DataFrame): Unit = {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     fence()
-    batchKeys.select(col(key)).distinct()
-      .write.mode("overwrite").parquet(keysDir(batchId + 1))
+    val keys = batchKeys.select(col(key)).distinct()
+    keys.write.mode("overwrite").parquet(keysDir(batchId + 1))
+    remember(keysDir(batchId + 1), keys.schema)
   }
 
   /** Second half of [[append]]: the entry's rows (the commit point),
@@ -323,16 +362,6 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
     due
   }
 
-  /** True once anything is committed — lets a maintainer skip its
-    * prior-state lookup on the very first trigger instead of seeding
-    * a sentinel-empty base, which a hive-partitioned layout cannot
-    * represent (an empty partitioned write emits no data files, so
-    * the dir has no readable schema). */
-  def hasState: Boolean = {
-    val s = snapshot()
-    s.base.nonEmpty || s.entrySeqs.nonEmpty
-  }
-
   /** Committed LIVE entry seqs, ascending — a base fold is reported
     * as one entry at the seq it covers through, so `max + 1` is
     * always a safe next seq for a resumed feed (q209's posture). */
@@ -348,6 +377,17 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
     * that rewrote it, one left join — a row survives iff it is at
     * least as new as the newest rewrite of its key. */
   def current(): DataFrame = currentFrom(snapshot())
+
+  /** [[current]], or None while nothing is committed, from ONE log
+    * listing — lets a maintainer skip its prior-state lookup on the
+    * very first trigger instead of seeding a sentinel-empty base,
+    * which a hive-partitioned layout cannot represent (an empty
+    * partitioned write emits no data files, so the dir has no
+    * readable schema). */
+  def currentOption(): Option[DataFrame] = {
+    val s = snapshot()
+    if (s.base.isEmpty && s.entrySeqs.isEmpty) None else Some(currentFrom(s))
+  }
 
   private def currentFrom(s: Snapshot): DataFrame = {
     require(s.base.nonEmpty || s.entrySeqs.nonEmpty,
@@ -434,7 +474,10 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
     }
     (s.entrySeqs ++ s.staleSeqs).foreach(q =>
       fs.delete(new Path(entryDir(q)), true))
-    schemaCache.clear() // folded dirs are gone; drop their memoized schemas
+    // every other memoized dir is retired (a torn keys dir is rewritten,
+    // and recorded again, by its replay); the new base's written schema
+    // stays, so the next read infers nothing
+    schemaCache.keys.filter(_ != target).foreach(schemaCache.remove)
   }
 
   /** Drop the whole log (a graded run's temp state). */

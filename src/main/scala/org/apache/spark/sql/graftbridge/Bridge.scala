@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Dataset => CDataset, SparkSession => CSparkSession}
 import org.apache.spark.sql.execution.{LogicalRDD, SparkStrategy}
+import org.apache.spark.sql.types.StructType
 
 /** Minimal access bridge into Spark's `private[sql]` planner surface
   * (Column→Expression, LogicalPlan→DataFrame, extra strategies) for
@@ -47,6 +48,10 @@ object Bridge {
     val constraints = r.constraints.filter(_.references.subsetOf(r.outputSet))
     ofRows(s, r.copy()(s, Some(stats), Some(ExpressionSet(constraints))))
   }
+
+  /** `schema` with every field nullable, nested fields included: the
+    * schema a file-source read returns for data written as `schema`. */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 
   def addStrategy(spark: SparkSession, s: SparkStrategy): Unit = {
     val exp = spark.asInstanceOf[CSparkSession].experimental

@@ -413,6 +413,120 @@ class CurationSpec extends AnyFunSuite with SparkSpec {
     assert(two.exists(v => v._3 == 20L && v._5 == 1), "no late add current")
   }
 
+  test("q212 submits a bounded number of Spark jobs per warm run") {
+    // trigger jobs run on the stream's thread and carry the tag too.
+    // Measured here: 21 jobs; 23 with the two-branch prior read, 25
+    // with read-time schema inference, 30 with both plus the
+    // two-shuffle key write and an unsized batch
+    Curation.q212WithSplits(spark, sf, 2).collect()
+    val jobs = SparkJobs.of(spark)(Curation.q212WithSplits(spark, sf, 2).collect())
+    assert(jobs <= 22, s"warm q212 submitted $jobs jobs")
+  }
+
+  /** One SCD2 event: (doc_id, ts, op, h); a tombstone has no h. */
+  private type Scd2Event = (Long, Long, String, Option[String])
+
+  /** A seeded random SCD2 feed over ticks 1-12 as 2-4 time-contiguous
+    * batches (in-order arrival: no batch holds an event older than a
+    * doc's events in an earlier batch), at most 30 docs. Random docs
+    * carry 0-4 events at distinct ticks; docs above them pin the edge
+    * cases at every split: a delete then a re-add in the last batch
+    * (whose prior is then closed rows only), a tombstone after a
+    * delete, a tombstone for a doc with no history, several upserts of
+    * one doc inside one batch, and at each batch boundary a doc whose
+    * next batch opens a version at the same ts as its prior open row
+    * (with 3+ batches that doc later holds a zero-length closed row
+    * and an open row at one ts). */
+  private def scd2Feed(seed: Int): Seq[Seq[Scd2Event]] = {
+    val rnd = new scala.util.Random(seed)
+    val ticks = 12L
+    val nBatches = 2 + seed % 3
+    // batch 0 spans at least ticks 1-2
+    val cuts = rnd.shuffle((2L until ticks).toList).take(nBatches - 1).sorted
+    val ends = cuts :+ ticks
+    val starts = 1L +: cuts.map(_ + 1)
+    def batchOf(t: Long) = ends.indexWhere(t <= _)
+    def h() = Some(f"h${rnd.nextInt(1000)}%03d")
+    val docs = 15 + rnd.nextInt(7)
+    val random = (0 until docs).flatMap { d =>
+      rnd.shuffle((1L to ticks).toList).take(rnd.nextInt(5)).map { t =>
+        if (rnd.nextInt(10) < 7) (d.toLong, t, "u", h()) else (d.toLong, t, "d", None)
+      }
+    }
+    val e = docs.toLong
+    val last = nBatches - 1
+    val widest = ends.indices.maxBy(b => ends(b) - starts(b))
+    val byTick: Seq[Scd2Event] = random ++ Seq(
+      (e, 1L, "u", h()), (e, 2L, "d", None), (e, ticks, "u", h()),
+      (e + 1, 1L, "u", h()), (e + 1, 2L, "d", None), (e + 1, ticks, "d", None),
+      (e + 2, starts(last), "d", None)) ++
+      (starts(widest) to ends(widest)).map(t => (e + 3, t, "u", h()))
+    val feed = Array.tabulate(nBatches)(b =>
+      byTick.filter(ev => batchOf(ev._2) == b).toBuffer)
+    (0 until last).foreach { b =>
+      val d = e + 4 + b
+      feed(b) += ((d, ends(b), "u", h()))
+      feed(b + 1) += ((d, ends(b), "u", h()))
+      feed(last) += ((d, ticks, "u", h()))
+    }
+    feed.map(_.toSeq).toSeq
+  }
+
+  test("SCD2 maintenance equals a driver-side lead fold on random feeds and splits") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("ts", LongType), StructField("op", StringType),
+      StructField("h", StringType)))
+    type Version = (Long, String, Long, Option[Long])
+    def ordered(vs: Seq[Version]) =
+      vs.sortBy(v => (v._1, v._3, v._4.getOrElse(Long.MaxValue), v._2))
+    (1 to 6).foreach { seed =>
+      val feed = scd2Feed(seed)
+      // the reference: per doc, every event in (ts, arrival) order; an
+      // upsert's version closes at the next event
+      val want = ordered(feed.zipWithIndex
+        .flatMap { case (evs, b) => evs.map(ev => (ev, b)) }
+        .groupBy(_._1._1).toSeq.flatMap { case (id, es) =>
+          val sorted = es.sortBy { case (ev, b) => (ev._2, b) }.map(_._1)
+          sorted.zipWithIndex.collect { case ((_, ts, "u", Some(h)), i) =>
+            (id, h, ts, sorted.lift(i + 1).map(_._2))
+          }
+        })
+      val batches = feed.map(evs => spark.createDataFrame(
+        java.util.Arrays.asList(evs.map { case (d, t, op, h) =>
+          Row(d, t, op, h.orNull) }: _*), schema))
+      val state = Curation.maintainScd2(spark, batches, s"scd2prop$seed")
+      val got = try ordered(state.current()
+          .select("doc_id", "h", "valid_from", "valid_to").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+            if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSeq)
+        finally state.delete()
+      assert(got == want, s"seed $seed (${feed.size} batches): " +
+        s"maintained ${got.diff(want)} vs folded ${want.diff(got)}")
+    }
+  }
+
+  test("the SCD2 rewrite closes the open row at the first batch event in any prior read order") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val kb = StructField("kb", IntegerType)
+    // doc 1 opened and closed version a at ts 5, then opened b at ts 5;
+    // the prior is read open row FIRST, ahead of the zero-length row
+    val prior = spark.createDataFrame(java.util.Arrays.asList(
+        Row(1L, "b", 5L, null, 1), Row(1L, "a", 5L, 5L, 1)),
+      StructType(Seq(StructField("doc_id", LongType), StructField("h", StringType),
+        StructField("valid_from", LongType), StructField("valid_to", LongType), kb)))
+      .coalesce(1)
+    val ev = spark.createDataFrame(java.util.Arrays.asList(Row(1L, 9L, "u", "c", 1)),
+      StructType(Seq(StructField("doc_id", LongType), StructField("ts", LongType),
+        StructField("op", StringType), StructField("h", StringType), kb)))
+    val got = Curation.scd2Rewrite(prior, ev).collect()
+      .map(r => (r.getString(1), r.getLong(2),
+        if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
+    assert(got == Set(("a", 5L, Some(5L)), ("b", 5L, Some(9L)), ("c", 9L, None)))
+  }
+
   test("q213 point-in-time join equals interval lookup against the MAINTAINED q212 history") {
     // the consumer tied to the producer: resolving each probe against
     // the streaming-maintained SCD2 table (not the batch window form

@@ -299,6 +299,51 @@ class DurableIndexSpec extends AnyFunSuite with SparkSpec {
     } finally state.delete()
   }
 
+  /** A fresh instance over `state`'s log (so no schema memo) must
+    * read the same schema and rows as the writing instance, which
+    * reads only schemas it recorded at write time: no inference job. */
+  private def assertWrittenSchemaIsInferred(state: DurableIndex,
+      key: String, partitionCols: Seq[String]): Unit = {
+    var written: DataFrame = null
+    assert(SparkJobs.of(spark) { written = state.current() } == 0,
+      "the writing instance inferred a schema it wrote")
+    val fresh = new DurableIndex(spark, state.path, key, partitionCols)
+      .current()
+    assert(fresh.schema == written.schema)
+    assert(fresh.collect().toSet == written.collect().toSet)
+  }
+
+  test("schemas recorded at write time equal a fresh instance's inferred ones") {
+    def logOf(tag: String, partitionCols: Seq[String]): DurableIndex =
+      DurableIndex.temp(spark, tag, "id", partitionCols = partitionCols)
+    val rows = spark.range(64).select(col("id"),
+      (col("id") % 16).cast("int").as("kb"), (col("id") % 4).cast("int").as("cell"),
+      concat(lit("p"), col("id").cast("string")).as("payload"),
+      array(col("id").cast("float")).as("vec"))
+    Seq(Nil, Seq("kb"), Seq("cell")).foreach { parts =>
+      val state = logOf(s"dix_memo_${parts.mkString}", parts)
+      try {
+        state.seed(rows.filter(col("id") < 40))
+        val b0 = rows.filter(col("id") >= 32)
+        state.append(0L, b0.select(col("id")), b0)
+        assertWrittenSchemaIsInferred(state, "id", parts)
+        // an empty entry: a partitioned log writes the empty marker
+        state.append(1L, rows.filter(col("id") === 3).select(col("id")),
+          rows.filter(lit(false)))
+        assertWrittenSchemaIsInferred(state, "id", parts)
+        // compaction keeps the new base's written schema
+        state.compact()
+        assertWrittenSchemaIsInferred(state, "id", parts)
+      } finally state.delete()
+    }
+    // a log whose only dir is an empty marker
+    val empty = logOf("dix_memo_empty", Seq("kb"))
+    try {
+      empty.seed(rows.filter(lit(false)))
+      assertWrittenSchemaIsInferred(empty, "id", Seq("kb"))
+    } finally empty.delete()
+  }
+
   test("writer fence: a newer writer's claim makes the stale writer's append throw") {
     // r15 stretch: two writers against one log are out of contract
     // but used to fail SILENTLY (interleaved entries, corrupted

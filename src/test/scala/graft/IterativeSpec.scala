@@ -1,12 +1,8 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.collection.mutable
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.execution.LogicalRDD
@@ -111,44 +107,13 @@ class IterativeSpec extends AnyFunSuite with SparkSpec {
 
   // ------------------------------------------------------ Iterate.delta
 
-  /** Jobs submitted while `body` runs, counted by a listener on a job
-    * tag. Listener events arrive asynchronously but in order, so once a
-    * fence job submitted after `body` is seen, every job of `body` has
-    * been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"iterate-jobs-${System.nanoTime}"
-    val fence = s"$tag-fence"
-    val jobs = new AtomicInteger
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .fold(Set.empty[String])(_.split(",").toSet)
-        if (tags(tag)) jobs.incrementAndGet()
-        if (tags(fence)) fenced.countDown()
-      }
-    }
-    def tagged(t: String)(f: => Unit): Unit = {
-      sc.addJobTag(t)
-      try f finally sc.removeJobTag(t)
-    }
-    sc.addSparkListener(listener)
-    try {
-      tagged(tag)(body)
-      tagged(fence)(sc.parallelize(Seq(1), 1).count())
-      assert(fenced.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("q57 submits a bounded number of Spark jobs per warm run") {
     // the same 32-node graph at every scale factor. Measured here: 22
     // jobs; 31 when the states carry no measured size, 34 when the delta
     // is computed twice per superstep (once into the solution, once as
     // the workset), 61 with both (a step returning (solution', workset'))
     Graph.q57TransitiveClosure(spark, sf).collect()
-    val jobs = jobsOf(Graph.q57TransitiveClosure(spark, sf).collect())
+    val jobs = SparkJobs.of(spark)(Graph.q57TransitiveClosure(spark, sf).collect())
     assert(jobs <= 26, s"warm q57 submitted $jobs jobs")
   }
 
