@@ -76,10 +76,7 @@ object Iterative {
       struct(abs(col("value") - lit(c)).as("d"), lit(i).as("cid"))
     }: _*)).getField("cid")
 
-  /** The q23 training loop (persisted working set + 3 supersteps of
-    * assign/average over fixed init), shared between the graded query
-    * and the kernel-seam restatement of its assign step. */
-  private def kmeansFit(spark: SparkSession, dir: String): (DataFrame, Array[Double]) = {
+  def q23KMeans(spark: SparkSession, dir: String): DataFrame = {
     // cache the working set: every superstep (plus the final
     // assignment) re-scans it — memory-resident like MLlib's kmeans
     val ev = Tables.events(spark, dir).select(col("event_id"), col("value"))
@@ -91,14 +88,8 @@ object Iterative {
         .map(r => r.getInt(0) -> r6(r.getDouble(1))).toMap
       cs.indices.map(i => upd.getOrElse(i, cs(i))).toArray
     }
-    (ev, cents)
-  }
-
-  def q23KMeans(spark: SparkSession, dir: String): DataFrame = {
-    val (ev, cents) = kmeansFit(spark, dir)
-    def cidExpr(cs: Array[Double]): Column = kmeansCidExpr(cs)
     val centMap = map(cents.zipWithIndex.toIndexedSeq.flatMap { case (c, i) => Seq(lit(i), lit(c)) }: _*)
-    localized(spark, ev.withColumn("cid", cidExpr(cents))
+    localized(spark, ev.withColumn("cid", kmeansCidExpr(cents))
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n"))
       .withColumn("centroid", element_at(centMap, col("cid")))
@@ -279,129 +270,6 @@ object Iterative {
       |  round(-sum(value * sin(2.0 * pi() * k * n / 64.0)), 4) + 0.0 AS im
       |FROM ks CROSS JOIN sig
       |GROUP BY k ORDER BY k""".stripMargin
-
-  /** q25's DFT restated as the reference's ACTUAL device shape
-    * (TestDFT.java:151-177: a map over output indices with the whole
-    * signal broadcast, each index computing a signal-length dot) so
-    * it can route through the [[graft.plans.DotKernelProjectRule]]
-    * accelerator seam: per k row, two array&lt;float&gt; columns —
-    * the 64-sample signal (a broadcast literal, the reference's
-    * broadcast set) and the cos / negated-sin wave for k — projected
-    * through top-level `graft_dot` aliases. With the seam flag off
-    * this runs whole-stage codegen over [[graft.plans.DotProduct]];
-    * with it on, the batch kernel — DotKernelSpec dual-runs both and
-    * checks against graded q25 within the reference's 0.01 gate
-    * (float wave/signal vs q25's double path). The im wave carries
-    * the minus sign so BOTH outputs stay top-level kernel aliases
-    * (a `-graft_dot(…)` wrapper would disqualify the projection). */
-  def dftViaDotKernel(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.Functions.register(spark)
-    // 64 samples: bounded model state, the reference broadcasts the
-    // same signal to every map instance
-    val sig: Seq[Float] = Tables.events(spark, dir)
-      .orderBy(col("event_id")).limit(64)
-      .select(col("value")).collect().map(_.getDouble(0).toFloat).toSeq
-    val ks = spark.range(64).select(col("id").cast("int").as("k"))
-    def ang(n: Column) = lit(2.0) * lit(math.Pi) * col("k") * n / lit(64.0)
-    ks.select(col("k"), typedLit(sig).as("sig"),
-        transform(sequence(lit(0), lit(63)), n => cos(ang(n)).cast("float")).as("cw"),
-        transform(sequence(lit(0), lit(63)), n => (-sin(ang(n))).cast("float")).as("nsw"))
-      .selectExpr("k", "graft_dot(sig, cw) AS re", "graft_dot(sig, nsw) AS im")
-      .orderBy(col("k"))
-  }
-
-  /** q22's MatMul restated as the reference's ACTUAL device shape
-    * (TestMatrixMultiplication.java:159-187 `TestMatrixMul.map`: each
-    * row of A maps to a FULL output row — one dot against every
-    * broadcast-matrix column, `matrix2` read from a broadcast
-    * variable in open()): one projection per A row emitting the 32
-    * per-B-row dots as top-level `graft_dot` aliases, B collected
-    * once into array literals (32×64 floats — bounded model state,
-    * the reference's broadcast set). SIXTH seam-covered reference
-    * workload class — the map side of workload #1, the only one of
-    * the seven whose inner loop the dot-kernel seam didn't already
-    * cover (q22 itself grades the join-shaped restatement with ONE
-    * dot per row pair; the device kernel batches all 32). With the
-    * seam flag off this runs whole-stage codegen over
-    * [[graft.plans.DotProduct]]; with it on, the batch kernel —
-    * DotKernelSpec dual-runs both bit-equal and checks each dot
-    * against graded q22 within the reference's 0.01 dual-run gate.
-    * Returns (dot batch, B vec_ids in alias order). */
-  private[graft] def matmulDotBatch(
-      spark: SparkSession, dir: String): (DataFrame, Array[Long]) = {
-    graft.plans.Functions.register(spark)
-    val emb = Tables.embeddings(spark, dir)
-    val bRows = emb.filter(col("vec_id") >= 32 && col("vec_id") < 64)
-      .select(col("vec_id"), col("embedding"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1))
-      .sortBy(_._1)
-    val a = emb.filter(col("vec_id") < 32)
-      .select(col("vec_id").as("i"), col("embedding").as("ea"))
-    val lifted = a.select(
-      Seq(col("i"), col("ea")) ++ bRows.zipWithIndex.map { case ((_, v), j) =>
-        typedLit(v).as(s"bw$j") }: _*)
-    val dotted = lifted.selectExpr(
-      Seq("i") ++ bRows.indices.map(j => s"graft_dot(ea, bw$j) AS d$j"): _*)
-    (dotted, bRows.map(_._1))
-  }
-
-  /** q23's ASSIGN step (KMeans.java:118-129 SelectNearestCenter: a
-    * map over points with the centroids broadcast, each point scored
-    * against every centroid) restated as the device shape GPU kmeans
-    * actually uses — distances via DOT PRODUCTS:
-    * argmin_c ‖x−c‖² = argmin_c (c·c − 2·x·c), the x·x term constant
-    * per point. One projection emits the K per-centroid dots as
-    * top-level `graft_dot` aliases (the kernel batch — the c²/2
-    * offset and argmin live in the NEXT projection, because an
-    * arithmetic wrapper around the dot would disqualify the kernel
-    * projection, same as the DFT's negated-sin device); the argmin
-    * reuses q23's lexicographic struct-min tie rule. Fifth
-    * seam-covered reference workload class: DotKernelSpec dual-runs
-    * kernel-on vs codegen (bit-equal — same float fold) and both vs
-    * graded q23's cluster counts. */
-  def kmeansAssignViaDotKernel(spark: SparkSession, dir: String): DataFrame = {
-    val (dotted, cents, ev) = kmeansDotBatch(spark, dir)
-    // the device→host handoff: materialize the kernel's output batch
-    // BEFORE the host-side argmin consumes it. Structurally required,
-    // not just faithful — Catalyst's CollapseProject would otherwise
-    // inline each dot into the argmin's struct arithmetic, and a
-    // wrapped kernel expression no longer qualifies as a top-level
-    // projection (the DFT restatement never hit this because its dots
-    // ARE the final output columns). The batch is (event_id, K
-    // doubles) — model-assignment-sized, never corpus-wide columns.
-    val batch = dotted.localCheckpoint(true)
-    val centMap = map(cents.zipWithIndex.toIndexedSeq.flatMap {
-      case (c, i) => Seq(lit(i), lit(c)) }: _*)
-    localized(spark, batch
-      .select(col("event_id"),
-        array_min(array(cents.zipWithIndex.toIndexedSeq.map { case (c, i) =>
-          struct((lit(c * c) - lit(2.0) * col(s"d$i")).as("s"), lit(i).as("cid"))
-        }: _*)).getField("cid").as("cid"))
-      .groupBy(col("cid"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("centroid", element_at(centMap, col("cid")))
-      .select(col("cid"), col("n"), col("centroid"))
-      .orderBy(col("cid")), ev)
-  }
-
-  /** The kernel stage behind [[kmeansAssignViaDotKernel]]: per point
-    * one top-level `graft_dot` alias per broadcast centroid — the
-    * batch the seam spec asserts plans as a DotKernelProject.
-    * Returns (dot batch, centroids, the persisted working set to
-    * release after the read). */
-  private[graft] def kmeansDotBatch(
-      spark: SparkSession, dir: String): (DataFrame, Array[Double], DataFrame) = {
-    graft.plans.Functions.register(spark)
-    val (ev, cents) = kmeansFit(spark, dir)
-    val lifted = ev.select(
-      Seq(col("event_id"), array(col("value").cast("float")).as("xv")) ++
-        cents.zipWithIndex.map { case (c, i) =>
-          typedLit(Seq(c.toFloat)).as(s"cw$i") }: _*)
-    val dotted = lifted.selectExpr(
-      Seq("event_id") ++ cents.indices.map(i => s"graft_dot(xv, cw$i) AS d$i"): _*)
-    (dotted, cents, ev)
-  }
 
   // ---------------------------------------------------------------- q26
   /** Pi estimation (TestPiEstimation.java:52-58): the reference maps

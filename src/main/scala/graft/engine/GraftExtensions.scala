@@ -7,8 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.plans.DotProduct
 
 /** Canonical engine registration via SparkSessionExtensions — the
-  * mechanism SURVEY.md §7 reserves for custom plan surface. Users opt
-  * in with either
+  * mechanism SURVEY.md §7 reserves for custom plan surface. The
+  * injected surface is the `graft_*` SQL functions (all of them
+  * codegen'd expressions or two-stage aggregates) plus the
+  * TopKPerKey planner strategy. Users opt in with either
   * `SparkSession.builder.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.engine.GraftExtensions`; library
   * entry points ([[graft.plans.Functions.register]],
@@ -50,8 +52,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.plans.VecSum(exprs.head)
           .toAggregateExpression(isDistinct = false)
       }))
-    // graft_rmin/rmax/rsum/ravg(x): scalar double reductions, same
-    // kernel-agg seam as graft_vecsum (the reference's prebuilt
+    // graft_rmin/rmax/rsum/ravg(x): scalar double reductions, the same
+    // aggregate family as graft_vecsum (the reference's prebuilt
     // simple-double-reduce-* device kernels) — see
     // graft.plans.ScalarReduce
     graft.plans.ScalarReduce.All.foreach { op =>
@@ -66,21 +68,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }))
     }
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graftbridge.TopKPerKeyStrategy)
-    // phase-6 accelerator seam (SURVEY §7): swap graft_dot-bearing
-    // projections for the batch kernel operator. Opt-in via
-    // spark.graft.kernelProject.enabled — codegen is the CPU fast
-    // path; this proves the plugin seam (see graft.plans.DotKernel).
-    ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
-      override def postColumnarTransitions
-          : org.apache.spark.sql.catalyst.rules.Rule[org.apache.spark.sql.execution.SparkPlan] =
-        graft.plans.DotKernelProjectRule
-    })
-    // second kernel class through the same seam: partial VecSum
-    // aggregation as a batch kernel (spark.graft.kernelAgg.enabled)
-    ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
-      override def postColumnarTransitions
-          : org.apache.spark.sql.catalyst.rules.Rule[org.apache.spark.sql.execution.SparkPlan] =
-        graft.plans.VecSumKernelRule
-    })
   }
 }

@@ -1002,13 +1002,9 @@ object Similarity {
     * (partition, cluster) moves. Cluster = vec_id % 7 (a fixed
     * assignment keeps the oracle closed-form; a KMeans superstep
     * supplies cids the same way). Component sums rounded to 6dp —
-    * aggregated sums, engine-dependent order. Also the graded surface
-    * of the opt-in kernel-agg seam: the aggregate list is VecSum-only,
-    * so [[graft.plans.VecSumKernelRule]] fires on exactly this plan
-    * when enabled (DotKernelSpec proves the swapped partial stage
-    * matches this stock path). The graded projection unrolls the
-    * centroid to one row per (cid, ord, component) — a shape any
-    * cross-engine compare can sort; DotKernelSpec pins the
+    * aggregated sums, engine-dependent order. The graded projection
+    * unrolls the centroid to one row per (cid, ord, component) — a
+    * shape any cross-engine compare can sort; DotKernelSpec pins the
     * array-valued form. 1-based `ord` matches SQL subscripting. */
   def q164CentroidAccumulate(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.Functions.register(spark)

@@ -191,8 +191,8 @@ object Functions {
         },
         "built-in")
     }
-    // graft_rmin/rmax/rsum/ravg(x): scalar double reductions through
-    // the kernel-agg seam (the reference's prebuilt
+    // graft_rmin/rmax/rsum/ravg(x): scalar double reductions (the
+    // reference's prebuilt
     // simple-double-reduce-{min,max,sum,avg}.cl workload class) — see
     // graft.plans.ScalarReduce
     ScalarReduce.All.foreach { op =>

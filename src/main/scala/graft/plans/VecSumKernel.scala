@@ -2,24 +2,20 @@ package graft.plans
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, BoundReference, Expression, GenericInternalRow, JoinedRow, NamedExpression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Partial, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
-import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** The family of `TypedImperativeAggregate[Array[Double]]` functions
-  * the kernel seam can swap to a batch partial stage: one unary
-  * input expression, an `Array[Double]` accumulator whose length 0
-  * means "nothing consumed", and an element-wise fold that is ALSO
-  * the partial-merge (the per-row extracted vector and a partial
-  * buffer have the same shape). Implemented by [[VecSum]] (vector
+  * behind `graft_vecsum` and `graft_r*`: one unary input
+  * expression, an `Array[Double]` accumulator whose length 0 means
+  * "nothing consumed", and an element-wise fold that is ALSO the
+  * partial-merge (the per-row extracted vector and a partial buffer
+  * have the same shape). Implemented by [[VecSum]] (vector
   * sum — KMeans centroid/LogReg gradient accumulate) and
   * [[ScalarReduce]] (double min/max/sum/avg — the reference's
   * `simple-double-reduce-{min,max,sum,avg}.cl` prebuilt kernels,
@@ -63,24 +59,6 @@ trait KernelAgg extends TypedImperativeAggregate[Array[Double]]
   }
 }
 
-object KernelAgg {
-  /** The stand-in device kernel: one contiguous sweep over a batch of
-    * rows whose accumulator slots were resolved host-side — the shape
-    * of the reference's per-work-group reduction (slot resolution =
-    * the sort/bucket step a real device impl does before its
-    * segmented reduce). `slots(i)(f)` is row i's accumulator for
-    * function f; re-allocated in place on growth. */
-  def accumulateBatch(fn: KernelAgg, slots: Array[Array[Array[Double]]],
-      f: Int, vecs: Array[Array[Double]], n: Int): Unit = {
-    var i = 0
-    while (i < n) {
-      val v = vecs(i)
-      if (v != null) slots(i)(f) = fn.fold(slots(i)(f), v)
-      i += 1
-    }
-  }
-}
-
 /** Element-wise vector sum over an `array<float>` or `array<double>`
   * column — the KMeans centroid-accumulate shape (reference TornadoVM
   * `ChainedAllReduceDriver.java:852`: the per-cluster centroid
@@ -92,10 +70,9 @@ object KernelAgg {
   * accumulated FAILS FAST (callers feed fixed-dimension vectors — a
   * ragged input is an upstream data bug, and zero-padding it would
   * yield plausible-looking wrong sums; round-8 advice); empty arrays
-  * are ignored like nulls, so the check never depends on row order. Ascending
-  * component order, double accumulators — the engine-wide fold-order
-  * contract, so the kernel-exec path below is bit-equal per partial
-  * buffer.
+  * are ignored like nulls, so the check never depends on row order.
+  * Ascending component order, double accumulators — the engine-wide
+  * fold-order contract.
   *
   * Exposed to SQL as `graft_vecsum` via [[Functions.register]] /
   * [[graft.engine.GraftExtensions]]. Planned through
@@ -177,21 +154,21 @@ object VecSum {
 }
 
 /** Scalar double reduction — min/max/sum/avg — as the same
-  * typed-imperative kernel-agg shape as [[VecSum]]: the reference
+  * typed-imperative [[KernelAgg]] shape as [[VecSum]]: the reference
   * precompiles exactly these four as device kernels
   * (`simple-double-reduce-{min,max,sum,avg}.cl`) and selects one by
   * the UDF's class name (`AllReduceDriver.java:1400-1431`,
   * `ReduceMin/ReduceMax/ReduceSum/ReduceAvg`) — the IoT pipeline's
   * global-reduce stage. Buffer: `[m]` for min/max/sum, `[sum, count]`
   * for avg — in every case the per-row extracted vector has the same
-  * shape, so ONE element-wise fold serves row-update, batch sweep and
-  * partial merge (avg folds `[x, 1]` by addition; the division
+  * shape, so ONE element-wise fold serves row-update and partial
+  * merge (avg folds `[x, 1]` by addition; the division
   * happens once in eval). Exposed to SQL as
   * `graft_rmin/graft_rmax/graft_rsum/graft_ravg` via
-  * [[Functions.register]] / [[graft.engine.GraftExtensions]]; the
-  * seam ([[VecSumKernelRule]]) swaps their partial stage exactly as
-  * it does VecSum's. Strict DoubleType input — callers cast, so the
-  * SQL surface can't silently widen decimals through a double fold. */
+  * [[Functions.register]] / [[graft.engine.GraftExtensions]], planned
+  * through ObjectHashAggregateExec like VecSum. Strict DoubleType
+  * input — callers cast, so the SQL surface can't silently widen
+  * decimals through a double fold. */
 case class ScalarReduce(child: Expression, op: ScalarReduce.Op,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
     extends KernelAgg {
@@ -259,146 +236,4 @@ object ScalarReduce {
     def combine(a: Double, b: Double): Double = a + b
   }
   val All: Seq[Op] = Seq(Min, Max, Sum, Avg)
-}
-
-/** Physical stand-in for a device-side partial aggregation: replaces
-  * the PARTIAL [[ObjectHashAggregateExec]] of a pure-[[KernelAgg]]
-  * aggregate ([[VecSum]] and/or [[ScalarReduce]], freely mixed)
-  * with a per-partition batch kernel — rows are drained in
-  * [[DotKernel.BatchSize]] batches, each row's accumulator slot is
-  * resolved against the partition's group map, then one contiguous
-  * primitive sweep per function accumulates the batch (the
-  * ChainedAllReduceDriver shape: device partial reduction, host
-  * merge). Emits exactly the stock partial output — grouping columns
-  * plus each function's serialized buffer — so the unmodified FINAL
-  * ObjectHashAggregateExec merges the partials; the seam swaps one
-  * stage, not the contract. */
-case class VecSumKernelExec(
-    groupingExpressions: Seq[NamedExpression],
-    aggregateExpressions: Seq[AggregateExpression],
-    output: Seq[Attribute],
-    child: SparkPlan) extends UnaryExecNode {
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val childOutput = child.output
-    val gEx = groupingExpressions
-    val fnExprs = aggregateExpressions
-      .map(_.aggregateFunction.asInstanceOf[KernelAgg])
-    val outAttrs = output
-    val maxGroups = conf.getConfString(VecSumKernelExec.MaxGroupsKey,
-      VecSumKernelExec.MaxGroups.toString).toInt
-    child.execute().mapPartitionsWithIndex { (partIdx, it) =>
-      val keyProj = UnsafeProjection.create(gEx, childOutput)
-      keyProj.initialize(partIdx)
-      val fns = fnExprs.toArray
-      val bound = fns.map(f => BindReferences.bindReference(f.child, childOutput))
-      val nF = bound.length
-      // insertion-ordered so partial output order is deterministic
-      // given the partition's row order (same property as the stock
-      // ObjectAggregationMap iteration for these sizes)
-      val groups = new java.util.LinkedHashMap[UnsafeRow, Array[Array[Double]]]()
-      val vecs = new Array[Array[Double]](DotKernel.BatchSize)
-      val slots = new Array[Array[Array[Double]]](DotKernel.BatchSize)
-      val outProj = UnsafeProjection.create(outAttrs.zipWithIndex.map {
-        case (a, i) => BoundReference(i, a.dataType, a.nullable)
-      })
-      outProj.initialize(partIdx)
-      val joined = new JoinedRow
-      // drain the map as PARTIAL rows and reset — multiple partials
-      // per key are legal input to the final stage, which merges
-      // them, so memory stays bounded at MaxGroups accumulators the
-      // way the stock partial stage bounds itself by spilling to
-      // sort-based aggregation
-      def flush(): Iterator[InternalRow] = {
-        val drained = groups.entrySet().toArray(
-          new Array[java.util.Map.Entry[UnsafeRow, Array[Array[Double]]]](0))
-        groups.clear()
-        drained.iterator.map { e =>
-          val bufs = new Array[Any](nF)
-          var f = 0
-          while (f < nF) { bufs(f) = fns(f).serialize(e.getValue()(f)); f += 1 }
-          outProj(joined(e.getKey, new GenericInternalRow(bufs)))
-        }
-      }
-      // copy BEFORE grouped(): the child iterator reuses one UnsafeRow
-      // buffer and grouped() holds n references to it (the DotKernel
-      // aliasing hazard)
-      it.map(_.copy()).grouped(DotKernel.BatchSize).flatMap { batch =>
-        val rows = batch.toArray
-        val n = rows.length
-        // host side: resolve each row's accumulator slot
-        var i = 0
-        while (i < n) {
-          val k = keyProj(rows(i))
-          var g = groups.get(k)
-          if (g == null) {
-            g = Array.fill(nF)(Array.emptyDoubleArray)
-            groups.put(k.copy(), g)
-          }
-          slots(i) = g
-          i += 1
-        }
-        // device-shaped part: gather the batch's vectors, then one
-        // contiguous sweep per function
-        var f = 0
-        while (f < nF) {
-          var j = 0
-          while (j < n) {
-            val v = bound(f).eval(rows(j))
-            vecs(j) = if (v == null) null else fns(f).toVec(v)
-            j += 1
-          }
-          KernelAgg.accumulateBatch(fns(f), slots, f, vecs, n)
-          f += 1
-        }
-        if (groups.size() >= maxGroups) flush()
-        else Iterator.empty
-      } ++ flush()
-    }
-  }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): VecSumKernelExec =
-    copy(child = newChild)
-}
-
-object VecSumKernelExec {
-  /** Per-partition accumulator-map bound: past this many live groups
-    * the map is flushed as partial rows (the final stage merges
-    * same-key partials), bounding memory the way the stock partial
-    * stage's sort-based fallback does. Overridable for tests via
-    * [[MaxGroupsKey]]. */
-  val MaxGroups = 4096
-  val MaxGroupsKey = "spark.graft.kernelAgg.maxGroups"
-}
-
-/** Post-columnar-transition rule (the same seam as
-  * [[DotKernelProjectRule]], second kernel class): swap the partial
-  * ObjectHashAggregateExec for [[VecSumKernelExec]] when every
-  * aggregate is a plain Partial-mode [[KernelAgg]] (no DISTINCT, no
-  * FILTER) and the result expressions are the pass-through
-  * grouping ++ buffer attributes partial aggregates always emit.
-  * Opt-in via `spark.graft.kernelAgg.enabled`; the FINAL stage and
-  * the shuffle between them stay stock. */
-object VecSumKernelRule extends Rule[SparkPlan] {
-
-  val EnabledKey = "spark.graft.kernelAgg.enabled"
-
-  private def eligible(agg: ObjectHashAggregateExec): Boolean =
-    agg.aggregateExpressions.nonEmpty &&
-      agg.aggregateExpressions.forall(ae =>
-        ae.mode == Partial && !ae.isDistinct && ae.filter.isEmpty &&
-          ae.aggregateFunction.isInstanceOf[KernelAgg]) &&
-      agg.resultExpressions.forall(_.isInstanceOf[Attribute]) &&
-      agg.resultExpressions.length ==
-        agg.groupingExpressions.length + agg.aggregateExpressions.length &&
-      agg.groupingExpressions.forall(_.deterministic)
-
-  override def apply(plan: SparkPlan): SparkPlan =
-    if (org.apache.spark.sql.internal.SQLConf.get
-        .getConfString(EnabledKey, "false") != "true") plan
-    else plan.transformUp {
-      case agg: ObjectHashAggregateExec if eligible(agg) =>
-        VecSumKernelExec(agg.groupingExpressions, agg.aggregateExpressions,
-          agg.output, agg.child)
-    }
 }

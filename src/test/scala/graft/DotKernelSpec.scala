@@ -1,107 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The reference's dual-run acceleration harness
-  * (TestMatrixMultiplication.java:80-101: run the workload on the
-  * accelerated path and the plain path, compare within 0.01) applied
-  * to the phase-6 kernel-project prototype. */
+/** The engine's aggregate kernels — `graft_vecsum` and
+  * `graft_rmin/rmax/rsum/ravg`, the [[graft.plans.KernelAgg]] family —
+  * on the default session, each checked against a brute-force fold,
+  * the stock aggregate it stands for, or the graded query it restates
+  * (q24, q02, q21). The reference's offloaded workloads run here as
+  * these aggregates and the `graft_dot`/`graft_cosine` expressions,
+  * all planned through whole-stage codegen or the stock two-stage
+  * ObjectHashAggregateExec; ExpressionSpec pins the two expressions
+  * bit-for-bit. */
 class DotKernelSpec extends AnyFunSuite with SparkSpec {
-
-  private def matmul(s: SparkSession): DataFrame = {
-    graft.plans.Functions.register(s)
-    val emb = s.read.parquet(s"$sf/embeddings.parquet")
-    val a = emb.filter(col("vec_id") < 32)
-      .select(col("vec_id").as("i"), col("embedding").as("ea"))
-    val b = emb.filter(col("vec_id") >= 32 && col("vec_id") < 64)
-      .select(col("vec_id").as("j"), col("embedding").as("eb"))
-    a.join(broadcast(b))
-      .select(col("i"), col("j"), expr("graft_dot(ea, eb)").as("v"))
-      .orderBy(col("i"), col("j"))
-  }
-
-  private def planString(df: DataFrame): String = {
-    df.collect() // force AQE to finalize before reading the plan
-    df.queryExecution.executedPlan.toString
-  }
-
-  test("kernel-project rule swaps the plan and matches codegen within the reference tolerance") {
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.DotKernelProjectRule.EnabledKey, "true")
-
-    val plain = matmul(spark)
-    assert(!planString(plain).contains("DotKernelProject"),
-      "kernel exec must stay off by default")
-    val swapped = matmul(kernel)
-    assert(planString(swapped).contains("DotKernelProject"),
-      "enabled session must plan the kernel operator:\n" + planString(swapped))
-
-    val base = plain.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val kern = swapped.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(base.length == kern.length && base.nonEmpty)
-    base.zip(kern).foreach { case ((i1, j1, v1), (i2, j2, v2)) =>
-      assert(i1 == i2 && j1 == j2)
-      // the reference accepts |delta| <= 0.01 across devices; the JVM
-      // kernel shares codegen's fold order, so demand bit equality
-      assert(v1 == v2, s"($i1,$j1): codegen $v1 vs kernel $v2")
-    }
-  }
-
-  test("graft_cosine swaps through the same seam, bit-equal to codegen") {
-    def cosTopPairs(s: SparkSession): DataFrame = {
-      graft.plans.Functions.register(s)
-      val emb = s.read.parquet(s"$sf/embeddings.parquet")
-      val a = emb.filter(col("vec_id") < 24)
-        .select(col("vec_id").as("i"), col("embedding").as("ea"))
-      val b = emb.filter(col("vec_id") >= 24 && col("vec_id") < 48)
-        .select(col("vec_id").as("j"), col("embedding").as("eb"))
-      a.join(broadcast(b))
-        .select(col("i"), col("j"), expr("graft_cosine(ea, eb)").as("c"))
-        .orderBy(col("i"), col("j"))
-    }
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.DotKernelProjectRule.EnabledKey, "true")
-    val plain = cosTopPairs(spark)
-    assert(!planString(plain).contains("DotKernelProject"))
-    val swapped = cosTopPairs(kernel)
-    assert(planString(swapped).contains("DotKernelProject"),
-      "enabled session must route graft_cosine through the kernel operator:\n" +
-        planString(swapped))
-    val base = plain.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val kern = swapped.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(base.length == kern.length && base.nonEmpty)
-    base.zip(kern).foreach { case ((i1, j1, v1), (i2, j2, v2)) =>
-      assert(i1 == i2 && j1 == j2)
-      assert(v1 == v2, s"($i1,$j1): codegen $v1 vs kernel $v2")
-    }
-  }
-
-  test("mixed dot + cosine projection runs both kernels in one operator") {
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.DotKernelProjectRule.EnabledKey, "true")
-    graft.plans.Functions.register(kernel)
-    graft.plans.Functions.register(spark)
-    def q(s: SparkSession): Array[(Long, Double, Double)] = {
-      val emb = s.read.parquet(s"$sf/embeddings.parquet").filter(col("vec_id") < 64)
-      val df = emb.select(col("vec_id"),
-          expr("graft_dot(embedding, embedding)").as("d"),
-          expr("graft_cosine(embedding, embedding)").as("c"))
-        .orderBy("vec_id")
-      df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    }
-    val base = q(spark)
-    val kern = q(kernel)
-    assert(base.length == kern.length)
-    base.zip(kern).foreach { case (bt, kt) =>
-      assert(bt == kt, s"codegen $bt vs kernel $kt")
-    }
-    // self-cosine: na==nb==s bit-wise, but sqrt(na)*sqrt(na) can be an
-    // ulp off na, so the quotient is 1.0 ± 1 ulp — not exactly 1.0
-    assert(kern.forall { case (_, d, c) =>
-      d >= 0.0 && (d == 0.0 || math.abs(c - 1.0) < 1e-14) })
-  }
 
   test("graft_vecsum matches a brute-force per-group component sum") {
     graft.plans.Functions.register(spark)
@@ -128,139 +40,20 @@ class DotKernelSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("vecsum kernel-agg rule swaps the partial stage and matches the stock path") {
-    def centroidAcc(s: SparkSession): Array[(Long, Array[Double])] = {
-      graft.plans.Functions.register(s)
-      s.read.parquet(s"$sf/embeddings.parquet")
-        .groupBy((col("vec_id") % 7).as("cid"))
-        .agg(expr("graft_vecsum(embedding)").as("s"))
-        .orderBy("cid").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    }
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.VecSumKernelRule.EnabledKey, "true")
-    val plainDf = {
-      graft.plans.Functions.register(spark)
-      spark.read.parquet(s"$sf/embeddings.parquet")
-        .groupBy((col("vec_id") % 7).as("cid"))
-        .agg(expr("graft_vecsum(embedding)").as("s"))
-    }
-    assert(!planString(plainDf).contains("VecSumKernel"),
-      "kernel agg must stay off by default")
-    val kernelDf = {
-      graft.plans.Functions.register(kernel)
-      kernel.read.parquet(s"$sf/embeddings.parquet")
-        .groupBy((col("vec_id") % 7).as("cid"))
-        .agg(expr("graft_vecsum(embedding)").as("s"))
-    }
-    val kplan = planString(kernelDf)
-    assert(kplan.contains("VecSumKernel"),
-      "enabled session must plan the kernel partial stage:\n" + kplan)
-    assert(kplan.contains("ObjectHashAggregate"),
-      "the FINAL stage must stay stock:\n" + kplan)
-    val base = centroidAcc(spark)
-    val kern = centroidAcc(kernel)
-    assert(base.length == kern.length && base.nonEmpty)
-    base.zip(kern).foreach { case ((c1, s1), (c2, s2)) =>
-      assert(c1 == c2 && s1.length == s2.length)
-      // the reference's dual-run gate is |delta| <= 0.01; identical
-      // per-partition fold order makes the partials bit-equal, with
-      // only final-merge arrival order free to perturb the sum
-      s1.zip(s2).foreach { case (a, b) =>
-        assert(math.abs(a - b) < 1e-9, s"cid $c1: stock $a vs kernel $b") }
-    }
-  }
-
-  test("vecsum kernel group-cap flush emits mergeable partials, results unchanged") {
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.VecSumKernelRule.EnabledKey, "true")
-    // force a flush every 3 live groups on a 500-key (one group per
-    // vec_id) aggregation: many partials per partition, same answer
-    kernel.conf.set(graft.plans.VecSumKernelExec.MaxGroupsKey, "3")
-    def q(s: SparkSession): Array[(Long, Seq[Double])] = {
-      graft.plans.Functions.register(s)
-      s.read.parquet(s"$sf/embeddings.parquet")
-        .groupBy(col("vec_id"))
-        .agg(expr("graft_vecsum(embedding)").as("v"))
-        .orderBy("vec_id").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toList.toSeq))
-    }
-    val base = q(spark)
-    val kern = q(kernel)
-    assert(base.length == kern.length && base.length >= 400)
-    base.zip(kern).foreach { case ((k1, v1), (k2, v2)) =>
-      assert(k1 == k2 && v1.length == v2.length)
-      v1.zip(v2).foreach { case (a, b) =>
-        assert(math.abs(a - b) < 1e-9, s"key $k1: stock $a vs kernel $b") }
-    }
-  }
-
-  test("vecsum kernel handles the GLOBAL (ungrouped) aggregate") {
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.VecSumKernelRule.EnabledKey, "true")
-    def df(s: SparkSession): DataFrame = {
-      graft.plans.Functions.register(s)
-      s.read.parquet(s"$sf/embeddings.parquet")
-        .agg(expr("graft_vecsum(embedding)").as("s"))
-    }
-    def q(s: SparkSession): Seq[Double] =
-      df(s).head.getSeq[Double](0).toList
-    // the rule must fire on the ungrouped partial stage too — without
-    // this assert a tightened eligibility check would pass vacuously
-    assert(planString(df(kernel)).contains("VecSumKernel"),
-      "global aggregate must route through the kernel partial stage")
-    val base = q(spark)
-    val kern = q(kernel)
-    assert(base.length == kern.length && base.nonEmpty)
-    base.zip(kern).foreach { case (a, b) =>
-      assert(math.abs(a - b) < 1e-9, s"global: stock $a vs kernel $b") }
-  }
-
   test("vecsum kernel handles null vectors and all-null groups like the stock path") {
     import spark.implicits._
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.VecSumKernelRule.EnabledKey, "true")
-    def q(s: SparkSession): Array[(Long, Option[Seq[Double]])] = {
-      graft.plans.Functions.register(s)
-      import s.implicits._
-      val df = Seq(
-        (0L, Some(Seq(1.0f, 2.0f))), (0L, None), (0L, Some(Seq(3.0f, 4.0f))),
-        (1L, None), (1L, None),
-        (2L, Some(Seq(5.0f)))).toDF("k", "v")
-        .select(col("k"), col("v").cast("array<float>").as("v"))
-      df.groupBy("k").agg(expr("graft_vecsum(v)").as("s")).orderBy("k")
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) None else Some(r.getSeq[Double](1).toList.toSeq)))
-    }
-    val base = q(spark)
-    val kern = q(kernel)
-    assert(base.toSeq == kern.toSeq)
-    assert(kern(0)._2.contains(Seq(4.0, 6.0)))
-    assert(kern(1)._2.isEmpty) // all-null group -> NULL, not zeros
-    assert(kern(2)._2.contains(Seq(5.0)))
-  }
-
-  test("the graded q164 query IS a kernel-seam surface: rule fires on its exact plan") {
-    // q164's scaladoc claims the graded query is the seam's graded
-    // surface; that only holds if its aggregate list stays VecSum-only
-    // (adding e.g. a count() would silently defeat eligibility). Pin
-    // the plan AND the graded component rows against the stock path.
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.VecSumKernelRule.EnabledKey, "true")
-    def rows(s: SparkSession): Array[(Long, Long, Double)] =
-      graft.pipeline.Similarity.q164CentroidAccumulate(s, sf)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val kdf = graft.pipeline.Similarity.q164CentroidAccumulate(kernel, sf)
-    assert(planString(kdf).contains("VecSumKernel"),
-      "graded q164 plan must route its partial stage through the kernel:\n" +
-        planString(kdf))
-    val base = rows(spark)
-    val kern = rows(kernel)
-    assert(base.length == kern.length && base.nonEmpty)
-    base.zip(kern).foreach { case ((c1, o1, v1), (c2, o2, v2)) =>
-      assert(c1 == c2 && o1 == o2)
-      assert(math.abs(v1 - v2) < 1e-9, s"cid $c1 ord $o1: $v1 vs $v2")
-    }
+    graft.plans.Functions.register(spark)
+    val got = Seq(
+      (0L, Some(Seq(1.0f, 2.0f))), (0L, None), (0L, Some(Seq(3.0f, 4.0f))),
+      (1L, None), (1L, None),
+      (2L, Some(Seq(5.0f)))).toDF("k", "v")
+      .select(col("k"), col("v").cast("array<float>").as("v"))
+      .groupBy("k").agg(expr("graft_vecsum(v)").as("s")).orderBy("k")
+      .collect().map(r => (r.getLong(0),
+        if (r.isNullAt(1)) None else Some(r.getSeq[Double](1).toList.toSeq)))
+    assert(got(0)._2.contains(Seq(4.0, 6.0)))
+    assert(got(1)._2.isEmpty) // all-null group -> NULL, not zeros
+    assert(got(2)._2.contains(Seq(5.0)))
   }
 
   test("vecsum fails fast on ragged input instead of zero-padding") {
@@ -291,19 +84,16 @@ class DotKernelSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("LogReg gradient partial-sum routes through the vecsum kernel seam") {
-    // the THIRD kernel workload (reference ChainedAllReduceDriver
-    // .java:563-600 — the gradient's map-side partial vector sum is
-    // an exus device kernel): q24's gradient as graft_vecsum over a
-    // DERIVED per-row double vector (4 gradient components + a count
-    // slot, so the aggregate list stays VecSum-only and eligible).
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.VecSumKernelRule.EnabledKey, "true")
+  test("vecsum-trained LogReg weights equal the graded q24's") {
+    // the reference's LogReg gradient partial sum
+    // (ChainedAllReduceDriver.java:563-600) as graft_vecsum over a
+    // DERIVED per-row double vector: 4 gradient components + a count
+    // slot
+    graft.plans.Functions.register(spark)
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def gradDf(s: SparkSession, w: Array[Double]): DataFrame = {
-      graft.plans.Functions.register(s)
-      val li = s.read.parquet(s"$sf/lineitem.parquet").select(
+    def gradDf(w: Array[Double]): DataFrame = {
+      val li = spark.read.parquet(s"$sf/lineitem.parquet").select(
         (col("l_quantity") / 50.0).as("x1"),
         (col("l_discount") * 10.0).as("x2"),
         (col("l_extendedprice") / 100000.0).as("x3"),
@@ -316,300 +106,109 @@ class DotKernelSpec extends AnyFunSuite with SparkSpec {
           lit(1.0)).as("g"))
         .agg(expr("graft_vecsum(g)").as("gs"))
     }
-    def train(s: SparkSession): Array[Double] = {
-      var w = Array(0.0, 0.0, 0.0, 0.0)
-      (1 to 2).foreach { _ =>
-        val gs = gradDf(s, w).head.getSeq[Double](0)
-        val n = gs(4)
-        w = Array.tabulate(4)(i => r6(w(i) - 2.0 * gs(i) / n))
-      }
-      w
+    var w = Array(0.0, 0.0, 0.0, 0.0)
+    (1 to 2).foreach { _ =>
+      val gs = gradDf(w).head.getSeq[Double](0)
+      val n = gs(4)
+      w = Array.tabulate(4)(i => r6(w(i) - 2.0 * gs(i) / n))
     }
-    // the seam must fire on the derived-double-vector global agg
-    assert(planString(gradDf(kernel, Array(0.0, 0.0, 0.0, 0.0)))
-      .contains("VecSumKernel"), "kernel must plan the gradient partial stage")
-    val wStock = train(spark)
-    val wKernel = train(kernel)
-    assert(wStock.sameElements(wKernel),
-      s"stock ${wStock.toSeq} vs kernel ${wKernel.toSeq}")
-    // and the vecsum-trained model equals the graded q24's avg-trained
-    // weights (sum/n vs avg — identical folds, same per-step rounding)
+    // sum/n vs avg — identical folds, same per-step rounding
     val graded = graft.analytics.Iterative.q24LogReg(spark, sf).head
     val wGraded = Array.tabulate(4)(i => graded.getDouble(i))
-    wKernel.zip(wGraded).foreach { case (a, b) =>
+    w.zip(wGraded).foreach { case (a, b) =>
       assert(math.abs(a - b) <= 2e-6, s"vecsum $a vs graded $b") }
   }
 
-  test("DFT map routes through the dot-kernel seam (fourth kernel workload)") {
-    // the reference's DFT is a map over output indices, each a
-    // signal-length dot against the broadcast signal (TestDFT.java:
-    // 151-177) — with dftViaDotKernel every reference-accelerated
-    // workload class (map, all-reduce, grouped reduce, gradient) has
-    // a seam-covered twin
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.DotKernelProjectRule.EnabledKey, "true")
-    def run(s: SparkSession): Array[(Int, Double, Double)] =
-      graft.analytics.Iterative.dftViaDotKernel(s, sf).collect()
-        .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-    val plain = graft.analytics.Iterative.dftViaDotKernel(spark, sf)
-    assert(!planString(plain).contains("DotKernelProject"),
-      "kernel exec must stay off by default")
-    val swapped = graft.analytics.Iterative.dftViaDotKernel(kernel, sf)
-    assert(planString(swapped).contains("DotKernelProject"),
-      "enabled session must plan the kernel operator:\n" + planString(swapped))
-    val base = run(spark)
-    val kern = run(kernel)
-    assert(base.length == 64 && kern.length == 64)
-    // same fold order on both paths: bit equality, not just tolerance
-    base.zip(kern).foreach { case ((k1, re1, im1), (k2, re2, im2)) =>
-      assert(k1 == k2 && re1 == re2 && im1 == im2,
-        s"k=$k1: codegen ($re1,$im1) vs kernel ($re2,$im2)")
-    }
-    // and against the graded double-precision q25 within the
-    // reference's cross-device dual-run gate (the float wave/signal
-    // is the only divergence source)
-    val graded = graft.analytics.Iterative.q25Dft(spark, sf).collect()
-      .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-    base.zip(graded).foreach { case ((k1, re1, im1), (k2, re2, im2)) =>
-      assert(k1 == k2)
-      assert(math.abs(re1 - re2) <= 0.01, s"k=$k1 re: kernel $re1 vs graded $re2")
-      assert(math.abs(im1 - im2) <= 0.01, s"k=$k1 im: kernel $im1 vs graded $im2")
-    }
-  }
-
-  test("KMeans assign step routes through the dot-kernel seam (fifth kernel workload)") {
-    // the reference's SelectNearestCenter (KMeans.java:118-129) is a
-    // map over points with broadcast centroids; the device shape is
-    // distances-via-dots (argmin c²−2x·c), K top-level graft_dot
-    // aliases per point — the kernel batch
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.DotKernelProjectRule.EnabledKey, "true")
-    def run(s: org.apache.spark.sql.SparkSession): Seq[(Int, Long, Double)] =
-      graft.analytics.Iterative.kmeansAssignViaDotKernel(s, sf).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-    // plan assertions run on the KERNEL STAGE (the dot batch): the
-    // full surface materializes it (device→host handoff) and then
-    // Localizes, both of which hide operators from executedPlan
-    val (plain, _, ev1) = graft.analytics.Iterative.kmeansDotBatch(spark, sf)
-    assert(!planString(plain).contains("DotKernelProject"),
-      "kernel exec must stay off by default")
-    ev1.unpersist(blocking = false)
-    val (swapped, _, ev2) = graft.analytics.Iterative.kmeansDotBatch(kernel, sf)
-    assert(planString(swapped).contains("DotKernelProject"),
-      "enabled session must plan the kernel operator:\n" + planString(swapped))
-    ev2.unpersist(blocking = false)
-    val base = run(spark)
-    val kern = run(kernel)
-    // same float fold on both paths: bit equality, not just tolerance
-    assert(base == kern, s"codegen $base vs kernel $kern")
-    // and the dot-space argmin reproduces the graded q23 assignment
-    // exactly — the float lift of a scalar value cannot move a point
-    // across a Voronoi boundary on this data (margins ≫ float eps)
-    val graded = graft.analytics.Iterative.q23KMeans(spark, sf).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(base == graded, s"dot-space assign $base vs graded q23 $graded")
-  }
-
-  test("MatMul row-map routes through the dot-kernel seam (sixth kernel workload)") {
-    // the reference's TestMatrixMul.map (TestMatrixMultiplication
-    // .java:159-187) maps each A row to a FULL output row — one dot
-    // per broadcast-matrix column — the device batch shape; q22
-    // grades the join-shaped restatement with one dot per row pair,
-    // this covers the map side's 32-dots-per-row inner loop
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.DotKernelProjectRule.EnabledKey, "true")
-    def run(s: SparkSession): Seq[(Long, Long, Double)] = {
-      val (batch, bIds) = graft.analytics.Iterative.matmulDotBatch(s, sf)
-      batch.orderBy("i").collect().flatMap { r =>
-        bIds.indices.map(j => (r.getLong(0), bIds(j), r.getDouble(1 + j)))
-      }.toSeq
-    }
-    val (plain, _) = graft.analytics.Iterative.matmulDotBatch(spark, sf)
-    assert(!planString(plain).contains("DotKernelProject"),
-      "kernel exec must stay off by default")
-    val (swapped, _) = graft.analytics.Iterative.matmulDotBatch(kernel, sf)
-    assert(planString(swapped).contains("DotKernelProject"),
-      "enabled session must plan the kernel operator:\n" + planString(swapped))
-    val base = run(spark)
-    val kern = run(kernel)
-    assert(base.length == 32 * 32 && kern.length == base.length)
-    // same float fold on both paths: bit equality, not just tolerance
-    assert(base == kern, "codegen vs kernel mismatch")
-    // and against the graded q22 (same floats, rounded to 4) within
-    // the reference's cross-device dual-run gate
-    val graded = graft.analytics.Iterative.q22MatMul(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(graded.size == base.length)
-    base.foreach { case (i, j, v) =>
-      assert(math.abs(v - graded((i, j))) <= 0.01,
-        s"($i,$j): kernel $v vs graded ${graded((i, j))}")
-    }
-  }
-
-  test("IoT global reduce routes through the kernel-agg seam (seventh kernel workload)") {
+  test("global graft_r* reduce equals the graded q02 row") {
     // the reference precompiles simple-double-reduce-{min,max,sum,avg}
     // .cl and selects one by UDF class name
-    // (AllReduceDriver.java:1400-1431) — the one accelerated workload
-    // class the seam didn't restate until r13. Dual-run the graded
-    // q02 global-agg shape through graft_rmin/rmax/rsum/ravg with the
-    // seam ON and OFF, and pin both against the graded q02 row.
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.VecSumKernelRule.EnabledKey, "true")
-    def reduceDf(s: SparkSession): DataFrame = {
-      graft.plans.Functions.register(s)
-      graft.sources.Tables.events(s, sf).agg(
-        expr("graft_rmin(value)").as("min_v"),
-        expr("graft_rmax(value)").as("max_v"),
-        expr("graft_rsum(value)").as("sum_v"),
-        expr("graft_ravg(value)").as("avg_v"))
-    }
-    assert(!planString(reduceDf(spark)).contains("VecSumKernel"),
-      "kernel agg must stay off by default")
-    val kplan = planString(reduceDf(kernel))
-    assert(kplan.contains("VecSumKernel"),
-      "global scalar reduce must route through the kernel partial stage:\n" + kplan)
-    assert(kplan.contains("ObjectHashAggregate"),
-      "the FINAL stage must stay stock:\n" + kplan)
-    val base = reduceDf(spark).head
-    val kern = reduceDf(kernel).head
-    (0 until 4).foreach { i =>
-      assert(math.abs(base.getDouble(i) - kern.getDouble(i)) < 1e-9,
-        s"col $i: stock ${base.getDouble(i)} vs kernel ${kern.getDouble(i)}")
-    }
-    // both restatements agree with the GRADED q02 row (its rounded
-    // surface) — the seam is invisible at the gate's grain
+    // (AllReduceDriver.java:1400-1431): the graded q02 global-agg
+    // shape through graft_rmin/rmax/rsum/ravg
+    graft.plans.Functions.register(spark)
+    val got = graft.sources.Tables.events(spark, sf).agg(
+      expr("graft_rmin(value)").as("min_v"),
+      expr("graft_rmax(value)").as("max_v"),
+      expr("graft_rsum(value)").as("sum_v"),
+      expr("graft_ravg(value)").as("avg_v")).head
+    // compared at the graded row's rounded grain
     val graded = graft.operators.Relational.q02GlobalAgg(spark, sf).head
     Seq("min_v", "max_v", "sum_v", "avg_v").zipWithIndex.foreach { case (c, i) =>
       val g = graded.getAs[Double](c)
-      val k = BigDecimal(kern.getDouble(i))
+      val k = BigDecimal(got.getDouble(i))
         .setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(math.abs(g - k) < 0.011, s"$c: graded $g vs kernel-rounded $k")
+      assert(math.abs(g - k) < 0.011, s"$c: graded $g vs graft_r* rounded $k")
     }
   }
 
-  test("q21's per-user stats stage dual-runs through grouped scalar kernel-aggs") {
-    // the grouped flavor of the seventh workload: q21's mu (per-user
-    // avg) via graft_ravg, seam on/off bit-equal, and equal to the
-    // stock avg() the graded q21 builds its broadcast stats from.
-    // A mixed VecSum + ScalarReduce list stays eligible too.
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.VecSumKernelRule.EnabledKey, "true")
-    def stats(s: SparkSession): Array[(Long, Double, Double)] = {
-      graft.plans.Functions.register(s)
-      graft.sources.Tables.events(s, sf)
-        .groupBy(col("user_id"))
-        .agg(expr("graft_ravg(value)").as("mu"),
-          expr("graft_rmax(value)").as("hi"))
-        .orderBy("user_id").collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    }
-    def statsDf(s: SparkSession) = {
-      graft.plans.Functions.register(s)
-      graft.sources.Tables.events(s, sf).groupBy(col("user_id"))
-        .agg(expr("graft_ravg(value)").as("mu"),
-          expr("graft_rmax(value)").as("hi"))
-    }
-    assert(planString(statsDf(kernel)).contains("VecSumKernel"),
-      "grouped scalar reduce must route through the kernel partial stage")
-    val base = stats(spark)
-    val kern = stats(kernel)
-    assert(base.length == kern.length && base.nonEmpty)
-    base.zip(kern).foreach { case ((u1, m1, h1), (u2, m2, h2)) =>
-      assert(u1 == u2)
-      assert(math.abs(m1 - m2) < 1e-9, s"user $u1 mu: $m1 vs $m2")
-      assert(h1 == h2, s"user $u1 max: $h1 vs $h2")
-    }
-    // the stock avg() that feeds the graded q21 broadcast-stats join
-    val stock = graft.sources.Tables.events(spark, sf)
-      .groupBy(col("user_id")).agg(avg(col("value")).as("mu"))
+  test("grouped graft_ravg/rmax equal q21's stock avg/max") {
+    // q21's per-user stats stage builds its broadcast stats from
+    // stock avg(); graft_ravg must agree, and graft_rmax with max()
+    graft.plans.Functions.register(spark)
+    val ev = graft.sources.Tables.events(spark, sf)
+    val got = ev.groupBy(col("user_id"))
+      .agg(expr("graft_ravg(value)").as("mu"), expr("graft_rmax(value)").as("hi"))
       .orderBy("user_id").collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    assert(stock.length == kern.length)
-    stock.zip(kern).foreach { case ((u1, m1), (u2, m2, _)) =>
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    val stock = ev.groupBy(col("user_id"))
+      .agg(avg(col("value")).as("mu"), max(col("value")).as("hi"))
+      .orderBy("user_id").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    assert(stock.length == got.length && got.nonEmpty)
+    stock.zip(got).foreach { case ((u1, m1, h1), (u2, m2, h2)) =>
       assert(u1 == u2)
-      assert(math.abs(m1 - m2) < 1e-6, s"user $u1: stock avg $m1 vs kernel $m2")
+      assert(math.abs(m1 - m2) < 1e-6, s"user $u1: stock avg $m1 vs graft_ravg $m2")
+      assert(h1 == h2, s"user $u1: stock max $h1 vs graft_rmax $h2")
     }
   }
 
   test("scalar kernel-aggs match stock null/empty-group semantics") {
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.VecSumKernelRule.EnabledKey, "true")
-    def q(s: SparkSession): Array[(Long, Any, Any, Any, Any)] = {
-      graft.plans.Functions.register(s)
-      import s.implicits._
-      Seq[(Long, Option[Double])](
-        (0L, Some(2.0)), (0L, None), (0L, Some(-1.0)),
-        (1L, None), (1L, None),
-        (2L, Some(5.0)))
-        .toDF("k", "v")
-        .groupBy(col("k"))
-        .agg(expr("graft_rmin(v)").as("mn"), expr("graft_rmax(v)").as("mx"),
-          expr("graft_rsum(v)").as("sm"), expr("graft_ravg(v)").as("av"))
-        .orderBy("k").collect()
-        .map(r => (r.getLong(0), r.get(1), r.get(2), r.get(3), r.get(4)))
-    }
-    val base = q(spark)
-    val kern = q(kernel)
-    assert(base.toSeq == kern.toSeq, s"${base.toSeq} vs ${kern.toSeq}")
+    import spark.implicits._
+    graft.plans.Functions.register(spark)
+    val got = Seq[(Long, Option[Double])](
+      (0L, Some(2.0)), (0L, None), (0L, Some(-1.0)),
+      (1L, None), (1L, None),
+      (2L, Some(5.0)))
+      .toDF("k", "v")
+      .groupBy(col("k"))
+      .agg(expr("graft_rmin(v)").as("mn"), expr("graft_rmax(v)").as("mx"),
+        expr("graft_rsum(v)").as("sm"), expr("graft_ravg(v)").as("av"))
+      .orderBy("k").collect()
+      .map(r => (r.getLong(0), r.get(1), r.get(2), r.get(3), r.get(4)))
     // nulls skipped, all-null group -> NULL (stock min/max/sum/avg
     // contract), avg divides once at eval
-    assert(base(0) == ((0L, -1.0, 2.0, 1.0, 0.5)))
-    assert(base(1) == ((1L, null, null, null, null)))
-    assert(base(2) == ((2L, 5.0, 5.0, 5.0, 5.0)))
+    assert(got(0) == ((0L, -1.0, 2.0, 1.0, 0.5)))
+    assert(got(1) == ((1L, null, null, null, null)))
+    assert(got(2) == ((2L, 5.0, 5.0, 5.0, 5.0)))
   }
 
   test("scalar kernel-aggs match stock NaN ordering (NaN sorts greatest)") {
-    // r13 advice: math.min propagates NaN but stock min/max use the
-    // SQL ordering where NaN is GREATEST — min({1.0, NaN}) = 1.0,
-    // max({1.0, NaN}) = NaN, and an all-NaN group yields NaN for
-    // both. Pin graft_rmin/rmax against stock min()/max() on mixed
-    // and all-NaN groups, seam off and on.
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.VecSumKernelRule.EnabledKey, "true")
-    def rows(s: SparkSession): DataFrame = {
-      import s.implicits._
-      Seq[(Long, Double)](
-        (0L, 1.0), (0L, Double.NaN), (0L, 3.0),  // mixed
-        (1L, Double.NaN), (1L, Double.NaN),      // all NaN
-        (2L, -2.0), (2L, 7.0))                   // no NaN
-        .toDF("k", "v")
-    }
-    def viaKernelAggs(s: SparkSession): Array[(Long, Double, Double)] = {
-      graft.plans.Functions.register(s)
-      rows(s).groupBy(col("k"))
-        .agg(expr("graft_rmin(v)").as("mn"), expr("graft_rmax(v)").as("mx"))
-        .orderBy("k").collect()
+    // math.min propagates NaN but stock min/max use the SQL ordering
+    // where NaN is GREATEST — min({1.0, NaN}) = 1.0, max({1.0, NaN}) =
+    // NaN, and an all-NaN group yields NaN for both. Pin graft_rmin/
+    // rmax against stock min()/max() on mixed and all-NaN groups.
+    import spark.implicits._
+    graft.plans.Functions.register(spark)
+    val rows = Seq[(Long, Double)](
+      (0L, 1.0), (0L, Double.NaN), (0L, 3.0),  // mixed
+      (1L, Double.NaN), (1L, Double.NaN),      // all NaN
+      (2L, -2.0), (2L, 7.0))                   // no NaN
+      .toDF("k", "v")
+    def triples(df: DataFrame): Array[(Long, Double, Double)] =
+      df.orderBy("k").collect()
         .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    val got = triples(rows.groupBy(col("k"))
+      .agg(expr("graft_rmin(v)").as("mn"), expr("graft_rmax(v)").as("mx")))
+    val stock = triples(rows.groupBy(col("k"))
+      .agg(min(col("v")).as("mn"), max(col("v")).as("mx")))
+    assert(stock.length == got.length)
+    stock.zip(got).foreach { case ((k1, m1, x1), (k2, m2, x2)) =>
+      assert(k1 == k2)
+      // == is false for NaN; compare via Double.compare instead
+      assert(java.lang.Double.compare(m1, m2) == 0, s"k=$k1 min: $m1 vs $m2")
+      assert(java.lang.Double.compare(x1, x2) == 0, s"k=$k1 max: $x1 vs $x2")
     }
-    val stock = rows(spark).groupBy(col("k"))
-      .agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
-      .orderBy("k").collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    def sameTriples(a: Array[(Long, Double, Double)],
-        b: Array[(Long, Double, Double)]): Unit = {
-      assert(a.length == b.length)
-      a.zip(b).foreach { case ((k1, m1, x1), (k2, m2, x2)) =>
-        assert(k1 == k2)
-        // == is false for NaN; compare via the long bits instead
-        assert(java.lang.Double.compare(m1, m2) == 0, s"k=$k1 min: $m1 vs $m2")
-        assert(java.lang.Double.compare(x1, x2) == 0, s"k=$k1 max: $x1 vs $x2")
-      }
-    }
-    sameTriples(stock, viaKernelAggs(spark))
-    sameTriples(stock, viaKernelAggs(kernel))
     // and the contract itself, stated concretely
     assert(stock(0)._2 == 1.0 && stock(0)._3.isNaN)
     assert(stock(1)._2.isNaN && stock(1)._3.isNaN)
-  }
-
-  test("nested dot products keep the codegen path") {
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.DotKernelProjectRule.EnabledKey, "true")
-    graft.plans.Functions.register(kernel)
-    val emb = kernel.read.parquet(s"$sf/embeddings.parquet")
-    val df = emb.select(col("vec_id"),
-      round(expr("graft_dot(embedding, embedding)"), 4).as("n2"))
-    assert(!planString(df).contains("DotKernelProject"))
-    assert(df.count() > 0)
   }
 }

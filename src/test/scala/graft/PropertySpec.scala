@@ -28,17 +28,15 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("scalar kernel-aggs equal the built-ins on random data, seam on and off") {
-    // randomized twin of DotKernelSpec's graded dual-runs: grouped
+  test("scalar kernel-aggs equal the built-ins on random data") {
+    // randomized twin of DotKernelSpec's graded checks: grouped
     // min/max/sum/avg over seeded random doubles (negatives, zeros,
     // magnitude spread, nulls) must match Spark's built-ins bit-for-
     // bit on min/max (exact picks) and to 1e-9 on sum/avg (same
-    // per-partition fold, only merge arrival order free) — under the
-    // stock partial stage AND the kernel-swapped one
+    // per-partition fold, only merge arrival order free)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val kernel = spark.newSession()
-    kernel.conf.set(graft.plans.VecSumKernelRule.EnabledKey, "true")
+    graft.plans.Functions.register(spark)
     val rng = new scala.util.Random(7)
     val schema = StructType(Seq(StructField("k", IntegerType),
       StructField("v", DoubleType)))
@@ -46,33 +44,28 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
       val rows = List.fill(300)(Row(rng.nextInt(7),
         if (rng.nextInt(10) == 0) null
         else (rng.nextDouble() - 0.5) * math.pow(10, rng.nextInt(6))))
-      def viaKernel(s: org.apache.spark.sql.SparkSession) = {
-        graft.plans.Functions.register(s)
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-          .groupBy(col("k"))
-          .agg(expr("graft_rmin(v)").as("mn"), expr("graft_rmax(v)").as("mx"),
-            expr("graft_rsum(v)").as("sm"), expr("graft_ravg(v)").as("av"))
-          .orderBy("k").collect()
-      }
+      val got = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .groupBy(col("k"))
+        .agg(expr("graft_rmin(v)").as("mn"), expr("graft_rmax(v)").as("mx"),
+          expr("graft_rsum(v)").as("sm"), expr("graft_ravg(v)").as("av"))
+        .orderBy("k").collect()
       val stock = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .groupBy(col("k"))
         .agg(min(col("v")).as("mn"), max(col("v")).as("mx"),
           sum(col("v")).as("sm"), avg(col("v")).as("av"))
         .orderBy("k").collect()
-      Seq(viaKernel(spark), viaKernel(kernel)).foreach { got =>
-        assert(got.length == stock.length)
-        got.zip(stock).foreach { case (g, s) =>
-          assert(g.getInt(0) == s.getInt(0))
-          (1 to 4).foreach { i =>
-            (Option(g.get(i)), Option(s.get(i))) match {
-              case (None, None) => ()
-              case (Some(a: Double), Some(b: Double)) =>
-                if (i <= 2) assert(a == b, s"round $round k=${g.getInt(0)} col $i exact")
-                else assert(math.abs(a - b) <=
-                  1e-9 * math.max(1.0, math.abs(b)),
-                  s"round $round k=${g.getInt(0)} col $i: $a vs $b")
-              case (a, b) => fail(s"null mismatch k=${g.getInt(0)} col $i: $a vs $b")
-            }
+      assert(got.length == stock.length)
+      got.zip(stock).foreach { case (g, s) =>
+        assert(g.getInt(0) == s.getInt(0))
+        (1 to 4).foreach { i =>
+          (Option(g.get(i)), Option(s.get(i))) match {
+            case (None, None) => ()
+            case (Some(a: Double), Some(b: Double)) =>
+              if (i <= 2) assert(a == b, s"round $round k=${g.getInt(0)} col $i exact")
+              else assert(math.abs(a - b) <=
+                1e-9 * math.max(1.0, math.abs(b)),
+                s"round $round k=${g.getInt(0)} col $i: $a vs $b")
+            case (a, b) => fail(s"null mismatch k=${g.getInt(0)} col $i: $a vs $b")
           }
         }
       }
