@@ -1,27 +1,25 @@
 package graft
-/** Benchmark main. TIME BUDGET: the driver's per-round bench window
-  * is ~300 s wall-clock INCLUDING sbt launch + JVM/Spark startup
-  * (~25 s) — round 8 finished at 296 s with 172 queries × 2 runs;
-  * round 9's 179 queries blew it (rc 124, no metric line); round 10
-  * parsed but measured only 44/183 queries because the walk was
-  * ALPHABETICAL and the expensive superstep graph family (q119,
-  * q124-q131, ~185 s under load) sorted early, starving 139 cheaper
-  * queries including all seven BASELINE workloads. ORDERING IS
-  * THEREFORE COST-BASED, NOT ALPHABETICAL: the seven reference
-  * workload analogues run first (so the metric line's "ref" sub-map
-  * can never be empty), then everything else cheapest-first seeded
-  * from the previous round's committed BENCH_FULL.json (queries
-  * without a prior measurement are estimated at the median). Do not
-  * reintroduce a name-ordered walk — under a budget guard it throws
-  * away maximal information when the box is loaded.
+/** Benchmark main: the driver-protocol walk over the whole registry.
   *
-  * Cost model at sf0.1: ~0.35 s/query/run median + ~0.1 s cleanup
-  * when caches were pinned. Defaults are 1 timed run per query
-  * (SPARK_GRAFT_BENCH_RUNS=2 restores min-of-2 for LOCAL noise
-  * attribution) and cleanup only when a query actually pinned
-  * storage. At ~190 queries × 1 run ≈ 90-110 s + startup, leaving
-  * >2 min headroom; if the registry passes ~400 queries, trim
-  * consciously (fold to a sampled subset) instead of timing out. */
+  * Contract:
+  *  - exactly one compact JSON line on stdout (Spark logs and full
+  *    per-query detail go to stderr). The driver's log capture keeps
+  *    only the last ~2000 chars of stdout, so the line stays inside
+  *    [[LineBudget]] by folding the fastest rows into "others";
+  *  - a measured-time budget (SPARK_GRAFT_BENCH_BUDGET_SEC, default
+  *    240 s). A partial but parsed line always beats a walk the
+  *    driver kills before it prints anything;
+  *  - each row is its wall time, min over SPARK_GRAFT_BENCH_RUNS runs
+  *    (default 1), -1 for a crash or a budget expiry, and absent from
+  *    "queries" (named in "skippedq") when admission skipped it.
+  *
+  * Order: the seven reference analogues first (the "ref" sub-map is
+  * never empty), then cheapest-first by the prior sidecar
+  * (SPARK_GRAFT_BENCH_FULL, default BENCH_FULL.json; rows without a
+  * prior at the median). Under budget pressure the rows skipped are
+  * then the costliest ones, and the fewest rows are lost. A name-ordered
+  * walk would spend the budget on whichever expensive family sorts
+  * early. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -31,66 +29,24 @@ object Bench {
     val spark = graft.engine.GraftSession.local("graft-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
     val load0 = loadAvg()
-    // SPARK_GRAFT_BENCH_RUNS: timed runs per query, min taken.
-    // Default 1 — min-of-2 was a noise-floor device for LOCAL
-    // attribution and costs ~100 s at full-registry scale, which is
-    // what killed the round-9 driver window (rc 124). Use 2 for
-    // local noise attribution reruns. A crashed query must NOT
-    // masquerade as a fast one: it reports -1. The runs setting is
-    // recorded in the metric line and sidecar whenever it differs
-    // from 1, because run1 (cold: codegen+JIT+checkpoint) is 2-4×
-    // run2 for superstep queries — cross-round compares must be
-    // like-for-like on it.
-    // SPARK_GRAFT_BENCH_GC=true inserts a full GC + settle pause
-    // between queries: isolates each query from its predecessors'
-    // garbage when attributing slowdowns (costs ~0.2s/query).
+    // runs >= 2 is for the sidecar regeneration: min-of-N hides the
+    // cold first run (codegen, JIT, checkpoints), so the line and the
+    // sidecar record the setting whenever it differs from 1
     val runs = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_RUNS").flatMap(_.toIntOption).getOrElse(1))
-    val gcBetween = sys.env.get("SPARK_GRAFT_BENCH_GC").contains("true")
-    // SPARK_GRAFT_BENCH_ONLY=q29,q103 runs just the named short ids —
-    // for targeted reruns (scale rehearsals, regression attribution)
-    // without paying for the full registry.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // SPARK_GRAFT_BENCH_BUDGET_SEC (default 240): hard deadline on
-    // measured query time. A PARTIAL-but-parsed artifact always beats
-    // a timed-out run with no metric line (round 9, rc 124). The
-    // budget is enforced THREE ways, because round 10 showed the
-    // before-start check alone is not enough (q125 took 98 s under
-    // load — one such query admitted at the boundary overruns the
-    // driver's ~300 s kill):
-    //   1. admission: a query only starts if elapsed + its predicted
-    //      cost (prior-round sidecar time × the run's observed
-    //      inflation) fits the budget;
-    //   2. watchdog: each query runs under a hard timeout of
-    //      min(remaining budget, SpikeK × its predicted cost) — on a
-    //      spike-cap expiry only THAT query reports -1 and the walk
-    //      continues (r11: q84 spiked 37× its prediction, ran 57.9 s
-    //      against a remaining-budget-only deadline, and starved the
-    //      34 costliest queries); only a remaining-budget expiry
-    //      stops admission;
-    //   3. the legacy elapsed-only check, as a belt-and-braces floor.
     val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC")
       .flatMap(_.toIntOption).getOrElse(240)
-    // the clock starts BEFORE any warm-up: warm-up wall time on a
-    // loaded box must eat visible budget (→ graceful skips), never
-    // invisible driver-window time (→ rc 124 with no metric line)
+    // the clock starts BEFORE any warm-up: warm-up time on a loaded
+    // box must eat visible budget (graceful skips), never the driver's
+    // window outside it (a kill with no metric line)
     val benchStart = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - benchStart) / 1e9
     var deadlineBlown = false
-    // A timed-out run whose job group would not cancel inside the
-    // grace loop keeps executing in the shared local JVM and
-    // contends with — i.e. inflates — every measurement taken while
-    // it lives (r11 advice: a zombie WARM-UP contaminating the very
-    // ref numbers the warm-up exists to protect). Block until it
-    // settles or the budget dies trying: a truncated artifact beats
-    // a silently dirty one.
-    // `what` must be the exact name handed to runWithWatchdog: the
-    // zombie's job group is derived from it. Awaiting in 1 s slices
-    // with a cancel + stream-stop re-issued between slices (r12
-    // advice): a superstep/streaming zombie launches SUCCESSOR jobs
-    // after the 10 s grace loop ends — a passive full-budget Await
-    // would never cancel those and the zombie burns the whole window.
+    // A timed-out run that would not cancel keeps executing in the
+    // shared JVM and inflates every later measurement: block until it
+    // settles or the budget runs out, re-issuing the cancel and stream
+    // stop every second (superstep and streaming zombies launch
+    // successor jobs). `what` names the job group, as in runWithWatchdog.
     def settleZombie(leftover: Option[scala.concurrent.Future[Boolean]],
         what: String): Unit = leftover.foreach { fut =>
       val wait = math.max(1.0, budgetSec - elapsed())
@@ -112,246 +68,110 @@ object Bench {
         deadlineBlown = true
       }
     }
-    val prior = readPriorSidecar(expectSf = sfDir)
-    // warm (min-of-N) priors under-predict this walk's cold single
-    // runs — scale the SPIKE-CAP prediction only (see ColdPriorK)
-    val coldK = if (readPriorRuns() >= 2) ColdPriorK else 1.0
-    val history = readDriverHistory()
-    System.err.println("[bench] staleness rotation: " +
-      s"${history.lastMeasured.size} ids carry a driver measurement; " +
-      s"crashed-last retries: ${history.crashedLast.toSeq.sorted.mkString(",")}")
-    val allNames = SparkEntry.queries.keys.toSeq
-    val ordered = orderForBudget(allNames, prior, history)
-      .filter(name => only.forall(_.contains(shortKey(name))))
-    val byName = SparkEntry.queries
-    // warm the session (codegen, parquet reader, shuffle machinery)
-    // so the first measured query isn't charged ~4s of JVM startup —
-    // under the watchdog like everything else: a hung FS read here
-    // would otherwise reproduce the rc-124 no-metric-line failure
-    // that all three budget layers below exist to prevent
-    runWithWatchdog(spark, "session warm-up",
-      (s, d) => s.read.parquet(s"$d/nation.parquet")
-        .groupBy("n_regionkey").count(),
-      sfDir, math.max(5.0, budgetSec * 0.1)) match {
-      case WatchdogOutcome.TimedOut(leftover) =>
-        settleZombie(leftover, "session warm-up")
-      case _ => ()
-    }
-    // machinery warm-up (r17): the scan warm-up above does not touch
-    // the structured-streaming micro-batch path (StreamExecution,
-    // offset/commit metadata logs, foreachBatch planning), the eager
-    // localCheckpoint path (every superstep query), the parquet WRITE
-    // path (every maintainer trigger), or the window/join codegen
-    // shapes — so the FIRST measured row of each family was charged
-    // that machinery's first-use cost (r16 driver walk: first
-    // streaming row 2-3 s over its steady state; same class of fix as
-    // the ref warm-up below). One ~1-2 s pass over a 512-row synthetic
-    // frame, no sfDir data: measured rows still derive everything
-    // from the parquet inputs. Under the watchdog like the others.
-    runWithWatchdog(spark, "machinery warm-up", machineryWarm,
-      sfDir, math.max(5.0, budgetSec * 0.1)) match {
-      case WatchdogOutcome.TimedOut(leftover) =>
-        settleZombie(leftover, "machinery warm-up")
-      case _ => ()
-    }
-    // warm the seven BASELINE analogues themselves (untimed): they
-    // run FIRST in the measured walk, and a cold first position
-    // otherwise charges them the JVM's early-JIT phase (measured
-    // 5-9x: matmul 0.25 s steady-state vs 2.3 s cold-first) — the
-    // baseline comparison must reflect steady-state query cost, like
-    // the mid-registry positions they held under the old alphabetical
-    // walk. ~14 s at sf0.1. Bounded: the whole warm-up pass runs
-    // under the watchdog inside a 35%-of-budget slice (a hung or
-    // load-inflated warm query must not starve the measured walk),
-    // and subset reruns only warm refs they will actually measure.
-    val warmCap = budgetSec * 0.35
-    ordered.filter(n => refQueryShorts.contains(shortKey(n)))
-      .foreach { name =>
-        val left = warmCap - elapsed()
-        if (left > 1.0)
-          runWithWatchdog(spark, s"$name (warm-up)", byName(name),
-              sfDir, left) match {
-            case WatchdogOutcome.TimedOut(leftover) =>
-              // exact watchdog name: settleZombie derives the job
-              // group from it for the re-issued cancels
-              settleZombie(leftover, s"$name (warm-up)")
-            case _ => ()
-          }
+    // every run is guarded: a hung warm-up or query would otherwise
+    // hold the walk past the driver's window with no metric line
+    def guarded(name: String,
+        fn: (org.apache.spark.sql.SparkSession, String) =>
+          org.apache.spark.sql.DataFrame,
+        deadline: Double): WatchdogOutcome = {
+      val out = runWithWatchdog(spark, name, fn, sfDir, deadline)
+      out match {
+        case WatchdogOutcome.TimedOut(leftover) => settleZombie(leftover, name)
+        case _ => ()
       }
-    // a crashed or cancelled warm-up run must not leak its pinned
-    // working sets into the measured refs it exists to protect —
-    // same hygiene as after every measured query
+      out
+    }
+    val prior = readPriorSidecar(expectSf = sfDir)
+    val ordered = orderForBudget(SparkEntry.queries.keys.toSeq, prior)
+    val byName = SparkEntry.queries
+    // Warm-ups, untimed but inside the budget. The scan pass takes the
+    // JVM and parquet-reader startup off the first measured row. The
+    // machinery pass covers what a scan misses: the streaming
+    // micro-batch path, eager localCheckpoint, the parquet write path
+    // and the window/join codegen shapes; without it the first row of
+    // each family pays that machinery's first use.
+    guarded("session warm-up",
+      (s, d) => s.read.parquet(s"$d/nation.parquet").groupBy("n_regionkey").count(),
+      math.max(5.0, budgetSec * 0.1))
+    guarded("machinery warm-up", machineryWarm, math.max(5.0, budgetSec * 0.1))
+    // The refs walk first, so a cold first position would charge them
+    // the JVM's early JIT (measured 5-9x: matmul 0.25 s warm, 2.3 s
+    // cold-first). Warm each one once, inside a 35%-of-budget slice.
+    val warmCap = budgetSec * 0.35
+    ordered.filter(n => refQueryShorts.contains(shortKey(n))).foreach { name =>
+      val left = warmCap - elapsed()
+      if (left > 1.0) guarded(s"$name (warm-up)", byName(name), left)
+    }
+    // a crashed or cancelled warm-up must not leak pinned working
+    // sets into the measured refs
     graft.engine.SessionCache.sweepBetweenQueries(spark)
-    // Observed-vs-prior inflation ratios (loaded box ≈ 1.25-14×,
-    // idle ≈ 1×): the admission predictor scales prior costs by the
-    // running median so a loaded round skips early rather than
-    // overruns.
+    // Admission scales each prior by the walk's running median of
+    // measured/prior (lower clamp 0.25, so it learns down as well as
+    // up): the sidecar's warm min-of-2 priors under-predict a cold
+    // walk, and unscaled they admit a row that then runs into the
+    // budget and ends the walk on a -1 (q124 on a 4-core sf0.1 walk).
     val ratios = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // lower clamp 0.25, not 1.0: the predictor must be able to learn
-    // DOWN too (priors from a loaded round on an idle box would
-    // otherwise skip queries that comfortably fit)
     def inflation: Double =
       if (ratios.isEmpty) 1.0
       else math.min(20.0, math.max(0.25, median(ratios.toSeq)))
     val medianPrior = if (prior.isEmpty) 1.0 else median(prior.values.toSeq)
-    // per-RUN prediction feeds the spike-cap deadline; per-QUERY
-    // prediction (× runs) feeds admission, which reasons about total
-    // budget consumption
-    def predictedOne(name: String): Double =
-      prior.getOrElse(name, medianPrior) * inflation
-    def predicted(name: String): Double = predictedOne(name) * runs
+    def predicted(name: String): Double =
+      prior.getOrElse(name, medianPrior) * inflation * runs
     var skipped = List.empty[String]
-    // rows whose -1 came from the SPIKE CAP specifically (deadline <
-    // remaining): candidates for the end-of-walk retry — a crash or a
-    // remaining-budget expiry is not
-    val spikeKilled = scala.collection.mutable.LinkedHashSet.empty[String]
-    // rows where ANY run ended in a genuine crash (exception inside
-    // the query, not a watchdog kill): a crash carries real
-    // information and VETOES the end-of-walk retry even when another
-    // run of the same query was spike-capped — otherwise a successful
-    // retry would overwrite the crash's -1 (r15 advice)
-    val crashed = scala.collection.mutable.HashSet.empty[String]
     val results = ordered.flatMap { name =>
-      val fn = byName(name)
-      val isRef = refQueryShorts.contains(shortKey(name))
-      // the seven BASELINE workload analogues run first and are
-      // always admitted (they cost ~3 s total; an empty "ref"
-      // sub-map, as in round 10, is the worst artifact to ship)
-      val admit = !deadlineBlown &&
-        (isRef || (elapsed() <= budgetSec &&
-          elapsed() + predicted(name) <= budgetSec))
+      // a SIGTERM runs Spark's shutdown hook concurrently with the
+      // walk; every later row would then crash in milliseconds
+      if (spark.sparkContext.isStopped && !deadlineBlown) {
+        System.err.println("[bench] SparkContext stopped underneath the walk; aborting")
+        deadlineBlown = true
+      }
+      // refs are always admitted: an empty "ref" sub-map is the worst
+      // artifact to ship
+      val admit = !deadlineBlown && (refQueryShorts.contains(shortKey(name)) ||
+        elapsed() + predicted(name) <= budgetSec)
       if (!admit) { skipped ::= name; None } else Some {
-        // the deadline is recomputed PER RUN: a timed-out run1 must
-        // not hand run2 a stale pre-run1 allowance (with RUNS=2 that
-        // doubled the worst-case overrun), and once the deadline is
-        // blown the remaining runs of this query are abandoned too
+        // the deadline is the budget left at each run's start, so a
+        // timed-out run blows the walk's deadline and ends it
         val times = (1 to runs).map { _ =>
-          // a SIGTERM (driver window kill, operator Ctrl-C) runs
-          // Spark's shutdown hook CONCURRENTLY with this walk: every
-          // later query then crashes in milliseconds with "stopped
-          // SparkContext" and the artifact fills with bogus -1 rows
-          // (observed live in r12). Detect the dying JVM and stop
-          // measuring instead.
-          if (spark.sparkContext.isStopped) {
-            if (!deadlineBlown) System.err.println(
-              "[bench] SparkContext stopped underneath the walk; aborting")
-            deadlineBlown = true; -1.0
-          } else if (deadlineBlown) -1.0
-          else {
-            // Two bounds (r11 verdict #1): the remaining budget AND
-            // SpikeK × this query's predicted per-run cost. An
-            // in-run interference spike (q84: 1.6 s predicted,
-            // 57.9 s actual in r11) now costs at most K× its
-            // prediction and is recorded -1 like any crash — the
-            // saved budget measures the tail it used to starve.
-            val remaining = math.max(5.0, budgetSec - elapsed())
-            val deadline =
-              deadlineFor(remaining, prior.get(name).map(_ * coldK), inflation)
-            runWithWatchdog(spark, name, fn, sfDir, deadline) match {
-              case WatchdogOutcome.Done(t) =>
-                if (t < 0) crashed += name
-                t
-              case WatchdogOutcome.TimedOut(leftover) =>
-                settleZombie(leftover, name)
-                if (deadline < remaining) {
-                  // spike-cap kill: only THIS query failed; keep
-                  // walking unless the zombie wait blew the budget
-                  System.err.println(f"[bench] $name spiked past its " +
-                    f"$deadline%.1f s cap (${SpikeK}%.0f x predicted); " +
-                    "marked -1, walk continues")
-                  spikeKilled += name
-                  -1.0
-                } else {
-                  System.err.println(
-                    "[bench] deadline blown; remaining queries will be skipped")
-                  deadlineBlown = true; -1.0
-                }
-            }
+          if (deadlineBlown) -1.0
+          else guarded(name, byName(name), math.max(5.0, budgetSec - elapsed())) match {
+            case WatchdogOutcome.Done(t) => t
+            case WatchdogOutcome.TimedOut(_) =>
+              System.err.println(
+                "[bench] deadline blown; remaining queries will be skipped")
+              deadlineBlown = true; -1.0
           }
         }
-        // Raw run times go to stderr: with runs>=2, run1>>run2 is
-        // cold-cache cost, run1~run2-slow is genuine cost, and a
-        // one-off spike is machine noise — the min alone can't
-        // distinguish.
+        // full name, every run, full precision: min-of-N alone can't
+        // tell a cold first run from genuine cost
         System.err.println("[bench-runs] " + name + " " +
-          times.zipWithIndex.map { case (t, i) =>
-            f"run${i + 1}=$t%.3f" }.mkString(" "))
+          times.zipWithIndex.map { case (t, i) => f"run${i + 1}=$t%.3f" }.mkString(" "))
         prior.get(name).foreach { est =>
           val best = times.filter(_ >= 0)
           if (best.nonEmpty && est > 0.05) ratios += best.min / est
         }
-        // Release whatever the query pinned (persisted relations,
-        // session memos) so storage doesn't accumulate across the
-        // ~190-query loop and late queries aren't taxed for early
-        // queries' caches — but ONLY when something was actually
-        // pinned: most registry queries cache nothing, and paying
-        // clearCache + invalidateAll ~190× contributed to the round-9
-        // window overrun.
+        // release what the query pinned so late rows are not taxed
+        // for early rows' caches (a no-op when nothing was pinned)
         graft.engine.SessionCache.sweepBetweenQueries(spark)
-        if (gcBetween) { System.gc(); Thread.sleep(200) }
         name -> (if (times.exists(_ < 0)) -1.0 else times.min)
       }
     }
-    // r14 verdict #1: two consecutive rounds shipped -1 rows that
-    // post-hoc isolated reruns exonerated as roaming load spikes
-    // (r13 q205; r14 q62/q125/q191 on a loadavg-7.9 window). The
-    // artifact is the grade — absorb ONE spike in-window: each
-    // spike-cap-killed row gets one retry after the walk, against the
-    // REMAINING budget only (the cap already fired once for it; a
-    // genuine budget exhaustion still records -1, pinned in BenchSpec).
-    val afterRetry = retryPass(results,
-      n => spikeKilled.contains(n) && !crashed.contains(n),
-      () => deadlineBlown || spark.sparkContext.isStopped,
-      () => budgetSec - elapsed(),
-      name => {
-        System.err.println(f"[bench] retrying spike-killed $name " +
-          f"(${budgetSec - elapsed()}%.1f s budget left)")
-        val t = runWithWatchdog(spark, s"$name (retry)", byName(name),
-            sfDir, math.max(5.0, budgetSec - elapsed())) match {
-          case WatchdogOutcome.Done(sec) => sec
-          case WatchdogOutcome.TimedOut(leftover) =>
-            settleZombie(leftover, s"$name (retry)"); -1.0
-        }
-        graft.engine.SessionCache.sweepBetweenQueries(spark)
-        System.err.println(f"[bench] retry of $name -> $t%.3f s")
-        t
-      })
     if (skipped.nonEmpty) System.err.println(
       s"[bench] budget ${budgetSec}s exhausted; skipped ${skipped.size}: " +
         skipped.reverse.map(shortKey).mkString(","))
-    // The harness that captures this line keeps only the tail of stdout,
-    // so the JSON must stay well under ~2000 chars even as the query set
-    // grows: short keys (the qNN id prefix) + centisecond precision.
-    // Full names + full precision go to stderr for local inspection.
-    afterRetry.foreach { case (k, v) => System.err.println(s"[bench] $k $v") }
-    println(jsonLine(afterRetry, sfDir, loadTag(load0, loadAvg()),
+    println(jsonLine(results, sfDir, loadTag(load0, loadAvg()),
       skipped.size, runs, skipped.reverse.map(shortKey)))
-    // The stdout line folds the fastest queries into an "others"
-    // bucket to fit the harness's tail capture — a regression INSIDE
-    // the bucket would be invisible across rounds. Persist the full
-    // per-query map (full names, full precision) as a repo artifact
-    // so every cross-round comparison stays complete. FULL runs only:
-    // a SPARK_GRAFT_BENCH_ONLY subset rerun must not clobber the
-    // complete artifact with its handful of rows.
-    // a run whose context died mid-walk must never overwrite the
-    // sidecar: its -1 rows are shutdown artifacts, and crashed rows
-    // are dropped from priors — poisoning every later round's
-    // admission (observed in r12: a SIGTERM'd run wrote 25 bogus -1s)
-    if (only.isEmpty && !spark.sparkContext.isStopped)
-      writeFull(afterRetry, sfDir, skipped.size, runs)
+    // The stdout line folds fast rows into "others"; the sidecar keeps
+    // every row at full precision. A walk whose context died must not
+    // overwrite it: its -1 rows are shutdown artifacts.
+    if (!spark.sparkContext.isStopped) writeFull(results, sfDir, skipped.size, runs)
     spark.stop()
   }
 
-  /** Machinery warm-up body (r17): exercises, over a tiny synthetic
-    * frame, the engine paths the scan warm-up misses — one
-    * FileDrip-driven micro-batch whose foreachBatch writes and
-    * re-reads parquet (StreamExecution, offset/commit logs, the
-    * maintainers' write path), an eager localCheckpoint (the
-    * superstep family's truncation machinery), and a window +
-    * broadcast-join + aggregate plan (the codegen shapes the CEP/
-    * window/relational families compile first). Reads nothing from
-    * sfDir, caches nothing: measured queries still compute entirely
-    * from the parquet inputs. */
+  /** Machinery warm-up body over a tiny synthetic frame: one
+    * FileDrip micro-batch that writes and re-reads parquet, an eager
+    * localCheckpoint, and a window + broadcast-join + aggregate plan.
+    * Reads nothing from sfDir and caches nothing. */
   def machineryWarm(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
@@ -381,99 +201,14 @@ object Bench {
       .groupBy(col("g")).agg(sum(col("rn")).as("s"))
   }
 
-  /** Floor below which an end-of-walk retry can't learn anything. */
-  val RetryFloorSec = 5.0
-
-  /** A -1 row earns its single end-of-walk retry iff its kill came
-    * from the SPIKE CAP (only that query was condemned — a crash or
-    * budget expiry carries real information), the walk's own deadline
-    * never blew, and enough budget remains to measure. Pure;
-    * BenchSpec pins every branch. */
-  def retryEligible(wasSpikeKilled: Boolean, deadlineBlown: Boolean,
-      remainingSec: Double): Boolean =
-    wasSpikeKilled && !deadlineBlown && remainingSec >= RetryFloorSec
-
-  /** End-of-walk retry pass (r14 verdict #1): re-measure each
-    * spike-cap-killed row once, in walk order, while budget remains.
-    * `runOnce` is the watchdogged runner (seconds, or -1 on a second
-    * failure — the row then stays an honest -1). Factored from main
-    * so BenchSpec can drive it with a fake runner. */
-  def retryPass(results: Seq[(String, Double)],
-      wasSpikeKilled: String => Boolean, deadlineBlown: () => Boolean,
-      remainingSec: () => Double, runOnce: String => Double)
-      : Seq[(String, Double)] =
-    results.map { case (name, t) =>
-      if (t >= 0 ||
-          !retryEligible(wasSpikeKilled(name), deadlineBlown(), remainingSec()))
-        name -> t
-      else name -> runOnce(name)
-    }
-
-  /** Spike-cap multiplier: a query's per-run watchdog deadline is at
-    * most SpikeK × its predicted cost (and at least 5 s, and never
-    * more than the remaining budget). K=8 bounds a roaming
-    * interference spike to ~8× while leaving honest 2-4× cold-run /
-    * loaded-box inflation (the observed envelope) untouched. */
-  val SpikeK = 8.0
-
-  /** Cold-prior multiplier on the SPIKE-CAP prediction (r18, the r17
-    * q29/q124 -1 fix): a min-of-N sidecar records WARM steady-state
-    * cost, but the walk runs each query ONCE on a fresh JVM and pays
-    * that query's own codegen/JIT — measured 2-4× the warm prior for
-    * the superstep/streaming families, compounding with box load. A
-    * warm-prior (runs ≥ 2) artifact therefore scales the cap's
-    * prediction by this factor; a runs=1 artifact already embeds the
-    * cold cost and is used as-is. Admission math is NOT scaled — the
-    * budget reasons about realistic totals, the cap only about when a
-    * run is evidence of interference rather than work. */
-  val ColdPriorK = 3.0
-
-  /** The `"runs"` field of the prior sidecar (1 when absent or
-    * unreadable): how many timed runs produced each prior value —
-    * min-of-2+ priors are warm and under-predict a cold walk run
-    * ([[ColdPriorK]]). */
-  def readPriorRuns(path: String =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")): Int = {
-    if (path.isEmpty) return 1
-    try {
-      val body = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-      """"runs":\s*(\d+)""".r.findFirstMatchIn(body)
-        .map(_.group(1).toInt).getOrElse(1)
-    } catch { case scala.util.control.NonFatal(_) => 1 }
-  }
-
-  /** Per-run watchdog deadline (r11 verdict #1). `remainingSec` is
-    * the caller-floored remaining budget; the 5 s floor on the spike
-    * cap keeps sub-second predictions from being killed by startup
-    * jitter. BenchSpec pins this formula. */
-  def runDeadline(remainingSec: Double, predictedOneSec: Double): Double =
-    math.min(remainingSec, math.max(5.0, SpikeK * predictedOneSec))
-
-  /** The spike cap applies ONLY when the query has its OWN prior
-    * measurement: a median-estimated NEW query that runs long is an
-    * estimate error, not a spike — killing it writes -1 to the
-    * sidecar, crashes are dropped from priors, and the query starves
-    * on every later round (bit q191/q193 on their first bench run).
-    * A new query gets the full remaining budget; from its next round
-    * it has a real prior and the cap engages. BenchSpec pins both
-    * branches. */
-  def deadlineFor(remainingSec: Double, ownPriorSec: Option[Double],
-      inflation: Double): Double = ownPriorSec match {
-    case Some(p) => runDeadline(remainingSec, p * inflation)
-    case None => remainingSec
-  }
-
   /** Outcome of one watchdog-guarded execution. */
   sealed trait WatchdogOutcome
   object WatchdogOutcome {
-    /** Finished inside the deadline; sec = -1.0 for a crash (a
-      * crashed query must not masquerade as fast, but it also must
-      * not kill the whole artifact). */
+    /** Finished inside the deadline; sec = -1.0 for a crash. */
     final case class Done(sec: Double) extends WatchdogOutcome
     /** Deadline fired. `leftover` carries the still-running future
-      * when the 10 s cancel grace loop failed to stop the job — the
-      * caller must settle it before measuring anything else (a
-      * zombie in the shared local JVM inflates every later number). */
+      * when the 10 s cancel grace loop failed to stop the job; the
+      * caller must settle it before measuring anything else. */
     final case class TimedOut(
         leftover: Option[scala.concurrent.Future[Boolean]])
       extends WatchdogOutcome
@@ -495,7 +230,7 @@ object Bench {
     val t0 = System.nanoTime()
     val fut = Future {
       // interruptOnCancel: kills the executor task threads too, not
-      // just the scheduler entries — local[32] shares the JVM
+      // just the scheduler entries — local[N] shares the JVM
       spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
       try { fn(spark, sfDir).count(); true }
       catch { case e: Throwable =>
@@ -508,12 +243,11 @@ object Bench {
     } catch { case _: concurrent.TimeoutException =>
       System.err.println(f"[bench] $name TIMED OUT after $deadlineSec%.0f s; " +
         "cancelling its job group")
-      // grace loop: cancel for up to 10 s — a driver-side loop may
-      // launch successor jobs after the first cancel lands. Streaming
-      // (foreachBatch) jobs run on the stream's own micro-batch
-      // thread OUTSIDE our job group, so cancelJobGroup can't reach
-      // them — stop the streams themselves (the walk is sequential:
-      // every active stream belongs to the timed-out query).
+      // grace loop: cancel for up to 10 s, because a driver-side loop
+      // may launch successor jobs after the first cancel. Streaming
+      // jobs run on the stream's own thread outside the job group, so
+      // stop the streams too (the walk is sequential: every active
+      // stream belongs to the timed-out query).
       var waited = 0
       while (!fut.isCompleted && waited < 20) {
         spark.sparkContext.cancelJobGroup(group)
@@ -525,11 +259,10 @@ object Bench {
     }
   }
 
-  /** Previous round's committed full sidecar, used to seed the
-    * cheapest-first walk. The format is the flat map writeFull emits;
-    * a tolerant regex parse keeps this dependency-free. Missing or
-    * unparseable file → empty map (fresh checkout: order degrades to
-    * name order with every estimate at the 1.0 default). */
+  /** The committed full sidecar (the flat map writeFull emits), read
+    * with a tolerant regex to order the walk and predict admission.
+    * Missing or unparseable → empty map: name order, every estimate
+    * at the 1.0 default. */
   def readPriorSidecar(path: String =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json"),
       expectSf: String = ""): Map[String, Double] = {
@@ -553,127 +286,15 @@ object Bench {
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
   }
 
-  /** How many of the priciest queries walk right after the refs.
-    * Rationale: when registry cost exceeds the budget, SOMETHING is
-    * skipped — and with pure cheapest-first the skipped set is always
-    * the same expensive superstep/streaming tail (the r10 AND r11
-    * judge finding: that family never got driver numbers two rounds
-    * running). Spending ~25% of the budget on the known-expensive
-    * head guarantees those rows measure; what then gets skipped under
-    * pressure is a handful of interchangeable mid-cost rows instead
-    * of the most scrutinized family, at a small cost in total count. */
-  val ExpensiveHead = 10
-
-  /** Candidate pool the expensive head is drawn from: the head
-    * rotates by STALENESS within the [[ExpensivePool]] priciest rows
-    * (r12 verdict #1), so on a permanently loaded box — where only
-    * the refs and the head ever measure — ~3 consecutive rounds of
-    * driver artifacts still cover the entire expensive family instead
-    * of re-measuring the same 10 rows forever (r12 measured exactly
-    * its head + refs, 17/198, and would have repeated it). */
-  val ExpensivePool = 3 * ExpensiveHead
-
-  /** Per-id driver-window bench history, from the committed
-    * `BENCH_rNN.json` artifacts.
-    *  - `lastMeasured`: round of the last REAL measurement (value
-    *    >= 0 — a -1 crash/expiry row is an attempt, not a
-    *    measurement). Feeds the staleness rotation.
-    *  - `crashedLast`: ids whose most RECENT attempt was a -1.
-    *    An unexplained crash in the latest committed artifact is the
-    *    single most scrutinized bench row (the r11 q84 / r12
-    *    q41+q119 verdict items all needed manual exoneration runs) —
-    *    these jump the walk so the NEXT artifact answers the
-    *    question automatically. */
-  final case class DriverHistory(lastMeasured: Map[String, Int],
-      crashedLast: Set[String])
-
-  /** Parses the committed driver artifacts. Quiet-box sidecars
-    * (BENCH_FULL/BENCH_SF1) deliberately do NOT count: the coverage
-    * gap being rotated away is specifically the driver window.
-    * Tolerant of both artifact vintages (full names r01-r07, short
-    * keys r08+, quotes escaped inside the captured "tail" string) —
-    * only QUOTED `"qNN…":value` pairs match, so the stderr
-    * `[bench] qNN_name t` lines and the unquoted skipped list in the
-    * same tail cannot. Rows folded into the "others" bucket of a
-    * complete run carry no id and stay "stale" — conservative: they
-    * simply walk earlier next round. Missing dir / no artifacts →
-    * empty history → pure cost order, as before. */
-  def readDriverHistory(dir: String = "."): DriverHistory = try {
-    // anchored: a backup like BENCH_r12.json.bak must not be parsed
-    // as a second round-12 artifact with stale contents (r13 review)
-    val fileRx = """^BENCH_r(\d+)\.json$""".r
-    val entry = """\\?"(q\d+)(?:_\w+)?\\?":\s*(-?\d+(?:\.\d+)?)""".r
-    import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    val rounds = try files.iterator().asScala.flatMap { p =>
-      fileRx.findFirstMatchIn(p.getFileName.toString)
-        .map(_.group(1).toInt -> p)
-    }.toSeq finally files.close()
-    // cwd-trap guard (r13 advice): "no artifacts" and "launched from
-    // the wrong directory" are indistinguishable downstream — the
-    // rotation silently degrades to cost order either way — so name
-    // the resolved directory and what was found in it up front.
-    System.err.println("[bench] driver history: " +
-      s"${rounds.size} BENCH_r*.json artifact(s) under " +
-      java.nio.file.Paths.get(dir).toAbsolutePath.normalize())
-    val measured = scala.collection.mutable.Map.empty[String, Int]
-    val crashed = scala.collection.mutable.Set.empty[String]
-    rounds.sortBy(_._1).foreach { case (round, p) =>   // ascending: later wins
-      try {
-        val body = java.nio.file.Files.readString(p)
-        entry.findAllMatchIn(body).foreach { m =>
-          if (m.group(2).toDouble >= 0) {
-            measured(m.group(1)) = round; crashed -= m.group(1)
-          } else crashed += m.group(1)
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-    DriverHistory(measured.toMap, crashed.toSet)
-  } catch { case scala.util.control.NonFatal(_) =>
-    DriverHistory(Map.empty, Set.empty) }
-
-  /** Budget-aware walk order: the seven BASELINE workload analogues
-    * first (in RefBenchmarks order), then an [[ExpensiveHead]] drawn
-    * from the [[ExpensivePool]] priciest-by-prior rows — STALEST
-    * first (never/longest-ago driver-measured; prior descending
-    * breaks ties), then everything else ascending by (staleness,
-    * prior-round cost) — unknown/new queries carry no measurement
-    * round so they walk at the FRONT of the tail (a new query should
-    * get a driver number promptly) at the median-prior cost estimate.
-    * Staleness as the primary key is the r12 verdict's rotation: the
-    * rows skipped under load DIFFER each round, so the union of ~3
-    * rounds' driver artifacts covers the registry even on a
-    * permanently loaded box. The round-10 alphabetical walk measured
-    * 44/183 and shipped an empty "ref" map; do not reintroduce it. */
-  def orderForBudget(names: Seq[String], prior: Map[String, Double],
-      history: DriverHistory = DriverHistory(Map.empty, Set.empty))
-      : Seq[String] = {
+  /** Walk order: the seven reference analogues in [[RefBenchmarks]]
+    * order, then everything else ascending by prior cost, rows without
+    * a prior at the median, the name breaking ties. */
+  def orderForBudget(names: Seq[String], prior: Map[String, Double]): Seq[String] = {
     val byShort = names.map(n => shortKey(n) -> n).toMap
     val refNames = RefBenchmarks.flatMap { case (_, q) => byShort.get(q) }
-    val rest = names.filterNot(refNames.toSet)
     val med = if (prior.isEmpty) 1.0 else median(prior.values.toSeq)
-    def stale(n: String): Int =
-      history.lastMeasured.getOrElse(shortKey(n), Int.MinValue)
-    // rows whose LATEST driver attempt crashed (-1) lead the head —
-    // priciest first: an unexplained crash in the committed artifact
-    // is the row the judge has to exonerate by hand (r11 q84, r12
-    // q41/q119); retrying it first makes the next artifact answer
-    // automatically. The head may briefly exceed ExpensiveHead when
-    // more than ExpensiveHead rows crashed — by construction those
-    // rows were about to be walked anyway.
-    val crashedRetry = rest
-      .filter(n => history.crashedLast.contains(shortKey(n)))
-      .sortBy(n => (-prior.getOrElse(n, med), n))
-    // only queries with an OWN prior qualify for the pool: a
-    // median-estimated new query has no evidence of being expensive
-    val pool = rest.filter(prior.contains)
-      .sortBy(n => (-prior(n), n)).take(ExpensivePool)
-    val expensive = (crashedRetry ++
-        pool.sortBy(n => (stale(n), -prior(n), n))).distinct
-      .take(math.max(ExpensiveHead, crashedRetry.size))
-    val tail = rest.filterNot(expensive.toSet)
-    refNames ++ expensive ++
-      tail.sortBy(n => (stale(n), prior.getOrElse(n, med), n))
+    refNames ++ names.filterNot(refNames.toSet)
+      .sortBy(n => (prior.getOrElse(n, med), n))
   }
 
   def median(xs: Seq[Double]): Double = {
@@ -683,17 +304,14 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
-  /** Full-precision per-query sidecar (default `BENCH_FULL.json` next
-    to the repo's build — override with SPARK_GRAFT_BENCH_FULL, empty
-    to disable; skipped entirely on SPARK_GRAFT_BENCH_ONLY subset
-    runs). Best-effort: bench numbers must survive a read-only
-    working dir. */
+  /** Full-precision per-query sidecar (SPARK_GRAFT_BENCH_FULL, default
+    * `BENCH_FULL.json`, empty to disable), written only by a walk that
+    * skipped nothing. Best-effort: a read-only working dir must not
+    * cost the line. tools/bench_diff.py compares two by hand. */
   def writeFull(results: Seq[(String, Double)], sfDir: String,
-      skipped: Int = 0, runs: Int = 1): Unit = {
+      skipped: Int, runs: Int): Unit = {
     val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")
     if (path.isEmpty) return
-    // A deadline-truncated run must never masquerade as a complete
-    // artifact: keep whatever complete sidecar already exists.
     if (skipped > 0) {
       System.err.println(s"[bench] sidecar NOT written: $skipped queries skipped")
       return
@@ -703,105 +321,24 @@ object Bench {
       val qs = results.sortBy(_._1).map { case (k, v) =>
         "  \"" + k + "\": " + String.format(java.util.Locale.ROOT,
           "%.3f", Double.box(v)) }.mkString("{\n", ",\n", "\n}")
-      // escape backslashes/quotes: a quoting path must not produce an
-      // unparseable sidecar (round-9 advice)
+      // escaped: a quoting path must not make the sidecar unparseable
       val sfEsc = sfDir.replace("\\", "\\\\").replace("\"", "\\\"")
-      // runs rides the artifact so cross-round per-query compares can
-      // normalize: min-of-2 hides the 2-4× cold first run
+      // runs rides the artifact so per-query compares can normalize:
+      // min-of-2 hides the 2-4× cold first run
       val body = s"""{"sf": "$sfEsc", "runs": $runs, "queries": $qs}"""
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path), body + "\n")
-      // r11 verdict #4: the cross-round diff runs AUTOMATICALLY after
-      // every successful full-sidecar write, so its report is
-      // committed per-round without a human remembering the tool
-      writeBenchDiff(path)
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] full sidecar write failed: $e") }
   }
 
-  /** Runs tools/bench_diff.py (previous committed sidecar vs the
-    * fresh one) and persists its report — as BENCH_DIFF.txt for the
-    * default sidecar, as `<sidecar>.diff` for an alternate one (the
-    * sf1 rehearsal's BENCH_SF1.json), so the two runs' reports never
-    * clobber each other. Best-effort and bounded: a missing
-    * git/python3 or a hung subprocess must never cost the bench
-    * window its metric line — the report records the failure
-    * instead. The exit code rides the report header; rc 1 = flagged
-    * like-for-like timing moves or NEW crashes (crashes flag
-    * regardless of like-for-like, per the r11 advice). */
-  def writeBenchDiff(fullPath: String): Unit =
-    try {
-      val report = new StringBuilder
-      val prev = java.nio.file.Files.createTempFile("bench_prev", ".json")
-      try {
-        // git's stdout captured ALONE: an rc-0 advisory on stderr
-        // (ownership/fsmonitor chatter in containers) merged into the
-        // body would corrupt the JSON handed to bench_diff.py
-        runBounded(Seq("git", "show", s"HEAD:$fullPath"), 10,
-            mergeErr = false) match {
-          case Some((0, body)) =>
-            java.nio.file.Files.writeString(prev, body)
-            runBounded(Seq("python3", "tools/bench_diff.py",
-                prev.toString, fullPath), 30) match {
-              case Some((rc, out)) =>
-                report ++= s"# tools/bench_diff.py HEAD:$fullPath vs fresh; " +
-                  s"exit $rc (1 = like-for-like timing flags or new crashes)\n"
-                report ++= out
-              case None =>
-                report ++= "# bench_diff.py unavailable or timed out\n"
-            }
-          case _ =>
-            report ++= s"# no committed $fullPath to diff against\n"
-        }
-      } finally java.nio.file.Files.deleteIfExists(prev)
-      // the default sidecar owns BENCH_DIFF.txt; an alternate sidecar
-      // (e.g. the sf1 rehearsal's BENCH_SF1.json) writes its report
-      // alongside itself so the two runs' diffs never clobber
-      val diffPath = if (fullPath == "BENCH_FULL.json") "BENCH_DIFF.txt"
-        else fullPath + ".diff"
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(diffPath), report.toString)
-      System.err.println(s"[bench] cross-round diff written to $diffPath")
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] bench diff skipped: $e") }
-
-  /** Run a subprocess, killed past `sec` seconds. `mergeErr` folds
-    * stderr into stdout (wanted for the diff report, NOT for
-    * machine-read output like `git show`, where rc-0 stderr chatter
-    * would corrupt the body). The output is drained on a separate
-    * thread so a report larger than the pipe buffer cannot deadlock
-    * the wait. */
-  private def runBounded(cmd: Seq[String], sec: Long,
-      mergeErr: Boolean = true): Option[(Int, String)] =
-    try {
-      val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(mergeErr)
-      // unmerged stderr goes to OUR stderr (never buffered in a pipe
-      // nobody drains — a chatty child would block on a full pipe)
-      if (!mergeErr) pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val p = pb.start()
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val out = scala.concurrent.Future {
-        new String(p.getInputStream.readAllBytes,
-          java.nio.charset.StandardCharsets.UTF_8)
-      }
-      if (!p.waitFor(sec, java.util.concurrent.TimeUnit.SECONDS)) {
-        p.destroyForcibly(); None
-      } else Some((p.exitValue(), scala.concurrent.Await.result(out,
-        scala.concurrent.duration.Duration(5,
-          java.util.concurrent.TimeUnit.SECONDS))))
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** 1-minute load average at bench start/end, embedded in the metric
-    * line so a loaded-box round is distinguishable from a regression
-    * IN the artifact the driver keeps (this container's numbers drift
-    * ~2x when residual JVMs are still decaying — round-7 verdict
-    * finding #2). Non-Linux / unreadable → omitted. */
+  /** 1-minute load average, at walk start and end in the line, so a
+    * loaded box is told apart from a regression. Unreadable → omitted. */
   def loadAvg(): Option[Double] =
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.getLines().next().split("\\s+").headOption.map(_.toDouble)
       finally src.close()
-      // NonFatal only: an OOM/interrupt must propagate, not read as
-      // "load unavailable" (round-8 advice)
+      // NonFatal only: an OOM/interrupt must propagate
     } catch { case scala.util.control.NonFatal(_) => None }
 
   def loadTag(start: Option[Double], end: Option[Double]): String =
@@ -830,7 +367,7 @@ object Bench {
 
   /** Centiseconds below 10 s, deciseconds to 100 s, whole seconds to
     * 1000 s, exponent notation above (a >16-minute single query means
-    * the round is dead anyway — only the magnitude matters). */
+    * the walk is dead anyway — only the magnitude matters). */
   private def fmt(v: Double): String =
     if (v >= 1000) f"$v%.0e" else if (v >= 100) f"$v%.0f"
     else if (v >= 10) f"$v%.1f" else f"$v%.2f"
@@ -840,14 +377,9 @@ object Bench {
     * the line itself gets truncated and nothing parses. */
   val LineBudget = 1880
 
-  /** How many budget-skipped shortKeys ride the stdout JSON before
-    * the list truncates to a count: the r15 judge could not tell
-    * WHICH 2 rows were skipped because the names lived only on a
-    * stderr line the harness's tail capture lost — the artifact must
-    * answer that itself. 40 names ≈ 280 chars, inside [[LineBudget]]
-    * headroom for realistic skip counts; a pathological
-    * budget-exhaustion run (skips in the hundreds) degrades to the
-    * first 40 plus the honest total count. */
+  /** How many skipped shortKeys ride the line before the list
+    * truncates (the count stays whole): stderr is not in the capture,
+    * so the line itself names them. 40 names ≈ 280 chars. */
   val SkipListCap = 40
 
   def jsonLine(results: Seq[(String, Double)], sfDir: String,
@@ -855,8 +387,8 @@ object Bench {
       skippedq: Seq[String] = Nil): String = {
     val loadField = (if (loadavg.isEmpty) "" else "," + loadavg) +
       // deadline guard fired: the total covers only the measured
-      // prefix — flag it so a cross-round compare can't mistake a
-      // truncated run for a speedup
+      // prefix — flag it so a compare can't mistake a truncated walk
+      // for a speedup
       (if (skipped == 0) "" else s""","skipped":$skipped""") +
       (if (skippedq.isEmpty) "" else
         skippedq.take(SkipListCap)
@@ -865,9 +397,9 @@ object Bench {
       // single-run numbers (cold run hidden), so the artifact says so
       (if (runs == 1) "" else s""","runs":$runs""")
     def entry(k: String, v: Double) = "\"" + shortKey(k) + "\":" + fmt(v)
-    // per-family wall rollup (r16 verdict #6): WHERE the walk's budget
-    // goes, carried in the artifact itself. Measured rows only; a
-    // crash (-1) counts in `n` but adds nothing to the total.
+    // per-family wall rollup: where the walk's budget goes, carried in
+    // the artifact itself. Measured rows only; a crash (-1) counts in
+    // `n` but adds nothing to the total.
     val fam = results.groupBy { case (k, _) => SparkEntry.familyOf(k) }
       .toSeq.sortBy(_._1)
       .map { case (f, rs) =>
@@ -881,8 +413,8 @@ object Bench {
         byShort.get(q).map(v => "\"" + name + "\":" + fmt(v))
       }.mkString("{", ",", "}")
       val total = results.map(_._2).filter(_ >= 0).sum
-      // failed count rides the headline so a cross-round total compare
-      // can never mistake "13 queries crashed" for "2.5x faster"
+      // failed count rides the headline so a total compare can never
+      // mistake "13 queries crashed" for "2.5x faster"
       val failed = results.count(_._2 < 0)
       val oth = if (others.isEmpty) "" else {
         val t = others.map(_._2).filter(_ >= 0).sum
@@ -893,15 +425,11 @@ object Bench {
     val full = render(results.sortBy(_._1), Nil)
     if (full.length <= LineBudget) full
     else {
-      // overflow: keep the SLOW queries (and every crash) individual —
-      // the entries anyone analyzes — and fold the fastest into one
-      // "others" count+total. Full per-query precision always goes to
-      // stderr regardless. Deterministic: drop ascending by (time, key).
+      // overflow: keep every crash and the slowest rows individual and
+      // fold the fastest into one "others" count+total. splitAt keeps
+      // the prefix, so crashes sort first (-MaxValue), then slowest to
+      // fastest, the key breaking ties.
       val ordered = results.sortBy { case (k, v) =>
-        // crashes FIRST (most negative key = kept longest), then
-        // slowest→fastest: sortBy is ascending and splitAt keeps the
-        // PREFIX, so a +MaxValue key would silently fold every crash
-        // into "others" — the exact inversion of the intent
         (if (v < 0) -Double.MaxValue else -v, k)
       }
       var keep = ordered.length

@@ -37,31 +37,6 @@ object Iterate {
       step: (DataFrame, Int) => DataFrame): DataFrame =
     (1 to n).foldLeft(init)((cur, i) => step(cur, i).localCheckpoint(true))
 
-  /** Bulk iteration with a termination criterion — Flink's
-    * `IterativeDataSet.closeWith(result, terminationCriterion)` and
-    * `registerAggregationConvergenceCriterion` (reference flink-java
-    * DataSet.java:1191; flink-core aggregators/
-    * ConvergenceCriterion.java): after each superstep, `converged`
-    * inspects the (checkpointed) new state and the step index; the
-    * loop stops at the first true, or after `maxIter`. The state is
-    * checkpointed EVERY superstep here — the criterion is a driver-
-    * side action on it, so an uncheckpointed lineage would replay
-    * history once per convergence probe (the twice-read rule).
-    * Returns (state, stepsRun). */
-  def loopDFUntil(init: DataFrame, maxIter: Int)(
-      step: (DataFrame, Int) => DataFrame)(
-      converged: (DataFrame, Int) => Boolean): (DataFrame, Int) = {
-    var cur = init.localCheckpoint(true)
-    var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      cur = step(cur, i + 1).localCheckpoint(true)
-      i += 1
-      done = converged(cur, i)
-    }
-    (cur, i)
-  }
-
   /** Delta iteration — Flink's `solution.iterateDelta(workset,
     * maxIterations, keyPositions)` (reference flink-java
     * DataSet.java:1241; ConnectedComponents.java:99-104). `step` maps

@@ -144,7 +144,7 @@ object Dedup {
   /** Bucket-local candidate pair expansion over capped (band,key)
     * buckets — one shuffle groups each bucket, pairs expand inside it
     * (a self-join would compute the signature aggregation twice —
-    * seen in PlanAudit). */
+    * seen in the physical plan; PlanBudgetSpec pins q29's census). */
   private[graft] def bucketCandidates(bands: DataFrame, maxBucket: Int): DataFrame =
     capBuckets(bands, maxBucket)
       .groupBy(col("band"), col("key"))

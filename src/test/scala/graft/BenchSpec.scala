@@ -1,12 +1,13 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Contract tests for the bench metric line — the driver's log
-  * capture keeps only the last ~2000 chars of stdout, so the line
-  * must always fit, and the compact qNN keys must never collide. No
-  * Spark session needed. */
-class BenchSpec extends AnyFunSuite {
+/** Contract tests for the bench walk: the driver's log capture keeps
+  * only the last ~2000 chars of stdout, so the line must always fit
+  * and the compact qNN keys must never collide; the walk order and
+  * the per-query watchdog decide which rows get measured. */
+class BenchSpec extends AnyFunSuite with SparkSpec {
 
   test("short metric keys are unique across the whole query registry") {
     val names = SparkEntry.queries.keys.toSeq
@@ -78,120 +79,53 @@ class BenchSpec extends AnyFunSuite {
         .count(_ == ',') == Bench.SkipListCap - 1, many)
   }
 
-  test("budget walk order: refs, then the expensive head, then cheapest-first") {
-    val names = Seq("q22_matmul", "q23_kmeans", "q25_dft", "q24_logreg",
-      "q21_iot", "q26_pi", "q27_vadd",
-      "q125_hits", "q01_cheap", "q50_mid", "q99_new")
-    val prior = Map("q125_hits" -> 98.0, "q01_cheap" -> 0.2, "q50_mid" -> 1.0,
-      "q22_matmul" -> 0.3, "q23_kmeans" -> 1.5, "q25_dft" -> 0.4,
-      "q24_logreg" -> 1.2, "q21_iot" -> 0.5, "q26_pi" -> 0.2, "q27_vadd" -> 0.2)
-    val order = Bench.orderForBudget(names, prior)
-    // the seven BASELINE analogues lead, in RefBenchmarks order, so a
-    // budget-truncated run can never ship an empty "ref" sub-map again
-    assert(order.take(7) == Seq("q22_matmul", "q23_kmeans", "q25_dft",
-      "q24_logreg", "q21_iot", "q26_pi", "q27_vadd"), order.take(7))
-    // with few names everything with a prior is "the expensive head"
-    // (descending), then the no-prior query; the r10/r11 failure mode
-    // (the priciest family never measured) is structurally gone
-    assert(order.drop(7) == Seq("q125_hits", "q50_mid", "q01_cheap", "q99_new"),
-      order.drop(7))
-    // a realistic mix: the head takes the ExpensiveHead priciest, the
-    // remainder ascends by cost with no-prior queries at the median
-    val many = names ++ (1 to 12).map(i => f"q6$i%02d_mid")
-    val priorMany = prior ++ (1 to 12).map(i => f"q6$i%02d_mid" -> (2.0 + i))
-    val om = Bench.orderForBudget(many, priorMany)
-    val head = om.slice(7, 7 + Bench.ExpensiveHead)
-    assert(head.head == "q125_hits", s"priciest first in the head: $head")
-    assert(head.size == Bench.ExpensiveHead)
-    val restCosts = om.drop(7 + Bench.ExpensiveHead)
-      .filter(priorMany.contains).map(priorMany)
-    assert(restCosts == restCosts.sorted, "tail ascends by prior cost")
-    // a no-prior query can never occupy the expensive head
-    assert(!head.contains("q99_new"))
-    // with no prior at all, order degrades to name order after the refs
-    val bare = Bench.orderForBudget(names, Map.empty)
-    assert(bare.drop(7) == Seq("q01_cheap", "q125_hits", "q50_mid", "q99_new"))
-    // every name survives the reorder exactly once
-    assert(order.sorted == names.sorted && om.sorted == many.sorted)
-  }
-
-  test("staleness rotation: driver-measured rows yield to stale ones (r12 #1)") {
+  test("budget walk order: refs, then cheapest-first with no-prior rows at the median") {
     val refs = Seq("q22_matmul", "q23_kmeans", "q25_dft", "q24_logreg",
       "q21_iot", "q26_pi", "q27_vadd")
-    // 40 non-ref rows with priors 1..40: the expensive pool is the
-    // top ExpensivePool=30 (indices 10..39), the pre-rotation head
-    // would be the top 10 (indices 30..39)
-    val rest = (1 to 40).map(i => f"q2$i%02d_x")
-    val prior = (refs.map(_ -> 0.3) ++
-      rest.zipWithIndex.map { case (n, i) => n -> (i + 1.0) }).toMap
-    // a loaded previous round measured exactly refs + the 10 priciest
-    // (what r12 actually did: 17/198)
-    val measured = rest.takeRight(10).map(n => Bench.shortKey(n) -> 12).toMap
-    val order = Bench.orderForBudget(refs ++ rest, prior,
-      Bench.DriverHistory(measured, Set.empty))
-    assert(order.take(7) == refs, "refs always lead")
-    val head = order.slice(7, 7 + Bench.ExpensiveHead)
-    // the head rotates: NEXT-priciest never-measured pool rows (ranks
-    // 21-30), priciest first — disjoint from last round's head
-    assert(head == rest.slice(20, 30).reverse, head)
-    assert(head.toSet.intersect(measured.keySet.map(s => rest.find(
-      n => Bench.shortKey(n) == s).get)).isEmpty,
-      "r13's head must be disjoint from r12's measured head")
-    // the tail walks stale rows first (cheapest-first within a
-    // staleness class); last round's measured rows walk LAST
-    assert(order.drop(7 + Bench.ExpensiveHead) ==
-      rest.slice(0, 20) ++ rest.slice(30, 40), order.drop(17))
-    // nothing lost or duplicated
-    assert(order.sorted == (refs ++ rest).sorted)
-    // and with NO measurement history the order is the legacy
-    // cost-based walk (priciest head, cheapest-first tail)
-    val legacy = Bench.orderForBudget(refs ++ rest, prior)
-    assert(legacy.slice(7, 7 + Bench.ExpensiveHead) ==
-      rest.takeRight(10).reverse)
-    // crashed-last rows LEAD the head regardless of staleness — the
-    // r12 q41/q119 scenario: their -1 rows needed a manual
-    // exoneration run; now the next artifact answers automatically
-    val crashed = Set(Bench.shortKey(rest(2)), Bench.shortKey(rest(35)))
-    val oc = Bench.orderForBudget(refs ++ rest, prior,
-      Bench.DriverHistory(measured, crashed))
-    // priciest crashed row first, then the other; then stale pool rows
-    assert(oc.slice(7, 9) == Seq(rest(35), rest(2)), oc.slice(7, 9))
-    assert(oc.slice(9, 7 + Bench.ExpensiveHead).forall(n =>
-      !crashed.contains(Bench.shortKey(n))))
-    assert(oc.sorted == (refs ++ rest).sorted)
+    val rest = Seq("q125_hits", "q01_cheap", "q50_mid", "q99_new", "q07_tie")
+    // listed out of RefBenchmarks order: the refs still lead in it
+    val names = refs.reverse ++ rest
+    val prior = Map("q125_hits" -> 98.0, "q01_cheap" -> 0.2, "q50_mid" -> 1.0,
+      "q07_tie" -> 0.5, "q22_matmul" -> 0.3, "q23_kmeans" -> 1.5,
+      "q25_dft" -> 0.4, "q24_logreg" -> 1.2, "q21_iot" -> 0.5,
+      "q26_pi" -> 0.2, "q27_vadd" -> 0.2)
+    val order = Bench.orderForBudget(names, prior)
+    // the seven reference analogues lead, so a budget-truncated walk
+    // never ships an empty "ref" sub-map
+    assert(order.take(7) == refs, order.take(7))
+    // the median of the eleven priors is 0.5: q99_new (no prior) walks
+    // at 0.5 and the name breaks its tie with q07_tie; the priciest
+    // row walks last, so it is the first one a tight budget skips
+    assert(order.drop(7) == Seq("q01_cheap", "q07_tie", "q99_new", "q50_mid",
+      "q125_hits"), order.drop(7))
+    // with no prior at all, the rows after the refs walk in name order
+    val bare = Bench.orderForBudget(names, Map.empty)
+    assert(bare.take(7) == refs)
+    assert(bare.drop(7) == rest.sorted)
+    // every name survives the reorder exactly once
+    assert(order.sorted == names.sorted && bare.sorted == names.sorted)
   }
 
-  test("readDriverMeasured: both artifact vintages, -1 stays stale, later wins") {
-    val dir = java.nio.file.Files.createTempDirectory("bench_rounds")
-    def put(name: String, body: String): Unit =
-      java.nio.file.Files.writeString(dir.resolve(name), body)
-    try {
-      // r01 vintage: full names inside the escaped tail string
-      put("BENCH_r01.json",
-        """{"n":1,"tail":"{\"queries\":{\"q01_alpha\":0.5,\"q41_pagerank\":2.0}}"}""")
-      // r12 vintage: short keys; q41 crashed (-1); stderr line and
-      // ref sub-map must NOT count as measurements
-      put("BENCH_r12.json",
-        """{"n":12,"tail":"[error] [bench] q99_zzz 9.9\n{\"queries\":{\"q41\":-1.00,\"q62\":29.0},\"ref\":{\"matmul\":0.38}}"}""")
-      put("not_a_bench.json", """{"queries":{"q77":1.0}}""")
-      // an editor/merge backup must NOT be parsed as a second
-      // round-12 artifact (anchored filename match — r13 review)
-      put("BENCH_r12.json.bak", """{"tail":"{\"queries\":{\"q88\":1.0}}"}""")
-      val h = Bench.readDriverHistory(dir.toString)
-      // q41: measured r01, ATTEMPTED (crashed) r12 → lastMeasured
-      // stays 1 AND it is flagged crashed-last, so the rotation
-      // retries it first (the r12 q41/q119 scenario)
-      assert(h.lastMeasured == Map("q01" -> 1, "q41" -> 1, "q62" -> 12), h)
-      assert(h.crashedLast == Set("q41"), h.crashedLast)
-      // missing directory → empty, no throw
-      val none = Bench.readDriverHistory("/nonexistent/nope")
-      assert(none.lastMeasured.isEmpty && none.crashedLast.isEmpty)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(dir)
-      try s.iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally s.close()
+  test("runWithWatchdog: a crash is -1, a hang is cancelled in time, a normal run is timed") {
+    val crash = Bench.runWithWatchdog(spark, "spec-crash",
+      (_, _) => throw new RuntimeException("boom"), sf, 30.0)
+    assert(crash == Bench.WatchdogOutcome.Done(-1.0), crash)
+    // one task that sleeps in a UDF long past the deadline; the
+    // filter keeps the UDF in the plan under count()
+    val sleepy = udf { (id: Long) => Thread.sleep(60000); id >= 0 }
+    val t0 = System.nanoTime()
+    val hung = Bench.runWithWatchdog(spark, "spec-hang",
+      (s, _) => s.range(0, 1, 1, 1).filter(sleepy(col("id"))).toDF(), sf, 2.0)
+    val waited = (System.nanoTime() - t0) / 1e9
+    // None: the job-group cancel landed inside the grace loop, so no
+    // zombie is left for settleZombie
+    assert(hung == Bench.WatchdogOutcome.TimedOut(None), hung)
+    assert(waited < 12.0, s"watchdog returned after $waited s")
+    // the session is usable after the cancel
+    assert(spark.range(10).count() == 10)
+    Bench.runWithWatchdog(spark, "spec-ok", (s, _) => s.range(100).toDF(), sf, 30.0) match {
+      case Bench.WatchdogOutcome.Done(t) => assert(t >= 0.0, t)
+      case other => fail(s"expected Done, got $other")
     }
   }
 
@@ -209,25 +143,6 @@ class BenchSpec extends AnyFunSuite {
     assert(prior == Map("q01_alpha" -> 1.519, "q125_hits" -> 98.065))
     // missing file → empty map, no throw
     assert(Bench.readPriorSidecar("/nonexistent/nope.json").isEmpty)
-  }
-
-  test("prior sidecar runs field: warm (min-of-N) priors are detectable (r18)") {
-    val f = java.nio.file.Files.createTempFile("bench_runs", ".json")
-    java.nio.file.Files.writeString(f,
-      """{"sf": "/x", "runs": 2, "queries": { "q01_alpha": 1.5 }}""")
-    try assert(Bench.readPriorRuns(f.toString) == 2)
-    finally java.nio.file.Files.deleteIfExists(f)
-    val g = java.nio.file.Files.createTempFile("bench_runs1", ".json")
-    java.nio.file.Files.writeString(g,
-      """{"sf": "/x", "queries": { "q01_alpha": 1.5 }}""")
-    try assert(Bench.readPriorRuns(g.toString) == 1,
-      "absent runs field = single-run artifact, no cold scaling")
-    finally java.nio.file.Files.deleteIfExists(g)
-    assert(Bench.readPriorRuns("/nonexistent/nope.json") == 1)
-    assert(Bench.readPriorRuns("") == 1)
-    // the cold multiplier itself: bounded, and only ever applied to
-    // the spike-cap prediction (admission reasons about real totals)
-    assert(Bench.ColdPriorK == 3.0)
   }
 
   test("median of odd/even/empty sequences") {
@@ -268,71 +183,6 @@ class BenchSpec extends AnyFunSuite {
       assert(Bench.readPriorSidecar(f.toString) == Map("q01_alpha" -> 15.0),
         "no expectation -> accept (local tooling)")
     } finally java.nio.file.Files.deleteIfExists(f)
-  }
-
-  test("per-run watchdog deadline: spike-capped at K x predicted, floored, bounded") {
-    // r11 verdict #1: q84 was admitted at a 1.6 s prediction, spiked
-    // to 57.9 s against a remaining-budget-only deadline (~100 s),
-    // and starved the 34 costliest queries. The deadline is now
-    // min(remaining, max(5, SpikeK x predictedOne)).
-    assert(Bench.SpikeK == 8.0)
-    // the r11 q84 scenario: 1.6 s predicted, ~100 s remaining — the
-    // spike now costs at most 12.8 s, not 57.9
-    assert(Bench.runDeadline(100.0, 1.6) == 12.8)
-    // tiny predictions are floored at 5 s (startup jitter must not
-    // kill sub-second queries)
-    assert(Bench.runDeadline(100.0, 0.1) == 5.0)
-    // the remaining budget is always the upper bound
-    assert(Bench.runDeadline(10.0, 5.0) == 10.0)
-    // a spike-cap deadline is strictly below remaining exactly when
-    // the cap binds — the walk-continues-vs-blown discriminator
-    assert(Bench.runDeadline(100.0, 1.6) < 100.0)
-    assert(!(Bench.runDeadline(10.0, 5.0) < 10.0))
-    // the cap engages ONLY for queries with their OWN prior: a
-    // median-estimated new query killed at 8x median writes -1,
-    // crashes are dropped from priors, and the query starves forever
-    // (bit q191/q193 on their first bench run)
-    assert(Bench.deadlineFor(100.0, Some(1.6), 1.0) == 12.8)
-    assert(Bench.deadlineFor(100.0, Some(1.6), 2.0) == 25.6,
-      "inflation scales the cap")
-    assert(Bench.deadlineFor(100.0, None, 1.0) == 100.0,
-      "no own prior -> full remaining budget, never the median cap")
-  }
-
-  test("end-of-walk retry: spike-kills remeasured once, everything else stands (r14 #1)") {
-    val rows = Seq("q01_a" -> -1.0, "q02_b" -> 2.0, "q03_c" -> -1.0,
-      "q04_d" -> -1.0)
-    val spike = Set("q01_a", "q04_d")
-    var ran = List.empty[String]
-    val out = Bench.retryPass(rows, spike, () => false, () => 100.0,
-      n => { ran ::= n; if (n == "q04_d") -1.0 else 3.25 })
-    // the spike-killed row is remeasured (the r14 q62/q125/q191
-    // scenario); the plain crash row (q03) is untouched — its -1
-    // carries real information; a retry that fails AGAIN stays -1
-    assert(out == Seq("q01_a" -> 3.25, "q02_b" -> 2.0, "q03_c" -> -1.0,
-      "q04_d" -> -1.0))
-    assert(ran.reverse == List("q01_a", "q04_d"))
-    // genuine budget exhaustion: nothing reruns, the -1 stands
-    var ran2 = 0
-    val out2 = Bench.retryPass(rows, spike, () => false, () => 1.0,
-      _ => { ran2 += 1; 9.9 })
-    assert(out2 == rows && ran2 == 0)
-    // a blown walk deadline (or dying SparkContext) blocks all retries
-    val out3 = Bench.retryPass(rows, spike, () => true, () => 100.0,
-      _ => fail("must not run"))
-    assert(out3 == rows)
-    // the budget is re-read PER retry: the first retry may eat what
-    // the second needed
-    var budget = 20.0
-    val out4 = Bench.retryPass(rows, spike, () => false, () => budget,
-      n => { budget -= 18.0; 4.0 })
-    assert(out4 == Seq("q01_a" -> 4.0, "q02_b" -> 2.0, "q03_c" -> -1.0,
-      "q04_d" -> -1.0))
-    // eligibility floor pinned
-    assert(Bench.retryEligible(true, false, Bench.RetryFloorSec))
-    assert(!Bench.retryEligible(true, false, 4.9))
-    assert(!Bench.retryEligible(false, false, 100.0))
-    assert(!Bench.retryEligible(true, true, 100.0))
   }
 
   test("every reference benchmark maps to a registered query") {

@@ -90,21 +90,6 @@ class IterativeSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("Iterate.loopDFUntil stops at the convergence criterion, not maxIter") {
-    // doubling walk capped by a threshold criterion — Flink's
-    // closeWith(result, terminationCriterion) shape
-    val (out, steps) = Iterate.loopDFUntil(
-      spark.range(1).toDF("v"), maxIter = 50) { (df, _) =>
-      df.withColumn("v", col("v") * 2 + 1)
-    } { (df, _) => df.agg(max("v")).head.getLong(0) >= 100 }
-    assert(steps == 7, s"2^k-1 crosses 100 at k=7, ran $steps")
-    assert(out.head.getLong(0) == 127L)
-    // maxIter still bounds a never-converging criterion
-    val (_, capped) = Iterate.loopDFUntil(
-      spark.range(1).toDF("v"), maxIter = 3) { (df, _) => df } { (_, _) => false }
-    assert(capped == 3)
-  }
-
   // ------------------------------------------------------ Iterate.delta
 
   test("q57 submits a bounded number of Spark jobs per warm run") {

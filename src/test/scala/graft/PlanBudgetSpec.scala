@@ -3,11 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.PlanAudit.PlanCounts
-
 /** Pins the physical-plan node census (parquet scans, cached scans,
   * shuffles, broadcasts) of the heaviest queries. The plans these
-  * counts encode were audited by hand (PlanAudit + round-2/3 verdict
+  * counts encode were audited by hand (`explain("formatted")` and
   * review); a count going UP means a scan or shuffle crept back in —
   * the exchange-reuse regression class that silently doubled q85/q90
   * in round 3. A count going DOWN is an improvement: update the
@@ -324,7 +322,7 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
 
   test("heavy-query plan census matches the audited budget") {
     val got = budgets.keys.toSeq.sorted.map { name =>
-      name -> PlanAudit.planCounts(SparkEntry.queries(name)(noAqe, sf))
+      name -> PlanCounts.of(SparkEntry.queries(name)(noAqe, sf))
     }
     val bad = got.filter { case (n, c) => c != budgets(n) }
     assert(bad.isEmpty, "plan census drifted:\n" + got.map { case (n, c) =>

@@ -1,16 +1,16 @@
 #!/usr/bin/env python3
-"""Cross-round bench regression diff (dev tooling, round-10 verdict #5).
+"""Bench sidecar diff, run by hand: graft.Bench does not call it.
 
-Compares two BENCH_FULL.json sidecars (typically the previous round's
-committed copy vs the fresh run):
+Compares two BENCH_FULL.json sidecars (typically the committed copy vs
+a regenerated one) before the new one is committed:
 
     python3 tools/bench_diff.py <(git show HEAD:BENCH_FULL.json) BENCH_FULL.json
 
 Flags like-for-like moves past the threshold (default 2x either way),
-new/removed/crashed queries, and — the round-9/10 ambiguity this
-exists to kill — REFUSES to call anything a regression when the two
-artifacts were produced with different runs settings (min-of-2 hides
-the 2-4x cold first run of superstep queries) or at different sf dirs.
+new/removed/crashed queries, and refuses to call anything a regression
+when the two artifacts were produced with different runs settings
+(min-of-2 hides the 2-4x cold first run of superstep queries) or at
+different sf dirs.
 Exit 1 when like-for-like timing moves are flagged, OR — regardless
 of like-for-like, because a crash is a correctness signal, not a
 timing ratio — when a previously-passing query newly crashes.
