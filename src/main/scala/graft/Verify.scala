@@ -9,13 +9,7 @@ object Verify {
     val spark = graft.engine.GraftSession.local("graft-verify", cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_VERIFY_ONLY=q132,q135 dumps just the named short ids
-    // (dev loop for new queries; the driver always runs the full set)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(Bench.shortKey(name))) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -43,7 +43,6 @@ object Iterative {
     * shuffle at all.
     */
   def q22MatMul(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.Functions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val a = emb.filter(col("vec_id") < 32).select(col("vec_id").as("i"), col("embedding").as("ea"))
     val b = emb.filter(col("vec_id") >= 32 && col("vec_id") < 64)

@@ -1,21 +1,25 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Encoders, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.Bridge
 
+import graft.operators.Sketches
 import graft.plans.DotProduct
 
-/** Canonical engine registration via SparkSessionExtensions — the
-  * mechanism SURVEY.md §7 reserves for custom plan surface. The
-  * injected surface is the `graft_*` SQL functions (all of them
-  * codegen'd expressions or two-stage aggregates) plus the
-  * TopKPerKey planner strategy. Users opt in with either
+/** The engine's whole SQL surface, registered through
+  * SparkSessionExtensions — the mechanism SURVEY.md §7 reserves for
+  * custom plan surface, and the only place the engine registers
+  * anything. The injected surface is six `graft_*` SQL functions
+  * (codegen'd expressions, a two-stage aggregate and two sketch
+  * aggregators) plus the TopKPerKey planner strategy.
+  * [[GraftSession.builder]] installs it in every session it builds; a
+  * session built elsewhere needs either
   * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.engine.GraftExtensions`; library
-  * entry points ([[graft.plans.Functions.register]],
-  * [[graft.plans.TopK.topKPerKey]]) also self-register per session so
-  * the extension class is a convenience, not a requirement.
+  * `spark.sql.extensions=graft.engine.GraftExtensions`, as Delta and
+  * Iceberg do. Sessions cloned from one that has it
+  * (`newSession()`, a StreamingQuery's clone) inherit it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -52,20 +56,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.plans.VecSum(exprs.head)
           .toAggregateExpression(isDistinct = false)
       }))
-    // graft_rmin/rmax/rsum/ravg(x): scalar double reductions, the same
-    // aggregate family as graft_vecsum (the reference's prebuilt
-    // simple-double-reduce-* device kernels) — see
-    // graft.plans.ScalarReduce
-    graft.plans.ScalarReduce.All.foreach { op =>
-      val name = s"graft_r${op.name}"
+    // Sketch aggregates on the SQL surface: `graft_hh(col)` —
+    // Misra-Gries heavy hitters (k=32) as map<item, est_count> — and
+    // `graft_cm(col)` — the Count-Min table (d=4, w=256) as
+    // array<bigint> — so sketches compose in spark.sql text alongside
+    // the built-in HLL family (hll_sketch_agg / hll_union_agg /
+    // hll_sketch_estimate covers that slot natively). SQL aggregates
+    // take column arguments only, so the parameters are fixed here;
+    // callers needing other k/d/w use the Sketches API directly.
+    Seq(
+      "graft_hh" -> new Sketches.HeavyHittersAgg(32),
+      "graft_cm" -> new Sketches.CountMinAgg(4, 256)).foreach { case (name, agg) =>
       ext.injectFunction((
         FunctionIdentifier(name),
-        new ExpressionInfo(classOf[graft.plans.ScalarReduce].getName, name),
-        (exprs: Seq[Expression]) => {
-          require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-          graft.plans.ScalarReduce(exprs.head, op)
-            .toAggregateExpression(isDistinct = false)
-        }))
+        new ExpressionInfo(agg.getClass.getName, name),
+        Bridge.aggregator(name, agg, Encoders.STRING)))
     }
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graftbridge.TopKPerKeyStrategy)
   }

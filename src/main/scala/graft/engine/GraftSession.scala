@@ -73,9 +73,9 @@ object GraftSession {
     SparkSession.builder()
       .appName(appName)
       .master(master)
-      // canonical engine registration: graft_dot + TopKPerKey planner
-      // strategy ride every session built here (library entry points
-      // also self-register, so sessions built elsewhere still work)
+      // the engine's SQL functions and TopKPerKey planner strategy:
+      // the only place they are registered, so a session built
+      // elsewhere needs this extension too
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")

@@ -4,6 +4,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Portable
 import graft.sources.Tables
 
 /** Multimodal-column plumbing: media as opaque `binary` payloads with
@@ -32,14 +33,6 @@ object Multimodal {
   case class MediaFeatures(doc_id: Long, kind: String, width: Int, height: Int,
       n_bytes: Int, byte_sum: Long, frame_hash: Long)
 
-  /** 60-bit md5-prefix hash, JVM-side — same value as
-    * [[graft.functions.Portable.h60]] computes in-plan. Delegates to
-    * the single byte-shift implementation in Portable (three
-    * independent copies of the portable-hash contract is how engines
-    * silently diverge). */
-  private[graft] def h60jvm(s: String): Long =
-    graft.functions.Portable.h60jvm(s)
-
   /** STUB decoder + feature extractor. A real implementation would
     * decode `payload` with an image/audio codec; this one reads the
     * raw bytes deterministically so the pipeline is testable. */
@@ -52,7 +45,7 @@ object Multimodal {
     // keyframe extraction on video payloads
     val frame = new String(
       (0 until n by 16).map(j => (m.payload(j) & 0xff).toChar).toArray)
-    MediaFeatures(m.doc_id, "image", m.width, m.height, n, sum, h60jvm(frame))
+    MediaFeatures(m.doc_id, "image", m.width, m.height, n, sum, Portable.h60jvm(frame))
   }
 
   /** The documents table dressed as a media catalog: payload =

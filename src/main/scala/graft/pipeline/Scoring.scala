@@ -812,7 +812,6 @@ object Scoring {
     * the blend re-rounds, and every comparison is on rounded values
     * with doc_id tie-breaks. */
   def q188HybridRerank(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.Functions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val qv: Seq[Float] = emb.filter(col("vec_id") === 0L)
       .select(col("embedding")).collect().head.getSeq[Float](0)
@@ -865,7 +864,6 @@ object Scoring {
   val RrfK = 60
 
   def q189RrfFusion(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.Functions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val qv: Seq[Float] = emb.filter(col("vec_id") === 0L)
       .select(col("embedding")).collect().head.getSeq[Float](0)
@@ -943,7 +941,6 @@ object Scoring {
   val EvalK = 10
 
   def q190RetrievalEval(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.Functions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val qv: Seq[Float] = emb.filter(col("vec_id") === 0L)
       .select(col("embedding")).collect().head.getSeq[Float](0)
@@ -1310,7 +1307,6 @@ object Scoring {
   }
 
   def q202HardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.Functions.register(spark)
     // only a FULL-overlap positive (every query term present)
     // disqualifies a doc from being a negative
     val rel = fullOverlapPositives(spark, dir)

@@ -159,7 +159,6 @@ object Similarity {
     * double literals, and casting them to float would diverge from
     * the oracle). */
   private def bucketedEv(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.Functions.register(spark)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
         sqrt(call_function("graft_dot", col("embedding"), col("embedding"))).as("nrm"))
@@ -210,7 +209,6 @@ object Similarity {
     * persisted, bucketed, and never rescanned beyond the probed
     * buckets. */
   def annSearch(index: AnnIndex, queries: DataFrame): DataFrame = {
-    graft.plans.Functions.register(queries.sparkSession)
     val probes = queries.select(col("qid"), col("embedding").as("qe"),
         sqrt(call_function("graft_dot", col("embedding"), col("embedding"))).as("qn"))
       .withColumn("pb", bucketColOf(col("qe")))
@@ -968,7 +966,6 @@ object Similarity {
   val Q104Pairs = 40
 
   def q104CosineExpr(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.Functions.register(spark)
     val emb = Tables.embeddings(spark, dir).filter(col("vec_id") < Q104Vecs)
     val a = emb.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
@@ -1007,7 +1004,6 @@ object Similarity {
     * shape any cross-engine compare can sort; DotKernelSpec pins the
     * array-valued form. 1-based `ord` matches SQL subscripting. */
   def q164CentroidAccumulate(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.Functions.register(spark)
     Tables.embeddings(spark, dir)
       .groupBy((col("vec_id") % 7).as("cid"))
       .agg(expr("graft_vecsum(embedding)").as("cs"))
@@ -1099,7 +1095,6 @@ object Similarity {
   private def pqTrainedAnchors(spark: SparkSession, dir: String)
       : Array[Array[Array[Double]]] = {
     import spark.implicits._
-    graft.plans.Functions.register(spark)
     val a0 = pqAnchors
     val bA = spark.sparkContext.broadcast(a0)
     val assigned = Tables.embeddings(spark, dir)
@@ -1411,7 +1406,6 @@ object Similarity {
 
   def q141SemDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.Functions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val cents = emb.filter(col("vec_id") < NCells)
       .select(col("vec_id"), col("embedding")).collect()
@@ -1537,7 +1531,6 @@ object Similarity {
     * broadcast posture of every served index here. */
   def buildCentroidIndex(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.Functions.register(emb.sparkSession)
     val cents = emb
       .select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
       .groupBy(col("label"), col("i")).agg(avg(col("x").cast("double")).as("c"))
@@ -1568,7 +1561,6 @@ object Similarity {
     * silent omission: a hygiene gate that passes unknown labels by
     * dropping their rows is the inner-join bug class. */
   def outliersAgainst(index: DataFrame, batch: DataFrame): DataFrame = {
-    graft.plans.Functions.register(batch.sparkSession)
     batch.join(broadcast(index), Seq("label"), "left_outer")
       .select(col("vec_id"), col("label"),
         round(expr("graft_cosine(embedding, cent)"), 6).as("cos_centroid"),

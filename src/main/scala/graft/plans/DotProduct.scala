@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -20,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `doGenCode` emits a primitive loop straight into the whole-stage
   * generated class: no virtual calls, no allocation per row.
   *
-  * Exposed to SQL as `graft_dot` via [[Functions.register]].
+  * Exposed to SQL as `graft_dot` by [[graft.engine.GraftExtensions]].
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -144,87 +143,4 @@ case class CosineSim(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration for the engine's native expressions. */
-object Functions {
-
-  /** Make `graft_dot(a, b)` callable from SQL/expr in this session.
-    * Idempotent; queries that use native expressions call this in
-    * their builder. Registers once per session — re-registering is
-    * harmless but warns "replaced a previously registered function"
-    * on every query build, which pollutes bench logs. */
-  def register(spark: SparkSession): Unit = {
-    if (!spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"))) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_dot",
-        (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1)),
-        "built-in")
-    }
-    if (!spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine"))) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_cosine",
-        (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1)),
-        "built-in")
-    }
-    if (!spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_h60"))) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_h60",
-        (exprs: Seq[Expression]) => {
-          import org.apache.spark.sql.catalyst.expressions.{Cast, Conv, Literal, Md5, Substring}
-          require(exprs.length == 1, s"graft_h60 takes 1 argument, got ${exprs.length}")
-          Cast(Conv(Substring(Md5(exprs.head), Literal(1), Literal(15)),
-            Literal(16), Literal(10)), org.apache.spark.sql.types.LongType)
-        },
-        "built-in")
-    }
-    if (!spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_vecsum"))) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_vecsum",
-        (exprs: Seq[Expression]) => {
-          require(exprs.length == 1, s"graft_vecsum takes 1 argument, got ${exprs.length}")
-          VecSum(exprs.head).toAggregateExpression(isDistinct = false)
-        },
-        "built-in")
-    }
-    // graft_rmin/rmax/rsum/ravg(x): scalar double reductions (the
-    // reference's prebuilt
-    // simple-double-reduce-{min,max,sum,avg}.cl workload class) — see
-    // graft.plans.ScalarReduce
-    ScalarReduce.All.foreach { op =>
-      val name = s"graft_r${op.name}"
-      if (!spark.sessionState.functionRegistry
-          .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name))) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name,
-          (exprs: Seq[Expression]) => {
-            require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-            ScalarReduce(exprs.head, op).toAggregateExpression(isDistinct = false)
-          },
-          "built-in")
-      }
-    }
-    // Sketch aggregates on the SQL surface: `graft_hh(col)` —
-    // Misra-Gries heavy hitters (k=32) as map<item, est_count> — and
-    // `graft_cm(col)` — the Count-Min table (d=4, w=256) as
-    // array<bigint> — so sketches compose in spark.sql text alongside
-    // the built-in HLL family (hll_sketch_agg / hll_union_agg /
-    // hll_sketch_estimate covers that slot natively). Parameters are
-    // fixed at registration (SQL UDAFs take column args only);
-    // callers needing other k/d/w use the Sketches API directly.
-    if (!spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_hh"))) {
-      spark.udf.register("graft_hh", org.apache.spark.sql.functions.udaf(
-        new graft.operators.Sketches.HeavyHittersAgg(32)))
-    }
-    if (!spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cm"))) {
-      spark.udf.register("graft_cm", org.apache.spark.sql.functions.udaf(
-        new graft.operators.Sketches.CountMinAgg(4, 256)))
-    }
-  }
 }

@@ -3,13 +3,13 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
-import org.apache.spark.sql.graftbridge.{Bridge, TopKPerKeyStrategy}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Whole-operator custom plan: exact top-k rows per key without a
   * sort — the escape hatch the build plan reserves for semantics the
@@ -99,9 +99,10 @@ case class TopKPerKeyExec(k: Int, keyExprs: Seq[Expression], orderExpr: Expressi
 object TopK {
 
   /** Exact top-k rows per key, ranked by `order` (descending, nulls
-    * dropped). Registers the planner strategy on first use. */
+    * dropped). Planned by `TopKPerKeyStrategy`, which
+    * [[graft.engine.GraftExtensions]] injects: the session needs the
+    * extension. */
   def topKPerKey(df: DataFrame, k: Int, order: Column, keys: Column*): DataFrame = {
-    val spark = df.sparkSession
     // a non-castable order column (string…) would cast to all-null and
     // silently return an empty result — reject it; numeric, date and
     // timestamp all cast to double order-preservingly
@@ -115,11 +116,10 @@ object TopK {
     }
     require(orderable,
       s"topKPerKey order column must be numeric/date/timestamp, got ${orderType.simpleString}")
-    Bridge.addStrategy(spark, TopKPerKeyStrategy)
     val node = TopKPerKey(k,
       keys.map(Bridge.expression),
       Bridge.expression(order.cast("double")),
       df.queryExecution.logical)
-    Bridge.ofRows(spark, node)
+    Bridge.ofRows(df.sparkSession, node)
   }
 }

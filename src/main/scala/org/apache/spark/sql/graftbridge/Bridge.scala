@@ -1,15 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionSet}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Dataset => CDataset, SparkSession => CSparkSession}
-import org.apache.spark.sql.execution.{LogicalRDD, SparkStrategy}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedAggregator}
 import org.apache.spark.sql.types.StructType
 
 /** Minimal access bridge into Spark's `private[sql]` planner surface
-  * (Column→Expression, LogicalPlan→DataFrame, extra strategies) for
+  * (Column→Expression, LogicalPlan→DataFrame, typed aggregators) for
   * the engine's custom operators — the same doorway every Spark
   * extension library uses. Keep it tiny: everything engine-specific
   * lives in `graft.plans`.
@@ -53,9 +55,12 @@ object Bridge {
     * schema a file-source read returns for data written as `schema`. */
   def asNullable(schema: StructType): StructType = schema.asNullable
 
-  def addStrategy(spark: SparkSession, s: SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[CSparkSession].experimental
-    if (!exp.extraStrategies.contains(s))
-      exp.extraStrategies = exp.extraStrategies :+ s
+  /** The builder `spark.udf.register(name, udaf(agg))` registers for
+    * a typed `Aggregator` (its `ScalaAggregator` is private[sql]), so
+    * a session extension can inject the aggregator as a SQL function. */
+  def aggregator[IN, BUF, OUT](name: String, agg: Aggregator[IN, BUF, OUT],
+      in: Encoder[IN]): Seq[Expression] => Expression = {
+    val udaf = UserDefinedAggregator(agg, in, Some(name))
+    children => ScalaAggregator(udaf, children)
   }
 }

@@ -8,13 +8,43 @@ import graft.sources.Tables
 
 class ExpressionSpec extends AnyFunSuite with SparkSpec {
 
-  test("session extensions register graft_dot without explicit Functions.register") {
-    // TestSpark builds through GraftSession → GraftExtensions; the
-    // function must resolve from SQL with no per-query registration
-    val r = spark.sql(
-      "SELECT graft_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
-        "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d").head.getDouble(0)
-    assert(math.abs(r - 11.0) < 1e-9)
+  test("GraftExtensions alone gives a fresh session the six graft_* SQL functions") {
+    // no registration call anywhere: a newSession() clone carries
+    // exactly what the extension injected, and nothing else
+    val s = spark.newSession()
+    val names = s.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(names == Set("graft_dot", "graft_cosine", "graft_h60", "graft_vecsum",
+      "graft_hh", "graft_cm"))
+    s.sql("SELECT * FROM VALUES (array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), 'a'), " +
+      "(array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)), 'a') AS t(v, w)")
+      .createOrReplaceTempView("surface_probe")
+    val rows = s.sql("SELECT graft_dot(v, v), graft_cosine(v, v), graft_h60(w) " +
+      "FROM surface_probe").collect()
+    assert(rows.map(_.getDouble(0)).toSeq == Seq(5.0, 25.0))
+    assert(rows.forall(r => math.abs(r.getDouble(1) - 1.0) < 1e-12))
+    assert(rows.forall(_.getLong(2) == graft.functions.Portable.h60jvm("a")))
+    val agg = s.sql("SELECT graft_vecsum(v), graft_hh(w), graft_cm(w) FROM surface_probe").head
+    assert(agg.getSeq[Double](0) == Seq(4.0, 6.0))
+    assert(agg.getMap[String, Long](1) == Map("a" -> 2L))
+    val cm = agg.getSeq[Long](2)
+    // d=4 rows of w=256 counters; each item adds 1 to one cell per row
+    assert(cm.length == 4 * 256 && cm.sum == 4 * 2)
+    // the StreamingQuery runs each micro-batch on a clone of the session
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
+    val dots = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
+    val q = graft.streaming.Streams.toForeachBatch(ms.toDF(), "surface_fb") { (batch, _) =>
+      batch.selectExpr(
+        "graft_dot(array(CAST(value AS FLOAT)), array(CAST(value AS FLOAT)))")
+        .collect().foreach(r => dots.add(r.getDouble(0)))
+    }
+    try {
+      ms.addData(3)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(dots.toArray.toSeq == Seq(9.0))
   }
 
   test("graft_h60 on the SQL surface equals Portable.h60 and stays codegen'd") {
@@ -39,7 +69,6 @@ class ExpressionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("graft_dot equals the interpreted higher-order fold bit-for-bit") {
-    graft.plans.Functions.register(spark)
     val emb = Tables.embeddings(spark, sf).limit(50)
     val both = emb.select(
       call_function("graft_dot", col("embedding"), col("embedding")).as("native"),
@@ -50,7 +79,6 @@ class ExpressionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("graft_dot participates in whole-stage codegen") {
-    graft.plans.Functions.register(spark)
     val plan = Tables.embeddings(spark, sf)
       .select(call_function("graft_dot", col("embedding"), col("embedding")))
       .queryExecution.executedPlan.toString
@@ -59,7 +87,6 @@ class ExpressionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("graft_dot is null-safe") {
-    graft.plans.Functions.register(spark)
     val r = spark.sql("SELECT graft_dot(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT)))")
     assert(r.head.isNullAt(0))
     val v = spark.sql(
@@ -77,7 +104,6 @@ class ExpressionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("graft_cosine equals the composed dot/norm expression bit-for-bit and stays codegen'd") {
-    graft.plans.Functions.register(spark)
     val emb = Tables.embeddings(spark, sf).limit(50)
     val a = emb.select(col("vec_id").as("ia"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("ib"), col("embedding").as("eb"))

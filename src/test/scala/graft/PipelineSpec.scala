@@ -428,7 +428,7 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     // positional GramLen-gram hashes (full winnowing recomputation)
     val g = TextAnalysis.GramLen
     val t1 = docs.filter($"doc_id" === 1).head.getString(1)
-    val h1 = (0 to t1.length - g).map(i => graft.pipeline.Multimodal.h60jvm(t1.substring(i, i + g)))
+    val h1 = (0 to t1.length - g).map(i => graft.functions.Portable.h60jvm(t1.substring(i, i + g)))
     val want1 = (0 to h1.size - TextAnalysis.WinnowW)
       .map(w => h1.slice(w, w + TextAnalysis.WinnowW).min).distinct.toSet
     assert(fp(1L) == want1)
@@ -519,7 +519,7 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
   test("jvm h60 matches the in-plan portable h60") {
     val fromPlan = spark.range(1)
       .select(graft.functions.Portable.h60(lit("hello graft"))).head.getLong(0)
-    assert(fromPlan == Multimodal.h60jvm("hello graft"))
+    assert(fromPlan == graft.functions.Portable.h60jvm("hello graft"))
   }
 
   test("semdedup drops only vectors with a genuine global near-dup partner") {

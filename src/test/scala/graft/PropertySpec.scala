@@ -28,50 +28,6 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("scalar kernel-aggs equal the built-ins on random data") {
-    // randomized twin of DotKernelSpec's graded checks: grouped
-    // min/max/sum/avg over seeded random doubles (negatives, zeros,
-    // magnitude spread, nulls) must match Spark's built-ins bit-for-
-    // bit on min/max (exact picks) and to 1e-9 on sum/avg (same
-    // per-partition fold, only merge arrival order free)
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    graft.plans.Functions.register(spark)
-    val rng = new scala.util.Random(7)
-    val schema = StructType(Seq(StructField("k", IntegerType),
-      StructField("v", DoubleType)))
-    (1 to 3).foreach { round =>
-      val rows = List.fill(300)(Row(rng.nextInt(7),
-        if (rng.nextInt(10) == 0) null
-        else (rng.nextDouble() - 0.5) * math.pow(10, rng.nextInt(6))))
-      val got = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .groupBy(col("k"))
-        .agg(expr("graft_rmin(v)").as("mn"), expr("graft_rmax(v)").as("mx"),
-          expr("graft_rsum(v)").as("sm"), expr("graft_ravg(v)").as("av"))
-        .orderBy("k").collect()
-      val stock = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .groupBy(col("k"))
-        .agg(min(col("v")).as("mn"), max(col("v")).as("mx"),
-          sum(col("v")).as("sm"), avg(col("v")).as("av"))
-        .orderBy("k").collect()
-      assert(got.length == stock.length)
-      got.zip(stock).foreach { case (g, s) =>
-        assert(g.getInt(0) == s.getInt(0))
-        (1 to 4).foreach { i =>
-          (Option(g.get(i)), Option(s.get(i))) match {
-            case (None, None) => ()
-            case (Some(a: Double), Some(b: Double)) =>
-              if (i <= 2) assert(a == b, s"round $round k=${g.getInt(0)} col $i exact")
-              else assert(math.abs(a - b) <=
-                1e-9 * math.max(1.0, math.abs(b)),
-                s"round $round k=${g.getInt(0)} col $i: $a vs $b")
-            case (a, b) => fail(s"null mismatch k=${g.getInt(0)} col $i: $a vs $b")
-          }
-        }
-      }
-    }
-  }
-
   test("as-of join matches a per-row scan on random keyed series") {
     import spark.implicits._
     val rng = new scala.util.Random(11)
@@ -220,16 +176,16 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     val rng = new scala.util.Random(7)
     val rand = List.fill(40)(rng.alphanumeric.take(1 + rng.nextInt(30)).mkString)
     rand.foreach { s =>
-      val h = graft.pipeline.Multimodal.h60jvm(s)
+      val h = graft.functions.Portable.h60jvm(s)
       assert(h >= 0)
-      assert(h == graft.pipeline.Multimodal.h60jvm(s))
+      assert(h == graft.functions.Portable.h60jvm(s))
     }
     import spark.implicits._
     val samples = rand ++ Seq("", "hello world", "Zebra 123 !?")
     val planSide = samples.toDF("s")
       .select(graft.functions.Portable.h60(col("s")))
       .collect().map(_.getLong(0)).toSeq
-    assert(planSide == samples.map(graft.pipeline.Multimodal.h60jvm))
+    assert(planSide == samples.map(graft.functions.Portable.h60jvm))
   }
 
   test("native winnow kernel equals the compositional form on random unicode strings") {

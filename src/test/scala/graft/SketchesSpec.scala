@@ -112,7 +112,6 @@ class SketchesSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("graft_cm composes in SQL text and stays partition-invariant there") {
-    graft.plans.Functions.register(spark)
     spark.read.parquet(s"$sf/documents.parquet")
       .select(explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "").createOrReplaceTempView("cm_tokens")
@@ -128,7 +127,6 @@ class SketchesSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("graft_hh composes in SQL text and honors the Misra-Gries bounds") {
-    graft.plans.Functions.register(spark)
     val tokens = spark.read.parquet(s"$sf/documents.parquet")
       .select(explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")

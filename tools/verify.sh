@@ -6,7 +6,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="${2:-/tmp/graft_verify}"
-CPUS="${SPARK_GRAFT_CPUS:-8}"
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 
 sbt -batch compile > /tmp/sbt_compile.log 2>&1 || { tail -30 /tmp/sbt_compile.log; exit 1; }
 
