@@ -15,8 +15,7 @@ object CapProbe {
     require(args.length >= 2, "usage: CapProbe <sfDir> <cap> [cap...]")
     val dir = args(0)
     val caps = args.drop(1).map(_.toInt)
-    val spark = engine.GraftSession.local("graft-capprobe",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = engine.GraftSession.local("graft-capprobe")
     def timed(f: => Long): (Long, Double) = {
       val t0 = System.nanoTime()
       val r = f

@@ -23,8 +23,7 @@ object CompactionProbe {
     val dir = args(0)
     val threshold = if (args.length > 1) args(1).toInt else 8
     val appends = if (args.length > 2) args(2).toInt else 16
-    val spark = engine.GraftSession.local("graft-compactprobe",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = engine.GraftSession.local("graft-compactprobe")
     val docs = sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
     val state = streaming.DurableIndex.temp(spark, "compactprobe", "doc_id",

@@ -13,9 +13,7 @@ package graft
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RecallProbe <sfDir> [sfDir...]")
-    val spark = engine.GraftSession.local("graft-recallprobe",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = engine.GraftSession.local("graft-recallprobe")
     args.foreach { dir =>
       def pairs(df: org.apache.spark.sql.DataFrame): Set[(Int, Long)] =
         df.collect().map(r => (r.getInt(0), r.getLong(2))).toSet

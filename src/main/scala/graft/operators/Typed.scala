@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.streaming.WindowSpi.{DeltaTrigger, TriggerRegs, TriggerResult, WinElem}
 
 /** Typed Dataset operator surface — the reference's UDF-as-operator
   * model (SURVEY.md §2.7: MapFunction/FlatMapFunction/
@@ -140,42 +141,42 @@ object Typed {
       |ORDER BY event_id""".stripMargin
 
   // ---------------------------------------------------------------- q105
-  /** Delta-trigger fire sequence as a BATCH groupReduce — the graded
-    * twin of [[graft.streaming.Streams.deltaWindow]]'s trigger rule
-    * (reference DeltaTrigger.java): walking each user's events in
-    * event_id order, the first value seeds a reference point and a
-    * fire is emitted whenever |value − ref| > [[Q105Threshold]], the
-    * reference advancing only on fire. Sequential-by-construction, so
-    * the oracle is a DuckDB RECURSIVE CTE walking row_number order —
-    * an independent engine re-deriving the same state machine. The
-    * comparison operands are raw column values (ref is always a
-    * previously SEEN value, never an accumulation), so cross-engine
-    * bit-identity needs no rounding anywhere. Scoped to user_id <
-    * [[Q105Users]]: 12 bounded sequences (≤ ~81 events at every SF)
-    * keep the oracle's recursion depth fixed while the Spark side
-    * stays the ordinary flatMapGroups shape that runs at any scale.
+  /** Delta-trigger fire sequence as a BATCH groupReduce — runs
+    * [[graft.streaming.WindowSpi.DeltaTrigger]] (reference
+    * DeltaTrigger.java), the trigger of the streaming delta window
+    * `WindowSpi.globalWindow(_, DeltaTrigger(t), CountEvictor(size))`:
+    * walking each user's events in event_id order, the first value
+    * seeds a reference point and a fire is emitted whenever
+    * |value − ref| > [[Q105Threshold]], the reference advancing only
+    * on fire. Sequential-by-construction, so the oracle is a DuckDB
+    * RECURSIVE CTE walking row_number order — an independent engine
+    * re-deriving the same state machine. The comparison operands are
+    * raw column values (ref is always a previously SEEN value, never
+    * an accumulation), so cross-engine bit-identity needs no rounding
+    * anywhere. Scoped to user_id < [[Q105Users]]: 12 bounded sequences
+    * (≤ ~81 events at every SF) keep the oracle's recursion depth
+    * fixed while the Spark side stays the ordinary flatMapGroups shape
+    * that runs at any scale.
     */
   val Q105Threshold = 50.0
   val Q105Users = 12
 
   def q105DeltaFires(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    val trigger = DeltaTrigger(Q105Threshold)
     Tables.events(spark, dir)
       .filter(col("user_id") < Q105Users)
-      .select(col("event_id"), col("user_id"), col("value")).as[Event]
-      .groupByKey(_.user_id)
+      .select(col("user_id"), col("event_id"),
+        expr("ts div 1000000").as("ts_ms"), col("value"))
+      .as[(Long, Long, Long, Double)]
+      .groupByKey(_._1)
       .flatMapGroups { (uid, it) =>
-        var seeded = false
-        var ref = 0.0
-        var idx = 0L
-        it.toSeq.sortBy(_.event_id).iterator.flatMap { e =>
-          if (!seeded) { seeded = true; ref = e.value; Iterator.empty }
-          else if (math.abs(e.value - ref) > Q105Threshold) {
-            ref = e.value
-            idx += 1
-            Iterator((uid, idx - 1, e.event_id, e.value))
-          } else Iterator.empty
-        }
+        val elems = it.toSeq.sortBy(_._2).map(e => WinElem(e._2, e._3, e._4))
+        val verdicts = elems.scanLeft((TriggerResult.Continue, TriggerRegs())) {
+          case ((_, regs), e) => trigger.onElement(e, regs)
+        }.tail
+        elems.zip(verdicts).collect { case (e, (res, _)) if res.fire => e }
+          .zipWithIndex.map { case (e, i) => (uid, i.toLong, e.event_id, e.value) }
       }
       .toDF("user_id", "fire_idx", "event_id", "trigger_v")
       .orderBy(col("user_id"), col("fire_idx"))

@@ -20,6 +20,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * against the watermark rule and ROUTES the late rows (with their
   * window key) to a late sink, while the update-mode agg keeps
   * refining windows for late-but-inside-watermark rows.
+  *
+  * The windows here are the Catalyst-native ones (`window` /
+  * `session_window`); the stateful ops are the non-window ones
+  * ([[sessionTimeoutAlerts]], [[temporalEnrichStream]]). Every keyed
+  * window with its own state machine — count, sliding-count, delta,
+  * punctuated, and the trigger/evictor overrides on event-time
+  * windows — lives in [[WindowSpi]], on one driver.
   */
 object Streams {
 
@@ -195,194 +202,6 @@ object Streams {
   def dedup(events: DataFrame): DataFrame =
     events.withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
-
-  /** Count windows (reference KeyedStream.countWindow,
-    * KeyedStream.java:653) — no Structured Streaming built-in, so a
-    * custom stateful operator: per key, emit one row per completed
-    * batch of `size` events. State = (window index, count, sum) — 24
-    * bytes per key, watermark-free (count windows never expire in
-    * Flink either).
-    */
-  case class CountWinState(winIdx: Long, n: Long, sum: Double)
-  case class CountWin(user_id: Long, win_idx: Long, n: Long, sum_v: Double)
-
-  def countWindow(events: Dataset[Ev], size: Int): Dataset[CountWin] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[CountWinState, CountWin](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[CountWinState]) =>
-          var s = state.getOption.getOrElse(CountWinState(0L, 0L, 0.0))
-          val out = scala.collection.mutable.ArrayBuffer.empty[CountWin]
-          // deterministic intra-batch order for the spec's asserts
-          it.toSeq.sortBy(_.event_id).foreach { e =>
-            s = CountWinState(s.winIdx, s.n + 1, s.sum + e.value)
-            if (s.n == size) {
-              out += CountWin(uid, s.winIdx, s.n, math.rint(s.sum * 100) / 100)
-              s = CountWinState(s.winIdx + 1, 0L, 0.0)
-            }
-          }
-          state.update(s)
-          out.iterator
-      }
-  }
-
-  /** Sliding count window — the reference's custom TRIGGER + EVICTOR
-    * composition (KeyedStream.java:663-666: GlobalWindows +
-    * CountTrigger.of(slide) + CountEvictor.of(size)): every `slide`-th
-    * event per key fires an aggregate over the last `size` events.
-    * Expressed directly as custom state: a bounded ring of the last
-    * `size` values (the evictor) plus an arrival counter firing every
-    * `slide` (the trigger). State is exactly `size` doubles + two
-    * longs per key — same bound Flink's evictor enforces. The GENERAL
-    * composition surface is [[WindowSpi.globalWindow]]; WindowSpiSpec
-    * proves it reproduces this fused form element-for-element.
-    */
-  case class SlideWinState(seen: Long, fired: Long, ring: Vector[Double])
-  case class SlideWin(user_id: Long, fire_idx: Long, n: Long, sum_v: Double)
-
-  def slidingCountWindow(events: Dataset[Ev], size: Int, slide: Int): Dataset[SlideWin] = {
-    require(size > 0 && slide > 0, s"size/slide must be positive, got $size/$slide")
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SlideWinState, SlideWin](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[SlideWinState]) =>
-          var s = state.getOption.getOrElse(SlideWinState(0L, 0L, Vector.empty))
-          val out = scala.collection.mutable.ArrayBuffer.empty[SlideWin]
-          it.toSeq.sortBy(_.event_id).foreach { e =>
-            val ring = (s.ring :+ e.value).takeRight(size) // CountEvictor.of(size)
-            val seen = s.seen + 1
-            var fired = s.fired
-            if (seen % slide == 0) { // CountTrigger.of(slide)
-              out += SlideWin(uid, fired, ring.length,
-                math.rint(ring.sum * 100) / 100)
-              fired += 1
-            }
-            s = SlideWinState(seen, fired, ring)
-          }
-          state.update(s)
-          out.iterator
-      }
-  }
-
-  /** Delta trigger over an evicted global window — the reference's
-    * DeltaTrigger.of(threshold, deltaFn) composed with
-    * CountEvictor.of(size) (windowing/triggers/DeltaTrigger.java;
-    * WindowedStream.java:137,190): the trigger fires when the delta
-    * between the CURRENT element and the element that LAST fired
-    * exceeds `threshold`. Flink's semantics, kept exactly: the first
-    * element only seeds the comparison point (no fire), and the
-    * comparison point advances ONLY on fire. The delta function here
-    * is |current − lastFire| on `value` (Flink takes a user lambda;
-    * any numeric delta slots into the same state machine). State per
-    * key is the `size`-bounded ring (the evictor) + one seed double +
-    * two counters — same bound the reference's evictor enforces.
-    */
-  case class DeltaWinState(seeded: Boolean, lastFire: Double,
-      fired: Long, ring: Vector[Double])
-  case class DeltaWin(user_id: Long, fire_idx: Long, trigger_v: Double,
-      n: Long, sum_v: Double)
-
-  def deltaWindow(events: Dataset[Ev], threshold: Double, size: Int): Dataset[DeltaWin] = {
-    require(threshold > 0 && size > 0, s"threshold/size must be positive, got $threshold/$size")
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[DeltaWinState, DeltaWin](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[DeltaWinState]) =>
-          var s = state.getOption.getOrElse(DeltaWinState(seeded = false, 0.0, 0L, Vector.empty))
-          val out = scala.collection.mutable.ArrayBuffer.empty[DeltaWin]
-          it.toSeq.sortBy(_.event_id).foreach { e =>
-            val ring = (s.ring :+ e.value).takeRight(size) // CountEvictor.of(size)
-            if (!s.seeded) { // first element seeds, never fires
-              s = DeltaWinState(seeded = true, e.value, s.fired, ring)
-            } else if (math.abs(e.value - s.lastFire) > threshold) { // DeltaTrigger
-              out += DeltaWin(uid, s.fired, e.value, ring.length,
-                math.rint(ring.sum * 100) / 100)
-              s = DeltaWinState(seeded = true, e.value, s.fired + 1, ring)
-            } else {
-              s = s.copy(ring = ring)
-            }
-          }
-          state.update(s)
-          out.iterator
-      }
-  }
-
-  /** Punctuated watermarks (the reference's
-    * AssignerWithPunctuatedWatermarks.java): the watermark advances on
-    * MARKER RECORDS in the stream, not on a periodic max-event-time
-    * estimate. Structured Streaming's `withWatermark` is periodic-only,
-    * so the punctuated contract runs one level up as keyed state:
-    * ordinary events accumulate into tumbling windows; a marker record
-    * (`event_type == marker`) carries the upstream promise "nothing
-    * older than my timestamp follows on this key" and IMMEDIATELY
-    * closes — emits — every window ending at or before it (Flink's
-    * punctuated emit path, zero latency between promise and output);
-    * events arriving behind the key-local punctuated watermark are
-    * dropped, Flink's default late-data behavior. State per key is the
-    * open-window aggregates plus one watermark long.
-    */
-  case class PunctState(wmMs: Long, open: Seq[(Long, Long, Double)])
-  case class PunctWin(user_id: Long, w_start_ms: Long, n: Long, sum_v: Double)
-
-  /** One key's punctuated-watermark fold — the EXACT state machine of
-    * [[punctuatedTumbling]], shared with its graded batch twin
-    * (WindowSpi q107) so the driver's DuckDB oracle grades the same
-    * code the streaming operator runs. Elements arrive in event_id
-    * order as (ts_ms, isMarker, value); emits (w_start_ms, n, sum_2dp)
-    * per closed window. */
-  /** Scale note: callers materialize each key's PER-MICRO-BATCH
-    * iterator to sort by event_id (order-sensitive fold). Bounded by
-    * a key's rows per micro-batch — fine for keyed streams, but a
-    * mega-key (one key carrying a whole partition's traffic) buffers
-    * that batch slice in memory; shard such keys upstream. */
-  private[graft] def punctFold(s0: PunctState,
-      elems: Iterator[(Long, Boolean, Double)],
-      widthMs: Long): (PunctState, Seq[(Long, Long, Double)]) = {
-    var s = s0
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    elems.foreach { case (t, isMarker, v) =>
-      if (isMarker) {
-        val wm = math.max(s.wmMs, t)
-        val (closed, open) = s.open.partition { case (ws, _, _) => ws + widthMs <= wm }
-        closed.sortBy(_._1).foreach { case (ws, n, sum) =>
-          out += ((ws, n, math.rint(sum * 100) / 100))
-        }
-        s = PunctState(wm, open)
-      } else if (s.wmMs != Long.MinValue &&
-          (t - java.lang.Math.floorMod(t, widthMs)) + widthMs <= s.wmMs) {
-        // dropped ONLY when the event's window is ENTIRELY late
-        // (window end <= watermark) — Flink's WindowOperator
-        // rule; a late event whose window is still open joins it
-      } else {
-        val ws = t - java.lang.Math.floorMod(t, widthMs)
-        val open = s.open.toVector
-        val i = open.indexWhere(_._1 == ws)
-        s = s.copy(open = if (i < 0) open :+ ((ws, 1L, v))
-          else open.updated(i, (ws, open(i)._2 + 1, open(i)._3 + v)))
-      }
-    }
-    (s, out.toSeq)
-  }
-
-  def punctuatedTumbling(events: Dataset[Ev], widthMs: Long,
-      marker: String = "wm"): Dataset[PunctWin] = {
-    require(widthMs > 0, s"window width must be positive, got $widthMs")
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[PunctState, PunctWin](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[PunctState]) =>
-          val s0 = state.getOption.getOrElse(PunctState(Long.MinValue, Vector.empty))
-          val (s, fires) = punctFold(s0,
-            it.toSeq.sortBy(_.event_id).iterator
-              .map(e => (e.ts.getTime, e.event_type == marker, e.value)), widthMs)
-          state.update(s)
-          fires.iterator.map { case (ws, n, sum) => PunctWin(uid, ws, n, sum) }
-      }
-  }
 
   /** Timer-driven stateful op (the reference KeyedProcessFunction
     * timer surface, KeyedStream.java:372 `process`): per-user session

@@ -1,22 +1,26 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.sources.Tables
 import graft.streaming.Streams.Ev
 
-/** General trigger/evictor SPI over a keyed global window — the
-  * reference's WindowedStream.trigger/evictor surface
-  * (`/root/reference` flink-streaming-java WindowedStream.java:137,190
-  * with windowing/triggers/ and windowing/evictors/) re-expressed as
-  * strategy objects driving ONE `flatMapGroupsWithState` state
-  * machine. [[Streams.countWindow]], [[Streams.slidingCountWindow]]
-  * and [[Streams.deltaWindow]] are the hand-fused forms of the three
-  * common compositions; this SPI exists for the migrant whose job
-  * composes its OWN trigger and evictor — WindowSpiSpec proves the
-  * compositions reproduce the fused operators element-for-element.
+/** Every keyed window of the engine — the reference's
+  * WindowedStream.trigger/evictor surface (flink-streaming-java
+  * WindowedStream.java:137,190 with windowing/triggers/ and
+  * windowing/evictors/) re-expressed as strategy objects over per-key
+  * folds, all run through ONE `flatMapGroupsWithState` call site
+  * ([[keyed]]) and one fire step ([[fireStep]]).
+  *
+  * Flink's count windows are compositions on [[globalWindow]], built
+  * exactly as KeyedStream.java:653,663 builds them:
+  *  - `countWindow(n)`: `PurgingTrigger(CountTrigger(n))` + [[NoEvictor]];
+  *  - `countWindow(size, slide)`: `CountTrigger(slide)` + `CountEvictor(size)`;
+  *  - a delta window: `DeltaTrigger(t)` + `CountEvictor(size)`.
   *
   * Semantics kept from Flink:
   *  - the window buffer holds every element since the last purge;
@@ -26,6 +30,11 @@ import graft.streaming.Streams.Ev
   *  - a non-purging trigger with no bounding evictor grows state, in
   *    Flink and here alike — production pairs CountEvictor /
   *    TimeEvictor or a PurgingTrigger, exactly as Flink's docs warn.
+  *
+  * Graded batch twins (q106-q110, and q105 in
+  * [[graft.operators.Typed]]) run the same folds and triggers over the
+  * events table, so the DuckDB oracle grades the code the streaming
+  * operators run.
   */
 object WindowSpi {
 
@@ -217,6 +226,45 @@ object WindowSpi {
     override def pendingTimer(regs: TriggerRegs): Option[Long] = None
   }
 
+  /** Flink's WindowOperator fire path, the one copy every fold here
+    * uses: on FIRE the evictor trims the buffer (evictBefore) and
+    * `emit` gets the survivors' count and raw sum; on PURGE the buffer
+    * empties. Returns the buffer the window keeps. */
+  private def fireStep(res: TriggerResult, buf: Vector[WinElem], evictor: GraftEvictor)(
+      emit: (Long, Double) => Unit): Vector[WinElem] = {
+    val kept = if (res.fire) evictor.evict(buf) else buf
+    if (res.fire) emit(kept.length.toLong, kept.map(_.value).sum)
+    if (res.purge) Vector.empty else kept
+  }
+
+  private def round2(x: Double): Double = math.rint(x * 100) / 100
+
+  /** Per-key element orders: event time (ties by event_id) for the
+    * event-time windows, arrival (event_id) for the rest. */
+  private val ByEventTime: Ordering[Ev] = Ordering.by((e: Ev) => (e.ts.getTime, e.event_id))
+  private val ByArrival: Ordering[Ev] = Ordering.by((e: Ev) => e.event_id)
+  /** [[ByEventTime]] for the batch twins, which fold WinElems. */
+  private val ElemByEventTime: Ordering[WinElem] = Ordering.by((e: WinElem) => (e.ts_ms, e.event_id))
+
+  /** The one streaming driver every keyed window here runs through:
+    * per key and micro-batch, read the state (or start from `empty`),
+    * sort the batch's elements by `order`, fold, store the new state
+    * and emit. No Spark watermark: the time-window folds keep a
+    * key-local one in `S`.
+    *
+    * Scale note: the per-key micro-batch slice is materialized to sort
+    * it (every fold is order-sensitive) — bounded for keyed traffic,
+    * a hazard for a mega-key; shard such keys upstream. */
+  private def keyed[S: Encoder, O: Encoder](events: Dataset[Ev], empty: S, order: Ordering[Ev])(
+      fold: (Long, S, Seq[Ev]) => (S, Iterator[O])): Dataset[O] =
+    events.groupByKey(_.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState[S, O](OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (uid: Long, it: Iterator[Ev], state: GroupState[S]) =>
+          val (s, out) = fold(uid, state.getOption.getOrElse(empty), it.toSeq.sorted(order))
+          state.update(s)
+          out
+      }
+
   /** One open tumbling window: start, trigger registers, buffer,
     * whether the window-end timer is armed (Flink arms it only for
     * elements arriving BEFORE the watermark passes maxTs — the
@@ -229,39 +277,55 @@ object WindowSpi {
     * aggregate over the surviving buffer. */
   case class SpiTimeWin(user_id: Long, w_start_ms: Long, fire_ms: Long, n: Long, sum_v: Double)
 
-  /** One key's tumbling-event-time fold, shared by the streaming
-    * driver [[tumblingEventTime]] and the graded batch twin (q106).
-    * Elements must arrive in (ts, event_id) order per call; the
-    * key-local watermark is the running max event time (advanced
-    * AFTER each element, then due timers fire in timestamp order —
-    * the reference's advanceWatermark loop, which also drains timers
-    * re-armed ≤ the watermark during the same advance). A window is
-    * GC'd when the watermark passes its max timestamp (allowed
-    * lateness 0); an element whose window is already GC-eligible is
-    * dropped (WindowOperator.isWindowLate). Emits raw sums — callers
-    * round at the emission edge. */
-  private[graft] def timeWindowFold(s0: TimeWinState, elems: Iterator[WinElem],
-      widthMs: Long, trigger: GraftTimeTrigger, evictor: GraftEvictor,
-      latenessMs: Long = 0L)
-      : (TimeWinState, Seq[(Long, Long, Long, Double)]) =
-    timeWindowFoldAssigned(s0, elems, widthMs, trigger, evictor,
-      ts => Seq(ts - java.lang.Math.floorMod(ts, widthMs)), latenessMs)
+  /** The time-window operators on [[keyed]]: elements in `order`,
+    * stamped with `stamp` (event time, or a processing clock), folded
+    * by `fold`; fire sums are rounded at emission (2dp). */
+  private def timeWindows[S: Encoder](events: Dataset[Ev], empty: S,
+      order: Ordering[Ev] = ByEventTime, stamp: Ev => Long = _.ts.getTime)(
+      fold: (S, Iterator[WinElem]) => (S, Seq[(Long, Long, Long, Double)])): Dataset[SpiTimeWin] = {
+    import events.sparkSession.implicits._
+    keyed(events, empty, order) { (uid, s0, evs) =>
+      val (s, fires) = fold(s0, evs.iterator.map(e => WinElem(e.event_id, stamp(e), e.value)))
+      (s, fires.iterator.map { case (ws, t, n, sum) => SpiTimeWin(uid, ws, t, n, round2(sum)) })
+    }
+  }
 
-  /** [[timeWindowFold]] generalized over the window ASSIGNER —
+  /** TumblingEventTimeWindows.assignWindows: the one aligned start. */
+  private[graft] def tumblingAssign(widthMs: Long)(ts: Long): Seq[Long] =
+    Seq(ts - java.lang.Math.floorMod(ts, widthMs))
+
+  /** SlidingEventTimeWindows.assignWindows: every start in
+    * (ts − size, ts] aligned to the slide. */
+  private[graft] def slidingAssign(sizeMs: Long, slideMs: Long)(ts: Long): Seq[Long] = {
+    val lastStart = ts - java.lang.Math.floorMod(ts, slideMs)
+    Iterator.iterate(lastStart)(_ - slideMs).takeWhile(_ > ts - sizeMs).toSeq
+  }
+
+  /** One key's event-time window fold over any window ASSIGNER —
     * Flink's WindowAssigner seam: tumbling assigns one window per
-    * element, sliding assigns size/slide of them (see
-    * [[slidingEventTime]]); every window runs the same per-window
-    * trigger registers, evictor, late-drop and GC machinery.
-    * `sizeMs` is the window LENGTH (maxTs = start + sizeMs − 1).
+    * element ([[tumblingAssign]]), sliding assigns size/slide of them
+    * ([[slidingAssign]]); every window runs the same per-window
+    * trigger registers, evictor, late-drop and GC machinery. Shared by
+    * the streaming operators and the graded batch twins (q106, q108,
+    * q109). `sizeMs` is the window LENGTH (maxTs = start + sizeMs − 1).
+    *
+    * Elements must arrive in (ts, event_id) order per call for an
+    * in-order stream; the key-local watermark is the running max event
+    * time (advanced AFTER each element, then due timers fire in
+    * timestamp order — the reference's advanceWatermark loop, which
+    * also drains timers re-armed ≤ the watermark during the same
+    * advance).
     *
     * Allowed lateness (WindowedStream.allowedLateness): a window is
     * GC'd at maxTs + lateness; an element arriving after maxTs but
     * before cleanup still joins and the TRIGGER decides the re-fire
     * (EventTimeTrigger's past-end branch fires immediately —
     * accumulating re-emission, Flink's contract); an element whose
-    * cleanup time has passed is dropped. The window-end timer fires
-    * at most once (armed only while maxTs > wm at arrival). */
-  private[graft] def timeWindowFoldAssigned(s0: TimeWinState, elems: Iterator[WinElem],
+    * cleanup time has passed is dropped (WindowOperator.isWindowLate).
+    * The window-end timer fires at most once (armed only while
+    * maxTs > wm at arrival). Emits raw sums — callers round at the
+    * emission edge. */
+  private[graft] def timeWindowFold(s0: TimeWinState, elems: Iterator[WinElem],
       sizeMs: Long, trigger: GraftTimeTrigger, evictor: GraftEvictor,
       assign: Long => Seq[Long], latenessMs: Long = 0L)
       : (TimeWinState, Seq[(Long, Long, Long, Double)]) = {
@@ -270,18 +334,11 @@ object WindowSpi {
     val wins = scala.collection.mutable.LinkedHashMap
       .empty[Long, (TriggerRegs, Vector[WinElem], Boolean)]
     s0.wins.foreach(w => wins(w.ws) = (w.regs, w.buf.toVector, w.endArmed))
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
+    val out = ArrayBuffer.empty[(Long, Long, Long, Double)]
 
-    def fire(ws: Long, t: Long, regs: TriggerRegs, res: TriggerResult, armed: Boolean): Unit = {
-      var buf = wins(ws)._2
-      if (res.fire) {
-        val kept = evictor.evict(buf)
-        out += ((ws, t, kept.length.toLong, kept.map(_.value).sum))
-        buf = kept
-      }
-      if (res.purge) buf = Vector.empty
-      wins(ws) = (regs, buf, armed)
-    }
+    def fire(ws: Long, t: Long, buf: Vector[WinElem], regs: TriggerRegs,
+        res: TriggerResult, armed: Boolean): Unit =
+      wins(ws) = (regs, fireStep(res, buf, evictor)((n, sum) => out += ((ws, t, n, sum))), armed)
 
     def fireDue(): Unit = {
       var progressed = true
@@ -299,10 +356,10 @@ object WindowSpi {
             (if (cleanupT <= wm) Iterator.single((cleanupT, ws)) else Iterator.empty)
         }.toSet.toSeq.sorted
         due.headOption.foreach { case (t, ws) =>
-          val (regs, _, armed) = wins(ws)
+          val (regs, buf, armed) = wins(ws)
           val maxTs = ws + sizeMs - 1
           val (res, regs2) = trigger.onEventTime(t, maxTs, regs)
-          fire(ws, t, regs2, res, armed && t != maxTs)
+          fire(ws, t, buf, regs2, res, armed && t != maxTs)
           if (t == maxTs + latenessMs) wins.remove(ws) // GC at cleanup time
           progressed = true
         }
@@ -321,9 +378,8 @@ object WindowSpi {
               // arm the end timer only if the watermark has not yet
               // passed maxTs — the late-refire path never arms it
               wm == Long.MinValue || maxTs > wm))
-          wins(ws) = (regs0, buf0 :+ e, armed0)
           val (res, regs) = trigger.onElement(e, maxTs, wm, regs0)
-          fire(ws, e.ts_ms, regs, res, armed0)
+          fire(ws, e.ts_ms, buf0 :+ e, regs, res, armed0)
         }
       }
       wm = if (wm == Long.MinValue) e.ts_ms else math.max(wm, e.ts_ms)
@@ -333,38 +389,21 @@ object WindowSpi {
       out.toSeq)
   }
 
+  private val NoTimeWins = TimeWinState(Long.MinValue, Nil)
+
   /** TumblingEventTimeWindows + a custom trigger/evictor as a
     * streaming operator — WindowedStream.window(Tumbling…)
     * .trigger(…).evictor(…). Each micro-batch's elements are applied
     * in (ts, event_id) order; the watermark is key-local (same rule
-    * as [[Streams.punctuatedTumbling]]), so cross-batch stragglers
-    * hit the late-drop rule exactly as a Flink watermark straggler
-    * would. Sums are rounded at emission (2dp) like [[globalWindow]]. */
+    * as [[punctuatedTumbling]]), so cross-batch stragglers hit the
+    * late-drop rule exactly as a Flink watermark straggler would. */
   def tumblingEventTime(events: Dataset[Ev], widthMs: Long,
       trigger: GraftTimeTrigger, evictor: GraftEvictor = NoEvictor,
       latenessMs: Long = 0L): Dataset[SpiTimeWin] = {
     require(widthMs > 0, s"window width must be positive, got $widthMs")
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[TimeWinState, SpiTimeWin](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[TimeWinState]) =>
-          val s0 = state.getOption.getOrElse(TimeWinState(Long.MinValue, Nil))
-          val elems = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            .map(e => WinElem(e.event_id, e.ts.getTime, e.value))
-          val (s, fires) = timeWindowFold(s0, elems.iterator, widthMs, trigger, evictor, latenessMs)
-          state.update(s)
-          fires.iterator.map { case (ws, t, n, sum) =>
-            SpiTimeWin(uid, ws, t, n, math.rint(sum * 100) / 100)
-          }
-      }
-  }
-
-  /** SlidingEventTimeWindows.assignWindows: every start in
-    * (ts − size, ts] aligned to the slide. */
-  private[graft] def slidingAssign(sizeMs: Long, slideMs: Long)(ts: Long): Seq[Long] = {
-    val lastStart = ts - java.lang.Math.floorMod(ts, slideMs)
-    Iterator.iterate(lastStart)(_ - slideMs).takeWhile(_ > ts - sizeMs).toSeq
+    timeWindows(events, NoTimeWins)(timeWindowFold(_, _, widthMs, trigger, evictor,
+      tumblingAssign(widthMs), latenessMs))
   }
 
   /** SlidingEventTimeWindows + a custom trigger/evictor — the other
@@ -379,62 +418,59 @@ object WindowSpi {
     require(sizeMs > 0 && slideMs > 0 && sizeMs % slideMs == 0,
       s"need size > 0, slide > 0, size % slide == 0; got $sizeMs/$slideMs")
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[TimeWinState, SpiTimeWin](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[TimeWinState]) =>
-          val s0 = state.getOption.getOrElse(TimeWinState(Long.MinValue, Nil))
-          val elems = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            .map(e => WinElem(e.event_id, e.ts.getTime, e.value))
-          val (s, fires) = timeWindowFoldAssigned(s0, elems.iterator, sizeMs,
-            trigger, evictor, slidingAssign(sizeMs, slideMs), latenessMs)
-          state.update(s)
-          fires.iterator.map { case (ws, t, n, sum) =>
-            SpiTimeWin(uid, ws, t, n, math.rint(sum * 100) / 100)
-          }
-      }
+    timeWindows(events, NoTimeWins)(timeWindowFold(_, _, sizeMs, trigger, evictor,
+      slidingAssign(sizeMs, slideMs), latenessMs))
   }
 
   case class SpiWinState(regs: TriggerRegs, buf: Seq[WinElem], fired: Long)
   case class SpiWin(user_id: Long, fire_idx: Long, n: Long, sum_v: Double)
 
-  /** GlobalWindows + trigger + evictor: per key, buffer elements;
-    * when the trigger fires, evict, emit count+sum over the surviving
-    * window contents, persist the trimmed buffer; purge clears it.
+  /** GlobalWindows + trigger + evictor: per key, in event_id order,
+    * buffer each element; when the trigger fires, evict, emit
+    * count+sum over the surviving window contents (the key's
+    * `fire_idx`-th fire), persist the trimmed buffer; purge clears it.
     *
-    * Scale note: the per-key micro-batch iterator is materialized to
-    * sort by event_id (order-sensitive trigger fold), and a
-    * non-purging trigger without a bounding evictor grows the window
-    * buffer — both bounded for keyed traffic, both hazards for a
-    * mega-key; pair a CountEvictor/TimeEvictor or PurgingTrigger,
-    * exactly as Flink's docs warn. */
+    * State per key is the buffer, as in Flink's buffering
+    * WindowOperator: `PurgingTrigger(CountTrigger(n))` holds at most n
+    * elements, `CountTrigger(slide)` + `CountEvictor(size)` at most
+    * size + slide − 1, and a `DeltaTrigger` grows the buffer until its
+    * next fire trims it. A hand-fused count window could keep O(1)
+    * state (an index, a count and a sum); this operator trades that
+    * for one state machine. */
   def globalWindow(events: Dataset[Ev], trigger: GraftTrigger,
       evictor: GraftEvictor): Dataset[SpiWin] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SpiWinState, SpiWin](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[SpiWinState]) =>
-          var s = state.getOption.getOrElse(SpiWinState(TriggerRegs(), Vector.empty, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[SpiWin]
-          it.toSeq.sortBy(_.event_id).foreach { e =>
-            val elem = WinElem(e.event_id, e.ts.getTime, e.value)
-            var buf = s.buf.toVector :+ elem
-            val (res, regs) = trigger.onElement(elem, s.regs)
-            var fired = s.fired
-            if (res.fire) {
-              val kept = evictor.evict(buf)
-              out += SpiWin(uid, fired, kept.length,
-                math.rint(kept.map(_.value).sum * 100) / 100)
-              fired += 1
-              buf = kept // evictBefore trims the persisted window state
-            }
-            if (res.purge) buf = Vector.empty
-            s = SpiWinState(regs, buf, fired)
-          }
-          state.update(s)
-          out.iterator
+    keyed(events, SpiWinState(TriggerRegs(), Nil, 0L), ByArrival) { (uid, s0, evs) =>
+      val out = ArrayBuffer.empty[SpiWin]
+      val (regs, buf) = evs.foldLeft((s0.regs, s0.buf.toVector)) { case ((regs0, buf0), e) =>
+        val elem = WinElem(e.event_id, e.ts.getTime, e.value)
+        val (res, regs) = trigger.onElement(elem, regs0)
+        (regs, fireStep(res, buf0 :+ elem, evictor) { (n, sum) =>
+          out += SpiWin(uid, s0.fired + out.length, n, round2(sum)) })
       }
+      (SpiWinState(regs, buf, s0.fired + out.length), out.iterator)
+    }
+  }
+
+  /** The graded batch twins' one skeleton (q106, q108-q110): each of
+    * the first [[Q106Users]] users' events as WinElems in `arrival`
+    * order, folded once from the empty state; sums rounded at emission
+    * like the streaming operators. */
+  private def batchTwin(spark: SparkSession, dir: String, arrival: Ordering[WinElem])(
+      fold: Iterator[WinElem] => Seq[(Long, Long, Long, Double)]): DataFrame = {
+    import spark.implicits._
+    Tables.events(spark, dir)
+      .filter(col("user_id") < Q106Users)
+      .select(col("user_id"), col("event_id"),
+        expr("ts div 1000000").as("ts_ms"), col("value"))
+      .as[(Long, Long, Long, Double)]
+      .groupByKey(_._1)
+      .flatMapGroups { (uid, it) =>
+        fold(it.map(e => WinElem(e._2, e._3, e._4)).toSeq.sorted(arrival).iterator)
+          .iterator.map { case (ws, t, n, sum) => (uid, ws, t, n, round2(sum)) }
+      }
+      .toDF("user_id", "w_start_ms", "fire_ms", "n", "sum_v")
+      .orderBy(col("user_id"), col("w_start_ms"), col("fire_ms"), col("n"))
   }
 
   // ---------------------------------------------------------------- q106
@@ -460,27 +496,10 @@ object WindowSpi {
   val Q106WidthMs: Long = 300000L
   val Q106IntervalMs: Long = 60000L
 
-  def q106ContinuousFires(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .filter(col("user_id") < Q106Users)
-      .select(col("user_id"), col("event_id"),
-        expr("ts div 1000000").as("ts_ms"), col("value"))
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (uid, it) =>
-        val elems = it.toSeq.sortBy(e => (e._3, e._2))
-          .map(e => WinElem(e._2, e._3, e._4))
-        val (_, fires) = timeWindowFold(TimeWinState(Long.MinValue, Nil),
-          elems.iterator, Q106WidthMs,
-          ContinuousEventTimeTrigger(Q106IntervalMs), NoEvictor)
-        fires.iterator.map { case (ws, t, n, sum) =>
-          (uid, ws, t, n, math.rint(sum * 100) / 100)
-        }
-      }
-      .toDF("user_id", "w_start_ms", "fire_ms", "n", "sum_v")
-      .orderBy(col("user_id"), col("w_start_ms"), col("fire_ms"))
-  }
+  def q106ContinuousFires(spark: SparkSession, dir: String): DataFrame =
+    batchTwin(spark, dir, ElemByEventTime)(timeWindowFold(NoTimeWins, _, Q106WidthMs,
+      ContinuousEventTimeTrigger(Q106IntervalMs), NoEvictor,
+      tumblingAssign(Q106WidthMs))._2)
 
   val q106Sql: String =
     s"""WITH e AS (
@@ -512,6 +531,7 @@ object WindowSpi {
     * buffer. */
   case class SessWin(start: Long, last: Long, regs: TriggerRegs, buf: Seq[WinElem])
   case class SessState(wmMs: Long, wins: Seq[SessWin])
+  private val NoSessions = SessState(Long.MinValue, Nil)
 
   /** EventTimeSessionWindows + trigger/evictor — the MERGING assigner
     * (Flink's MergingWindowAssigner / MergingWindowSet): an element's
@@ -538,7 +558,7 @@ object WindowSpi {
     // out-of-order element prepends onto one open session).
     var wm = s0.wmMs
     var sess = s0.wins.toVector
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
+    val out = ArrayBuffer.empty[(Long, Long, Long, Double)]
 
     def fireDue(): Unit = {
       var progressed = true
@@ -552,13 +572,7 @@ object WindowSpi {
         due.headOption.foreach { case (t, i, isEnd) =>
           val s = sess(i)
           val (res, regs2) = trigger.onEventTime(t, s.last + gapMs - 1, s.regs)
-          var buf = s.buf.toVector
-          if (res.fire) {
-            val kept = evictor.evict(buf)
-            out += ((s.start, t, kept.length.toLong, kept.map(_.value).sum))
-            buf = kept
-          }
-          if (res.purge) buf = Vector.empty
+          val buf = fireStep(res, s.buf.toVector, evictor)((n, sum) => out += ((s.start, t, n, sum)))
           sess = if (isEnd) sess.patch(i, Nil, 1) // GC at the session end
             else sess.updated(i, s.copy(regs = regs2, buf = buf))
           progressed = true
@@ -583,15 +597,9 @@ object WindowSpi {
         val start = (merged.map(_.start) :+ e.ts_ms).min
         val last = (merged.map(_.last) :+ e.ts_ms).max
         val regs0 = merged.map(_.regs).reduceOption(trigger.onMerge).getOrElse(TriggerRegs())
-        val buf0 = merged.flatMap(_.buf).toVector :+ e
         val (res, regs) = trigger.onElement(e, last + gapMs - 1, wm, regs0)
-        var buf = buf0
-        if (res.fire) {
-          val kept = evictor.evict(buf)
-          out += ((start, e.ts_ms, kept.length.toLong, kept.map(_.value).sum))
-          buf = kept
-        }
-        if (res.purge) buf = Vector.empty
+        val buf = fireStep(res, merged.flatMap(_.buf).toVector :+ e, evictor)(
+          (n, sum) => out += ((start, e.ts_ms, n, sum)))
         sess = rest :+ SessWin(start, last, regs, buf)
       }
       wm = if (wm == Long.MinValue) e.ts_ms - lagMs else math.max(wm, e.ts_ms - lagMs)
@@ -611,19 +619,7 @@ object WindowSpi {
       evictor: GraftEvictor = NoEvictor, lagMs: Long = 0L): Dataset[SpiTimeWin] = {
     require(gapMs > 0, s"session gap must be positive, got $gapMs")
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, SpiTimeWin](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[SessState]) =>
-          val s0 = state.getOption.getOrElse(SessState(Long.MinValue, Nil))
-          val elems = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            .map(e => WinElem(e.event_id, e.ts.getTime, e.value))
-          val (s, fires) = sessionFold(s0, elems.iterator, gapMs, trigger, evictor, lagMs)
-          state.update(s)
-          fires.iterator.map { case (ws, t, n, sum) =>
-            SpiTimeWin(uid, ws, t, n, math.rint(sum * 100) / 100)
-          }
-      }
+    timeWindows(events, NoSessions)(sessionFold(_, _, gapMs, trigger, evictor, lagMs))
   }
 
   /** Processing-time tumbling windows with the trigger/evictor SPI —
@@ -641,28 +637,17 @@ object WindowSpi {
     * advances at the next arrival (micro-batch model; a
     * GroupStateTimeout.ProcessingTimeTimeout is the no-input firing
     * path, demonstrated by [[Streams.sessionTimeoutAlerts]]'s
-    * event-time twin). */
+    * event-time twin). Elements run in arrival (event_id) order,
+    * each stamped with the clock as the fold reaches it — the fold
+    * then treats clock time exactly as event time with a perfect
+    * watermark. */
   def processingTimeTumbling(events: Dataset[Ev], widthMs: Long,
       trigger: GraftTimeTrigger, evictor: GraftEvictor = NoEvictor,
       clock: () => Long = () => System.currentTimeMillis()): Dataset[SpiTimeWin] = {
     require(widthMs > 0, s"window width must be positive, got $widthMs")
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[TimeWinState, SpiTimeWin](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[TimeWinState]) =>
-          val s0 = state.getOption.getOrElse(TimeWinState(Long.MinValue, Nil))
-          // arrival order within the batch; each element stamped with
-          // the clock AT PROCESSING — the fold then treats clock time
-          // exactly as event time with a perfect watermark
-          val elems = it.toSeq.sortBy(_.event_id)
-            .map(e => WinElem(e.event_id, clock(), e.value))
-          val (s, fires) = timeWindowFold(s0, elems.iterator, widthMs, trigger, evictor)
-          state.update(s)
-          fires.iterator.map { case (ws, t, n, sum) =>
-            SpiTimeWin(uid, ws, t, n, math.rint(sum * 100) / 100)
-          }
-      }
+    timeWindows(events, NoTimeWins, ByArrival, _ => clock())(
+      timeWindowFold(_, _, widthMs, trigger, evictor, tumblingAssign(widthMs)))
   }
 
   // ---------------------------------------------------------------- q110
@@ -678,25 +663,9 @@ object WindowSpi {
     * reaches. */
   val Q110GapMs: Long = 1800000L
 
-  def q110SessionFires(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .filter(col("user_id") < Q106Users)
-      .select(col("user_id"), col("event_id"),
-        expr("ts div 1000000").as("ts_ms"), col("value"))
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (uid, it) =>
-        val elems = it.toSeq.sortBy(e => (e._3, e._2)).map(e => WinElem(e._2, e._3, e._4))
-        val (_, fires) = sessionFold(SessState(Long.MinValue, Nil),
-          elems.iterator, Q110GapMs, EventTimeTrigger, NoEvictor)
-        fires.iterator.map { case (ws, t, n, sum) =>
-          (uid, ws, t, n, math.rint(sum * 100) / 100)
-        }
-      }
-      .toDF("user_id", "w_start_ms", "fire_ms", "n", "sum_v")
-      .orderBy(col("user_id"), col("w_start_ms"))
-  }
+  def q110SessionFires(spark: SparkSession, dir: String): DataFrame =
+    batchTwin(spark, dir, ElemByEventTime)(
+      sessionFold(NoSessions, _, Q110GapMs, EventTimeTrigger, NoEvictor)._2)
 
   val q110Sql: String =
     s"""WITH e AS (
@@ -735,28 +704,10 @@ object WindowSpi {
   val Q108SizeMs: Long = 600000L
   val Q108SlideMs: Long = 300000L
 
-  def q108SlidingContinuousFires(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .filter(col("user_id") < Q106Users)
-      .select(col("user_id"), col("event_id"),
-        expr("ts div 1000000").as("ts_ms"), col("value"))
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (uid, it) =>
-        val elems = it.toSeq.sortBy(e => (e._3, e._2))
-          .map(e => WinElem(e._2, e._3, e._4))
-        val (_, fires) = timeWindowFoldAssigned(TimeWinState(Long.MinValue, Nil),
-          elems.iterator, Q108SizeMs,
-          ContinuousEventTimeTrigger(Q106IntervalMs), NoEvictor,
-          slidingAssign(Q108SizeMs, Q108SlideMs))
-        fires.iterator.map { case (ws, t, n, sum) =>
-          (uid, ws, t, n, math.rint(sum * 100) / 100)
-        }
-      }
-      .toDF("user_id", "w_start_ms", "fire_ms", "n", "sum_v")
-      .orderBy(col("user_id"), col("w_start_ms"), col("fire_ms"))
-  }
+  def q108SlidingContinuousFires(spark: SparkSession, dir: String): DataFrame =
+    batchTwin(spark, dir, ElemByEventTime)(timeWindowFold(NoTimeWins, _, Q108SizeMs,
+      ContinuousEventTimeTrigger(Q106IntervalMs), NoEvictor,
+      slidingAssign(Q108SizeMs, Q108SlideMs))._2)
 
   val q108Sql: String =
     s"""WITH e AS (
@@ -809,27 +760,11 @@ object WindowSpi {
   val Q109LatenessMs: Long = 3600000L
   val Q109BlockMs: Long = 7200000L
 
-  def q109LateRefires(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, dir)
-      .filter(col("user_id") < Q106Users)
-      .select(col("user_id"), col("event_id"),
-        expr("ts div 1000000").as("ts_ms"), col("value"))
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (uid, it) =>
-        val elems = it.toSeq
-          .sortBy(e => (e._3 / Q109BlockMs, e._2 % 3, e._2))
-          .map(e => WinElem(e._2, e._3, e._4))
-        val (_, fires) = timeWindowFold(TimeWinState(Long.MinValue, Nil),
-          elems.iterator, Q109WidthMs, EventTimeTrigger, NoEvictor, Q109LatenessMs)
-        fires.iterator.map { case (ws, t, n, sum) =>
-          (uid, ws, t, n, math.rint(sum * 100) / 100)
-        }
-      }
-      .toDF("user_id", "w_start_ms", "fire_ms", "n", "sum_v")
-      .orderBy(col("user_id"), col("w_start_ms"), col("fire_ms"), col("n"))
-  }
+  def q109LateRefires(spark: SparkSession, dir: String): DataFrame =
+    batchTwin(spark, dir,
+      Ordering.by((e: WinElem) => (e.ts_ms / Q109BlockMs, e.event_id % 3, e.event_id)))(
+      timeWindowFold(NoTimeWins, _, Q109WidthMs, EventTimeTrigger, NoEvictor,
+        tumblingAssign(Q109WidthMs), Q109LatenessMs)._2)
 
   val q109Sql: String =
     s"""WITH e AS (
@@ -873,10 +808,73 @@ object WindowSpi {
        |SELECT * FROM endfires UNION ALL SELECT * FROM latefires
        |ORDER BY user_id, w_start_ms, fire_ms, n""".stripMargin
 
+  /** Punctuated watermarks (the reference's
+    * AssignerWithPunctuatedWatermarks.java): the watermark advances on
+    * MARKER RECORDS in the stream, not on a periodic max-event-time
+    * estimate. Structured Streaming's `withWatermark` is periodic-only,
+    * so the punctuated contract runs one level up as keyed state:
+    * ordinary events accumulate into tumbling windows; a marker record
+    * (`event_type == marker`) carries the upstream promise "nothing
+    * older than my timestamp follows on this key" and IMMEDIATELY
+    * closes — emits — every window ending at or before it (Flink's
+    * punctuated emit path, zero latency between promise and output);
+    * events arriving behind the key-local punctuated watermark are
+    * dropped, Flink's default late-data behavior. State per key is the
+    * open-window aggregates plus one watermark long.
+    */
+  case class PunctState(wmMs: Long, open: Seq[(Long, Long, Double)])
+  case class PunctWin(user_id: Long, w_start_ms: Long, n: Long, sum_v: Double)
+
+  /** One key's punctuated-watermark fold — the EXACT state machine of
+    * [[punctuatedTumbling]], shared with its graded batch twin q107 so
+    * the driver's DuckDB oracle grades the same code the streaming
+    * operator runs. Elements arrive in event_id order as
+    * (ts_ms, isMarker, value); emits (w_start_ms, n, sum_2dp) per
+    * closed window. */
+  private[graft] def punctFold(s0: PunctState,
+      elems: Iterator[(Long, Boolean, Double)],
+      widthMs: Long): (PunctState, Seq[(Long, Long, Double)]) = {
+    var s = s0
+    val out = ArrayBuffer.empty[(Long, Long, Double)]
+    elems.foreach { case (t, isMarker, v) =>
+      if (isMarker) {
+        val wm = math.max(s.wmMs, t)
+        val (closed, open) = s.open.partition { case (ws, _, _) => ws + widthMs <= wm }
+        closed.sortBy(_._1).foreach { case (ws, n, sum) => out += ((ws, n, round2(sum))) }
+        s = PunctState(wm, open)
+      } else if (s.wmMs != Long.MinValue &&
+          (t - java.lang.Math.floorMod(t, widthMs)) + widthMs <= s.wmMs) {
+        // dropped ONLY when the event's window is ENTIRELY late
+        // (window end <= watermark) — Flink's WindowOperator
+        // rule; a late event whose window is still open joins it
+      } else {
+        val ws = t - java.lang.Math.floorMod(t, widthMs)
+        val open = s.open.toVector
+        val i = open.indexWhere(_._1 == ws)
+        s = s.copy(open = if (i < 0) open :+ ((ws, 1L, v))
+          else open.updated(i, (ws, open(i)._2 + 1, open(i)._3 + v)))
+      }
+    }
+    (s, out.toSeq)
+  }
+
+  private val NoPunct = PunctState(Long.MinValue, Nil)
+
+  def punctuatedTumbling(events: Dataset[Ev], widthMs: Long,
+      marker: String = "wm"): Dataset[PunctWin] = {
+    require(widthMs > 0, s"window width must be positive, got $widthMs")
+    import events.sparkSession.implicits._
+    keyed(events, NoPunct, ByArrival) { (uid, s0, evs) =>
+      val (s, closes) = punctFold(s0,
+        evs.iterator.map(e => (e.ts.getTime, e.event_type == marker, e.value)), widthMs)
+      (s, closes.iterator.map { case (ws, n, sum) => PunctWin(uid, ws, n, sum) })
+    }
+  }
+
   // ---------------------------------------------------------------- q107
   /** Punctuated-watermark window closes as a BATCH groupReduce — the
-    * graded twin of [[Streams.punctuatedTumbling]], running the SAME
-    * [[Streams.punctFold]] state machine over the events table with
+    * graded twin of [[punctuatedTumbling]], running the SAME
+    * [[punctFold]] state machine over the events table with
     * `signup` rows as the markers: walking each user's events in
     * event_id order, a marker advances the key-local watermark to its
     * timestamp and immediately closes (emits) every 5-minute window
@@ -900,10 +898,8 @@ object WindowSpi {
       .as[(Long, Long, Long, Boolean, Double)]
       .groupByKey(_._1)
       .flatMapGroups { (uid, it) =>
-        val (_, closes) = Streams.punctFold(
-          Streams.PunctState(Long.MinValue, Vector.empty),
-          it.toSeq.sortBy(_._2).iterator.map(e => (e._3, e._4, e._5)),
-          Q107WidthMs)
+        val (_, closes) = punctFold(NoPunct,
+          it.toSeq.sortBy(_._2).iterator.map(e => (e._3, e._4, e._5)), Q107WidthMs)
         closes.iterator.map { case (ws, n, sum) => (uid, ws, n, sum) }
       }
       .toDF("user_id", "w_start_ms", "n", "sum_v")

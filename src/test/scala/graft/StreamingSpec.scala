@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.Streams
+import graft.streaming.{Streams, WindowSpi}
 import graft.streaming.Streams.Ev
+import graft.streaming.WindowSpi.{CountEvictor, CountTrigger, DeltaTrigger, NoEvictor, PurgingTrigger}
 
 class StreamingSpec extends AnyFunSuite with SparkSpec {
 
@@ -144,7 +145,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val evs = (1 to 7).map(i => Ev(i, ts(i), 1, "a", i.toDouble)) ++
       (1 to 3).map(i => Ev(100 + i, ts(i), 2, "b", 1.0))
     val ms = feed(evs)
-    val q = Streams.countWindow(ms.toDS(), 3).writeStream
+    val q = WindowSpi.globalWindow(ms.toDS(), PurgingTrigger(CountTrigger(3)), NoEvictor).writeStream
       .format("memory").queryName("cw").outputMode(OutputMode.Append()).start()
     q.processAllAvailable(); q.stop()
     val rows = spark.table("cw").collect()
@@ -158,7 +159,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[Ev]
-    val q = Streams.slidingCountWindow(ms.toDS(), size = 3, slide = 2).writeStream
+    val q = WindowSpi.globalWindow(ms.toDS(), CountTrigger(2), CountEvictor(3)).writeStream
       .format("memory").queryName("scw").outputMode(OutputMode.Append()).start()
     ms.addData((1 to 5).map(i => Ev(i, ts(i), 1, "a", i.toDouble)): _*)
     q.processAllAvailable()
@@ -179,35 +180,35 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[Ev]
-    val q = Streams.deltaWindow(ms.toDS(), threshold = 5.0, size = 3).writeStream
+    val q = WindowSpi.globalWindow(ms.toDS(), DeltaTrigger(5.0), CountEvictor(3)).writeStream
       .format("memory").queryName("dw").outputMode(OutputMode.Append()).start()
-    // hand trace (threshold 5, evictor size 3), values per event:
+    // hand trace (threshold 5, evictor size 3 at fire), values per event:
     //   1.0  -> seeds lastFire=1, no fire
-    //   2.0  -> |2-1|=1,  no fire            ring (1,2)
-    //   7.0  -> |7-1|=6 > 5: FIRE 0 over ring (1,2,7)=10.0; lastFire=7
-    //   11.0 -> |11-7|=4, no fire            ring (2,7,11)
-    //   13.0 -> |13-7|=6 > 5: FIRE 1 over ring (7,11,13)=31.0; lastFire=13
+    //   2.0  -> |2-1|=1,  no fire            buffer (1,2)
+    //   7.0  -> |7-1|=6 > 5: FIRE 0 over (1,2,7)=10.0; lastFire=7
+    //   11.0 -> |11-7|=4, no fire            buffer (1,2,7,11)
+    //   13.0 -> |13-7|=6 > 5: FIRE 1 over the newest 3 (7,11,13)=31.0; lastFire=13
     ms.addData(Seq(1.0, 2.0, 7.0, 11.0, 13.0).zipWithIndex.map {
       case (v, i) => Ev(i + 1, ts(i + 1), 1, "a", v) }: _*)
     q.processAllAvailable()
     val afterB1 = spark.table("dw").collect()
-      .map(r => (r.getLong(1), r.getDouble(2), r.getLong(3), r.getDouble(4))).toSet
-    assert(afterB1 == Set((0L, 7.0, 3L, 10.0), (1L, 13.0, 3L, 31.0)))
+      .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    assert(afterB1 == Set((0L, 3L, 10.0), (1L, 3L, 31.0)))
     // the comparison point survives the batch boundary and only
     // advances on fire: 16.0 is |16-13|=3 (no fire), then 20.0 is
-    // |20-13|=7 > 5 -> FIRE 2 over the evicted ring (13,16,20)=49.0
+    // |20-13|=7 > 5 -> FIRE 2 over the newest 3 (13,16,20)=49.0
     ms.addData(Ev(6, ts(6), 1, "a", 16.0), Ev(7, ts(7), 1, "a", 20.0))
     q.processAllAvailable(); q.stop()
     val all = spark.table("dw").collect()
-      .map(r => (r.getLong(1), r.getDouble(2), r.getLong(3), r.getDouble(4))).toSet
-    assert(all == afterB1 + ((2L, 20.0, 3L, 49.0)))
+      .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    assert(all == afterB1 + ((2L, 3L, 49.0)))
   }
 
   test("punctuated watermark markers close windows immediately and drop older arrivals") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[Ev]
-    val q = Streams.punctuatedTumbling(ms.toDS(), widthMs = 5 * 60000L).writeStream
+    val q = WindowSpi.punctuatedTumbling(ms.toDS(), widthMs = 5 * 60000L).writeStream
       .format("memory").queryName("punct").outputMode(OutputMode.Append()).start()
     // events in [0,5min) then a marker at 5min: the marker ALONE
     // closes window [0,5) — no periodic estimate, no extra batch
@@ -238,7 +239,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[Ev]
-    val q = Streams.countWindow(ms.toDS(), 3).writeStream
+    val q = WindowSpi.globalWindow(ms.toDS(), PurgingTrigger(CountTrigger(3)), NoEvictor).writeStream
       .format("memory").queryName("cw2").outputMode(OutputMode.Append()).start()
     ms.addData(Ev(1, ts(1), 1, "a", 1.0), Ev(2, ts(2), 1, "a", 2.0))
     q.processAllAvailable()
@@ -258,17 +259,18 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long, Double)]()
     val ms = MemoryStream[Ev]
-    def start() = Streams.countWindow(ms.toDS(), 3).writeStream
+    def start() = WindowSpi.globalWindow(ms.toDS(), PurgingTrigger(CountTrigger(3)), NoEvictor)
+      .writeStream
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append())
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Streams.CountWin], _: Long) =>
-        b.collect().foreach(w => got.add((w.user_id, w.win_idx, w.n, w.sum_v)))
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[WindowSpi.SpiWin], _: Long) =>
+        b.collect().foreach(w => got.add((w.user_id, w.fire_idx, w.n, w.sum_v)))
       }
       .start()
     val q1 = start()
     ms.addData(Ev(1, ts(1), 1, "a", 1.0), Ev(2, ts(2), 1, "a", 2.0))
     q1.processAllAvailable(); q1.stop()
-    assert(got.isEmpty) // window still open at shutdown: state = (n=2, sum=3)
+    assert(got.isEmpty) // window still open at shutdown: buffer (1,2), count 2
     val q2 = start()
     ms.addData(Ev(3, ts(3), 1, "a", 3.0))
     q2.processAllAvailable(); q2.stop()
@@ -288,7 +290,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     import rocks.implicits._
     implicit val ctx = rocks.sqlContext
     val ms = MemoryStream[Ev]
-    val q = Streams.countWindow(ms.toDS(), 3).writeStream
+    val q = WindowSpi.globalWindow(ms.toDS(), PurgingTrigger(CountTrigger(3)), NoEvictor).writeStream
       .format("memory").queryName("rocks_cw").outputMode(OutputMode.Append()).start()
     ms.addData((1 to 7).map(i => Ev(i, ts(i), 1, "a", i.toDouble)): _*)
     q.processAllAvailable()

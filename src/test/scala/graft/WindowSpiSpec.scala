@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Streams.Ev
-import graft.streaming.{Streams, WindowSpi}
+import graft.streaming.WindowSpi
 import graft.streaming.WindowSpi._
 
 /** Static virtual clock for the processing-time window spec —
@@ -17,9 +17,10 @@ object VirtualClock {
   val now = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 
-/** The trigger/evictor SPI must reproduce the hand-fused operators
-  * element-for-element — each fused form is one composition point in
-  * the SPI's space, so equivalence is the strongest cheap oracle. */
+/** The keyed-window state machines: hand-computed Flink traces for
+  * every trigger, evictor and assigner, property checks of the Spark
+  * plumbing against the same folds run without Spark, and each graded
+  * batch twin against its streaming operator. */
 class WindowSpiSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(min: Int): Timestamp = new Timestamp(min * 60000L)
@@ -42,53 +43,6 @@ class WindowSpiSpec extends AnyFunSuite with SparkSpec {
     q.stop()
     spark.table(name).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-  }
-
-  // split mid-stream so every equivalence also covers cross-batch state
-  private val batches = Seq(evs.take(6), evs.drop(6))
-
-  test("CountTrigger + CountEvictor reproduces the fused sliding count window") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val q = Streams.slidingCountWindow(ms.toDS(), size = 3, slide = 2).writeStream
-      .format("memory").queryName("spi_fused_scw").outputMode(OutputMode.Append()).start()
-    batches.foreach { b => ms.addData(b: _*); q.processAllAvailable() }
-    q.stop()
-    val fused = spark.table("spi_fused_scw").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val spi = runSpi("spi_scw", CountTrigger(2), CountEvictor(3), batches)
-    assert(spi == fused && spi.nonEmpty)
-  }
-
-  test("PurgingTrigger(CountTrigger) with no evictor reproduces the tumbling count window") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val q = Streams.countWindow(ms.toDS(), 3).writeStream
-      .format("memory").queryName("spi_fused_cw").outputMode(OutputMode.Append()).start()
-    batches.foreach { b => ms.addData(b: _*); q.processAllAvailable() }
-    q.stop()
-    val fused = spark.table("spi_fused_cw").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val spi = runSpi("spi_cw", PurgingTrigger(CountTrigger(3)), NoEvictor, batches)
-    assert(spi == fused && spi.nonEmpty)
-  }
-
-  test("DeltaTrigger + CountEvictor reproduces the fused delta window") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[Ev]
-    val q = Streams.deltaWindow(ms.toDS(), threshold = 5.0, size = 3).writeStream
-      .format("memory").queryName("spi_fused_dw").outputMode(OutputMode.Append()).start()
-    batches.foreach { b => ms.addData(b: _*); q.processAllAvailable() }
-    q.stop()
-    // fused emits (user, fire_idx, trigger_v, n, sum); SPI emits
-    // (user, fire_idx, n, sum) — compare on the common projection
-    val fused = spark.table("spi_fused_dw").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(3), r.getDouble(4))).toSet
-    val spi = runSpi("spi_dw", DeltaTrigger(5.0), CountEvictor(3), batches)
-    assert(spi == fused && spi.nonEmpty)
   }
 
   test("globalWindow equals a single-pass driver simulator on random traces and batch splits") {
@@ -433,7 +387,7 @@ class WindowSpiSpec extends AnyFunSuite with SparkSpec {
         r.getString(3), r.getDouble(4))
     }.toSeq
     val ms = MemoryStream[Ev]
-    val q = Streams.punctuatedTumbling(ms.toDS(), WindowSpi.Q107WidthMs, WindowSpi.Q107Marker)
+    val q = WindowSpi.punctuatedTumbling(ms.toDS(), WindowSpi.Q107WidthMs, WindowSpi.Q107Marker)
       .writeStream.format("memory").queryName("spi_q107")
       .outputMode(OutputMode.Append()).start()
     ms.addData(evs: _*); q.processAllAvailable(); q.stop()
@@ -484,7 +438,7 @@ class WindowSpiSpec extends AnyFunSuite with SparkSpec {
           val elems = es.sortBy(e => (e.ts.getTime, e.event_id))
             .map(e => WinElem(e.event_id, e.ts.getTime, e.value))
           val (s2, fires) = WindowSpi.timeWindowFold(states(uid), elems.iterator,
-            300000L, trigger, evictor, latenessMs)
+            300000L, trigger, evictor, tumblingAssign(300000L), latenessMs)
           states += uid -> s2
           fires.foreach { case (ws, t, fn, sum) =>
             expect += ((uid, ws, t, fn, math.rint(sum * 100) / 100))
@@ -562,5 +516,22 @@ class WindowSpiSpec extends AnyFunSuite with SparkSpec {
     val spi = runSpi("spi_te", CountTrigger(5), TimeEvictor(2 * 60000L),
       Seq(evs.filter(_.user_id == 2)))
     assert(spi == Set((2L, 0L, 2L, 36.0)))
+  }
+
+  test("window constructors reject arguments that could never fire") {
+    import spark.implicits._
+    val ds = spark.emptyDataset[Ev]
+    val bad: Seq[(String, () => Any)] = Seq(
+      "CountTrigger(0)" -> (() => CountTrigger(0)),
+      "DeltaTrigger(0.0)" -> (() => DeltaTrigger(0.0)),
+      "CountEvictor(0)" -> (() => CountEvictor(0)),
+      "TimeEvictor(0)" -> (() => TimeEvictor(0)),
+      "tumblingEventTime width 0" -> (() => WindowSpi.tumblingEventTime(ds, 0L, EventTimeTrigger)),
+      "slidingEventTime 10/3" -> (() => WindowSpi.slidingEventTime(ds, 10L, 3L, EventTimeTrigger)),
+      "sessionEventTime gap 0" -> (() => WindowSpi.sessionEventTime(ds, 0L)),
+      "punctuatedTumbling width 0" -> (() => WindowSpi.punctuatedTumbling(ds, 0L)))
+    bad.foreach { case (name, make) =>
+      withClue(name) { intercept[IllegalArgumentException](make()) }
+    }
   }
 }
