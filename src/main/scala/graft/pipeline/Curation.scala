@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.Portable._
 import graft.sources.Tables
@@ -813,13 +812,12 @@ object Curation {
     * That relies on the arrival contract: batches arrive in
     * event-time order (a CDC log's), so no batch event precedes a
     * prior row; q216 is the maintainer for feeds that break it. The
-    * prior-history lookup is the per-trigger cost, and it is
-    * DIRECTORY-PRUNED: rows are hive-partitioned by key bucket
-    * (`kb = doc_id % `[[ScdKeyBuckets]]) and the lookup filters to the
-    * batch's buckets before the masking join — the q199 serving-read
-    * posture applied to a dimension table, so at 100 TB a trigger
-    * reads the touched buckets, not the dimension. (The bucket list
-    * is a bounded ≤ ScdKeyBuckets list observed on the keys write.)
+    * prior-history lookup is a semi-join of the log on the batch's
+    * doc ids, and the rewrite lands with the batch's masking keys as
+    * ONE entry write (one commit) per trigger. The log is not
+    * hive-partitioned: a graded trigger carries thousands of doc ids,
+    * so a key-bucket layout would keep every bucket and only add
+    * files and a rebalance shuffle.
     * CurationSpec re-drives the identical feed at 1/2/3
     * time-contiguous splits and pins identical history — per-doc
     * results depend only on the doc's own event sequence, so
@@ -829,8 +827,6 @@ object Curation {
     * Oracle: the from-scratch window form over the full feed — each
     * upsert's `valid_to` is the `lead(ts)` of the doc's next event,
     * `is_current` = no later event. */
-  val ScdKeyBuckets = 16
-
   private[graft] def scd2Events(spark: SparkSession, dir: String)
       : DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
@@ -853,57 +849,25 @@ object Curation {
     olds.unionByName(recrawls).unionByName(adds).unionByName(tombstones)
   }
 
-  /** The per-trigger DIRECTORY-PRUNED prior-state read shared by both
-    * SCD2 maintainers (q212 history rows, q216 event sets): an
-    * explicit-schema empty frame on the first trigger (a
-    * hive-partitioned layout cannot represent a seeded empty), else
-    * the durable log filtered to the batch's key buckets — a bounded
-    * ≤ [[ScdKeyBuckets]]-value driver-side list is the pruning
-    * predicate — and semi-joined to the batch's doc ids (duplicates
-    * allowed: a semi-join only tests existence). One log listing
-    * decides both branches. One implementation so the read posture
-    * cannot drift between the maintainers. */
-  private def prunedPrior(state: graft.streaming.DurableIndex,
-      kbs: Seq[Int], ids: DataFrame,
+  /** The per-trigger prior-state read shared by both SCD2 maintainers
+    * (q212 history rows, q216 event sets): an explicit-schema empty
+    * frame on the first trigger, else the durable log semi-joined to
+    * the batch's doc ids (duplicates allowed: a semi-join only tests
+    * existence). One log listing decides both branches. One
+    * implementation so the read posture cannot drift between the
+    * maintainers. No broadcast hint on ids (r16 advice/stretch #7):
+    * the batch id set is unbounded — a deployment backfill of
+    * millions of ids would pin an oversized broadcast on every
+    * executor — so the planner sizes the join from the batch's own
+    * statistics. */
+  private def prunedPrior(state: graft.streaming.DurableIndex, ids: DataFrame,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     state.currentOption() match {
-      // no broadcast hint on ids (r16 advice/stretch #7): the batch id
-      // set is unbounded — a deployment backfill of millions of ids
-      // would pin an oversized broadcast on every executor. `ids`
-      // carries the batch's measured row count instead
-      // (appendBatchKeys), so the planner broadcasts a micro-batch's
-      // ids statically and shuffles a backfill's.
-      case Some(cur) =>
-        cur.filter(col("kb").isin(kbs: _*)).join(ids, Seq("doc_id"), "left_semi")
+      case Some(cur) => cur.join(ids, Seq("doc_id"), "left_semi")
       case None =>
         ids.sparkSession.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     }
-
-  /** Key-bucket the trigger's batch (`kb = doc_id % `[[ScdKeyBuckets]]),
-    * write its masking keys, and return the bucketed events with the
-    * batch's distinct key buckets. The bounded ≤ [[ScdKeyBuckets]]
-    * pruning list and the batch's row count ride the keys write
-    * itself as an Observation, so the write's own `doc_id` distinct
-    * is the trigger's only key aggregation (one action, one shuffle).
-    * The returned events carry the measured row count as their plan
-    * statistics ([[org.apache.spark.sql.graftbridge.Bridge
-    * .withRowCount]]), so the planner sizes the prior read's
-    * semi-join on them statically. The keys-before-rows commit order
-    * of [[graft.streaming.DurableIndex.append]] is preserved
-    * (appendKeys is its first half; the prior-state read between the
-    * halves only sees rows-committed entries). */
-  private def appendBatchKeys(state: graft.streaming.DurableIndex,
-      batchId: Long, batch: DataFrame): (DataFrame, Seq[Int]) = {
-    def bucketed(df: DataFrame) =
-      df.withColumn("kb", pmod(col("doc_id"), lit(ScdKeyBuckets)).cast("int"))
-    val obs = org.apache.spark.sql.Observation()
-    state.appendKeys(batchId, bucketed(batch)
-      .observe(obs, collect_set(col("kb")).as("kbs"), count(lit(1)).as("n")))
-    val seen = obs.get
-    (bucketed(Bridge.withRowCount(batch, seen("n").asInstanceOf[Long])),
-      seen("kbs").asInstanceOf[Seq[Int]])
-  }
 
   /** One trigger's history rewrite: the touched docs' `prior` history
     * rows, recast as upserts at `valid_from` that carry their own
@@ -917,14 +881,14 @@ object Curation {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("ts"), col("__ord"))
     prior
       .select(col("doc_id"), col("valid_from").as("ts"), lit("u").as("op"),
-        col("h"), col("kb"), col("valid_to").as("__to"),
+        col("h"), col("valid_to").as("__to"),
         when(col("valid_to").isNull, 1).otherwise(0).as("__ord"))
       .unionByName(ev.select(col("doc_id"), col("ts"), col("op"), col("h"),
-        col("kb"), lit(null).cast("long").as("__to"), lit(2).as("__ord")))
+        lit(null).cast("long").as("__to"), lit(2).as("__ord")))
       .withColumn("valid_to", coalesce(col("__to"), lead(col("ts"), 1).over(w)))
       .filter(col("op") === "u")
       .select(col("doc_id"), col("h"), col("ts").as("valid_from"),
-        col("valid_to"), col("kb"))
+        col("valid_to"))
   }
 
   /** Drive the q212 SCD2 maintenance over `batches` and return the
@@ -935,18 +899,15 @@ object Curation {
       batches: Seq[DataFrame], tag: String)
       : graft.streaming.DurableIndex = {
     import org.apache.spark.sql.types._
-    val state = graft.streaming.DurableIndex.temp(spark, tag, "doc_id",
-      partitionCols = Seq("kb"))
+    val state = graft.streaming.DurableIndex.temp(spark, tag, "doc_id")
     val histSchema = StructType(Seq(StructField("doc_id", LongType),
       StructField("h", StringType), StructField("valid_from", LongType),
-      StructField("valid_to", LongType),
-      StructField("kb", IntegerType)))
+      StructField("valid_to", LongType)))
     graft.streaming.FileDrip.drive(batches) { stream =>
       graft.streaming.Streams.toForeachBatch(stream,
           "q212_scd2_history") { (batch, batchId) =>
-        val (ev, kbs) = appendBatchKeys(state, batchId, batch)
-        val prior = prunedPrior(state, kbs, ev.select(col("doc_id")), histSchema)
-        state.appendRows(batchId, scd2Rewrite(prior, ev))
+        val prior = prunedPrior(state, batch.select(col("doc_id")), histSchema)
+        state.append(batchId, batch, scd2Rewrite(prior, batch))
       }
     }
     state
@@ -1070,10 +1031,10 @@ object Curation {
     * extra per trigger. The durable log stores each touched
     * document's FULL accumulated EVENT set instead of derived history
     * rows: per trigger, prior events for the batch's docs are read
-    * DIRECTORY-PRUNED (key-bucket partitions + broadcast semi-join,
-    * q212's read posture), unioned with the batch, DEDUPLICATED (so
-    * an at-least-once feed cannot double-insert either), and
-    * re-appended as one idempotent replace-by-key entry. History (the
+    * through a semi-join on the batch's doc ids (q212's read posture),
+    * unioned with the batch, DEDUPLICATED (so an at-least-once feed
+    * cannot double-insert either), and re-appended with the batch's
+    * masking keys as one idempotent replace-by-key entry (one write). History (the
     * lead window) is derived at serve time from the complete per-doc
     * event set — the state after ANY arrival permutation is the same
     * event SET, so a late event slots into its correct interval
@@ -1090,21 +1051,19 @@ object Curation {
     // one materialization, cheap per-batch slices (scd2Batches note)
     val events = scd2Events(spark, dir).localCheckpoint(true)
     val batches = arrival.map(ps => events.filter(col("ts").isin(ps: _*)))
-    val state = graft.streaming.DurableIndex.temp(spark, "q216", "doc_id",
-      partitionCols = Seq("kb"))
+    val state = graft.streaming.DurableIndex.temp(spark, "q216", "doc_id")
     val evSchema = StructType(Seq(StructField("doc_id", LongType),
       StructField("ts", LongType), StructField("op", StringType),
-      StructField("h", StringType), StructField("kb", IntegerType)))
-    val evCols = Seq("doc_id", "ts", "op", "h", "kb").map(col)
+      StructField("h", StringType)))
+    val evCols = evSchema.fieldNames.toSeq.map(col)
     graft.streaming.FileDrip.drive(batches) { stream =>
       graft.streaming.Streams.toForeachBatch(stream,
           "q216_scd2_outoforder") { (batch, batchId) =>
-        val (ev, kbs) = appendBatchKeys(state, batchId, batch)
-        val merged = prunedPrior(state, kbs, ev.select(col("doc_id")), evSchema)
+        val merged = prunedPrior(state, batch.select(col("doc_id")), evSchema)
           .select(evCols: _*)
-          .unionByName(ev.select(evCols: _*))
+          .unionByName(batch.select(evCols: _*))
           .distinct()
-        state.appendRows(batchId, merged)
+        state.append(batchId, batch, merged)
       }
     }
     val w = Window.partitionBy(col("doc_id")).orderBy(col("ts"))

@@ -24,9 +24,9 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * its key. Masking keys are the raw batch keys, never the derived
   * rows, so a re-ingested unit whose new derivation is EMPTY (a
   * zero-token document) still retires its stale rows — the r12
-  * lesson, kept. [[current]] is a single join keyed on `key`
-  * (rows tagged with their entry seq vs the max seq that rewrote
-  * each key), not an n-squared anti-join chain; read cost grows with
+  * lesson, kept. [[current]] is a single anti-join keyed on `key`
+  * (rows tagged with their entry seq vs the mask rows of later
+  * entries), not an n-squared anti-join chain; read cost grows with
   * log length until [[compact]] folds everything into a new BASE
   * generation — triggered automatically once the log exceeds
   * [[autoCompactEntries]] entries (the LSM cadence), or by hand at a
@@ -36,27 +36,28 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * resolved from the path's own scheme (r14 missing #1), so the same
   * log runs on `file:`, `hdfs://` or `s3a://` unchanged. Layout:
   *
-  *  - `path/bNNNNN/keys` then `path/bNNNNN/rows` — one entry per
-  *    trigger, seq = batchId + 1 (seed = b00000). `rows/_SUCCESS` is
-  *    the entry's ONLY commit point: keys are written first, and a
-  *    keys dir whose rows never committed is ignored by readers (a
-  *    crash between the two writes must not retire rows whose
-  *    replacements were never written — r14 advice), then simply
-  *    overwritten when the trigger replays.
-  *  - `path/base_sS_gG` — a compacted fold of everything up to and
-  *    including entry seq S, generation G. Readers pick the newest
-  *    committed base (max (S, G)) plus entries with seq > S, so
-  *    [[compact]] needs NO rename and NO delete-before-promote: it
-  *    writes the next generation directly (parquet's `_SUCCESS` is
-  *    the commit), then retires superseded dirs — a crash at ANY
-  *    point leaves only dirs readers already ignore (r14 advice:
-  *    promote first, delete second; also object-store-safe, since
-  *    nothing relies on an atomic rename).
+  *  - `path/bNNNNN` — one entry per trigger, seq = batchId + 1, as
+  *    ONE parquet dataset written by ONE write action: the batch's
+  *    rows (`__mask` false) plus one mask row per distinct masking key
+  *    (`__mask` true, every other column null). Its `_SUCCESS` is the
+  *    entry's only commit point: a crash mid-write leaves part files
+  *    without `_SUCCESS`, which readers ignore and the replayed
+  *    trigger overwrites, so keys can never commit without their rows.
+  *  - `path/base_sS_gG` — a fold of everything up to and including
+  *    entry seq S, generation G; [[seed]] writes generation 0 at seq 0.
+  *    Readers pick the newest committed base (max (S, G)) plus entries
+  *    with seq > S, so [[compact]] needs NO rename and NO
+  *    delete-before-promote: it writes the next generation directly
+  *    (parquet's `_SUCCESS` is the commit), then retires superseded
+  *    dirs — a crash at ANY point leaves only dirs readers already
+  *    ignore (r14 advice: promote first, delete second; also
+  *    object-store-safe, since nothing relies on an atomic rename).
   *
-  * `rows` and the base may be hive-partitioned ([[partitionCols]])
-  * so serving reads prune at the directory level — the q199 IVF
-  * index partitions by `cell` and a probe touches NProbe/NCells of
-  * the files, not all of them.
+  * Entries and bases may be hive-partitioned ([[partitionCols]]) so
+  * serving reads prune at the directory level — the q199 IVF index
+  * partitions by `cell` and a probe touches NProbe/NCells of the
+  * files, not all of them. An entry's mask rows land in the null
+  * partition, which the masking-key read alone scans.
   *
   * Reference analogue: Flink's checkpointed operator state
   * (`flink-runtime` state backends, exercised by
@@ -68,22 +69,19 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
     autoCompactEntries: Int = DurableIndex.DefaultAutoCompactEntries) {
 
   private def entryDir(seq: Long) = f"$path/b$seq%05d"
-  private def rowsDir(seq: Long) = s"${entryDir(seq)}/rows"
-  private def keysDir(seq: Long) = s"${entryDir(seq)}/keys"
   private def baseDir(seq: Long, gen: Long) = f"$path/base_s$seq%05d_g$gen%03d"
+  import DurableIndex.Mask
 
   private def fs: FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** One listing's view of the log. `base` = newest committed fold
     * (seq it covers through, generation, dir); `entrySeqs` = LIVE
-    * committed entries (seq > base's coverage); `keyedSeqs` = the
-    * subset of live entries whose keys dir is also committed AND
-    * whose rows committed — rows/_SUCCESS is the real commit point
-    * (r14 advice #1); `staleSeqs` = committed entries a base already
-    * covers (compaction leftovers awaiting deletion). */
+    * committed entries (seq > base's coverage); `staleSeqs` =
+    * committed entries a base already covers (compaction leftovers
+    * awaiting deletion). */
   private case class Snapshot(base: Option[(Long, Long, String)],
-      entrySeqs: Seq[Long], keyedSeqs: Seq[Long], staleSeqs: Seq[Long]) {
+      entrySeqs: Seq[Long], staleSeqs: Seq[Long]) {
     def maxSeq: Long = (base.map(_._1).toSeq ++ entrySeqs).max
     def liveSeqs: Seq[Long] = (base.map(_._1).toSeq ++ entrySeqs).sorted
   }
@@ -98,7 +96,7 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
     * SAME committed dirs once per trigger (prunedPrior) plus once at
     * serve time (guide §6: avoid repeated listings/inference). The
     * memo is filled at WRITE time for every dir this instance commits
-    * (keys, rows, empty marker, base), so a dir the instance wrote
+    * (entry, healed entry, base), so a dir the instance wrote
     * itself is never inferred; only dirs committed by an earlier
     * writer (a restarted maintainer) pay one inference on first read.
     * Entry dirs are immutable once committed (a checkpoint replay
@@ -113,12 +111,17 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
     * place the two could differ, so a partitioned dir is recorded only
     * when every partition column is an INT (discovery types integral
     * values that fit an int as IntegerType) and type inference is on;
-    * any other partitioned layout keeps first-read inference. An empty
-    * marker is an unpartitioned file holding the columns in the
-    * writer's order, and is recorded in that order. DurableIndexSpec
-    * pins written ≡ inferred for each layout. */
+    * any other partitioned layout keeps first-read inference. A healed
+    * entry or empty marker is an unpartitioned file holding the columns
+    * in the writer's order, and is recorded in that order.
+    * DurableIndexSpec pins written ≡ inferred for each layout. */
   private val schemaCache =
     scala.collection.concurrent.TrieMap.empty[String, StructType]
+
+  /** Mask rows per entry dir, observed on the entry's own write — the
+    * broadcast guard's size input for dirs this instance wrote. */
+  private val maskRows =
+    scala.collection.concurrent.TrieMap.empty[String, Long]
 
   private def readParquet(dir: String): DataFrame =
     schemaCache.get(dir) match {
@@ -215,7 +218,7 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
 
   private def snapshot(): Snapshot = {
     val root = new Path(path)
-    if (!fs.exists(root)) return Snapshot(None, Nil, Nil, Nil)
+    if (!fs.exists(root)) return Snapshot(None, Nil, Nil)
     def committedAt(dir: String): Boolean =
       fs.exists(new Path(dir, "_SUCCESS"))
     val names = fs.listStatus(root).map(_.getPath.getName)
@@ -223,123 +226,100 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
       if committedAt(s"$path/$n") => (s.toLong, g.toLong, s"$path/$n") }
     val base = bases.sortBy(b => (b._1, b._2)).lastOption
     val floor = base.map(_._1).getOrElse(-1L)
-    val rowsCommitted = names.collect { case EntryRe(s)
-      if committedAt(rowsDir(s.toLong)) => s.toLong }.sorted.toSeq
-    val (stale, live) = rowsCommitted.partition(_ <= floor)
-    val keyed = live.filter(s => committedAt(keysDir(s)))
-    Snapshot(base, live, keyed, stale)
+    val committed = names.collect { case EntryRe(s)
+      if committedAt(entryDir(s.toLong)) => s.toLong }.sorted.toSeq
+    val (stale, live) = committed.partition(_ <= floor)
+    Snapshot(base, live, stale)
   }
 
-  /** Explicit-schema UNPARTITIONED empty marker: same columns, zero
-    * rows, readable footer — what an empty hive-partitioned write
-    * (which emits `_SUCCESS` but no data file, so no inferable
-    * schema) is replaced with. */
-  private def writeEmptyMarker(dir: String, schema: StructType): Unit = {
-    spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-      .repartition(1).write.mode("overwrite").parquet(dir)
-    remember(dir, schema)
+  /** One repartition(1) write of `df` without hive partitions, so the
+    * dir always holds a readable footer (even for zero rows), recorded
+    * in the writer's column order. */
+  private def writeUnpartitioned(dir: String, df: DataFrame): Unit = {
+    df.repartition(1).write.mode("overwrite").parquet(dir)
+    remember(dir, df.schema)
   }
 
-  private def writeRows(dir: String, rows: DataFrame,
-      healByReplay: Boolean = false): Unit = {
-    // cluster by the partition columns before a partitioned write —
-    // otherwise every task fans out one file per partition dir it
-    // touches (tasks × cells tiny files per entry, the classic
-    // small-files trap; measured +0.6 s/entry on the q199 log).
-    // The REBALANCE hint (guide §6 "coalesce on write") keeps the
-    // clustering but lets AQE size the write tasks from the REAL
-    // shuffle stats — a micro-batch entry lands as 1-2 tasks, a
-    // deployment-scale entry as advisory-sized tasks, and a skewed
-    // partition value splits instead of bottlenecking one task.
-    // an EMPTY partitioned write emits _SUCCESS but zero data files
-    // (no partition dir ever materializes), leaving a "committed"
-    // dir spark.read.parquet cannot infer a schema from — a
-    // pure-tombstone CDC trigger that re-emits no rows hits this,
-    // and so does a compact() of an all-tombstoned index (r15
-    // advice). Two postures for that hazard:
-    //  - healByReplay=true (per-trigger APPEND entries, r18): the
-    //    emptiness audit rides the write itself as an Observation —
-    //    ONE adaptive execution instead of r17's persist + isEmpty
-    //    probe + non-adaptive cached write (the persist pinned the
-    //    plan's full shuffle-partition count: measured 33-task jobs
-    //    per micro-batch trigger) — and an empty result is repaired
-    //    AFTER the commit. The commit-then-repair window is safe
-    //    exactly here because an append crash means the trigger's
-    //    offsets never committed: checkpoint replay re-runs the
-    //    SAME batchId and overwrites the entry (the idempotence
-    //    contract this log is built on).
-    //  - healByReplay=false (seed and compact BASE folds): nothing
-    //    replays a base write, so the probe must run BEFORE the
-    //    committed write — the r16/r17 persist posture, kept: one
-    //    materialization pins the probe's snapshot and the write
-    //    drains the same cache.
+  /** One hive-partitioned write of `df`, clustered by the partition
+    * columns first — otherwise every task fans out one file per
+    * partition dir it touches (tasks × cells tiny files per entry, the
+    * classic small-files trap; measured +0.6 s/entry on the q199 log).
+    * The REBALANCE hint (guide §6 "coalesce on write") keeps the
+    * clustering but lets AQE size the write tasks from the REAL
+    * shuffle stats — a micro-batch entry lands as 1-2 tasks, a
+    * deployment-scale entry as advisory-sized tasks, and a skewed
+    * partition value splits instead of bottlenecking one task. */
+  private def writePartitioned(dir: String, df: DataFrame): Unit =
+    df.hint("rebalance", partitionCols.map(col): _*)
+      .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(dir)
+
+  /** Write a base fold (seed or compact). An EMPTY partitioned write
+    * emits `_SUCCESS` but zero data files, leaving a committed dir
+    * with no schema to infer (an all-tombstoned index's compact hits
+    * this, r15 advice). Nothing replays a base write, so the probe
+    * runs BEFORE the commit: one materialization pins the probe's
+    * snapshot and the write drains the same cache; an empty fold
+    * commits an explicit-schema unpartitioned marker instead. */
+  private def writeBase(dir: String, rows: DataFrame): Unit =
     if (partitionCols.isEmpty) {
       rows.write.mode("overwrite").parquet(dir)
       remember(dir, rows.schema)
-    } else if (healByReplay) {
-      val obs = org.apache.spark.sql.Observation()
-      rows.observe(obs, count(lit(1)).as("n"))
-        .hint("rebalance", partitionCols.map(col): _*)
-        .write.mode("overwrite").partitionBy(partitionCols: _*)
-        .parquet(dir)
-      if (obs.get("n").asInstanceOf[Long] == 0L)
-        writeEmptyMarker(dir, rows.schema)
-      else rememberPartitioned(dir, rows.schema)
     } else {
       val mat = rows.persist()
       try {
-        if (mat.isEmpty) writeEmptyMarker(dir, rows.schema)
+        if (mat.isEmpty) writeUnpartitioned(dir, spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), rows.schema))
         else {
-          mat.hint("rebalance", partitionCols.map(col): _*)
-            .write.mode("overwrite").partitionBy(partitionCols: _*)
-            .parquet(dir)
+          writePartitioned(dir, mat)
           rememberPartitioned(dir, rows.schema)
         }
       } finally mat.unpersist(blocking = false)
     }
+
+  /** Write one trigger's entry — the batch's rows and one mask row per
+    * distinct key — in ONE write action committed by its `_SUCCESS`.
+    * The row and mask-row counts ride the write as an Observation. A
+    * partitioned entry without rows holds at most the null partition,
+    * whose column types partition discovery cannot recover, so it is
+    * rewritten unpartitioned AFTER the commit. That window is safe
+    * because an append crash means the trigger's offsets never
+    * committed: checkpoint replay re-runs the SAME batchId and
+    * overwrites the entry (the idempotence contract this log is built
+    * on). */
+  private def writeEntry(dir: String, batchKeys: DataFrame,
+      batchRows: DataFrame): Unit = {
+    val keys = batchKeys.select(col(key).cast(batchRows.schema(key).dataType))
+      .distinct()
+    val entry = batchRows.withColumn(Mask, lit(false))
+      .unionByName(keys.withColumn(Mask, lit(true)), allowMissingColumns = true)
+    val obs = org.apache.spark.sql.Observation()
+    val observed = entry.observe(obs, count(when(col(Mask), 1)).as("masks"),
+      count(when(!col(Mask), 1)).as("rows"))
+    if (partitionCols.isEmpty) observed.write.mode("overwrite").parquet(dir)
+    else writePartitioned(dir, observed)
+    val n = obs.get
+    maskRows.put(dir, n("masks").asInstanceOf[Long])
+    if (partitionCols.isEmpty) remember(dir, entry.schema)
+    else if (n("rows").asInstanceOf[Long] == 0L) writeUnpartitioned(dir, entry)
+    else rememberPartitioned(dir, entry.schema)
   }
 
-  /** Seed the log with the pre-indexed base as entry 0. Nothing
-    * precedes the base, so it carries no masking key-set. */
-  def seed(base: DataFrame): Unit = { fence(); writeRows(rowsDir(0L), base) }
+  /** Seed the log with the pre-indexed base as the generation-0 fold
+    * at seq 0. Nothing precedes the base, so it carries no masking
+    * keys. */
+  def seed(base: DataFrame): Unit = { fence(); writeBase(baseDir(0L, 0L), base) }
 
-  /** One trigger's upsert: keys first, rows second (commit marker).
-    * seq = batchId + 1 — a checkpoint resume replays an incomplete
-    * trigger WITH ITS ORIGINAL batchId, landing on the same entry.
-    * Once the live log exceeds [[autoCompactEntries]] entries the
-    * append compacts it in-line (safe here: appends against one log
-    * are serialized by the owning stream's foreachBatch), so read
+  /** One trigger's upsert: the batch's masking keys and derived rows as
+    * one entry, seq = batchId + 1 — a checkpoint resume replays an
+    * incomplete trigger WITH ITS ORIGINAL batchId, landing on the same
+    * entry. Once the live log exceeds [[autoCompactEntries]] entries
+    * the append compacts it in-line (safe here: appends against one
+    * log are serialized by the owning stream's foreachBatch), so read
     * cost is bounded by the threshold instead of stream lifetime. */
   def append(batchId: Long, batchKeys: DataFrame, batchRows: DataFrame): Unit = {
-    appendKeys(batchId, batchKeys)
-    appendRows(batchId, batchRows)
-  }
-
-  /** First half of [[append]] (r18 action fusion): the masking-key
-    * write alone. Exposed so a maintainer whose prior-state read
-    * needs a driver-side fact about the batch (the SCD2 key-bucket
-    * pruning list and the batch size) can ride it as an Observation
-    * on THIS action instead of paying a separate collect — the
-    * keys-before-rows commit order is unchanged (a keys dir whose rows never commit
-    * is ignored by every reader, and the prior-state read only sees
-    * rows-committed entries, so reading state between the two halves
-    * observes exactly what it observed before the split). */
-  def appendKeys(batchId: Long, batchKeys: DataFrame): Unit = {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     fence()
-    val keys = batchKeys.select(col(key)).distinct()
-    keys.write.mode("overwrite").parquet(keysDir(batchId + 1))
-    remember(keysDir(batchId + 1), keys.schema)
-  }
-
-  /** Second half of [[append]]: the entry's rows (the commit point),
-    * then the LSM fold when due. Caller must have written the keys
-    * for the same batchId first. */
-  def appendRows(batchId: Long, batchRows: DataFrame): Unit = {
-    require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    fence()
-    writeRows(rowsDir(batchId + 1), batchRows, healByReplay = true)
+    writeEntry(entryDir(batchId + 1), batchKeys, batchRows)
     if (autoCompactEntries > 0) compactIfNeeded(autoCompactEntries)
   }
 
@@ -373,9 +353,8 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
   }
 
   /** The maintained index as of the last committed entry: every row
-    * tagged with its entry seq, every masking key with the max seq
-    * that rewrote it, one left join — a row survives iff it is at
-    * least as new as the newest rewrite of its key. */
+    * and every mask row tagged with its entry seq, one anti-join — a
+    * row survives iff no mask row of its key is newer. */
   def current(): DataFrame = currentFrom(snapshot())
 
   /** [[current]], or None while nothing is committed, from ONE log
@@ -392,34 +371,47 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
   private def currentFrom(s: Snapshot): DataFrame = {
     require(s.base.nonEmpty || s.entrySeqs.nonEmpty,
       s"no committed state under $path")
+    val entries = s.entrySeqs.map(q =>
+      q -> readParquet(entryDir(q)).withColumn("__seq", lit(q)))
     val rows = (s.base.map { case (seq, _, dir) =>
         readParquet(dir).withColumn("__seq", lit(seq)) }.toSeq ++
-      s.entrySeqs.map(q => readParquet(rowsDir(q))
-        .withColumn("__seq", lit(q))))
+      entries.map(_._2.filter(!col(Mask)).drop(Mask)))
       .reduce(_ unionByName _)
-    if (s.keyedSeqs.isEmpty) rows.drop("__seq")
+    // an entry's mask rows retire only OLDER rows, so without a base
+    // the oldest entry's retire nothing
+    val masking = if (s.base.isEmpty) entries.drop(1) else entries
+    if (masking.isEmpty) rows.drop("__seq")
     else {
-      val rewrites = s.keyedSeqs.map(q => readParquet(keysDir(q))
-          .withColumn("__kseq", lit(q)))
+      // a mask row is null in every other column, so on a partitioned
+      // log the null-partition filter prunes the key read to its dir
+      val maskFilter = (col(Mask) +:
+        partitionCols.filter(_ != key).map(col(_).isNull)).reduce(_ && _)
+      val masks = masking
+        .map(_._2.filter(maskFilter)
+          .select(col(key).as("__mkey"), col("__seq").as("__kseq")))
         .reduce(_ unionByName _)
-        .groupBy(col(key)).agg(max(col("__kseq")).as("__kseq"))
       // broadcast guard (r14 missing #2): the hint is only an
-      // optimization — between compactions the rewrites relation
-      // grows with ingested-key cardinality, and past the session's
+      // optimization — between compactions the mask relation grows
+      // with ingested-key cardinality, and past the session's
       // autoBroadcast threshold the planner (AQE) must stay free to
-      // pick a shuffle join. On-disk parquet length × a decompression
-      // factor is the cheap driver-side size proxy (one FS stat per
-      // keys dir, no extra job).
-      val keyBytes = s.keyedSeqs.map(q =>
-        fs.getContentSummary(new Path(keysDir(q))).getLength).sum
+      // pick a shuffle join. Its size is the mask rows observed on
+      // each entry's write × the broadcast row width (an UnsafeRow's
+      // null word, the key and `__kseq`), with no extra job. An entry
+      // another instance wrote falls back to its on-disk length × a
+      // decompression factor (one FS stat): that counts its rows too,
+      // so it can forgo a broadcast but never pins an oversized one.
+      val rowBytes = 16L + rows.schema(key).dataType.defaultSize
+      val keyBytes = masking.map { case (q, _) =>
+        val dir = entryDir(q)
+        maskRows.get(dir).fold(fs.getContentSummary(new Path(dir)).getLength *
+          DurableIndex.ParquetExpansion)(_ * rowBytes)
+      }.sum
       val limit = broadcastLimitBytes
-      val hinted = if (limit > 0 &&
-          keyBytes * DurableIndex.ParquetExpansion <= limit)
-        broadcast(rewrites)
-      else rewrites
-      rows.join(hinted, Seq(key), "left_outer")
-        .filter(col("__kseq").isNull || col("__seq") >= col("__kseq"))
-        .drop("__seq", "__kseq")
+      val hinted = if (limit > 0 && keyBytes <= limit) broadcast(masks)
+        else masks
+      rows.join(hinted, col(key) === col("__mkey") && col("__seq") < col("__kseq"),
+          "left_anti")
+        .drop("__seq")
     }
   }
 
@@ -448,7 +440,7 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
       s"no committed state under $path")
     val gen = s.base.map(_._2 + 1).getOrElse(1L)
     val target = baseDir(s.maxSeq, gen)
-    writeRows(target, currentFrom(s))
+    writeBase(target, currentFrom(s))
     // promote-then-retire (r14 advice #2): only now drop what the
     // new base covers — every covered entry, any entry leftovers an
     // interrupted earlier compact left behind, and EVERY other base
@@ -474,15 +466,16 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
     }
     (s.entrySeqs ++ s.staleSeqs).foreach(q =>
       fs.delete(new Path(entryDir(q)), true))
-    // every other memoized dir is retired (a torn keys dir is rewritten,
+    // every other memoized dir is retired (a torn entry is rewritten,
     // and recorded again, by its replay); the new base's written schema
     // stays, so the next read infers nothing
     schemaCache.keys.filter(_ != target).foreach(schemaCache.remove)
+    maskRows.clear()
   }
 
   /** Drop the whole log (a graded run's temp state). */
   def delete(): Unit = {
-    fs.delete(new Path(path), true); schemaCache.clear(); ()
+    fs.delete(new Path(path), true); schemaCache.clear(); maskRows.clear(); ()
   }
 }
 
@@ -495,11 +488,16 @@ object DurableIndex {
     * amortized over the threshold's worth of O(batch) appends. */
   val DefaultAutoCompactEntries = 64
 
-  /** Parquet-to-broadcast size expansion proxy: compressed columnar
-    * bytes understate the in-memory row footprint the broadcast
-    * would pin; 4× is the conservative envelope observed on the
-    * narrow (single key column) relations this log stores. */
+  /** Parquet-to-broadcast size expansion proxy for an entry whose
+    * mask-row count this instance did not observe: compressed
+    * columnar bytes understate the in-memory row footprint the
+    * broadcast would pin; 4× is the conservative envelope observed on
+    * narrow (single key column) relations. */
   val ParquetExpansion = 4L
+
+  /** The boolean column that tags an entry's mask rows: true for a
+    * masking key (every other column null), false for a data row. */
+  val Mask = "__mask"
 
   /** A fresh log under a temp dir — what a graded single-run query
     * uses; a deployment passes a durable table path instead. */

@@ -99,25 +99,34 @@ class DurableIndexSpec extends AnyFunSuite with SparkSpec {
     } finally state.delete()
   }
 
-  test("keys without committed rows never retire anything (rows/_SUCCESS is the commit point)") {
-    // r14 advice #1: append writes keys BEFORE rows; a crash between
-    // the two must not leave a key-set that masks older rows whose
-    // replacements were never written. Simulate the torn entry by
-    // writing ONLY a keys dir for a later seq.
+  test("a torn entry (part files without _SUCCESS) is ignored and its replay overwrites it") {
+    // a crash inside the entry write leaves part files holding rows AND
+    // mask rows but no _SUCCESS; its mask rows must not retire anything
+    // (their replacement rows never committed) and its seq must not
+    // count as committed. Simulate it by un-committing a written entry.
     val state = DurableIndex.temp(spark, "dix_torn", "doc_id")
     try {
       state.seed(Scoring.tfdOf(docsDf((1L, "a"), (2L, "b"))))
       val b0 = docsDf((2L, "c"))
       state.append(0L, b0.select(col("doc_id")), Scoring.tfdOf(b0))
       val before = postings(state.current())
-      // the torn trigger-1 entry: keys for doc 1 committed, rows never
-      docsDf((1L, "zz")).select(col("doc_id"))
-        .write.mode("overwrite").parquet(s"${state.path}/b00002/keys")
-      assert(postings(state.current()) == before,
-        "a torn entry's keys silently dropped index rows")
-      // the replayed trigger then lands normally on the same entry
+      val seqsBefore = state.committedSeqs()
+      // the torn trigger-1 entry: doc 1 re-ingested, commit marker lost
       val b1 = docsDf((1L, "zz"))
       state.append(1L, b1.select(col("doc_id")), Scoring.tfdOf(b1))
+      val torn = s"${state.path}/b00002"
+      assert(new java.io.File(s"$torn/_SUCCESS").delete())
+      val masks = spark.read.parquet(torn).groupBy(DurableIndex.Mask).count()
+        .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
+      assert(masks == Map(true -> 1L, false -> 1L),
+        s"torn entry should hold one row and one mask row: $masks")
+      assert(state.committedSeqs() == seqsBefore)
+      assert(postings(state.current()) == before,
+        "a torn entry's mask rows silently dropped index rows")
+      // the replayed trigger lands on the same entry and commits it
+      state.append(1L, b1.select(col("doc_id")), Scoring.tfdOf(b1))
+      assert(new java.io.File(s"$torn/_SUCCESS").exists())
+      assert(state.committedSeqs() == seqsBefore :+ 2L)
       assert(postings(state.current())
         == before.filterNot(_._1 == 1L) + ((1L, "zz", 1L)))
     } finally state.delete()
@@ -400,6 +409,42 @@ class DurableIndexSpec extends AnyFunSuite with SparkSpec {
       off.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       assert(!usesBroadcast(off))
     } finally state.delete()
+  }
+
+  test("the masking-key broadcast is sized by mask rows, so a large-rows, few-keys entry still broadcasts") {
+    // keys and rows share one entry dir, so its on-disk length counts
+    // the rows too; the writing instance sizes the key relation by the
+    // mask rows it observed on the write instead
+    val state = DurableIndex.temp(spark, "dix_bcast_rows", "doc_id")
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(threshold)
+    try {
+      state.seed(spark.range(4).select(col("id").as("doc_id"),
+        lit("seed").as("payload")))
+      // 2 keys, 4000 rows of hard-to-compress payload
+      val rows = spark.range(4000).select((col("id") % 2).as("doc_id"),
+        concat(sha2(col("id").cast("string"), 512),
+          sha2(col("id").cast("string"), 256)).as("payload"))
+      state.append(0L, rows.select(col("doc_id")), rows)
+      val entryBytes = org.apache.commons.io.FileUtils.sizeOfDirectory(
+        new java.io.File(s"${state.path}/b00001"))
+      // a threshold the entry's length exceeds but 2 keys fit
+      val limit = entryBytes / 4
+      assert(limit > 1024, s"entry too small to tell: $entryBytes bytes")
+      spark.conf.set(threshold, limit.toString)
+      def plan(df: DataFrame) = df.queryExecution.sparkPlan.toString
+      assert(plan(state.current()).contains("BroadcastHashJoin"),
+        "a 2-key entry must broadcast its keys whatever its rows weigh")
+      // another instance has no observed count: it sizes by the entry's
+      // length and leaves the join to the planner
+      assert(!plan(new DurableIndex(spark, state.path, "doc_id").current())
+        .contains("BroadcastHashJoin"))
+      spark.conf.set(threshold, "10MB")
+      assert(state.current().count() == 4002L)
+    } finally {
+      saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+      state.delete()
+    }
   }
 
   test("cell-partitioned serving read prunes whole cell directories") {
