@@ -1,10 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.streaming.WindowSpi
+import graft.streaming.WindowSpi.{EventTime, Step}
 
 /** Sequential event-pattern matching — the CEP surface (SURVEY.md
   * §2.6 neighborhood; reference ships the full Flink CEP library:
@@ -244,6 +248,36 @@ object Patterns {
        |ORDER BY w.user_id""".stripMargin
 
   // ------------------------------------------------------------ streaming
+  /** The streaming twins. Each is one per-key fold on the engine's one
+    * keyed-state driver, [[WindowSpi.keyed]] — Flink's keyed CEP
+    * operator, where only the NFA differs between patterns. A twin
+    * supplies its initial state, its tie order at equal `t_us` and
+    * its fold; the driver owns the 10-minute watermark on `t_us`, the
+    * EventTimeTimeout timer service, the per-batch sort and the
+    * last-seen time, and it stores no state for a key whose fold
+    * leaves it at the initial state (a key whose events never match
+    * step one holds nothing, on any key space).
+    *
+    * In-order contract, shared by every twin: fed in event-time order
+    * (batch boundaries anywhere between two distinct event times — a
+    * tie order applies inside one micro-batch), a twin equals its
+    * batch operator.
+    * Out-of-order arrival degrades like Flink CEP without buffering —
+    * an earlier-but-late event cannot retroactively improve an
+    * already-advanced match, and events behind the watermark are
+    * dropped by the driver. */
+  private def cepKeyed[S: Encoder, O: Encoder](events: Dataset[PEvent], initial: S,
+      order: Ordering[PEvent])(fold: (Long, S, Seq[PEvent], Long) => Step[S, O]): Dataset[O] = {
+    import events.sparkSession.implicits._
+    WindowSpi.keyed(events, initial, order,
+      Some(EventTime(timestamp_micros(col("t_us")), (e: PEvent) => e.t_us / 1000L)))(_.key)(fold)
+  }
+
+  /** Event-time order; at equal `t_us` the events whose tag satisfies
+    * `first` go first. */
+  private def byTime(first: String => Boolean = _ => false): Ordering[PEvent] =
+    Ordering.by((e: PEvent) => (e.t_us, if (first(e.tag)) 0 else 1))
+
   /** Per-key NFA state for the streaming matcher: times matched so
     * far (≤ steps, monotone — a matched step never retracts, Flink
     * CEP's skip-till-next-match on the arriving stream), the minimal
@@ -254,23 +288,12 @@ object Patterns {
   final case class ChainState(matched: List[Long], minGuard: Long, done: Boolean)
   final case class ChainMatch(key: Long, ts: Seq[Long])
 
-  /** [[PEvent]] plus the event-time Timestamp column the watermark /
-    * EventTimeTimeout machinery needs (`ets = timestamp_micros(t_us)`). */
-  final case class PEventT(key: Long, t_us: Long, tag: String, ets: java.sql.Timestamp)
-
   /** Streaming twin of [[matchChain]] — the CEP operator as Flink
     * runs it (`CEP.pattern(keyedStream, pattern)`): per-key bounded
-    * state (O(steps) longs), one emission per completed match,
-    * `flatMapGroupsWithState` in Append mode. Matches the batch
-    * operator exactly when events arrive in event-time order (batch
-    * boundaries anywhere); out-of-order arrival degrades like Flink
-    * CEP without buffering — an earlier-but-late event cannot
-    * retroactively improve an already-advanced chain (and events past
-    * the watermark are dropped by the operator, the standard
-    * Structured Streaming contract). State lifecycle: a COMPLETED
-    * key's `done` tombstone SUPPRESSES re-matching, so it cannot be
-    * dropped while the key is live — it expires via EventTimeTimeout
-    * only once the watermark passes the key's last event +
+    * state (O(steps) longs), one emission per completed match.
+    * State lifecycle: a COMPLETED key's `done` tombstone SUPPRESSES
+    * re-matching, so it cannot be dropped while the key is live — it
+    * expires only once the watermark passes the key's last event +
     * `idleExpiryUs` (re-armed on every arrival). On an unbounded key
     * space the store holds open partial matches plus tombstones of
     * keys active within the idle horizon; a key returning after the
@@ -281,55 +304,33 @@ object Patterns {
     * batches and asserts equality with the graded q116 batch result,
     * plus a synthetic state-removal spec on the store row count. */
   def matchChainStream(events: Dataset[PEvent], steps: IndexedSeq[String],
-      guard: Option[String] = None, watermarkDelay: String = "10 minutes",
+      guard: Option[String] = None,
       idleExpiryUs: Long = 30L * 86400L * 1000000L): Dataset[ChainMatch] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val n = steps.length
-    events
-      .withColumn("ets", timestamp_micros(col("t_us")))
-      .withWatermark("ets", watermarkDelay)
-      .as[PEventT]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[ChainState, ChainMatch](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: Long, it: Iterator[PEventT], state: GroupState[ChainState]) =>
-          if (state.hasTimedOut) {
-            // watermark passed lastSeen + idleExpiry: the key is gone;
-            // its done tombstone can never suppress anything again
-            state.remove()
-            Iterator.empty
-          } else {
-            var s = state.getOption.getOrElse(ChainState(Nil, Long.MaxValue, false))
-            val out = scala.collection.mutable.ArrayBuffer.empty[ChainMatch]
-            var lastSeenUs = Long.MinValue
-            if (!s.done) {
-              it.toSeq.sortBy(_.t_us).foreach { e =>
-                lastSeenUs = math.max(lastSeenUs, e.t_us)
-                if (!s.done) {
-                  val depth = s.matched.length
-                  if (guard.contains(e.tag) && depth >= 1 &&
-                      e.t_us > s.matched.head && e.t_us < s.minGuard)
-                    s = s.copy(minGuard = e.t_us)
-                  if (depth < n && steps(depth) == e.tag &&
-                      (depth == 0 || e.t_us > s.matched.last))
-                    s = s.copy(matched = s.matched :+ e.t_us)
-                  if (s.matched.length == n) {
-                    if (s.minGuard >= s.matched.last) // no guard event inside the span
-                      out += ChainMatch(key, s.matched)
-                    s = s.copy(done = true)
-                  }
-                }
-              }
-            } else it.foreach(e => lastSeenUs = math.max(lastSeenUs, e.t_us)) // drain: state is final
-            state.update(s)
-            if (s.done) // tombstone lives until the key idles out
-              state.setTimeoutTimestamp(math.max(
-                lastSeenUs / 1000L + idleExpiryUs / 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-            out.iterator
+    cepKeyed(events, ChainState(Nil, Long.MaxValue, false), byTime()) {
+      (key, s0, evs, lastSeenMs) =>
+        var s = s0
+        val out = ArrayBuffer.empty[ChainMatch]
+        evs.foreach { e =>
+          if (!s.done) {
+            val depth = s.matched.length
+            if (guard.contains(e.tag) && depth >= 1 &&
+                e.t_us > s.matched.head && e.t_us < s.minGuard)
+              s = s.copy(minGuard = e.t_us)
+            if (depth < n && steps(depth) == e.tag &&
+                (depth == 0 || e.t_us > s.matched.last))
+              s = s.copy(matched = s.matched :+ e.t_us)
+            if (s.matched.length == n) {
+              if (s.minGuard >= s.matched.last) // no guard event inside the span
+                out += ChainMatch(key, s.matched)
+              s = s.copy(done = true)
+            }
           }
-      }
+        }
+        // a done tombstone lives until the key idles out
+        Step(s, out.iterator, Option.when(s.done)(lastSeenMs + idleExpiryUs / 1000L))
+    }
   }
 
   /** Per-key state for the skip-past-last streaming matcher: the
@@ -351,53 +352,33 @@ object Patterns {
     * event-time-ordered feeds (PatternsSpec, mid-stream batch
     * boundaries included). */
   def matchChainStreamAll(events: Dataset[PEvent], steps: IndexedSeq[String],
-      maxMatches: Int, watermarkDelay: String = "10 minutes",
+      maxMatches: Int,
       idleExpiryUs: Long = 30L * 86400L * 1000000L): Dataset[ChainMatchIdx] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val n = steps.length
-    events
-      .withColumn("ets", timestamp_micros(col("t_us")))
-      .withWatermark("ets", watermarkDelay)
-      .as[PEventT]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[ChainAllState, ChainMatchIdx](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: Long, it: Iterator[PEventT], state: GroupState[ChainAllState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var s = state.getOption.getOrElse(
-              // a non-positive cap means "emit nothing", matching the
-              // batch twin's loop guard
-              ChainAllState(Nil, Long.MinValue, 0, maxMatches <= 0))
-            val out = scala.collection.mutable.ArrayBuffer.empty[ChainMatchIdx]
-            var lastSeenUs = Long.MinValue
-            it.toSeq.sortBy(_.t_us).foreach { e =>
-              lastSeenUs = math.max(lastSeenUs, e.t_us)
-              if (!s.done) {
-                val depth = s.matched.length
-                val lb = if (depth == 0) s.lower else s.matched.last
-                if (depth < n && steps(depth) == e.tag && e.t_us > lb) {
-                  val m2 = s.matched :+ e.t_us
-                  if (m2.length == n) {
-                    out += ChainMatchIdx(key, (s.nDone + 1).toLong, m2)
-                    // skip past last: re-arm strictly after this match
-                    s = ChainAllState(Nil, e.t_us, s.nDone + 1,
-                      s.nDone + 1 >= maxMatches)
-                  } else s = s.copy(matched = m2)
-                }
-              }
+    // a non-positive cap means "emit nothing", matching the batch
+    // twin's loop guard
+    cepKeyed(events, ChainAllState(Nil, Long.MinValue, 0, maxMatches <= 0), byTime()) {
+      (key, s0, evs, lastSeenMs) =>
+        var s = s0
+        val out = ArrayBuffer.empty[ChainMatchIdx]
+        evs.foreach { e =>
+          if (!s.done) {
+            val depth = s.matched.length
+            val lb = if (depth == 0) s.lower else s.matched.last
+            if (depth < n && steps(depth) == e.tag && e.t_us > lb) {
+              val m2 = s.matched :+ e.t_us
+              if (m2.length == n) {
+                out += ChainMatchIdx(key, (s.nDone + 1).toLong, m2)
+                // skip past last: re-arm strictly after this match
+                s = ChainAllState(Nil, e.t_us, s.nDone + 1, s.nDone + 1 >= maxMatches)
+              } else s = s.copy(matched = m2)
             }
-            state.update(s)
-            if (s.done) // capped key: tombstone until the key idles out
-              state.setTimeoutTimestamp(math.max(
-                lastSeenUs / 1000L + idleExpiryUs / 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-            out.iterator
           }
-      }
+        }
+        // capped key: tombstone until the key idles out
+        Step(s, out.iterator, Option.when(s.done)(lastSeenMs + idleExpiryUs / 1000L))
+    }
   }
 
   /** Streaming `Pattern.within`: per-key buffers of the NON-final
@@ -409,8 +390,9 @@ object Patterns {
     * buffers; first success per key emits and the state collapses to
     * done. Same in-order contract as [[matchChainStream]]. State
     * lifecycle: every batch prunes ALL tag lists to the trailing
-    * window; an EventTimeTimeout at max(buffered)+within removes
-    * not-done keys whose whole buffer is dead (entries at t serve
+    * window (an empty buffer is the initial state and holds nothing);
+    * a timer at max(buffered)+within removes not-done keys whose whole
+    * buffer is dead (entries at t serve
     * final events only in (t, t+within], and future events arrive at
     * >= watermark — removal is semantics-preserving even for live
     * keys); done tombstones expire at last event + `idleExpiryUs`,
@@ -421,85 +403,56 @@ object Patterns {
   final case class WithinState(buf: Map[String, List[Long]], done: Boolean)
 
   def matchWithinStream(events: Dataset[PEvent], steps: IndexedSeq[String],
-      withinUs: Long, watermarkDelay: String = "10 minutes",
+      withinUs: Long,
       idleExpiryUs: Long = 30L * 86400L * 1000000L): Dataset[ChainMatch] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val k = steps.length
     require(k >= 2, "within needs at least two steps")
     val preTags = steps.dropRight(1).toSet
-    events
-      .withColumn("ets", timestamp_micros(col("t_us")))
-      .withWatermark("ets", watermarkDelay)
-      .as[PEventT]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[WithinState, ChainMatch](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: Long, it: Iterator[PEventT], state: GroupState[WithinState]) =>
-          if (state.hasTimedOut) {
-            // not-done: watermark passed max(buffered)+within — the
-            // whole buffer is dead (no future event can chain on it).
-            // done: watermark passed lastSeen+idleExpiry — the key is
-            // gone and the tombstone suppresses nothing. Remove.
-            state.remove()
-            Iterator.empty
-          } else {
-            var s = state.getOption.getOrElse(WithinState(Map.empty, false))
-            val out = scala.collection.mutable.ArrayBuffer.empty[ChainMatch]
-            var lastSeenUs = Long.MinValue
-            it.toSeq.sortBy(_.t_us).foreach { e =>
-              lastSeenUs = math.max(lastSeenUs, e.t_us)
-              if (!s.done) {
-                  if (e.tag == steps.last) {
-                    // greedy window chain over the buffered earlier steps
-                    val chain = (0 until k - 1).foldLeft(Option(List.empty[Long])) {
-                      case (Some(acc), i) =>
-                        val lo = if (i == 0) e.t_us - withinUs else acc.head + 1
-                        s.buf.getOrElse(steps(i), Nil)
-                          .find(t => t >= lo && t < e.t_us) // lists kept ascending
-                          .map(_ :: acc)
-                      case (None, _) => None
-                    }
-                    chain.foreach { c =>
-                      out += ChainMatch(key, (e.t_us :: c).reverse)
-                      s = WithinState(Map.empty, true)
-                    }
-                  }
-                  if (!s.done) {
-                    // evict EVERY tag list beyond the trailing window (a
-                    // tag that stops arriving must not pin stale state),
-                    // then append the arriving event (ascending arrival)
-                    val lo = e.t_us - withinUs
-                    val pruned = s.buf.map { case (tag, ts) => tag -> ts.dropWhile(_ < lo) }
-                    val withE =
-                      if (preTags.contains(e.tag))
-                        pruned.updated(e.tag, pruned.getOrElse(e.tag, Nil) :+ e.t_us)
-                      else pruned
-                    s = s.copy(buf = withE)
-                  }
-              }
+    cepKeyed(events, WithinState(Map.empty, false), byTime()) { (key, s0, evs, lastSeenMs) =>
+      var s = s0
+      val out = ArrayBuffer.empty[ChainMatch]
+      evs.foreach { e =>
+        if (!s.done) {
+          if (e.tag == steps.last) {
+            // greedy window chain over the buffered earlier steps
+            val chain = (0 until k - 1).foldLeft(Option(List.empty[Long])) {
+              case (Some(acc), i) =>
+                val lo = if (i == 0) e.t_us - withinUs else acc.head + 1
+                s.buf.getOrElse(steps(i), Nil)
+                  .find(t => t >= lo && t < e.t_us) // lists kept ascending
+                  .map(_ :: acc)
+              case (None, _) => None
             }
-            val wmMs = state.getCurrentWatermarkMs()
-            if (s.done) {
-              // tombstone: suppresses re-matching while the key lives
-              state.update(s)
-              state.setTimeoutTimestamp(math.max(
-                lastSeenUs / 1000L + idleExpiryUs / 1000L, wmMs + 1L))
-            } else {
-              val maxBuf = s.buf.valuesIterator.collect { case ts if ts.nonEmpty => ts.last }
-                .foldLeft(Long.MinValue)(math.max)
-              if (maxBuf == Long.MinValue) {
-                // nothing buffered and nothing matched: hold no state
-                if (state.exists) state.remove()
-              } else {
-                state.update(s)
-                state.setTimeoutTimestamp(math.max(
-                  maxBuf / 1000L + withinUs / 1000L + 1L, wmMs + 1L))
-              }
+            chain.foreach { c =>
+              out += ChainMatch(key, (e.t_us :: c).reverse)
+              s = WithinState(Map.empty, true)
             }
-            out.iterator
           }
+          if (!s.done) {
+            // evict EVERY tag list beyond the trailing window (a tag
+            // that stops arriving must not pin stale state; an emptied
+            // list goes, so an empty buffer is the initial state), then
+            // append the arriving event (ascending arrival)
+            val lo = e.t_us - withinUs
+            val pruned = s.buf.map { case (tag, ts) => tag -> ts.dropWhile(_ < lo) }
+              .filter(_._2.nonEmpty)
+            val withE =
+              if (preTags.contains(e.tag))
+                pruned.updated(e.tag, pruned.getOrElse(e.tag, Nil) :+ e.t_us)
+              else pruned
+            s = s.copy(buf = withE)
+          }
+        }
       }
+      // done: the tombstone suppresses re-matching while the key
+      // lives; not done: the buffer is dead at max(buffered) + within
+      val timer =
+        if (s.done) Some(lastSeenMs + idleExpiryUs / 1000L)
+        else s.buf.valuesIterator.map(_.last).maxOption
+          .map(_ / 1000L + withinUs / 1000L + 1L)
+      Step(s, out.iterator, timer)
+    }
   }
 
   // ------------------------------------------- looping quantifiers
@@ -1176,74 +1129,52 @@ object Patterns {
     * `within` window (the matchWithinStream bound: window × per-key
     * anchor rate, never stream length) each carrying ≤ [[CombMax]]
     * click times; a full anchor stops absorbing, an out-of-window
-    * anchor retires. A key with no live anchors holds NO state and
-    * pins NO timer (the matchWithinStream posture — state-store size
-    * tracks live anchors, not distinct keys ever seen); non-empty
-    * state expires at the newest anchor's window horizon. Same
+    * anchor retires. A key with no live anchors is at the initial
+    * state, so the driver holds NO state and pins NO timer for it
+    * (state-store size tracks live anchors, not distinct keys ever
+    * seen); non-empty state expires at the newest anchor's window
+    * horizon. Same
     * in-order per-key arrival contract as the other twins;
     * same-timestamp anchors dedup on t1 (the batch DISTINCT) and a
     * click at the anchor's own microsecond is excluded by the strict
     * `t1 < tc` rule on both paths. */
   def matchCombinationsStream(events: Dataset[PEvent],
       anchorTag: String = "view", loopTag: String = "click",
-      withinUs: Long = AnyWithinUs,
-      watermarkDelay: String = "10 minutes"): Dataset[CombMatch] = {
+      withinUs: Long = AnyWithinUs): Dataset[CombMatch] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState => GS, GroupStateTimeout, OutputMode}
-    events
-      .withColumn("ets", timestamp_micros(col("t_us")))
-      .withWatermark("ets", watermarkDelay)
-      .as[PEventT]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CombsState, CombMatch](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: Long, it: Iterator[PEventT], state: GS[CombsState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var anchors = state.getOption.map(_.anchors).getOrElse(Nil)
-            val out = scala.collection.mutable.ArrayBuffer.empty[CombMatch]
-            it.toSeq.sortBy(e => (e.t_us, if (e.tag == anchorTag) 0 else 1))
-              .foreach { e =>
-                // retire on window expiry ONLY — a full anchor stays
-                // (dedups a same-t1 duplicate view) but absorbs nothing
-                anchors = anchors.filter(_.t1 + withinUs >= e.t_us)
-                if (e.tag == anchorTag) {
-                  if (!anchors.exists(_.t1 == e.t_us))
-                    anchors = CombAnchor(e.t_us, Nil) :: anchors
-                } else if (e.tag == loopTag) {
-                  anchors = anchors.map { a =>
-                    if (a.t1 < e.t_us && e.t_us <= a.t1 + withinUs &&
-                        a.clicks.length < CombMax) {
-                      val k0 = a.clicks.length
-                      var m = 0L
-                      while (m < (1L << k0)) {
-                        val sel = a.clicks.zipWithIndex.collect {
-                          case (t, i) if ((m >> i) & 1L) == 1L => t }
-                        out += CombMatch(key, a.t1, m | (1L << k0),
-                          sel.length + 1L,
-                          if (sel.isEmpty) e.t_us else sel.min, e.t_us)
-                        m += 1
-                      }
-                      CombAnchor(a.t1, a.clicks :+ e.t_us)
-                    } else a
-                  }
-                }
+    cepKeyed(events, CombsState(Nil), byTime(_ == anchorTag)) { (key, s0, evs, _) =>
+      var anchors = s0.anchors
+      val out = ArrayBuffer.empty[CombMatch]
+      evs.foreach { e =>
+        // retire on window expiry ONLY — a full anchor stays (dedups a
+        // same-t1 duplicate view) but absorbs nothing
+        anchors = anchors.filter(_.t1 + withinUs >= e.t_us)
+        if (e.tag == anchorTag) {
+          if (!anchors.exists(_.t1 == e.t_us))
+            anchors = CombAnchor(e.t_us, Nil) :: anchors
+        } else if (e.tag == loopTag) {
+          anchors = anchors.map { a =>
+            if (a.t1 < e.t_us && e.t_us <= a.t1 + withinUs && a.clicks.length < CombMax) {
+              val k0 = a.clicks.length
+              var m = 0L
+              while (m < (1L << k0)) {
+                val sel = a.clicks.zipWithIndex.collect {
+                  case (t, i) if ((m >> i) & 1L) == 1L => t }
+                out += CombMatch(key, a.t1, m | (1L << k0), sel.length + 1L,
+                  if (sel.isEmpty) e.t_us else sel.min, e.t_us)
+                m += 1
               }
-            if (anchors.isEmpty) {
-              // no live anchors: an anchorless key can never emit, and a
-              // stale same-t1 duplicate view is watermark-dropped before
-              // it could matter — hold no state, pin no timer
-              if (state.exists) state.remove()
-            } else {
-              state.update(CombsState(anchors))
-              val horizon = anchors.map(_.t1 + withinUs).max
-              state.setTimeoutTimestamp(math.max(
-                horizon / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-            }
-            out.iterator
+              CombAnchor(a.t1, a.clicks :+ e.t_us)
+            } else a
           }
+        }
       }
+      // no live anchors is the initial state: an anchorless key can
+      // never emit, and a stale same-t1 duplicate view is
+      // watermark-dropped before it could matter — it holds nothing
+      Step(CombsState(anchors), out.iterator,
+        anchors.map(_.t1 + withinUs).maxOption.map(_ / 1000L + 1L))
+    }
   }
 
   /** `view  followedBy  click.oneOrMore().until(error)  followedBy
@@ -1337,95 +1268,81 @@ object Patterns {
     * longs, same in-order contract and idle-expiry lifecycle as
     * [[matchChainStream]]. Emits completion times AND per-step greedy
     * counts; equals the batch [[earliestQuantChain]] on ordered
-    * feeds (PatternsSpec). */
+    * feeds (PatternsSpec on q127/q145, PropertySpec on random
+    * chains), equal timestamps included: a loop event at the very
+    * timestamp that completes the next step is not counted (the
+    * batch count is strictly before the completion). */
   final case class QuantState(stepIdx: Int, cnt: Int, last: Long,
       comps: List[Long], counts: List[Int], extCnt: Int, extLast: Long,
       done: Boolean, extClosed: Boolean = false)
   final case class QuantMatch(key: Long, ts: Seq[Long], counts: Seq[Int])
 
   def matchQuantStream(events: Dataset[PEvent], steps: IndexedSeq[QStep],
-      watermarkDelay: String = "10 minutes",
       idleExpiryUs: Long = 30L * 86400L * 1000000L): Dataset[QuantMatch] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     require(steps.forall(!_.optional), "streaming twin supports required steps only")
     require(!steps.last.looping, "final step must be non-looping on a stream")
     val n = steps.length
     // an until boundary is STRICT (consumption needs t < boundary), so
     // same-time ties must process the boundary event first
     val untilTags = steps.flatMap(_.until).toSet
-    events
-      .withColumn("ets", timestamp_micros(col("t_us")))
-      .withWatermark("ets", watermarkDelay)
-      .as[PEventT]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[QuantState, QuantMatch](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: Long, it: Iterator[PEventT], state: GroupState[QuantState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var s = state.getOption.getOrElse(
-              QuantState(0, 0, Long.MinValue, Nil, Nil, 0, Long.MinValue, false))
-            val out = scala.collection.mutable.ArrayBuffer.empty[QuantMatch]
-            var lastSeenUs = Long.MinValue
-            it.toSeq.sortBy(e => (e.t_us, if (untilTags(e.tag)) 0 else 1))
-              .foreach { e =>
-              lastSeenUs = math.max(lastSeenUs, e.t_us)
-              if (!s.done) {
-                // until boundary of the CURRENT step: in-order arrival
-                // means the step is still short of `times`, so the
-                // committed chain can never complete — dead tombstone
-                // (same lifecycle as done, nothing emitted)
-                if (steps(s.stepIdx).until.contains(e.tag) &&
-                    e.t_us > s.comps.lastOption.getOrElse(Long.MinValue))
-                  s = s.copy(done = true)
-                // until boundary of the PREVIOUS looping step closes
-                // its greedy extension window (batch: extent capped at
-                // min(next completion, boundary))
-                else if (s.stepIdx > 0 &&
-                    steps(s.stepIdx - 1).until.contains(e.tag))
-                  s = s.copy(extClosed = true)
-              }
-              if (!s.done) {
-                // greedy extension of the PREVIOUS completed step: its
-                // loop absorbs tag events until the current step closes
-                // (or its own until boundary hits)
-                if (s.stepIdx > 0 && steps(s.stepIdx - 1).looping &&
-                    !s.extClosed &&
-                    e.tag == steps(s.stepIdx - 1).tag && e.t_us > s.extLast)
-                  s = s.copy(extCnt = s.extCnt + 1, extLast = e.t_us)
-                val st = steps(s.stepIdx)
-                if (e.tag == st.tag && e.t_us > s.last) {
-                  s = s.copy(cnt = s.cnt + 1, last = e.t_us)
-                  if (s.cnt == st.times) {
-                    // freeze the previous step's greedy count, open ours
-                    val prevCount =
-                      if (s.stepIdx == 0) Nil
-                      else List(
-                        if (steps(s.stepIdx - 1).looping) {
-                          val raw = steps(s.stepIdx - 1).times + s.extCnt
-                          steps(s.stepIdx - 1).maxTimes
-                            .fold(raw)(math.min(raw, _))
-                        } else 1)
-                    s = QuantState(s.stepIdx + 1, 0, s.last,
-                      s.comps :+ s.last, s.counts ++ prevCount,
-                      extCnt = 0, extLast = s.last, done = false)
-                    if (s.stepIdx == n) {
-                      out += QuantMatch(key, s.comps, s.counts :+ 1)
-                      s = s.copy(done = true)
-                    }
-                  }
-                }
+    cepKeyed(events, QuantState(0, 0, Long.MinValue, Nil, Nil, 0, Long.MinValue, false),
+      byTime(untilTags)) { (key, s0, evs, lastSeenMs) =>
+      var s = s0
+      val out = ArrayBuffer.empty[QuantMatch]
+      evs.foreach { e =>
+        if (!s.done) {
+          // until boundary of the CURRENT step: in-order arrival
+          // means the step is still short of `times`, so the
+          // committed chain can never complete — dead tombstone
+          // (same lifecycle as done, nothing emitted)
+          if (steps(s.stepIdx).until.contains(e.tag) &&
+              e.t_us > s.comps.lastOption.getOrElse(Long.MinValue))
+            s = s.copy(done = true)
+          // until boundary of the PREVIOUS looping step closes
+          // its greedy extension window (batch: extent capped at
+          // min(next completion, boundary))
+          else if (s.stepIdx > 0 &&
+              steps(s.stepIdx - 1).until.contains(e.tag))
+            s = s.copy(extClosed = true)
+        }
+        if (!s.done) {
+          // greedy extension of the PREVIOUS completed step: its
+          // loop absorbs tag events until the current step closes
+          // (or its own until boundary hits)
+          if (s.stepIdx > 0 && steps(s.stepIdx - 1).looping &&
+              !s.extClosed &&
+              e.tag == steps(s.stepIdx - 1).tag && e.t_us > s.extLast)
+            s = s.copy(extCnt = s.extCnt + 1, extLast = e.t_us)
+          val st = steps(s.stepIdx)
+          if (e.tag == st.tag && e.t_us > s.last) {
+            s = s.copy(cnt = s.cnt + 1, last = e.t_us)
+            if (s.cnt == st.times) {
+              // freeze the previous step's greedy count, open ours; an
+              // extension at this very timestamp is not strictly before
+              // the completion (the batch `<` rule) and drops out
+              val prevCount =
+                if (s.stepIdx == 0) Nil
+                else List(
+                  if (steps(s.stepIdx - 1).looping) {
+                    val raw = steps(s.stepIdx - 1).times + s.extCnt -
+                      (if (s.extLast == s.last) 1 else 0)
+                    steps(s.stepIdx - 1).maxTimes
+                      .fold(raw)(math.min(raw, _))
+                  } else 1)
+              s = QuantState(s.stepIdx + 1, 0, s.last,
+                s.comps :+ s.last, s.counts ++ prevCount,
+                extCnt = 0, extLast = s.last, done = false)
+              if (s.stepIdx == n) {
+                out += QuantMatch(key, s.comps, s.counts :+ 1)
+                s = s.copy(done = true)
               }
             }
-            state.update(s)
-            if (s.done)
-              state.setTimeoutTimestamp(math.max(
-                lastSeenUs / 1000L + idleExpiryUs / 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-            out.iterator
           }
+        }
       }
+      Step(s, out.iterator, Option.when(s.done)(lastSeenMs + idleExpiryUs / 1000L))
+    }
   }
 
   // ------------------------------------------- group patterns
@@ -1605,61 +1522,36 @@ object Patterns {
 
   def matchGroupLoopStream(events: Dataset[PEvent],
       group: IndexedSeq[String], tailTag: String,
-      watermarkDelay: String = "10 minutes",
       idleExpiryUs: Long = 30L * 86400L * 1000000L): Dataset[GroupMatch] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState => GS, GroupStateTimeout, OutputMode}
-    events
-      .withColumn("ets", timestamp_micros(col("t_us")))
-      .withWatermark("ets", watermarkDelay)
-      .as[PEventT]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[GroupLoopState, GroupMatch](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: Long, it: Iterator[PEventT], state: GS[GroupLoopState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var s = state.getOption.getOrElse(
-              GroupLoopState(0, Long.MinValue, -1L, 0, -1L, -1L, false))
-            val out = scala.collection.mutable.ArrayBuffer.empty[GroupMatch]
-            var lastSeenUs = Long.MinValue
-            // done-key tombstone: drain without the tie sort — only
-            // the idle-expiry clock needs the events
-            val ordered =
-              if (s.done) it
-              else it.toSeq.sortBy(e =>
-                (e.t_us, if (e.tag == tailTag) 0 else 1)).iterator
-            ordered.foreach { e =>
-              lastSeenUs = math.max(lastSeenUs, e.t_us)
-              if (!s.done) {
-                if (e.tag == tailTag && s.nDone >= 1 && e.t_us > s.c1) {
-                  // ties processed tail-first, so every counted
-                  // completion is strictly earlier — exactly the
-                  // batch `_ < t3` rule
-                  out += GroupMatch(key, s.v1, s.c1, e.t_us, s.nDone.toLong)
-                  s = s.copy(done = true)
-                } else if (s.nDone < GroupMax && e.tag == group(s.gi) &&
-                    e.t_us > s.last) {
-                  val start = if (s.gi == 0) e.t_us else s.curStart
-                  if (s.gi == group.length - 1) {
-                    val firstIter = s.nDone == 0
-                    s = s.copy(gi = 0, last = e.t_us, curStart = -1L,
-                      nDone = s.nDone + 1,
-                      v1 = if (firstIter) start else s.v1,
-                      c1 = if (firstIter) e.t_us else s.c1)
-                  } else s = s.copy(gi = s.gi + 1, last = e.t_us,
-                    curStart = start)
-                }
-              }
-            }
-            state.update(s)
-            if (s.done)
-              state.setTimeoutTimestamp(math.max(
-                lastSeenUs / 1000L + idleExpiryUs / 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-            out.iterator
+    cepKeyed(events, GroupLoopState(0, Long.MinValue, -1L, 0, -1L, -1L, false),
+      byTime(_ == tailTag)) { (key, s0, evs, lastSeenMs) =>
+      var s = s0
+      val out = ArrayBuffer.empty[GroupMatch]
+      evs.foreach { e =>
+        if (!s.done) {
+          if (e.tag == tailTag && s.nDone >= 1 && e.t_us > s.c1) {
+            // ties processed tail-first, so every counted
+            // completion is strictly earlier — exactly the
+            // batch `_ < t3` rule
+            out += GroupMatch(key, s.v1, s.c1, e.t_us, s.nDone.toLong)
+            s = s.copy(done = true)
+          } else if (s.nDone < GroupMax && e.tag == group(s.gi) &&
+              e.t_us > s.last) {
+            val start = if (s.gi == 0) e.t_us else s.curStart
+            if (s.gi == group.length - 1) {
+              val firstIter = s.nDone == 0
+              s = s.copy(gi = 0, last = e.t_us, curStart = -1L,
+                nDone = s.nDone + 1,
+                v1 = if (firstIter) start else s.v1,
+                c1 = if (firstIter) e.t_us else s.c1)
+            } else s = s.copy(gi = s.gi + 1, last = e.t_us,
+              curStart = start)
           }
+        }
       }
+      Step(s, out.iterator, Option.when(s.done)(lastSeenMs + idleExpiryUs / 1000L))
+    }
   }
 
   // ------------------------------------------- subtype steps

@@ -4,7 +4,9 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
+
+import graft.streaming.WindowSpi.{EventTime, Step}
 
 /** Structured Streaming surface (SURVEY.md §2.6 — the reference's
   * stock Flink DataStream layer: `/root/reference`
@@ -23,10 +25,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The windows here are the Catalyst-native ones (`window` /
   * `session_window`); the stateful ops are the non-window ones
-  * ([[sessionTimeoutAlerts]], [[temporalEnrichStream]]). Every keyed
+  * ([[sessionTimeoutAlerts]], [[temporalEnrichStream]]), folds on the
+  * engine's one keyed-state driver, [[WindowSpi.keyed]]. Every keyed
   * window with its own state machine — count, sliding-count, delta,
   * punctuated, and the trigger/evictor overrides on event-time
-  * windows — lives in [[WindowSpi]], on one driver.
+  * windows — lives in [[WindowSpi]], on the same driver.
   */
 object Streams {
 
@@ -209,35 +212,25 @@ object Streams {
     * and (re)arms an event-time timer at lastTs + gap; when the
     * WATERMARK passes the timer with no new input for that key, the
     * key times out and emits one alert — Flink's
-    * `registerEventTimeTimer` + `onTimer`, expressed as
-    * `flatMapGroupsWithState(EventTimeTimeout)`. State is one
-    * (lastTs, count) pair per open session, freed on timeout.
+    * `registerEventTimeTimer` + `onTimer`, expressed as the
+    * [[WindowSpi.keyed]] driver's event-time timer and its `onTimeout`
+    * emit. State is one (lastTs, count) pair per open session, freed
+    * on timeout.
     */
   case class SessionAlertState(lastTsMs: Long, n: Long)
   case class SessionTimeoutAlert(user_id: Long, n_events: Long, last_ts: Timestamp)
 
   def sessionTimeoutAlerts(events: Dataset[Ev], gapMs: Long): Dataset[SessionTimeoutAlert] = {
     import events.sparkSession.implicits._
-    events.withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionAlertState, SessionTimeoutAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[SessionAlertState]) =>
-          if (state.hasTimedOut) {
-            // fires WITHOUT input for this key, purely watermark-driven
-            val s = state.get
-            state.remove()
-            Iterator(SessionTimeoutAlert(uid, s.n, new Timestamp(s.lastTsMs)))
-          } else {
-            val evs = it.toArray
-            val prev = state.getOption.getOrElse(SessionAlertState(Long.MinValue, 0L))
-            val s = SessionAlertState(
-              math.max(prev.lastTsMs, evs.map(_.ts.getTime).max), prev.n + evs.length)
-            state.update(s)
-            state.setTimeoutTimestamp(s.lastTsMs + gapMs)
-            Iterator.empty
-          }
-      }
+    WindowSpi.keyed(events, SessionAlertState(Long.MinValue, 0L),
+      Ordering.by((e: Ev) => e.ts.getTime), Some(EventTime(col("ts"), (e: Ev) => e.ts.getTime)),
+      // fires WITHOUT input for this key, purely watermark-driven
+      (uid, s: SessionAlertState) =>
+        Iterator(SessionTimeoutAlert(uid, s.n, new Timestamp(s.lastTsMs))))(_.user_id) {
+      (_, prev, evs, lastSeenMs) =>
+        val s = SessionAlertState(math.max(prev.lastTsMs, lastSeenMs), prev.n + evs.length)
+        Step(s, Iterator.empty, Some(s.lastTsMs + gapMs))
+    }
   }
 
   /** A routed late row: the event plus the tumbling-window key it
@@ -400,9 +393,6 @@ object Streams {
     * (a dimension VERSION becoming valid at t_us) or "p" (a probe
     * event to enrich). */
   final case class TemporalRow(key: Long, t_us: Long, side: String, v: Double)
-  // non-private: Catalyst's generated (de)serializers need access
-  final case class TemporalRowT(key: Long, t_us: Long, side: String,
-    v: Double, ets: Timestamp)
   final case class TemporalState(ts: Long, v: Double, has: Boolean)
   final case class TemporalMatch(key: Long, t_us: Long,
     asofTs: Option[Long], asofV: Option[Double])
@@ -432,11 +422,11 @@ object Streams {
     *
     * Same in-order per-key arrival contract as every streaming twin
     * in this library; per-key state is ONE (ts, value) version —
-    * O(1), no buffering — expiring after `idleExpiryUs` without
-    * traffic (dimension keys whose stream went quiet release their
-    * state; a later probe would re-enrich as unmatched, the same
-    * answer the batch join gives a probe with no preceding version
-    * inside the retained window).
+    * O(1), no buffering, none for a key that has only seen probes —
+    * expiring after `idleExpiryUs` without traffic (dimension keys
+    * whose stream went quiet release their state; a later probe would
+    * re-enrich as unmatched, the same answer the batch join gives a
+    * probe with no preceding version inside the retained window).
     *
     * Malformed side tags fail fast here BY DESIGN (silently treating
     * garbage as probes would emit plausible unmatched rows); the
@@ -444,46 +434,26 @@ object Streams {
     * which dead-letters such rows through a [[TagAudit]] so one bad
     * row can't take down the stream. */
   def temporalEnrichStream(rows: Dataset[TemporalRow],
-      watermarkDelay: String = "10 minutes",
       idleExpiryUs: Long = 30L * 86400L * 1000000L): Dataset[TemporalMatch] = {
     import rows.sparkSession.implicits._
-    rows
-      .withColumn("ets", timestamp_micros(col("t_us")))
-      .withWatermark("ets", watermarkDelay)
-      .as[TemporalRowT]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[TemporalState, TemporalMatch](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: Long, it: Iterator[TemporalRowT], state: GroupState[TemporalState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var s = state.getOption.getOrElse(
-              TemporalState(Long.MinValue, 0.0, has = false))
-            val out = scala.collection.mutable.ArrayBuffer.empty[TemporalMatch]
-            var lastSeenUs = Long.MinValue
-            it.toSeq.sortBy(r => (r.t_us, if (r.side == "u") 0 else 1))
-              .foreach { r =>
-                // fail fast on a malformed tag: treating it as a probe
-                // would emit plausible-looking unmatched rows instead
-                require(TemporalSides.contains(r.side),
-                  s"temporal row side must be 'u' or 'p', got '${r.side}'")
-                lastSeenUs = math.max(lastSeenUs, r.t_us)
-                if (r.side == "u") {
-                  if (!s.has || r.t_us >= s.ts)
-                    s = TemporalState(r.t_us, r.v, has = true)
-                } else {
-                  out += TemporalMatch(key, r.t_us,
-                    if (s.has) Some(s.ts) else None,
-                    if (s.has) Some(s.v) else None)
-                }
-              }
-            state.update(s)
-            state.setTimeoutTimestamp(math.max(
-              lastSeenUs / 1000L + idleExpiryUs / 1000L,
-              state.getCurrentWatermarkMs() + 1L))
-            out.iterator
-          }
-      }
+    WindowSpi.keyed(rows, TemporalState(Long.MinValue, 0.0, has = false),
+      Ordering.by((r: TemporalRow) => (r.t_us, if (r.side == "u") 0 else 1)),
+      Some(EventTime(timestamp_micros(col("t_us")), (r: TemporalRow) => r.t_us / 1000L)))(_.key) {
+      (key, s0, evs, lastSeenMs) =>
+        var s = s0
+        val out = scala.collection.mutable.ArrayBuffer.empty[TemporalMatch]
+        evs.foreach { r =>
+          // fail fast on a malformed tag: treating it as a probe
+          // would emit plausible-looking unmatched rows instead
+          require(TemporalSides.contains(r.side),
+            s"temporal row side must be 'u' or 'p', got '${r.side}'")
+          if (r.side == "u") {
+            if (!s.has || r.t_us >= s.ts) s = TemporalState(r.t_us, r.v, has = true)
+          } else
+            out += TemporalMatch(key, r.t_us, Option.when(s.has)(s.ts), Option.when(s.has)(s.v))
+        }
+        Step(s, out.iterator, Some(lastSeenMs + idleExpiryUs / 1000L))
+    }
   }
 
   /** Dead-letter accounting for malformed temporal side tags — the
@@ -535,11 +505,11 @@ object Streams {
     * since Structured Streaming has no side outputs. Enriched rows
     * land in the `name` memory table. */
   def temporalEnrichWithTagAudit(rows: Dataset[TemporalRow], name: String,
-      audit: TagAudit, watermarkDelay: String = "10 minutes")
+      audit: TagAudit)
       : (org.apache.spark.sql.streaming.StreamingQuery,
          org.apache.spark.sql.streaming.StreamingQuery) = {
     val good = rows.filter(sideOk)
-    val enrich = temporalEnrichStream(good, watermarkDelay)
+    val enrich = temporalEnrichStream(good)
       .writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append()).start()
     val auditQ = rows.writeStream.queryName(s"${name}_tag_audit")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -13,8 +13,12 @@ import graft.streaming.Streams.Ev
   * WindowedStream.trigger/evictor surface (flink-streaming-java
   * WindowedStream.java:137,190 with windowing/triggers/ and
   * windowing/evictors/) re-expressed as strategy objects over per-key
-  * folds, all run through ONE `flatMapGroupsWithState` call site
-  * ([[keyed]]) and one fire step ([[fireStep]]).
+  * folds, run through one fire step ([[fireStep]]) — and the engine's
+  * ONE keyed-state driver ([[keyed]], the only `flatMapGroupsWithState`
+  * call site), which also runs the six CEP matchers of
+  * [[graft.operators.Patterns]] and the temporal join and session
+  * timer of [[Streams]]. As in Flink, where every keyed operator runs
+  * on one timer service and only the per-key function differs.
   *
   * Flink's count windows are compositions on [[globalWindow]], built
   * exactly as KeyedStream.java:653,663 builds them:
@@ -246,24 +250,66 @@ object WindowSpi {
   /** [[ByEventTime]] for the batch twins, which fold WinElems. */
   private val ElemByEventTime: Ordering[WinElem] = Ordering.by((e: WinElem) => (e.ts_ms, e.event_id))
 
-  /** The one streaming driver every keyed window here runs through:
-    * per key and micro-batch, read the state (or start from `empty`),
-    * sort the batch's elements by `order`, fold, store the new state
-    * and emit. No Spark watermark: the time-window folds keep a
-    * key-local one in `S`.
+  /** An operator's event time: the column its watermark tracks, and
+    * the same instant of one element in epoch ms. */
+  private[graft] final case class EventTime[T](column: Column, ms: T => Long)
+
+  /** One key's micro-batch result: the next state, the rows to emit,
+    * and an optional event-time timer (epoch ms). */
+  private[graft] final case class Step[S, O](state: S, out: Iterator[O],
+      timerMs: Option[Long] = None)
+
+  /** The one keyed-state driver. An operator supplies its key, its
+    * initial state, its per-key `order` (ties included, e.g. "tail
+    * first" or "updates before probes") and its fold; per key and
+    * micro-batch the driver reads the state (or starts from
+    * `initial`), sorts the batch by `order`, folds, stores and emits.
+    * The fold also gets the batch's last-seen event time (ms;
+    * Long.MinValue without an `eventTime`), the base of idle timers.
+    *
+    * The driver owns, once:
+    *  - empty state: a fold result equal to `initial` is not stored
+    *    (reading it back gives the same value), so a key that never
+    *    advances holds nothing;
+    *  - timeout mode: with an `eventTime`, the input gets the one
+    *    10-minute watermark and `EventTimeTimeout` — rows behind the
+    *    watermark are dropped, the fold's timer is clamped to
+    *    `max(timer, watermark + 1)`, and a key whose timer fires loses
+    *    its state, emitting `onTimeout` of it. Without one (the windows
+    *    keep a key-local watermark in `S`) there is no timeout.
     *
     * Scale note: the per-key micro-batch slice is materialized to sort
     * it (every fold is order-sensitive) — bounded for keyed traffic,
     * a hazard for a mega-key; shard such keys upstream. */
-  private def keyed[S: Encoder, O: Encoder](events: Dataset[Ev], empty: S, order: Ordering[Ev])(
-      fold: (Long, S, Seq[Ev]) => (S, Iterator[O])): Dataset[O] =
-    events.groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState[S, O](OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[S]) =>
-          val (s, out) = fold(uid, state.getOption.getOrElse(empty), it.toSeq.sorted(order))
-          state.update(s)
-          out
+  private[graft] def keyed[T: Encoder, S: Encoder, O: Encoder](input: Dataset[T], initial: S,
+      order: Ordering[T], eventTime: Option[EventTime[T]] = None,
+      onTimeout: (Long, S) => Iterator[O] = (_: Long, _: S) => Iterator.empty)(
+      key: T => Long)(fold: (Long, S, Seq[T], Long) => Step[S, O]): Dataset[O] = {
+    val timed = eventTime.fold(input)(et =>
+      input.withColumn("ets", et.column).withWatermark("ets", "10 minutes").as[T])
+    val ms = eventTime.map(_.ms)
+    timed.groupByKey(key)(Encoders.scalaLong)
+      .flatMapGroupsWithState[S, O](OutputMode.Append(),
+        if (ms.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout()) {
+        (k: Long, it: Iterator[T], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            val s = state.get
+            state.remove()
+            onTimeout(k, s)
+          } else {
+            val evs = it.toSeq.sorted(order)
+            val lastSeenMs = ms.fold(Long.MinValue)(f => evs.iterator.map(f).max)
+            val step = fold(k, state.getOption.getOrElse(initial), evs, lastSeenMs)
+            if (step.state == initial) { if (state.exists) state.remove() }
+            else {
+              state.update(step.state)
+              step.timerMs.foreach(t =>
+                state.setTimeoutTimestamp(math.max(t, state.getCurrentWatermarkMs() + 1L)))
+            }
+            step.out
+          }
       }
+  }
 
   /** One open tumbling window: start, trigger registers, buffer,
     * whether the window-end timer is armed (Flink arms it only for
@@ -284,9 +330,9 @@ object WindowSpi {
       order: Ordering[Ev] = ByEventTime, stamp: Ev => Long = _.ts.getTime)(
       fold: (S, Iterator[WinElem]) => (S, Seq[(Long, Long, Long, Double)])): Dataset[SpiTimeWin] = {
     import events.sparkSession.implicits._
-    keyed(events, empty, order) { (uid, s0, evs) =>
+    keyed(events, empty, order)(_.user_id) { (uid, s0, evs, _) =>
       val (s, fires) = fold(s0, evs.iterator.map(e => WinElem(e.event_id, stamp(e), e.value)))
-      (s, fires.iterator.map { case (ws, t, n, sum) => SpiTimeWin(uid, ws, t, n, round2(sum)) })
+      Step(s, fires.iterator.map { case (ws, t, n, sum) => SpiTimeWin(uid, ws, t, n, round2(sum)) })
     }
   }
 
@@ -440,7 +486,7 @@ object WindowSpi {
   def globalWindow(events: Dataset[Ev], trigger: GraftTrigger,
       evictor: GraftEvictor): Dataset[SpiWin] = {
     import events.sparkSession.implicits._
-    keyed(events, SpiWinState(TriggerRegs(), Nil, 0L), ByArrival) { (uid, s0, evs) =>
+    keyed(events, SpiWinState(TriggerRegs(), Nil, 0L), ByArrival)(_.user_id) { (uid, s0, evs, _) =>
       val out = ArrayBuffer.empty[SpiWin]
       val (regs, buf) = evs.foldLeft((s0.regs, s0.buf.toVector)) { case ((regs0, buf0), e) =>
         val elem = WinElem(e.event_id, e.ts.getTime, e.value)
@@ -448,7 +494,7 @@ object WindowSpi {
         (regs, fireStep(res, buf0 :+ elem, evictor) { (n, sum) =>
           out += SpiWin(uid, s0.fired + out.length, n, round2(sum)) })
       }
-      (SpiWinState(regs, buf, s0.fired + out.length), out.iterator)
+      Step(SpiWinState(regs, buf, s0.fired + out.length), out.iterator)
     }
   }
 
@@ -864,10 +910,10 @@ object WindowSpi {
       marker: String = "wm"): Dataset[PunctWin] = {
     require(widthMs > 0, s"window width must be positive, got $widthMs")
     import events.sparkSession.implicits._
-    keyed(events, NoPunct, ByArrival) { (uid, s0, evs) =>
+    keyed(events, NoPunct, ByArrival)(_.user_id) { (uid, s0, evs, _) =>
       val (s, closes) = punctFold(s0,
         evs.iterator.map(e => (e.ts.getTime, e.event_type == marker, e.value)), widthMs)
-      (s, closes.iterator.map { case (ws, n, sum) => PunctWin(uid, ws, n, sum) })
+      Step(s, closes.iterator.map { case (ws, n, sum) => PunctWin(uid, ws, n, sum) })
     }
   }
 

@@ -208,12 +208,14 @@ class PatternsSpec extends AnyFunSuite with SparkSpec {
     val base = 1704067200000000L // 2024-01-01 UTC, micros
     val hour = 3600L * 1000000L
     val idle = 24L * hour
-    // keys 1..5 complete the funnel; key 6 stays partial forever
+    // keys 1..5 complete the funnel; key 6 stays partial forever; key
+    // 7 never matches step one and so holds no state at all
     val b1 = (1L to 5L).flatMap(k => Seq(
       Patterns.PEvent(k, base + k, "view"),
       Patterns.PEvent(k, base + hour + k, "click"),
-      Patterns.PEvent(k, base + 2 * hour + k, "purchase"))) :+
-      Patterns.PEvent(6L, base + 3, "view")
+      Patterns.PEvent(k, base + 2 * hour + k, "purchase"))) ++ Seq(
+      Patterns.PEvent(6L, base + 3, "view"),
+      Patterns.PEvent(7L, base + 4, "purchase"))
     val ms = MemoryStream[Patterns.PEvent]
     val q = Patterns.matchChainStream(ms.toDS(), IndexedSeq("view", "click", "purchase"),
         idleExpiryUs = idle)
@@ -273,6 +275,38 @@ class PatternsSpec extends AnyFunSuite with SparkSpec {
     q.stop()
     assert(after == 1, s"tombstones not expired: after=$after (only the sentinel buffer should remain)")
     assert(emitted == 3, "expiry changed the emitted matches")
+  }
+
+  test("keys that never match step one hold no state in the skip-past-last, quantified and group-loop twins") {
+    import spark.implicits._
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.streaming.OutputMode
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.operators.Patterns.QStep
+    implicit val ctx = spark.sqlContext
+    val base = 1704067200000000L // 2024-01-01 UTC, micros
+    val hour = 3600L * 1000000L
+    // three keys whose events never match step one of any twin below
+    val evs = (1L to 3L).flatMap(k => Seq(
+      Patterns.PEvent(k, base + k, "purchase"),
+      Patterns.PEvent(k, base + hour + k, "error"),
+      Patterns.PEvent(k, base + 2 * hour + k, "purchase")))
+    val funnel = IndexedSeq("view", "click", "purchase")
+    val twins: Seq[(String, Dataset[Patterns.PEvent] => Dataset[_])] = Seq(
+      "cepnm_all" -> (Patterns.matchChainStreamAll(_, funnel, Patterns.SkipMax)),
+      "cepnm_quant" -> (Patterns.matchQuantStream(_, IndexedSeq(QStep.once("view"),
+        QStep.timesOrMore("click", 2), QStep.once("purchase")))),
+      "cepnm_group" -> (Patterns.matchGroupLoopStream(_, IndexedSeq("view", "click"), "purchase")))
+    twins.foreach { case (name, twin) =>
+      val ms = MemoryStream[Patterns.PEvent]
+      val q = twin(ms.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      ms.addData(evs); q.processAllAvailable()
+      val stateRows = q.lastProgress.stateOperators.head.numRowsTotal
+      q.stop()
+      assert(spark.table(name).count() == 0, s"$name emitted a match")
+      assert(stateRows == 0, s"$name holds $stateRows state rows for never-matching keys")
+    }
   }
 
   test("earliestQuantChain equals brute-force enumeration on random quantified chains") {

@@ -1,10 +1,19 @@
 package graft
 
+import scala.util.Random
+
+import org.apache.spark.sql.{Dataset, Encoder, Row}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Patterns
+import graft.operators.Patterns.{PEvent, QStep}
 import graft.pipeline.{Dedup, Similarity, TextAnalysis}
 import graft.plans.TopK
+import graft.streaming.Streams
+import graft.streaming.Streams.TemporalRow
 
 /** Randomized-shape checks (seeded, deterministic) — an upgrade over
   * the reference's test method (SURVEY §5: differential dual-runs
@@ -367,6 +376,160 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
       val exp = if (ws.length < 5) Seq.empty
         else (0 to ws.length - 5).map(j => ws.slice(j, j + 5).mkString(" "))
       assert(got(i.toLong) == exp, s"text '$t'")
+    }
+  }
+
+  // ------------------------------------------------------------------
+  // Event time: the streaming twins on the one keyed-state driver
+  // against their pure per-key batch functions.
+  //
+  // In-order contract covered: each seed draws small random event sets
+  // for 60 keys (times on a one-minute grid over 40 minutes, so equal
+  // timestamps inside a key are common; tags include ones no step
+  // names), merges them in event-time order and feeds them through a
+  // MemoryStream cut at up to three random batch boundaries. Every
+  // twin must then equal its batch function key by key — across batch
+  // cuts, with several keys per batch, with state carried between
+  // batches, and with the driver's watermark timers removing dead
+  // within-buffers mid-stream.
+  //
+  // Left out: late and out-of-order arrival (a row behind the
+  // watermark is dropped and a twin cannot retract an advanced match;
+  // that is a separate contract), a batch cut between two equal
+  // timestamps (a twin's tie order applies inside one micro-batch
+  // only), idle expiry (every trace spans less than the 30-day
+  // horizon), and the group-loop and combinations twins, whose batch
+  // forms are graded plans over a table, not functions.
+  // ------------------------------------------------------------------
+
+  private val BaseUs = 1704067200000000L // 2024-01-01 UTC, micros
+  private val MinuteUs = 60L * 1000000L
+
+  /** 60 keys' random event sets, merged in event-time order. */
+  private def trace(rng: Random, tags: IndexedSeq[String]): Seq[PEvent] =
+    (0L until 60L).flatMap { k =>
+      Seq.fill(rng.nextInt(13))(
+        PEvent(k, BaseUs + rng.nextInt(40) * MinuteUs, tags(rng.nextInt(tags.length))))
+    }.sortBy(_.t_us)
+
+  /** Up to three random batch cuts, each between two distinct times. */
+  private def cuts(rng: Random, times: Seq[Long]): Seq[Int] =
+    rng.shuffle((1 until times.length).filter(i => times(i - 1) < times(i)).toList)
+      .take(rng.nextInt(4)).sorted
+
+  /** Feed `rows` through `op` in the batches `cut` makes; the emitted rows. */
+  private def runStream[T: Encoder](name: String, rows: Seq[T], cut: Seq[Int])(
+      op: Dataset[T] => Dataset[_]): Array[Row] = {
+    implicit val ctx = spark.sqlContext
+    val ms = MemoryStream[T]
+    val q = op(ms.toDS()).writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append()).start()
+    (0 +: cut :+ rows.length).sliding(2).foreach { case Seq(a, b) =>
+      ms.addData(rows.slice(a, b)); q.processAllAvailable()
+    }
+    q.stop()
+    spark.table(name).collect()
+  }
+
+  /** Rows with their multiplicities: a double emission must not hide. */
+  private def multiset[A](xs: Seq[A]): Map[A, Int] = xs.groupBy(identity).map { case (x, v) => x -> v.size }
+
+  /** For seeds 1-3: draw the twin's parameters and a random trace, run
+    * the twin, and compare its emitted (key, match) rows with `batch`
+    * of each key's events. */
+  private def twinEqualsBatch[P, M](label: String, params: Random => P)(
+      twin: P => Dataset[PEvent] => Dataset[_], got: Row => (Long, M),
+      batch: (P, Iterator[(Long, String)]) => Seq[M]): Unit = {
+    import spark.implicits._
+    Seq(1, 2, 3).foreach { seed =>
+      val rng = new Random(seed)
+      val p = params(rng)
+      val evs = trace(rng, IndexedSeq("a", "b", "c", "d"))
+      val rows = runStream(s"prop_${label}_$seed", evs, cuts(rng, evs.map(_.t_us)))(twin(p))
+      val want = evs.groupBy(_.key).toSeq.flatMap { case (k, es) =>
+        batch(p, es.iterator.map(e => (e.t_us, e.tag))).map(k -> _)
+      }
+      assert(want.nonEmpty, s"$label seed $seed, params $p: the trace must produce matches")
+      assert(multiset(rows.toSeq.map(got)) == multiset(want),
+        s"$label seed $seed, params $p: evs=$evs")
+    }
+  }
+
+  /** n steps over the tags a-c (tag d names no step). */
+  private def randomSteps(rng: Random, n: Int): IndexedSeq[String] =
+    IndexedSeq.fill(n)(IndexedSeq("a", "b", "c")(rng.nextInt(3)))
+
+  test("event time: the chain twin equals earliestChain per key on random ordered feeds") {
+    twinEqualsBatch[IndexedSeq[String], List[Long]]("chain", rng => randomSteps(rng, 1 + rng.nextInt(3)))(
+      steps => Patterns.matchChainStream(_, steps),
+      r => r.getLong(0) -> r.getSeq[Long](1).toList,
+      (steps, evs) => Patterns.earliestChain(steps, evs).map(_.toList).toSeq)
+  }
+
+  test("event time: the skip-past-last twin equals allMatchesSkipPastLast per key") {
+    twinEqualsBatch[(IndexedSeq[String], Int), (Long, List[Long])]("skip",
+      rng => (randomSteps(rng, 1 + rng.nextInt(3)), 1 + rng.nextInt(3)))(
+      { case (steps, max) => Patterns.matchChainStreamAll(_, steps, max) },
+      r => r.getLong(0) -> (r.getLong(1) -> r.getSeq[Long](2).toList),
+      { case ((steps, max), evs) =>
+        Patterns.allMatchesSkipPastLast(steps, max, evs).zipWithIndex
+          .map { case (m, i) => (i + 1L) -> m.toList }
+      })
+  }
+
+  test("event time: the within twin equals earliestWithin per key") {
+    twinEqualsBatch[(IndexedSeq[String], Long), List[Long]]("within",
+      rng => (randomSteps(rng, 2 + rng.nextInt(2)), (5 + rng.nextInt(16)) * MinuteUs))(
+      { case (steps, withinUs) => Patterns.matchWithinStream(_, steps, withinUs) },
+      r => r.getLong(0) -> r.getSeq[Long](1).toList,
+      { case ((steps, withinUs), evs) =>
+        Patterns.earliestWithin(steps, withinUs, evs).map(_.toList).toSeq
+      })
+  }
+
+  test("event time: the quantified twin equals earliestQuantChain per key") {
+    // required steps only and a non-looping final step: the streaming
+    // twin's own contract
+    def step(rng: Random, tag: String): QStep = rng.nextInt(3) match {
+      case 0 => QStep.once(tag)
+      case 1 => QStep.oneOrMore(tag)
+      case _ => QStep.timesOrMore(tag, 2 + rng.nextInt(2))
+    }
+    twinEqualsBatch[IndexedSeq[QStep], (List[Long], List[Int])]("quant", { rng =>
+      val tags = randomSteps(rng, 1 + rng.nextInt(3))
+      tags.init.map(step(rng, _)) :+ QStep.once(tags.last)
+    })(
+      steps => Patterns.matchQuantStream(_, steps),
+      r => r.getLong(0) -> (r.getSeq[Long](1).toList -> r.getSeq[Int](2).toList),
+      (steps, evs) => Patterns.earliestQuantChain(steps, evs)
+        .map(m => m.map(_._1).toList -> m.map(_._2).toList).toSeq)
+  }
+
+  test("event time: the temporal join twin equals the backward as-of join") {
+    import spark.implicits._
+    Seq(1, 2, 3).foreach { seed =>
+      val rng = new Random(seed)
+      // versions unique per (key, ts) — the operator contract
+      val updates = (0L until 30L).flatMap { k =>
+        Seq.fill(rng.nextInt(6))(BaseUs + rng.nextInt(40) * MinuteUs).distinct
+          .map(t => TemporalRow(k, t, "u", rng.nextInt(100).toDouble))
+      }
+      val probes = (0L until 30L).flatMap { k =>
+        Seq.fill(rng.nextInt(6))(TemporalRow(k, BaseUs + rng.nextInt(40) * MinuteUs, "p", 0.0))
+      }
+      val rows = (updates ++ probes).sortBy(_.t_us)
+      val got = runStream(s"prop_temporal_$seed", rows, cuts(rng, rows.map(_.t_us)))(
+        Streams.temporalEnrichStream(_))
+        .map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)), Option(r.get(3))))
+      val want = graft.operators.AsOfJoin.asOf(
+          probes.map(r => (r.key, r.t_us)).toDF("key", "t_us"),
+          updates.map(r => (r.key, r.t_us, r.t_us, r.v)).toDF("key", "t_us", "uts", "v"),
+          "key", "t_us", Seq("uts", "v"))
+        .select("key", "t_us", "asof_uts", "asof_v").collect()
+        .map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)), Option(r.get(3))))
+      assert(multiset(got.toSeq) == multiset(want.toSeq), s"seed $seed: rows=$rows")
+      assert(got.exists(_._3.isEmpty) && got.exists(_._3.nonEmpty),
+        s"seed $seed: the trace needs matched and unmatched probes")
     }
   }
 }
