@@ -49,6 +49,21 @@ import org.apache.spark.sql.SparkSession
   *    again under a new class name (0-6 classes per warm maintainer
   *    pass at sf0.1). Without the id, a stage's code text is the same
   *    in every run.
+  *
+  * Local files without forked processes: a fourth fixed setting, two
+  * Hadoop keys, registers [[LocalFiles]] for the `file:` scheme, as
+  * `fs.file.impl` (checksummed `LocalFileSystem`) and as
+  * `fs.AbstractFileSystem.file.impl` (checksummed FileContext side,
+  * which Spark's streaming checkpoint manager commits through).
+  * Without `libhadoop.so` Hadoop's own local file system starts a
+  * `chmod` process for every file and directory it creates and a
+  * `readlink` process for every FileContext rename: 200 per q208 +
+  * q212 pass at sf0.1 (88 `chmod`, 112 `readlink`). On a 4-core VM
+  * with a 3 GB heap, Hadoop's forked `setPermission` took 3.7-4.7 ms
+  * a call and java.nio's 0.03 ms (200 calls each). The first
+  * `file:` FileSystem a JVM creates is cached for every later conf,
+  * so the setting holds as long as the JVM's first one comes from an
+  * engine session's conf.
   */
 object GraftSession {
 
@@ -113,5 +128,9 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // local files without a forked chmod/readlink (see the object doc)
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFiles.Checked].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[LocalFiles.CheckedFs].getName)
       .config("spark.ui.enabled", "false")
 }

@@ -38,8 +38,10 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   *
   *  - `path/bNNNNN` — one entry per trigger, seq = batchId + 1, as
   *    ONE parquet dataset written by ONE write action: the batch's
-  *    rows (`__mask` false) plus one mask row per distinct masking key
-  *    (`__mask` true, every other column null). Its `_SUCCESS` is the
+  *    rows (`__mask` false) plus one mask row per masking-key row
+  *    (`__mask` true, every other column null; a key given twice is
+  *    masked twice, which the anti-join read tolerates, so the write
+  *    needs no distinct and no shuffle). Its `_SUCCESS` is the
   *    entry's only commit point: a crash mid-write leaves part files
   *    without `_SUCCESS`, which readers ignore and the replayed
   *    trigger overwrites, so keys can never commit without their rows.
@@ -277,7 +279,7 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
     }
 
   /** Write one trigger's entry — the batch's rows and one mask row per
-    * distinct key — in ONE write action committed by its `_SUCCESS`.
+    * key row — in ONE write action committed by its `_SUCCESS`.
     * The row and mask-row counts ride the write as an Observation. A
     * partitioned entry without rows holds at most the null partition,
     * whose column types partition discovery cannot recover, so it is
@@ -289,7 +291,6 @@ final class DurableIndex(spark: SparkSession, val path: String, key: String,
   private def writeEntry(dir: String, batchKeys: DataFrame,
       batchRows: DataFrame): Unit = {
     val keys = batchKeys.select(col(key).cast(batchRows.schema(key).dataType))
-      .distinct()
     val entry = batchRows.withColumn(Mask, lit(false))
       .unionByName(keys.withColumn(Mask, lit(true)), allowMissingColumns = true)
     val obs = org.apache.spark.sql.Observation()

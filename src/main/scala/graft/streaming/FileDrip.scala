@@ -63,7 +63,8 @@ object FileDrip {
     * schema and the query built per trigger): drive `batches`, hand
     * `start` the file-source stream plus an `emit` callback for its
     * sink, and return the accumulated rows as a DataFrame with
-    * `schema`, ordered by `orderCols`. The queue is the bounded
+    * `schema`, ordered by `orderCols` on the driver
+    * ([[graft.engine.Localize.local]]). The queue is the bounded
     * GRADING sink (one verdict row per graded unit — production
     * sinks write to a table). */
   def driveAndCollect(batches: Seq[DataFrame],
@@ -75,9 +76,7 @@ object FileDrip {
     val spark = batches.head.sparkSession
     val acc = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
     drive(batches)(stream => start(stream, acc.add(_)))
-    spark.createDataFrame(
-        java.util.Arrays.asList(acc.toArray(
-          Array.empty[org.apache.spark.sql.Row]): _*), schema)
-      .orderBy(orderCols.map(org.apache.spark.sql.functions.col): _*)
+    graft.engine.Localize.local(spark,
+      acc.toArray(Array.empty[org.apache.spark.sql.Row]).toSeq, schema, orderCols)
   }
 }
