@@ -67,7 +67,7 @@ object LocalFiles {
 
   /** rwx bits (0777) as java.nio permissions: OWNER_READ is 0400, and
     * each later constant one bit lower. */
-  private[engine] def posix(bits: Int): java.util.Set[PosixFilePermission] = {
+  private def posix(bits: Int): java.util.Set[PosixFilePermission] = {
     val set = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
     ordered.zipWithIndex.foreach { case (p, i) =>
       if ((bits & (0x100 >> i)) != 0) set.add(p) }

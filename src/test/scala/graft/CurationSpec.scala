@@ -443,9 +443,9 @@ class CurationSpec extends AnyFunSuite with SparkSpec {
     // trigger jobs run on the stream's thread and carry the tag too.
     // Measured here: 10 jobs with undistinct mask rows and the result
     // sorted on the driver; 14 with a distinct of each trigger's keys
-    // and a global orderBy before the closing collect; 14 with one
-    // entry write per trigger and an
-    // anti-join read that skips the oldest entry's masks; 21 with a
+    // and a global orderBy before the closing collect (one entry
+    // write per trigger and an anti-join read that skips the oldest
+    // entry's masks, as now); 21 with a
     // keys write, then a rows write into 16 key buckets; 23
     // with the two-branch prior read, 25 with read-time schema
     // inference, 30 with both plus the two-shuffle key write and an
