@@ -87,7 +87,7 @@ object Bench {
     // Warm-ups, untimed but inside the budget. The scan pass takes the
     // JVM and parquet-reader startup off the first measured row. The
     // machinery pass covers what a scan misses: the streaming
-    // micro-batch path, eager localCheckpoint, the parquet write path
+    // micro-batch path, Iterate.measured, the parquet write path
     // and the window/join codegen shapes; without it the first row of
     // each family pays that machinery's first use.
     guarded("session warm-up",
@@ -169,13 +169,14 @@ object Bench {
   }
 
   /** Machinery warm-up body over a tiny synthetic frame: one
-    * FileDrip micro-batch that writes and re-reads parquet, an eager
-    * localCheckpoint, and a window + broadcast-join + aggregate plan.
+    * FileDrip micro-batch that writes and re-reads parquet, one
+    * `Iterate.measured` frame, and a window + broadcast-join +
+    * aggregate plan.
     * Reads nothing from sfDir and caches nothing. */
   def machineryWarm(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val base = s.range(0, 512, 1, 4).toDF("id").localCheckpoint(true)
+    val base = graft.engine.Iterate.measured(s.range(0, 512, 1, 4).toDF("id"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_warm")
     try {
       graft.streaming.FileDrip.drive(Seq(base)) { stream =>

@@ -32,9 +32,8 @@ object CompactionProbe {
       // seed: 80% of the corpus pre-indexed (the deployment shape —
       // the index is big, each trigger is small)
       state.seed(pipeline.Scoring.tfdOf(docs.filter(col("doc_id") % 10 < 8)))
-      val tail = docs.filter(col("doc_id") % 10 >= 8)
-        .withColumn("__b", pmod(col("doc_id"), lit(appends.toLong)))
-        .localCheckpoint(true)
+      val tail = engine.Iterate.measured(docs.filter(col("doc_id") % 10 >= 8)
+        .withColumn("__b", pmod(col("doc_id"), lit(appends.toLong))))
       spark.read.parquet(s"$dir/nation.parquet").count() // session warm-up
       System.gc(); Thread.sleep(1000)
       var prevLive = state.committedSeqs().size

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.engine.Iterate
 import graft.sources.Tables
 
 /** Graph analytics from the reference's example programs
@@ -73,7 +74,7 @@ object Graph {
     * decimals per superstep (kills cross-engine FP sum-order noise —
     * same device as KMeans centroids). One join + one hash-agg per
     * superstep; ranks stay distributed, lineage cut via
-    * localCheckpoint.
+    * [[graft.engine.Iterate.loopDF]].
     */
   /** Library form: PageRank over any degree-annotated both-arcs edge
     * frame (`src`, `dst`, `d` = deg(src)); returns (node, r). */
@@ -90,7 +91,7 @@ object Graph {
     // whole-stage codegen hits the compile cache instead of
     // recompiling a deeper nested plan — the cold first-run cost the
     // driver's single-run walk pays.
-    graft.engine.Iterate.loopDF(init, iters) { (rs, _) =>
+    Iterate.loopDF(init, iters) { (rs, _) =>
       ed.join(broadcast(rs), ed("src") === rs("node"))
         .groupBy(col("dst").as("node2"))
         .agg(round(lit(0.15) + lit(0.85) * sum(col("r") / col("d")), 6).as("r2"))
@@ -141,25 +142,24 @@ object Graph {
     // filter + 1-row agg over the checkpointed state — no
     // per-superstep semi-join shuffle
     val wd = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-    val ed = edges
+    val ed = Iterate.measured(edges
       .repartition(graft.engine.Cpu.sizedParts(edges), col("src"))
-      .withColumn("d", count(lit(1)).over(wd))
-      .localCheckpoint(true)
-    val nodes = edges.select(col("src").as("node"))
+      .withColumn("d", count(lit(1)).over(wd)))
+    val nodes = Iterate.measured(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
       .join(ed.select(col("src").as("node")).distinct()
         .withColumn("has_out", lit(true)), Seq("node"), "left_outer")
-      .select(col("node"), coalesce(col("has_out"), lit(false)).as("has_out"))
-      .localCheckpoint(true)
+      .select(col("node"), coalesce(col("has_out"), lit(false)).as("has_out")))
     // vertex count as a driver scalar (r18): n is loop-invariant and
     // bounded (ONE value) — the Iterate doc's "tiny driver state rides
     // better as a literal" rule. Replaces a per-superstep 1-row
     // broadcast + crossJoin; 1.0/n, 0.15/n and dm/n are the identical
-    // IEEE divisions the column form computed.
-    val n = nodes.count().toDouble
+    // IEEE divisions the column form computed. The node set's
+    // materialization already counted it: no job.
+    val n = Iterate.rowCount(nodes).toDouble
     val init = nodes
       .select(col("node"), lit(1.0 / n).as("r"), col("has_out"))
-    graft.engine.Iterate.loopDF(init, iters) { (rs, _) =>
+    Iterate.loopDF(init, iters) { (rs, _) =>
       val dm = rs.filter(!col("has_out"))
         .agg(coalesce(sum(col("r")), lit(0.0)).as("dm"))
       val contrib = ed.join(broadcast(rs.select(col("node"), col("r"))),
@@ -230,7 +230,7 @@ object Graph {
     // truncation of the (node-cardinality, tiny) label relation keeps
     // every superstep one join + one hash-agg over the persisted
     // edges, at any iteration count.
-    graft.engine.Iterate.loopDF(init.localCheckpoint(true), iters) { (ls, _) =>
+    Iterate.loopDF(Iterate.measured(init), iters) { (ls, _) =>
       // label' = min(own ∪ neighbors): folding the self-label into the
       // aggregation replaces the join-back-then-least shape with ONE
       // join + ONE hash-agg per superstep (map-side partial min keeps
@@ -279,7 +279,7 @@ object Graph {
   def connectedComponentsDelta(ed: DataFrame, maxIter: Int): DataFrame = {
     val init = ed.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-    graft.engine.Iterate.delta(init, init, maxIter, "node") { (sol, ws) =>
+    Iterate.delta(init, init, maxIter, "node") { (sol, ws) =>
       // candidate labels propagate only from vertices that changed; the
       // delta is the vertices whose label drops
       val nbrMin = ed.join(ws, ed("src") === ws("node"))
@@ -401,7 +401,7 @@ object Graph {
     * at distance (2^(k-1), 2^k], so `maxIter` caps reach at distance
     * 2^maxIter. */
   def transitiveClosure(edges: DataFrame, maxIter: Int): DataFrame =
-    graft.engine.Iterate.delta(edges, edges, maxIter, "src", "dst") { (sol, ws) =>
+    Iterate.delta(edges, edges, maxIter, "src", "dst") { (sol, ws) =>
       // doubling join: fresh prefixes × full solution suffixes
       ws.as("p").join(sol.as("q"), col("p.dst") === col("q.src"))
         .select(col("p.src").as("src"), col("q.dst").as("dst"))
@@ -440,7 +440,7 @@ object Graph {
   def ssspFromEdges(spark: SparkSession, ed: DataFrame, source: Long,
       iters: Int): DataFrame = {
     val init = spark.range(1).select(lit(source).as("node"), lit(0L).as("dist"))
-    graft.engine.Iterate.loopDF(init, iters) { (ds, _) =>
+    Iterate.loopDF(init, iters) { (ds, _) =>
       val cand = ed.join(broadcast(ds), ed("src") === ds("node"))
         .groupBy(col("dst").as("cnode"))
         .agg(min(col("dist") + col("w")).as("cdist"))
@@ -493,7 +493,7 @@ object Graph {
   def labelPropagationFromEdges(ed: DataFrame, iters: Int): DataFrame = {
     val init = ed.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
-    graft.engine.Iterate.loopDF(init, iters) { (ls, _) =>
+    Iterate.loopDF(init, iters) { (ls, _) =>
       ed.join(broadcast(ls), ed("src") === ls("node"))
         .groupBy(col("dst"), col("label"))
         .agg(count(lit(1)).as("n"))
@@ -553,12 +553,12 @@ object Graph {
       // unmaterialized lineage re-runs each join+agg up to 4x per
       // superstep — measured 6.0 s for 2 iterations, 2.1 s with the
       // node-cardinality checkpoint here
-      val st = df.localCheckpoint(true)
+      val st = Iterate.measured(df)
       val mx = st.agg(max(col(c)).as("mx"))
       st.crossJoin(broadcast(mx))
         .select(col("node"), round(col(c) / col("mx"), 6).as(c))
     }
-    val hubs = graft.engine.Iterate.loopDF(init, HitsIters) { (hs, _) =>
+    val hubs = Iterate.loopDF(init, HitsIters) { (hs, _) =>
       val auth = normalize(
         e0.join(broadcast(hs), e0("p") === hs("node"))
           .groupBy(col("s").as("node")).agg(round(sum(col("h")), 6).as("a")), "a")
@@ -664,7 +664,7 @@ object Graph {
     val init = ed.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .withColumn("score", lit(1.0))
-    val fin = graft.engine.Iterate.loopDF(init, CdIters) { (vs, t) =>
+    val fin = Iterate.loopDF(init, CdIters) { (vs, t) =>
       val sums = ed.join(broadcast(vs), ed("src") === vs("node"))
         .groupBy(ed("dst"), col("label"))
         .agg(round(sum(col("score")), 6).as("ssum"), max(col("score")).as("smax"))
@@ -1167,7 +1167,7 @@ object Graph {
     * Vertex set = edge endpoints (zero-degree nations excluded — the
     * analytic's default includeZeroDegreeVertices=false). */
   def q136DirectedVertexMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val trade = tradeEdges(spark, dir).localCheckpoint(true)
+    val trade = Iterate.measured(tradeEdges(spark, dir))
     val und = trade.select(least(col("src"), col("dst")).as("u"),
       greatest(col("src"), col("dst")).as("v")).distinct()
     val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
@@ -1215,7 +1215,7 @@ object Graph {
     * undirected q134 formulas evaluated on the digraph's neighbor
     * graph. Exact integers throughout. */
   def q137DirectedEdgeMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val trade = tradeEdges(spark, dir).localCheckpoint(true)
+    val trade = Iterate.measured(tradeEdges(spark, dir))
     val und = trade.select(least(col("src"), col("dst")).as("u"),
       greatest(col("src"), col("dst")).as("v")).distinct()
     val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
@@ -1321,7 +1321,7 @@ object Graph {
   def q154DirectedTriangleListing(spark: SparkSession, dir: String): DataFrame =
     // the pair frame feeds all three legs of the triangle self-join —
     // materialize it once instead of re-deriving the trade rollup 3x
-    dirTriangles(tradePairs(spark, dir).localCheckpoint(true))
+    dirTriangles(Iterate.measured(tradePairs(spark, dir)))
       .orderBy(col("a"), col("b"), col("c"))
 
   val q154Sql: String =
@@ -1350,8 +1350,8 @@ object Graph {
     // q151's triangle count (4 reads) — both are genuinely multi-read
     // lineage, so materialize each ONCE (the twice-read rule; the
     // un-materialized variant re-derived p ~9x across the family)
-    val p = dirPairs(edges).localCheckpoint(true)
-    val tri = dirTriangles(p).localCheckpoint(true)
+    val p = Iterate.measured(dirPairs(edges))
+    val tri = Iterate.measured(dirTriangles(p))
     val credits = tri.select(col("a").as("n"), (col("fbc") + col("rbc")).as("cr"))
       .union(tri.select(col("b").as("n"), (col("fac") + col("rac")).as("cr")))
       .union(tri.select(col("c").as("n"), (col("fab") + col("rab")).as("cr")))
@@ -1468,7 +1468,7 @@ object Graph {
     // p feeds the triangle self-join (3 reads) plus deg's two
     // projections — materialize once (callers checkpoint `edges`
     // separately: it still feeds outd/ind/dirPairs directly)
-    val p = dirPairs(edges).localCheckpoint(true)
+    val p = Iterate.measured(dirPairs(edges))
     val deg = p.select(col("u").as("n")).union(p.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     val outd = edges.groupBy(col("src").as("n")).agg(count(lit(1)).as("od"))
@@ -1555,7 +1555,7 @@ object Graph {
   }
 
   def q152DirectedTriadicCensus(spark: SparkSession, dir: String): DataFrame =
-    directedTriadicCensusFromEdges(tradeEdges(spark, dir).localCheckpoint(true))
+    directedTriadicCensusFromEdges(Iterate.measured(tradeEdges(spark, dir)))
 
   val q152Sql: String =
     s"""WITH $tradeSql,

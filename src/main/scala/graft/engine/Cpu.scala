@@ -42,7 +42,7 @@ object Cpu {
     *    ignore the size estimate entirely and gate on the RDD's
     *    actual partition count (free to read — the RDD already
     *    exists in the plan node; no second physical plan is built).
-    *    The states [[Iterate.delta]] materializes do carry measured
+    *    The frames [[Iterate.measured]] materializes do carry measured
     *    sizes (row count × row width), but this gate and
     *    [[sizedParts]] still size EVERY LogicalRDD leaf by its
     *    partition count: nothing marks which leaves are measured.

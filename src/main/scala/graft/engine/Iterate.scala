@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
@@ -18,12 +20,17 @@ import org.apache.spark.sql.graftbridge.Bridge
   *   - lineage growth: each superstep stacks a plan on top of the
   *     last; after tens of steps analysis/codegen time dominates and a
   *     lost-partition recompute replays the whole history. Every loop
-  *     here truncates with `localCheckpoint` at every superstep, which
+  *     here truncates with [[measured]] at every superstep, which
   *     also gives step N+1 the same plan shape as step N, so its
   *     generated classes come from the codegen cache.
   *   - tiny driver state (e.g. k centroids) is better carried as plain
   *     Scala values re-broadcast into literals each step than as a
   *     DataFrame — see [[graft.analytics.Iterative]].
+  *
+  * Like the reference's iteration head, this object owns how state is
+  * materialized: [[measured]] is the engine's only materialization
+  * call, used by these loops and by every query that reads one
+  * derived frame more than once.
   */
 object Iterate {
 
@@ -32,10 +39,10 @@ object Iterate {
     (1 to n).foldLeft(init)(step)
 
   /** Iterate a DataFrame-valued superstep n times, truncating the
-    * lineage after every step (eager localCheckpoint). */
+    * lineage after every step ([[measured]]). */
   def loopDF(init: DataFrame, n: Int)(
       step: (DataFrame, Int) => DataFrame): DataFrame =
-    (1 to n).foldLeft(init)((cur, i) => step(cur, i).localCheckpoint(true))
+    loop(init, n)((cur, i) => measured(step(cur, i)))
 
   /** Delta iteration — Flink's `solution.iterateDelta(workset,
     * maxIterations, keyPositions)` (reference flink-java
@@ -51,49 +58,49 @@ object Iterate {
     *
     * Each superstep's delta is computed and materialized ONCE and
     * serves both roles, and an initial solution that is also the
-    * initial workset is materialized once.
-    *
-    * Every state the loop materializes carries its MEASURED size as
-    * plan statistics (row count, and rows × estimated row width): a
-    * checkpoint otherwise inherits its origin plan's estimate, which
-    * for joins over derived keys is garbage — at sf0.1, q57's 75-row
-    * edge state was estimated at 5.1 GiB and its 108-row first delta at
-    * 15.9 EiB, so every superstep planned two sort-merge joins over
-    * four shuffle exchanges that AQE only replaced with broadcasts
-    * after running them; with measured sizes they broadcast both
-    * states and shuffle only the delta's dedup. The count is the one
-    * job that materializes the (lazily marked) checkpoint, and it
-    * doubles as the emptiness test. A whole-row merge stays a union of
-    * those measured leaves (its statistics are their sum); a keyed
-    * merge is materialized and measured like the delta.
+    * initial workset is materialized once. The delta's measured row
+    * count is the emptiness test. A whole-row merge stays a union of
+    * measured leaves (its statistics are their sum); a keyed merge is
+    * materialized and measured like the delta.
     */
   def delta(solution: DataFrame, workset: DataFrame, maxIter: Int, key: String*)(
       step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val wholeRow = key.toSet == solution.columns.toSet
+    def merge(sol: DataFrame, d: DataFrame): DataFrame =
+      if (wholeRow) sol.union(d)
+      else measured(sol.join(d.select(key.map(col): _*), key, "left_anti").union(d))
+    @tailrec def go(sol: DataFrame, ws: DataFrame, i: Int): DataFrame =
+      if (i >= maxIter || rowCount(ws) == 0) sol
+      else {
+        val d = measured(step(sol, ws))
+        go(if (rowCount(d) > 0) merge(sol, d) else sol, d, i + 1)
+      }
     val init = measured(solution)
-    var sol = init._1
-    var (ws, rows) = if (workset eq solution) init else measured(workset)
-    var i = 0
-    while (i < maxIter && rows > 0) {
-      val (d, n) = measured(step(sol, ws))
-      if (n > 0) sol =
-        if (wholeRow) sol.union(d)
-        else measured(sol.join(d.select(key.map(col): _*), key, "left_anti").union(d))._1
-      ws = d
-      rows = n
-      i += 1
-    }
-    sol
+    go(init, if (workset eq solution) init else measured(workset), 0)
   }
 
-  /** Checkpoint `df` and count its rows in one job (counting the
-    * checkpoint's RDD computes it and fills the local checkpoint),
-    * then attach the count as the leaf's statistics. */
-  private def measured(df: DataFrame): (DataFrame, Long) = {
+  /** The engine's one materialization call: checkpoint `df` locally
+    * and count its rows in ONE job (counting the checkpoint's RDD
+    * computes it and fills the local checkpoint), then attach the
+    * count as the leaf's statistics ([[rowCount]] reads it back).
+    *
+    * A checkpoint otherwise inherits its origin plan's size estimate,
+    * which for joins over derived keys is garbage — at sf0.1, q57's
+    * 75-row edge state was estimated at 5.1 GiB and its 108-row first
+    * delta at 15.9 EiB, so every superstep planned two sort-merge
+    * joins over four shuffle exchanges that AQE only replaced with
+    * broadcasts after running them; with measured sizes they
+    * broadcast both states and shuffle only the delta's dedup. */
+  def measured(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(false)
     val rows = cp.queryExecution.logical match {
       case r: LogicalRDD => r.rdd.count()
     }
-    (Bridge.withRowCount(cp, rows), rows)
+    Bridge.withRowCount(cp, rows)
   }
+
+  /** The row count [[measured]] attached to `m`, read from the plan
+    * with no job. */
+  def rowCount(m: DataFrame): Long =
+    m.queryExecution.logical.stats.rowCount.get.toLong
 }

@@ -66,9 +66,11 @@ object SessionCache {
     * SQL-level caches are cleared only when something is actually
     * pinned (paying clearCache ~190× per loop contributed to the
     * round-9 window overrun), then RDD-level blocks are swept
-    * unconditionally — localCheckpoint(true) state (superstep loops,
-    * q141's assignment, q187's inverted index) lives BELOW the cache
-    * manager and accumulating it across a loop had the sf1 tail
+    * unconditionally — every frame [[Iterate.measured]] materializes
+    * (superstep states, q141's assignment, q187's inverted index) is
+    * a local checkpoint that lives BELOW the cache manager
+    * (`Dataset.unpersist` does not free it; this sweep is the only
+    * release), and accumulating it across a loop had the sf1 tail
     * spiking 6-16× over isolated truth (A/B'd in SCALE.md). Safe
     * between self-contained queries: each invocation builds fresh
     * checkpoints, and the SQL-cache clear drops anything memoized on

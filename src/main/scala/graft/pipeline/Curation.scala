@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Iterate
 import graft.functions.Portable._
 import graft.sources.Tables
 
@@ -640,10 +641,9 @@ object Curation {
     import org.apache.spark.sql.types._
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
-    val olds = docs.filter(col("doc_id") % 10 =!= 9)
+    val olds = Iterate.measured(docs.filter(col("doc_id") % 10 =!= 9)
       .select(col("doc_id"),
-        md5(coalesce(col("text"), lit(NullTextSentinel))).as("h"))
-      .localCheckpoint(true)
+        md5(coalesce(col("text"), lit(NullTextSentinel))).as("h")))
     val news = docs.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id"),
         when(col("doc_id") % 7 === 3, upper(col("text")))
@@ -664,12 +664,11 @@ object Curation {
     val streamed = graft.streaming.FileDrip.driveAndCollect(Seq(
         news.filter(col("doc_id") % 2 === 0),
         news.filter(col("doc_id") % 2 === 1)),
-        schema, Seq("doc_id")) { (stream, emit) =>
+        schema, Nil) { (stream, emit) =>
       graft.streaming.Streams.toForeachBatch(stream,
           "q205_streaming_diff") { (batch, batchId) =>
-        val bh = batch.select(col("doc_id"),
-            md5(coalesce(col("text"), lit(NullTextSentinel))).as("nh"))
-          .localCheckpoint(true)
+        val bh = Iterate.measured(batch.select(col("doc_id"),
+            md5(coalesce(col("text"), lit(NullTextSentinel))).as("nh")))
         val verdicts = bh.join(olds.withColumnRenamed("h", "oh"),
             Seq("doc_id"), "left_outer")
           .select(col("doc_id"),
@@ -679,16 +678,14 @@ object Curation {
         verdicts.collect().foreach(emit)
         val ids = bh.select(col("doc_id"))
         seen.append(batchId, ids, ids)
-        bh.unpersist(blocking = false)
       }
     }
     val removed = olds.join(seen.current(), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), lit("removed").as("verdict"))
-    val out = streamed.unionByName(
-        graft.engine.Localize(removed)(seen.delete()))
-      .orderBy(col("doc_id"))
-    olds.unpersist(blocking = false)
-    out
+      .select(col("doc_id"), lit("removed").as("verdict")).collect()
+    seen.delete()
+    // both row sets are on the driver: sort them there, with no job
+    graft.engine.Localize.local(spark, streamed.collect().toSeq ++ removed,
+      schema, Seq("doc_id"))
   }
 
   val q205Sql: String =
@@ -755,16 +752,15 @@ object Curation {
       splits: Int): DataFrame = {
     import org.apache.spark.sql.types._
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val olds = docs.filter(col("doc_id") % 10 =!= 9)
+    val olds = Iterate.measured(docs.filter(col("doc_id") % 10 =!= 9)
       .select(col("doc_id"),
-        md5(coalesce(col("text"), lit(NullTextSentinel))).as("h"))
-      .localCheckpoint(true)
+        md5(coalesce(col("text"), lit(NullTextSentinel))).as("h")))
     // one materialization of the two-branch feed union; each drip
     // batch write then slices the cache instead of re-scanning
-    val events = cdcEvents(spark, dir).localCheckpoint(true)
+    val events = Iterate.measured(cdcEvents(spark, dir))
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("verdict", StringType)))
-    val out = graft.streaming.FileDrip.driveAndCollect(
+    graft.streaming.FileDrip.driveAndCollect(
         (0 until splits).map(s => events.filter(col("doc_id") % splits === s)),
         schema, Seq("doc_id")) { (stream, emit) =>
       graft.streaming.Streams.toForeachBatch(stream,
@@ -772,8 +768,6 @@ object Curation {
         cdcClassify(batch, olds).collect().foreach(emit)
       }
     }
-    olds.unpersist(blocking = false)
-    out
   }
 
   def q208CdcTombstones(spark: SparkSession, dir: String): DataFrame =
@@ -920,9 +914,9 @@ object Curation {
     // materialize the feed once (r17 optimization): scd2Events is a
     // FOUR-branch union, each branch its own documents scan + md5 —
     // and every drip batch write re-executes its slice's lineage, so
-    // a 2-split drive paid 8 corpus scans. One localCheckpoint makes
+    // a 2-split drive paid 8 corpus scans. One materialization makes
     // each batch write a cheap cache slice.
-    val events = scd2Events(spark, dir).localCheckpoint(true)
+    val events = Iterate.measured(scd2Events(spark, dir))
     val phases = Seq(10L, 20L, 30L)
     // time-contiguous batches: phase i goes to batch i*splits/3
     phases.groupBy(p => phases.indexOf(p) * splits / 3)
@@ -1048,7 +1042,7 @@ object Curation {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     // one materialization, cheap per-batch slices (scd2Batches note)
-    val events = scd2Events(spark, dir).localCheckpoint(true)
+    val events = Iterate.measured(scd2Events(spark, dir))
     val batches = arrival.map(ps => events.filter(col("ts").isin(ps: _*)))
     val state = graft.streaming.DurableIndex.temp(spark, "q216", "doc_id")
     val evSchema = StructType(Seq(StructField("doc_id", LongType),

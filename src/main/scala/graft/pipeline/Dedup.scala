@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Iterate
 import graft.functions.Portable._
 import graft.sources.Tables
 
@@ -533,8 +534,8 @@ object Dedup {
     // materialize the pair relation ONCE: it is tiny (near-dup pairs,
     // not the corpus) but its lineage is the whole MinHash pipeline,
     // which every superstep would otherwise recompute
-    val pairs = q29MinhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(true)
+    val pairs = Iterate.measured(
+      q29MinhashLsh(spark, dir).select(col("doc_a"), col("doc_b")))
     resolveClusters(pairs, steps)
   }
 
@@ -554,7 +555,7 @@ object Dedup {
     // identical (LogicalRDD → join → union → agg), so the deep unrolls
     // (q203's 10, q211's 15 supersteps) hit the codegen cache from
     // step 2 on instead of recompiling nested plans.
-    val labels = graft.engine.Iterate.loopDF(init, steps) { (ls, _) =>
+    val labels = Iterate.loopDF(init, steps) { (ls, _) =>
       edges.join(ls, edges("src") === ls("node"))
         .select(col("dst").as("node2"), col("label"))
         .union(ls.select(col("node").as("node2"), col("label")))
@@ -645,7 +646,7 @@ object Dedup {
     q203ClusterStar(spark, dir, StarSteps)
 
   def q203ClusterStar(spark: SparkSession, dir: String, steps: Int): DataFrame =
-    resolveClusters(starVerifiedPairs(spark, dir).localCheckpoint(true), steps)
+    resolveClusters(Iterate.measured(starVerifiedPairs(spark, dir)), steps)
 
   /** `e → l0 → … → lN` min-label CTE chain over a preceding `pairs`
     * CTE, plus the final projection — the SQL twin of
@@ -658,7 +659,7 @@ object Dedup {
     // the source parquet past the fd limit (observed at 10 steps;
     // q62's 5 only survived by being 32 re-reads). Materializing
     // pins each label state to one evaluation, like the Spark side's
-    // per-step localCheckpoint.
+    // per-step materialization.
     val chain = (1 to steps).map { i =>
       s"""n$i AS (SELECT e.dst AS node, min(l.label) AS nl
          |  FROM e JOIN l${i - 1} l ON e.src = l.node GROUP BY e.dst),

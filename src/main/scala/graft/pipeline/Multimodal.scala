@@ -4,6 +4,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Iterate
 import graft.functions.Portable
 import graft.sources.Tables
 
@@ -354,7 +355,7 @@ object Multimodal {
     // file scans) — decode once, band the 16-byte signatures (the
     // corpusTfd posture; at 100 TB this relation is what you persist)
     Dedup.bandedHammingPairs(
-      dHashSignatures(spark, dir).localCheckpoint(true), "dhash",
+      Iterate.measured(dHashSignatures(spark, dir)), "dhash",
       Dedup.MaxBucket)
 
   /** `ch0 → … → sig → bands`: the dHash signature relation
@@ -441,7 +442,7 @@ object Multimodal {
       m.copy(payload = netpbmEncode(samples, asP6 = m.doc_id % 3 == 0))
     }
     Dedup.bandedHammingPairs(
-      dHashSignaturesOf(pgmCat, PpmDecoder).localCheckpoint(true), "dhash",
+      Iterate.measured(dHashSignaturesOf(pgmCat, PpmDecoder)), "dhash",
       Dedup.MaxBucket)
   }
 
@@ -488,7 +489,7 @@ object Multimodal {
       m.copy(payload = wavEncode(samples, stereo = m.doc_id % 3 == 0))
     }
     Dedup.bandedHammingPairs(
-      dHashSignaturesOf(wavCat, WavDecoder).localCheckpoint(true), "dhash",
+      Iterate.measured(dHashSignaturesOf(wavCat, WavDecoder)), "dhash",
       Dedup.MaxBucket)
   }
 
@@ -514,10 +515,9 @@ object Multimodal {
     * union-find over the graded q207 pairs. */
   def q211MediaClusterStar(spark: SparkSession, dir: String): DataFrame =
     Dedup.resolveClusters(
-      Dedup.sigCollapsePairs(
-        dHashSignatures(spark, dir).localCheckpoint(true), "dhash",
-        Dedup.MaxBucket)
-        .localCheckpoint(true),
+      Iterate.measured(Dedup.sigCollapsePairs(
+        Iterate.measured(dHashSignatures(spark, dir)), "dhash",
+        Dedup.MaxBucket)),
       Dedup.SigStarSteps)
 
   /** Oracle: shared signature CTEs → exact-signature collapse edges
@@ -589,7 +589,7 @@ object Multimodal {
       }
     }
     val out = Dedup.bandedHammingPairs(
-      state.current().localCheckpoint(true), "dhash", Dedup.MaxBucket)
+      Iterate.measured(state.current()), "dhash", Dedup.MaxBucket)
     graft.engine.Localize(out)(state.delete())
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Iterate
 import graft.functions.Portable._
 import graft.sources.Tables
 
@@ -640,8 +641,8 @@ object Scoring {
     * q195's relevance relation reads it instead of re-tokenizing the
     * corpus (r12 review #2). */
   private[graft] def corpusTfd(spark: SparkSession, dir: String): DataFrame =
-    tfdOf(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-      .localCheckpoint(true)
+    Iterate.measured(
+      tfdOf(Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
 
   /** Broadcast (qid, t) query→term relation — explicit schema, not
     * spark.implicits (the TypeTag product encoder breaks under the
@@ -818,9 +819,8 @@ object Scoring {
     // materialized: cand feeds BOTH the max-normalizer and the rerank
     // join — the twice-read rule (an unmaterialized lineage would
     // re-derive the whole BM25 pipeline above the checkpoint twice)
-    val cand = bm25Scores(spark, dir)
-      .orderBy(col("bm25").desc, col("doc_id")).limit(HybridCand)
-      .localCheckpoint(true)
+    val cand = Iterate.measured(bm25Scores(spark, dir)
+      .orderBy(col("bm25").desc, col("doc_id")).limit(HybridCand))
     hybridFrom(cand, emb, qv)
   }
 
@@ -951,10 +951,10 @@ object Scoring {
     val tfd = corpusTfd(spark, dir)
     // one BM25 pass; the checkpoint feeds the lex list, the hybrid
     // rerank, and the RRF lex leg
-    val cand = bm25From(tfd, Bm25Query, queryTermsDf(spark, Seq(0 -> Bm25Query)))
-      .select(col("doc_id"), col("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id")).limit(HybridCand)
-      .localCheckpoint(true)
+    val cand = Iterate.measured(
+      bm25From(tfd, Bm25Query, queryTermsDf(spark, Seq(0 -> Bm25Query)))
+        .select(col("doc_id"), col("bm25"))
+        .orderBy(col("bm25").desc, col("doc_id")).limit(HybridCand))
     // global windows here rank ≤ EvalK-row limited relations (TakeOrdered
     // first, then rank the tiny result) — bounded at any scale, the
     // WindowExec warnings are benign
@@ -973,10 +973,9 @@ object Scoring {
     // comment, now applied here too). Materialized once: it feeds
     // the ideal ranking, the total-relevant scalar, and all three
     // per-list joins.
-    val rel = tfd.filter(col("t").isin(Bm25Query: _*))
+    val rel = Iterate.measured(tfd.filter(col("t").isin(Bm25Query: _*))
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("int").as("rel"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).cast("int").as("rel")))
     // gain (1 << rel) − 1 ∈ {0,1,3,7}: the DataFrame shiftleft only
     // takes a literal shift, so the column-shift goes through expr
     val gain = expr("shiftleft(1, rel)") - lit(1)
@@ -1095,11 +1094,10 @@ object Scoring {
     // relevance from the SAME posting relation (tfd rows are already
     // distinct per (doc, t) — no second corpus tokenize pass); read
     // three times (ideal ranking, totals, per-list join)
-    val rel = tfd.filter(col("t").isin(union: _*))
+    val rel = Iterate.measured(tfd.filter(col("t").isin(union: _*))
       .join(broadcast(qterms), Seq("t"))
       .groupBy(col("qid"), col("doc_id"))
-      .agg(count(lit(1)).cast("int").as("rel"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).cast("int").as("rel")))
     val gain = expr("shiftleft(1, rel)") - lit(1)
     def dcgTerm(rn: Column): Column =
       round(gain.cast("double") / (log(rn + lit(1)) / log(lit(2.0))), 6)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.Iterate
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -1412,7 +1413,7 @@ object Similarity {
       .map(r => mkVec(r.getLong(0), r.getSeq[Float](1)))
       .sortBy(_.id)
     val bc = spark.sparkContext.broadcast(cents)
-    val assigned = emb.select(col("vec_id"), col("embedding"))
+    val assigned = Iterate.measured(emb.select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])]
       .mapPartitions { it =>
         val cs = bc.value
@@ -1423,8 +1424,7 @@ object Similarity {
           (id, cell.toLong, cc, e)
         }
       }
-      .toDF("vec_id", "cell", "ctr_cos", "embedding")
-      .localCheckpoint(true)
+      .toDF("vec_id", "cell", "ctr_cos", "embedding"))
     val a = assigned.select(col("vec_id").as("va"), col("cell").as("ca"),
       col("ctr_cos").as("cca"), col("embedding").as("ea"))
     val b = assigned.select(col("vec_id").as("vb"), col("cell").as("cb"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.engine.Iterate
 import graft.streaming.WindowSpi.{EventTime, Step}
 
 /** Structured Streaming surface (SURVEY.md §2.6 — the reference's
@@ -154,7 +155,7 @@ object Streams {
     checkpointDir.foreach(writer.option("checkpointLocation", _))
     writer
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val stepped = step(batch).localCheckpoint(true)
+        val stepped = Iterate.measured(step(batch))
         // NULL-safe and complementary by construction: a row goes to
         // exactly one of the two branches, never neither
         val doneCond = coalesce(isDone || col(hopCol) >= maxHops, lit(true))

@@ -428,6 +428,16 @@ class CurationSpec extends AnyFunSuite with SparkSpec {
     assert(got.collect().map(_.toString).toSeq == want.collect().map(_.toString).toSeq)
   }
 
+  test("q205 submits a bounded number of Spark jobs per warm run") {
+    // the verdicts and the removed rows are both on the driver, so
+    // the result is sorted there. Measured here: 16 jobs; 19 with a
+    // global orderBy of their union (range sample, sort shuffle, final
+    // stage)
+    Curation.q205StreamingSnapshotDiff(spark, sf).collect()
+    val jobs = SparkJobs.of(spark)(Curation.q205StreamingSnapshotDiff(spark, sf).collect())
+    assert(jobs <= 16, s"warm q205 submitted $jobs jobs")
+  }
+
   test("q208 submits a bounded number of Spark jobs per warm run") {
     // two cached inputs, then per batch one drip write and one
     // trigger (the classify join and its broadcast). Measured here: 8

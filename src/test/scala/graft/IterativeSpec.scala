@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
@@ -88,6 +89,40 @@ class IterativeSpec extends AnyFunSuite with SparkSpec {
       case _: LogicalRDD | Project(_, _: LogicalRDD) =>
       case p => fail(s"expected a LogicalRDD leaf under at most one Project:\n$p")
     }
+  }
+
+  test("Iterate.measured materializes and counts in one job") {
+    val src = spark.range(0, 1000, 1, 4).toDF("v").filter(col("v") % 3 === 0)
+    var m: DataFrame = null
+    assert(SparkJobs.of(spark) { m = Iterate.measured(src) } == 1)
+    m.queryExecution.logical match {
+      case r: LogicalRDD => assert(r.stats.rowCount.contains(BigInt(334)))
+      case p => fail(s"expected a LogicalRDD leaf:\n$p")
+    }
+    var rows = -1L
+    assert(SparkJobs.of(spark) { rows = Iterate.rowCount(m) } == 0)
+    assert(rows == m.count() && rows == 334)
+  }
+
+  test("no query module materializes outside graft.engine") {
+    // Iterate.measured is the engine's one materialization call; a
+    // hand-rolled checkpoint anywhere else escapes its recovery posture
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val engine = root.resolve("graft/engine")
+    val call = """(localCheckpoint|\.checkpoint)\(""".r
+    val comment = """^\s*(//|/\*|\*)""".r
+    val files = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.exists(_.startsWith(engine)), s"no engine sources under $root")
+    val offenders = for {
+      f <- files if !f.startsWith(engine)
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if comment.findFirstIn(line).isEmpty && call.findFirstIn(line).nonEmpty
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   // ------------------------------------------------------ Iterate.delta

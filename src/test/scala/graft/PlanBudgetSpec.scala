@@ -160,11 +160,16 @@ class PlanBudgetSpec extends AnyFunSuite with SparkSpec {
     "q148_clustering_metrics" -> PlanCounts(4, 0, 9, 3),
     // identical frame + closed-form projections, same census
     "q149_triadic_census" -> PlanCounts(4, 0, 9, 3),
-    // pair + triangle frames localCheckpoint'd in dirCreditFrames
+    // pair + triangle frames materialized in dirCreditFrames
     // (each fed 4-5 downstream reads — round-7 verdict finding #1):
     // the final plan is credit/degree aggs + join + fused metric agg
-    // over checkpoint scans, with the 1-row triangle count broadcast
-    "q151_directed_clustering_metrics" -> PlanCounts(0, 0, 3, 1),
+    // over checkpoint scans, with the 1-row triangle count broadcast.
+    // The triangle frame carries its measured size (62 KiB here; the
+    // inherited estimate was 3.1 TiB), so the credits side broadcasts
+    // into the degree join: no sort-merge shuffles, and the metric agg
+    // stays on the checkpoints' single partition (was 3 shuffles, 1
+    // broadcast)
+    "q151_directed_clustering_metrics" -> PlanCounts(0, 0, 0, 2),
     // listing over the checkpointed pair frame: the self-join's two
     // tiny sides broadcast, one output-sort exchange
     "q154_directed_triangle_listing" -> PlanCounts(0, 0, 0, 2),
